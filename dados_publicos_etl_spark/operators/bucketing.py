@@ -12,18 +12,16 @@ shuffle into N files per table) and amortized by every subsequent
 join, the same build-once/probe-many economics as the persisted IVF
 index (operators/similarity.py:session_ivf_index).
 
-The bucketed copies live in a session-cached external-table layout
-(``option("path", ...)`` under a ``TemporaryDirectory`` whose
-finalizer removes it at interpreter exit), keyed on (sf_dir,
-n_buckets) exactly like the IVF index cache — the registered query
-measures the steady-state CO-LOCATED JOIN, not the one-time layout
-build.  ``tests/test_plans.py`` pins the no-Exchange plan shape.
+The bucketed copies live in an external-table layout
+(``option("path", ...)``) held as a session artifact
+(``tmpstore.session_artifact``) keyed on (sf_dir, n_buckets,
+applicationId) — the registered query measures the steady-state
+CO-LOCATED JOIN, not the one-time layout build.  ``tests/test_plans.py`` pins the no-Exchange plan shape.
 """
 
 from __future__ import annotations
 
 import re
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,11 +29,9 @@ from pyspark.sql import functions as F
 from dados_publicos_etl_spark.functions.numeric import money_sum, money_sum_sql
 from dados_publicos_etl_spark.io import read_table
 from dados_publicos_etl_spark.plans.registry import query
+from dados_publicos_etl_spark.tmpstore import session_artifact
 
 N_BUCKETS = 8
-
-# (sf_dir, n_buckets) -> (TemporaryDirectory, {logical: catalog name})
-_BUCKET_CACHE: dict[tuple, tuple] = {}
 
 
 def write_bucketed(
@@ -78,34 +74,34 @@ def session_bucketed_tables(
     {logical name: catalog table name}.
 
     Catalog names are suffixed with a slug of ``sf_dir`` so different
-    scale factors coexist in one catalog; re-registering after a
-    session restart drops stale entries first.
+    scale factors coexist in one catalog; a rebuild for a regenerated
+    corpus drops the stale entries first.  The catalog is session
+    state, so the artifact key carries the ``applicationId``.
     """
-    key = (sf_dir, n_buckets)
-    hit = _BUCKET_CACHE.get(key)
-    if hit is not None and spark.catalog.tableExists(
-        next(iter(hit[1].values()))
-    ):
-        return hit[1]
-    slug = re.sub(r"[^0-9a-zA-Z]+", "_", sf_dir).strip("_").lower()
-    tmp = tempfile.TemporaryDirectory(prefix="spark_bucketed_")
-    names = {}
-    for logical, bucket_col in (
-        ("orders", "o_orderkey"),
-        ("lineitem", "l_orderkey"),
-    ):
-        name = f"bkt_{logical}_{slug}_{n_buckets}"
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        write_bucketed(
-            read_table(spark, sf_dir, logical),
-            name,
-            f"{tmp.name}/{name}",
-            bucket_col,
-            n_buckets,
-        )
-        names[logical] = name
-    _BUCKET_CACHE[key] = (tmp, names)
-    return names
+
+    def build(workdir: str) -> dict[str, str]:
+        slug = re.sub(r"[^0-9a-zA-Z]+", "_", sf_dir).strip("_").lower()
+        names = {}
+        for logical, bucket_col in (
+            ("orders", "o_orderkey"),
+            ("lineitem", "l_orderkey"),
+        ):
+            name = f"bkt_{logical}_{slug}_{n_buckets}"
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+            write_bucketed(
+                read_table(spark, sf_dir, logical),
+                name,
+                f"{workdir}/{name}",
+                bucket_col,
+                n_buckets,
+            )
+            names[logical] = name
+        return names
+
+    return session_artifact(
+        "bucketed", sf_dir, build, n_buckets,
+        spark.sparkContext.applicationId,
+    )
 
 
 def bucketed_orders_join(

@@ -41,6 +41,7 @@ additionally cross-checks LSH recall against the exact tier.
 from __future__ import annotations
 
 import random
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,6 +60,7 @@ from dados_publicos_etl_spark.functions.text import (
 )
 from dados_publicos_etl_spark.io import read_table
 from dados_publicos_etl_spark.plans.registry import query
+from dados_publicos_etl_spark.tmpstore import session_artifact
 
 # ---------------------------------------------------------------------------
 # Exact dedup
@@ -279,34 +281,21 @@ def _mh_perm(a: int, b: int):
     return lambda h: (h * F.lit(a) + F.lit(b)) % F.lit(_MH_PRIME)
 
 
-# sf_dir -> (TemporaryDirectory handle, path): the portable
-# (doc_id, source, sh, sig) table — md5-hashed shingles plus the
-# 32-permutation MinHash signature — computed ONCE per (session,
-# corpus) and parquet-backed.  Three catalog queries consume it
-# (dedup_minhash_lsh, dedup_minhash_incremental, and the calibration
-# audit builds the same construction); at 100 TB this is the
-# signature table a pipeline PERSISTS next to the corpus, not
-# recomputes per consumer.
-_PORTABLE_SIG_CACHE: dict[str, tuple] = {}
-
-
 def portable_sig_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from dados_publicos_etl_spark.tmpstore import (
-        CACHE_LOCK,
-        corpus_fingerprint,
+    """The portable (doc_id, source, sh, sig) table — md5-hashed
+    shingles plus the 32-permutation MinHash signature — a session
+    artifact.  Three catalog queries consume it (dedup_minhash_lsh,
+    dedup_minhash_incremental, and the calibration audit builds the
+    same construction); at 100 TB this is the signature table a
+    pipeline PERSISTS next to the corpus, not recomputes per
+    consumer."""
+    path = session_artifact(
+        "mh_sig", sf_dir, partial(_write_portable_sig, spark, sf_dir)
     )
+    return spark.read.parquet(path)
 
-    # keyed on the corpus fingerprint and populated under the shared
-    # lock (round-8 ADVICE fix): a regenerated corpus misses instead
-    # of serving a stale snapshot; concurrent first calls do not
-    # double-compute and leak a TemporaryDirectory
-    key = (sf_dir, corpus_fingerprint(sf_dir, "documents"))
-    with CACHE_LOCK:
-        hit = _PORTABLE_SIG_CACHE.get(key)
-    if hit is not None:
-        return spark.read.parquet(hit[1])
+
+def _write_portable_sig(spark: SparkSession, sf_dir: str, workdir: str) -> str:
     docs = read_table(spark, sf_dir, "documents")
     # staged selects (tokens -> shingles -> hashes) keep each
     # expensive tree single-evaluation (no CSE inside projections)
@@ -332,12 +321,9 @@ def portable_sig_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]
         ).alias("sig"),
     )
-    tmp = tempfile.TemporaryDirectory(prefix="spark_mh_sig_")
-    path = tmp.name + "/sig"
+    path = workdir + "/sig"
     sig.write.mode("overwrite").parquet(path)
-    with CACHE_LOCK:
-        stored = _PORTABLE_SIG_CACHE.setdefault(key, (tmp, path))
-    return spark.read.parquet(stored[1])
+    return path
 
 
 def _minhash_lsh_oracle() -> str:
@@ -451,12 +437,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Incremental MinHash dedup against a persisted band index
 # ---------------------------------------------------------------------------
-
-# One persisted band index per (corpus identity, params) per session —
-# the TemporaryDirectory is held here so the on-disk index lives for
-# the session and is removed by its finalizer (same pattern as the
-# IVF index cache in operators/similarity.py).
-_MINHASH_INDEX_CACHE: dict[tuple, tuple] = {}
 
 _INCREMENTAL_THRESH = 0.8
 
@@ -625,8 +605,6 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     table per side, so the fat text column is touched exactly twice
     and only for candidates.
     """
-    import tempfile
-
     # the portable (sh, sig) table is shared with dedup_minhash_lsh
     # (one signature pass per session per corpus)
     shingled = portable_sig_table(spark, sf_dir)
@@ -652,29 +630,15 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("band"),
         ).select("doc_id", "band.band_idx", "band.band_hash")
 
-    from dados_publicos_etl_spark.tmpstore import (
-        CACHE_LOCK,
-        corpus_fingerprint,
-    )
-
-    key = (
-        sf_dir,
-        corpus_fingerprint(sf_dir, "documents"),
-        "portable",
-        _MH_PRIME,
-    )
-    with CACHE_LOCK:
-        hit = _MINHASH_INDEX_CACHE.get(key)
-    if hit is None:
-        tmp = tempfile.TemporaryDirectory(prefix="spark_minhash_index_")
-        path = tmp.name + "/index"
+    # one persisted band index per corpus snapshot; the stored schema
+    # lets a warm hit read it back without a schema-inference job
+    def build(workdir: str):
+        path = workdir + "/index"
         portable_bands(snapshot).write.mode("overwrite").parquet(path)
-        index_df = spark.read.parquet(path)
-        with CACHE_LOCK:
-            hit = _MINHASH_INDEX_CACHE.setdefault(
-                key, (tmp, path, index_df)
-            )
-    index_df = hit[2]
+        return path, spark.read.parquet(path).schema
+
+    path, schema = session_artifact("minhash_index", sf_dir, build)
+    index_df = spark.read.schema(schema).parquet(path)
 
     inc_bands = portable_bands(incoming).select(
         F.col("doc_id").alias("incoming_id"), "band_idx", "band_hash"

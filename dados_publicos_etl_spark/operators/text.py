@@ -10,6 +10,8 @@ point, e.g. term frequencies).
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -23,10 +25,7 @@ from dados_publicos_etl_spark.functions.text import (
 )
 from dados_publicos_etl_spark.io import read_table
 from dados_publicos_etl_spark.plans.registry import query
-from dados_publicos_etl_spark.tmpstore import (
-    CACHE_LOCK as _FIX_LOCK,
-    corpus_fingerprint as _fix_fp,
-)
+from dados_publicos_etl_spark.tmpstore import session_artifact
 
 
 # Tiny per-language stopword marker sets for the n-gram/stopword
@@ -683,42 +682,32 @@ def lexical_logodds_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _BPE_ROUNDS = 6
 
-# sf_dir -> (tempdir handle, path): the (word, freq, char-seq) vocab
-# is the only corpus-scale stage of BPE training — disk-cached per
-# (session, corpus) like the other session caches so repeat
-# invocations pay only the merge rounds
-_BPE_VOCAB_CACHE: dict[str, tuple] = {}
-
-
 def _bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
+    """The (word, freq, char-seq) vocab: the only corpus-scale stage
+    of BPE training, a session artifact so repeat invocations pay
+    only the merge rounds."""
 
-    key = (sf_dir, _fix_fp(sf_dir, "documents"))
-    with _FIX_LOCK:
-        hit = _BPE_VOCAB_CACHE.get(key)
-    if hit is not None:
-        return spark.read.parquet(hit[1])
-    docs = read_table(spark, sf_dir, "documents")
-    words = docs.select(
-        F.explode(
-            F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), 0)
-        ).alias("word")
-    )
-    vocab = (
-        words.groupBy("word")
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .select(
-            "word",
-            "freq",
-            F.array_join(F.split("word", ""), " ").alias("seq"),
+    def build(workdir: str) -> str:
+        docs = read_table(spark, sf_dir, "documents")
+        words = docs.select(
+            F.explode(
+                F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), 0)
+            ).alias("word")
         )
-    )
-    tmp = tempfile.TemporaryDirectory(prefix="spark_bpe_vocab_")
-    path = f"{tmp.name}/vocab"
-    vocab.write.mode("overwrite").parquet(path)
-    with _FIX_LOCK:
-        stored = _BPE_VOCAB_CACHE.setdefault(key, (tmp, path))
-    return spark.read.parquet(stored[1])
+        vocab = (
+            words.groupBy("word")
+            .agg(F.count(F.lit(1)).alias("freq"))
+            .select(
+                "word",
+                "freq",
+                F.array_join(F.split("word", ""), " ").alias("seq"),
+            )
+        )
+        path = f"{workdir}/vocab"
+        vocab.write.mode("overwrite").parquet(path)
+        return path
+
+    return spark.read.parquet(session_artifact("bpe_vocab", sf_dir, build))
 
 
 def _bpe_cte_chain() -> str:
@@ -830,22 +819,17 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# sf_dir -> (merges list, tempdir handle, final-vocab parquet path):
-# training is deterministic per corpus, so both the merge table and
-# the fully-merged segmentation are computed once per session
-_BPE_TRAIN_CACHE: dict[str, tuple] = {}
-
-
 def _bpe_train(spark: SparkSession, sf_dir: str):
     """Run the merge-learning loop; returns (merges, final vocab DF
-    with the post-merge segmentation). Session-cached."""
-    import tempfile
+    with the post-merge segmentation).  Training is deterministic per
+    corpus, so both are a session artifact."""
+    merges, path = session_artifact(
+        "bpe_final", sf_dir, partial(_run_bpe_merges, spark, sf_dir)
+    )
+    return merges, spark.read.parquet(path)
 
-    key = (sf_dir, _fix_fp(sf_dir, "documents"))
-    with _FIX_LOCK:
-        hit = _BPE_TRAIN_CACHE.get(key)
-    if hit is not None:
-        return hit[0], spark.read.parquet(hit[2])
+
+def _run_bpe_merges(spark: SparkSession, sf_dir: str, workdir: str):
     vocab = _bpe_vocab(spark, sf_dir)
     merges = []
     for r in range(1, _BPE_ROUNDS + 1):
@@ -894,12 +878,9 @@ def _bpe_train(spark: SparkSession, sf_dir: str):
                 )
             ).alias("seq"),
         ).localCheckpoint()
-    tmp = tempfile.TemporaryDirectory(prefix="spark_bpe_final_")
-    path = f"{tmp.name}/final"
+    path = f"{workdir}/final"
     vocab.write.mode("overwrite").parquet(path)
-    with _FIX_LOCK:
-        stored = _BPE_TRAIN_CACHE.setdefault(key, (merges, tmp, path))
-    return stored[0], spark.read.parquet(stored[2])
+    return merges, path
 
 
 # ---------------------------------------------------------------------------

@@ -13,10 +13,7 @@ from pyspark.sql import functions as F
 from dados_publicos_etl_spark.functions.numeric import money_sum
 from dados_publicos_etl_spark.io import read_table
 from dados_publicos_etl_spark.plans.registry import query
-from dados_publicos_etl_spark.tmpstore import (
-    CACHE_LOCK as _FIX_LOCK,
-    corpus_fingerprint as _fix_fp,
-)
+from dados_publicos_etl_spark.tmpstore import session_artifact
 
 
 # ---------------------------------------------------------------------------
@@ -1172,10 +1169,6 @@ def fd_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Corrupt-file-tolerant scan (route-don't-crash at the FILE level)
 # ---------------------------------------------------------------------------
 
-# sf_dir -> TemporaryDirectory holding the copy-with-planted-corruption
-_CORRUPT_DIRS: dict[str, object] = {}
-
-
 def _corrupt_scan_dir(spark: SparkSession, sf_dir: str) -> str:
     """A copy of documents.parquet plus one deliberately corrupt
     parquet file (valid magic, garbage body — the torn-write /
@@ -1183,31 +1176,25 @@ def _corrupt_scan_dir(spark: SparkSession, sf_dir: str) -> str:
     built once per (session, corpus)."""
     import os
     import shutil
-    import tempfile
 
-    key = (sf_dir, _fix_fp(sf_dir))
-    with _FIX_LOCK:
-        hit = _CORRUPT_DIRS.get(key)
-    if hit is not None:
-        return hit.name
-    tmp = tempfile.TemporaryDirectory(prefix="spark_corrupt_scan_")
-    src = os.path.join(sf_dir, "documents.parquet")
-    if os.path.isdir(src):  # directory layout (e.g. scale-probe replica)
-        for i, part in enumerate(sorted(os.listdir(src))):
-            if part.endswith(".parquet"):
-                shutil.copy(
-                    os.path.join(src, part),
-                    os.path.join(tmp.name, f"part-{i:03d}.parquet"),
-                )
-    else:
-        shutil.copy(src, os.path.join(tmp.name, "part-000.parquet"))
-    with open(os.path.join(tmp.name, "part-bad.parquet"), "wb") as f:
-        # parquet magic + garbage: footer parse fails, row count is
-        # unrecoverable — exactly the shape ignoreCorruptFiles skips
-        f.write(b"PAR1" + b"\x00garbage\x00" * 64)
-    with _FIX_LOCK:
-        stored = _CORRUPT_DIRS.setdefault(key, tmp)
-    return stored.name
+    def build(workdir: str) -> str:
+        src = os.path.join(sf_dir, "documents.parquet")
+        if os.path.isdir(src):  # directory layout (scale-probe replica)
+            for i, part in enumerate(sorted(os.listdir(src))):
+                if part.endswith(".parquet"):
+                    shutil.copy(
+                        os.path.join(src, part),
+                        os.path.join(workdir, f"part-{i:03d}.parquet"),
+                    )
+        else:
+            shutil.copy(src, os.path.join(workdir, "part-000.parquet"))
+        with open(os.path.join(workdir, "part-bad.parquet"), "wb") as f:
+            # parquet magic + garbage: footer parse fails, row count is
+            # unrecoverable — exactly the shape ignoreCorruptFiles skips
+            f.write(b"PAR1" + b"\x00garbage\x00" * 64)
+        return workdir
+
+    return session_artifact("corrupt_scan", sf_dir, build)
 
 
 @query(
@@ -1850,45 +1837,32 @@ def retractable_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Hive-partitioned layout: write partitioned, read with partition pruning
 # ---------------------------------------------------------------------------
 
-# sf_dir -> (TemporaryDirectory handle, path): partitioned copy built
-# once per (session, corpus); the query measures the pruned READ
-_HIVE_DIRS: dict[str, tuple] = {}
-
 _HP_PRIORITY = "1-URGENT"
 
 
 def _hive_orders_dir(spark: SparkSession, sf_dir: str) -> str:
-    import tempfile
+    """Partitioned copy of orders, a session artifact: the query
+    measures the pruned READ, not the layout write."""
 
-    from dados_publicos_etl_spark.tmpstore import (
-        CACHE_LOCK,
-        corpus_fingerprint,
-    )
-
-    key = (sf_dir, corpus_fingerprint(sf_dir, "orders"))
-    with CACHE_LOCK:
-        hit = _HIVE_DIRS.get(key)
-    if hit is not None:
-        return hit[1]
-    tmp = tempfile.TemporaryDirectory(prefix="spark_hive_orders_")
-    path = tmp.name + "/orders"
-    (
-        read_table(spark, sf_dir, "orders")
-        .select(
-            "o_orderkey",
-            "o_orderstatus",
-            F.round(F.col("o_totalprice") * 100, 0)
-            .cast("long")
-            .alias("cents"),
-            "o_orderpriority",
+    def build(workdir: str) -> str:
+        path = workdir + "/orders"
+        (
+            read_table(spark, sf_dir, "orders")
+            .select(
+                "o_orderkey",
+                "o_orderstatus",
+                F.round(F.col("o_totalprice") * 100, 0)
+                .cast("long")
+                .alias("cents"),
+                "o_orderpriority",
+            )
+            .write.mode("overwrite")
+            .partitionBy("o_orderpriority")
+            .parquet(path)
         )
-        .write.mode("overwrite")
-        .partitionBy("o_orderpriority")
-        .parquet(path)
-    )
-    with CACHE_LOCK:
-        stored = _HIVE_DIRS.setdefault(key, (tmp, path))
-    return stored[1]
+        return path
+
+    return session_artifact("hive_orders", sf_dir, build)
 
 
 @query(

@@ -6,9 +6,10 @@ publish, sharded JSONL export.
 These six existed since rounds 5-7 as pytest-only components
 (``operators/layout.py``, ``io.py``); the driver contract never
 exercised them.  Each now runs its REAL maintenance op into a
-session-cached workspace (built once per corpus snapshot — the same
-steady-state economics as ``session_ivf_index``: a layout job runs
-once, every reader amortizes it) and returns the READ-BACK result,
+session artifact (``tmpstore.session_artifact``: built once per
+corpus snapshot — the same steady-state economics as
+``session_ivf_index``: a layout job runs once, every reader
+amortizes it) and returns the READ-BACK result,
 whose content a DuckDB oracle checks against the source tables.
 That upgrades them past the verdict's ask (rows-only entries): the
 lossless-round-trip / retention-cutoff semantics are differential,
@@ -24,42 +25,12 @@ the maintenance primitives that replace that pattern at 100 TB.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dados_publicos_etl_spark.io import read_table
 from dados_publicos_etl_spark.plans.registry import query
-
-# (query name, sf_dir, corpus fingerprint) -> TemporaryDirectory.
-# One workspace per corpus snapshot per session, removed by the
-# finalizer at interpreter exit; the fingerprint key means a
-# regenerated corpus rebuilds instead of serving stale files.
-# Guarded by the shared tmpstore.CACHE_LOCK like every other
-# session fixture cache (round-8 ADVICE): a racing second call must
-# NOT overwrite the cached TemporaryDirectory, whose finalizer
-# would delete a directory the first caller's reader still uses.
-_WORKSPACES: dict[tuple, tempfile.TemporaryDirectory] = {}
-
-
-def _workspace(name: str, sf_dir: str) -> tuple[str, bool]:
-    """Return (path, fresh): a session-cached scratch dir for one
-    maintenance fixture.  ``fresh`` tells the caller whether the
-    maintenance op still needs to run."""
-    from dados_publicos_etl_spark.tmpstore import (
-        CACHE_LOCK,
-        corpus_fingerprint,
-    )
-
-    key = (name, sf_dir, corpus_fingerprint(sf_dir))
-    with CACHE_LOCK:
-        hit = _WORKSPACES.get(key)
-        if hit is not None:
-            return hit.name, False
-        tmp = tempfile.TemporaryDirectory(prefix=f"spark_maint_{name}_")
-        _WORKSPACES[key] = tmp
-        return tmp.name, True
+from dados_publicos_etl_spark.tmpstore import session_artifact
 
 
 _ZORDER_COLS = ["l_orderkey", "l_partkey", "l_suppkey", "l_quantity",
@@ -87,11 +58,13 @@ _ZORDER_COLS = ["l_orderkey", "l_partkey", "l_suppkey", "l_quantity",
 def zorder_layout_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dados_publicos_etl_spark.operators.layout import write_zordered
 
-    ws, fresh = _workspace("zorder", sf_dir)
-    path = f"{ws}/lineitem_z"
-    if fresh:
+    def build(ws: str) -> str:
+        path = f"{ws}/lineitem_z"
         li = read_table(spark, sf_dir, "lineitem").select(*_ZORDER_COLS)
         write_zordered(li, path, "l_extendedprice", "l_quantity")
+        return path
+
+    path = session_artifact("maint_zorder", sf_dir, build)
     return spark.read.parquet(path).select(*_ZORDER_COLS)
 
 
@@ -116,13 +89,15 @@ def sorted_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_globally_sorted,
     )
 
-    ws, fresh = _workspace("sorted_export", sf_dir)
-    path = f"{ws}/orders_sorted"
-    if fresh:
+    def build(ws: str) -> str:
+        path = f"{ws}/orders_sorted"
         od = read_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey", "o_totalprice"
         )
         write_globally_sorted(od, path, ["o_orderkey"])
+        return path
+
+    path = session_artifact("maint_sorted_export", sf_dir, build)
     return spark.read.parquet(path).select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -148,9 +123,8 @@ def sorted_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dados_publicos_etl_spark.io import compact_partitions
 
-    ws, fresh = _workspace("compaction", sf_dir)
-    path = f"{ws}/orders_parts"
-    if fresh:
+    def build(ws: str) -> str:
+        path = f"{ws}/orders_parts"
         od = read_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice", "o_orderpriority"
         )
@@ -163,6 +137,9 @@ def compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         compact_partitions(
             spark, path, ["o_orderpriority"], min_files_to_compact=2
         )
+        return path
+
+    path = session_artifact("maint_compaction", sf_dir, build)
     return spark.read.parquet(path).select(
         "o_orderkey", "o_totalprice", "o_orderpriority"
     )
@@ -192,9 +169,8 @@ _RETAIN_FROM = "1999-01"  # keep months >= this; drop 1995-1998
 def retention_enforcement(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dados_publicos_etl_spark.io import enforce_retention
 
-    ws, fresh = _workspace("retention", sf_dir)
-    path = f"{ws}/orders_by_month"
-    if fresh:
+    def build(ws: str) -> str:
+        path = f"{ws}/orders_by_month"
         od = read_table(spark, sf_dir, "orders").select(
             "o_orderkey",
             F.date_format("o_orderdate", "yyyy-MM").alias("order_month"),
@@ -205,6 +181,9 @@ def retention_enforcement(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(path)
         )
         enforce_retention(path, "order_month", _RETAIN_FROM)
+        return path
+
+    path = session_artifact("maint_retention", sf_dir, build)
     return spark.read.parquet(path).select(
         "o_orderkey", F.col("order_month").cast("string").alias("order_month")
     )
@@ -234,9 +213,8 @@ def versioned_publish_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_current_version,
     )
 
-    ws, fresh = _workspace("publish", sf_dir)
-    root = f"{ws}/customer_versions"
-    if fresh:
+    def build(ws: str) -> str:
+        root = f"{ws}/customer_versions"
         cust = read_table(spark, sf_dir, "customer").select(
             "c_custkey", "c_acctbal"
         )
@@ -251,6 +229,9 @@ def versioned_publish_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         publish_version(
             cust.withColumn("version", F.lit(2).cast("int")), root
         )
+        return root
+
+    root = session_artifact("maint_publish", sf_dir, build)
     return read_current_version(spark, root).select(
         "c_custkey", "c_acctbal", "version"
     )
@@ -275,13 +256,15 @@ def versioned_publish_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 def jsonl_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dados_publicos_etl_spark.io import write_jsonl_shards
 
-    ws, fresh = _workspace("jsonl", sf_dir)
-    path = f"{ws}/docs_jsonl"
-    if fresh:
+    def build(ws: str) -> str:
+        path = f"{ws}/docs_jsonl"
         docs = read_table(spark, sf_dir, "documents").select(
             "doc_id", "lang", "text"
         )
         write_jsonl_shards(docs, path, target_mb=1)
+        return path
+
+    path = session_artifact("maint_jsonl", sf_dir, build)
     parsed = spark.read.text(path).select(
         F.from_json(
             "value", "doc_id long, lang string, text string"

@@ -18,7 +18,7 @@ DuckDB's sequential scan.
 
 from __future__ import annotations
 
-import tempfile
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -27,10 +27,7 @@ from dados_publicos_etl_spark.functions.numeric import money_sum, money_sum_sql
 from dados_publicos_etl_spark.io import read_table
 from dados_publicos_etl_spark.plans.registry import query
 from dados_publicos_etl_spark.session import machine_sized_shuffle
-from dados_publicos_etl_spark.tmpstore import (
-    CACHE_LOCK as _FIX_LOCK,
-    corpus_fingerprint as _fix_fp,
-)
+from dados_publicos_etl_spark.tmpstore import session_artifact
 
 
 # ---------------------------------------------------------------------------
@@ -67,31 +64,29 @@ def co_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     clustering_coefficient): a within-basket pair self-join bounded
     by basket size (~O(rows x basket_size), never O(n^2)), collapsed
     to at most C(50,2) = 1225 rows."""
-    key = (sf_dir, _fix_fp(sf_dir))
-    with _FIX_LOCK:
-        hit = _PAIR_CACHE.get(key)
-    if hit is not None:
-        return spark.read.parquet(hit[1])
-    li = read_table(spark, sf_dir, "lineitem")
-    baskets = li.select(
-        "l_orderkey", (F.col("l_partkey") % 50).alias("item")
-    ).distinct()
-    x_a, x_b = baskets.alias("x_a"), baskets.alias("x_b")
-    pairs = (
-        x_a.join(
-            x_b,
-            (F.col("x_a.l_orderkey") == F.col("x_b.l_orderkey"))
-            & (F.col("x_a.item") < F.col("x_b.item")),
+
+    def build(workdir: str) -> str:
+        li = read_table(spark, sf_dir, "lineitem")
+        baskets = li.select(
+            "l_orderkey", (F.col("l_partkey") % 50).alias("item")
+        ).distinct()
+        x_a, x_b = baskets.alias("x_a"), baskets.alias("x_b")
+        pairs = (
+            x_a.join(
+                x_b,
+                (F.col("x_a.l_orderkey") == F.col("x_b.l_orderkey"))
+                & (F.col("x_a.item") < F.col("x_b.item")),
+            )
+            .groupBy(
+                F.col("x_a.item").alias("a"), F.col("x_b.item").alias("b")
+            )
+            .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        .groupBy(F.col("x_a.item").alias("a"), F.col("x_b.item").alias("b"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    tmp = tempfile.TemporaryDirectory(prefix="co_pairs_")
-    path = f"{tmp.name}/pairs"
-    pairs.write.mode("overwrite").parquet(path)
-    with _FIX_LOCK:
-        stored = _PAIR_CACHE.setdefault(key, (tmp, path))
-    return spark.read.parquet(stored[1])
+        path = f"{workdir}/pairs"
+        pairs.write.mode("overwrite").parquet(path)
+        return path
+
+    return spark.read.parquet(session_artifact("co_pairs", sf_dir, build))
 
 
 def _co_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -103,10 +98,6 @@ def _co_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(_N_EDGES)
         .select("a", "b")
     )
-
-
-# sf_dir -> (TemporaryDirectory handle, path)
-_PAIR_CACHE: dict[str, tuple] = {}
 
 
 @query(
@@ -309,28 +300,22 @@ def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ORC storage round-trip
 # ---------------------------------------------------------------------------
 
-# sf_dir -> (TemporaryDirectory handle, path) — build-once like the
-# bucketed-join / IVF-index caches; finalizer cleans at exit.
-_ORC_CACHE: dict[str, tuple] = {}
-
-
 def _orc_copy(spark: SparkSession, sf_dir: str) -> str:
-    key = (sf_dir, _fix_fp(sf_dir))
-    with _FIX_LOCK:
-        hit = _ORC_CACHE.get(key)
-    if hit is not None:
-        return hit[1]
-    tmp = tempfile.TemporaryDirectory(prefix="orc_roundtrip_")
-    path = f"{tmp.name}/lineitem_orc"
-    (
-        read_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_returnflag", "l_extendedprice", "l_quantity")
-        .write.mode("overwrite")
-        .orc(path)
-    )
-    with _FIX_LOCK:
-        stored = _ORC_CACHE.setdefault(key, (tmp, path))
-    return stored[1]
+    """ORC copy of lineitem's used columns, a session artifact."""
+
+    def build(workdir: str) -> str:
+        path = f"{workdir}/lineitem_orc"
+        (
+            read_table(spark, sf_dir, "lineitem")
+            .select(
+                "l_orderkey", "l_returnflag", "l_extendedprice", "l_quantity"
+            )
+            .write.mode("overwrite")
+            .orc(path)
+        )
+        return path
+
+    return session_artifact("orc_roundtrip", sf_dir, build)
 
 
 @query(
@@ -679,18 +664,15 @@ def markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Text-source log parsing round-trip
 # ---------------------------------------------------------------------------
 
-# sf_dir -> (TemporaryDirectory handle, path)
-_LOG_CACHE: dict[str, tuple] = {}
-
-
 def _log_lines(spark: SparkSession, sf_dir: str) -> str:
     """Apache-style access-log lines derived from events, written
     ONCE per (session, corpus) through Spark's text sink."""
-    key = (sf_dir, _fix_fp(sf_dir))
-    with _FIX_LOCK:
-        hit = _LOG_CACHE.get(key)
-    if hit is not None:
-        return hit[1]
+    return session_artifact(
+        "access_logs", sf_dir, partial(_write_log_lines, spark, sf_dir)
+    )
+
+
+def _write_log_lines(spark: SparkSession, sf_dir: str, workdir: str) -> str:
     ev = read_table(spark, sf_dir, "events")
     line = F.concat(
         F.col("user_id").cast("string"),
@@ -705,12 +687,9 @@ def _log_lines(spark: SparkSession, sf_dir: str) -> str:
         F.lit(" "),
         F.round(F.col("value") * 100, 0).cast("long").cast("string"),
     )
-    tmp = tempfile.TemporaryDirectory(prefix="access_logs_")
-    path = f"{tmp.name}/logs"
+    path = f"{workdir}/logs"
     ev.select(line.alias("value")).write.mode("overwrite").text(path)
-    with _FIX_LOCK:
-        stored = _LOG_CACHE.setdefault(key, (tmp, path))
-    return stored[1]
+    return path
 
 
 @query(

@@ -71,11 +71,7 @@ def stream_events_foreach_batch(
 
 
 from dados_publicos_etl_spark.plans.registry import query  # noqa: E402
-
-# (sf_dir,) -> TemporaryDirectory holding the 2-file split copy of
-# events used to force multiple micro-batches (scaffolding for an
-# external CDC feed; cached so repeat invocations measure the merge)
-_CDC_FEED_DIRS: dict[tuple, object] = {}
+from dados_publicos_etl_spark.tmpstore import session_artifact  # noqa: E402
 
 # state dirs of completed runs — kept for the session so returned
 # DataFrames stay readable; removed by finalizers at interpreter exit
@@ -83,30 +79,29 @@ _CDC_STATE_DIRS: list = []
 
 
 def _cdc_feed_dir(spark: SparkSession, sf_dir: str) -> str:
-    import tempfile
+    """The 2-file split copy of events that forces multiple
+    micro-batches (scaffolding for an external CDC feed; a session
+    artifact so repeat invocations measure the merge)."""
 
-    key = (sf_dir,)
-    hit = _CDC_FEED_DIRS.get(key)
-    if hit is not None:
-        return hit.name
-    tmp = tempfile.TemporaryDirectory(prefix="spark_cdc_feed_")
-    # point at the exact table path: works whether events.parquet is
-    # the testdata's single FILE or a directory of part files (the
-    # scale-probe replica layout) — a pathGlobFilter on the parent
-    # dir would match only the leaf-FILE form and feed NOTHING on a
-    # directory layout
-    src = spark.read.schema(_RAW_EVENTS_SCHEMA).parquet(
-        f"{sf_dir}/events.parquet"
-    )
-    for half in (0, 1):
-        (
-            src.filter(F.col("event_id") % 2 == half)
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(tmp.name)
+    def build(workdir: str) -> str:
+        # point at the exact table path: works whether events.parquet
+        # is the testdata's single FILE or a directory of part files
+        # (the scale-probe replica layout) — a pathGlobFilter on the
+        # parent dir would match only the leaf-FILE form and feed
+        # NOTHING on a directory layout
+        src = spark.read.schema(_RAW_EVENTS_SCHEMA).parquet(
+            f"{sf_dir}/events.parquet"
         )
-    _CDC_FEED_DIRS[key] = tmp
-    return tmp.name
+        for half in (0, 1):
+            (
+                src.filter(F.col("event_id") % 2 == half)
+                .coalesce(1)
+                .write.mode("append")
+                .parquet(workdir)
+            )
+        return workdir
+
+    return session_artifact("cdc_feed", sf_dir, build)
 
 
 @query(

@@ -13,6 +13,7 @@ reproduce them with epoch arithmetic, so results hash-match exactly.
 from __future__ import annotations
 
 from contextlib import contextmanager
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
@@ -21,12 +22,7 @@ from pyspark.sql import functions as F
 from dados_publicos_etl_spark.functions.numeric import money_sum
 from dados_publicos_etl_spark.io import read_table
 from dados_publicos_etl_spark.plans.registry import query
-from dados_publicos_etl_spark.tmpstore import (
-    CACHE_LOCK as _FIX_LOCK,
-    corpus_fingerprint as _fix_fp,
-)
-
-from dados_publicos_etl_spark.tmpstore import TempDirPool
+from dados_publicos_etl_spark.tmpstore import TempDirPool, session_artifact
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss"
 
@@ -506,26 +502,14 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     return streaming_static_enrich(spark, sf_dir)
 
 
-# (sf_dir, n_queries) -> TemporaryDirectory of streaming query files;
-# held for the session, removed by the finalizer at interpreter exit
-_ANN_STREAM_QDIRS: dict[tuple, object] = {}
-
 # sink dirs of completed probe runs — kept alive so the returned
 # DataFrames stay readable; finalizers remove them at interpreter exit
 _ANN_SINK_DIRS: list = []
 
 
-def _ann_stream_query_dir(
-    spark: SparkSession, emb: DataFrame, sf_dir: str, n_queries: int
+def _write_ann_stream_queries(
+    emb: DataFrame, n_queries: int, workdir: str
 ) -> str:
-    import tempfile
-
-    key = (sf_dir, _fix_fp(sf_dir, "embeddings"), n_queries)
-    with _FIX_LOCK:
-        hit = _ANN_STREAM_QDIRS.get(key)
-    if hit is not None:
-        return hit.name
-    tmp = tempfile.TemporaryDirectory(prefix="spark_ann_stream_")
     # two files => two micro-batches under maxFilesPerTrigger=1.
     # Each query row carries its Spark-SQL milli-quantized qq
     # alongside the raw vector, so the probe's cell choice shares
@@ -547,11 +531,9 @@ def _ann_stream_query_dir(
             )
             .coalesce(1)
             .write.mode("append")
-            .parquet(tmp.name)
+            .parquet(workdir)
         )
-    with _FIX_LOCK:
-        stored = _ANN_STREAM_QDIRS.setdefault(key, tmp)
-    return stored.name
+    return workdir
 
 
 def streaming_ann_probe(
@@ -586,7 +568,10 @@ def streaming_ann_probe(
     # Written by filtering the embeddings scan JVM-side (pushed-down
     # vec_id predicate) — collect + re-parallelize of vector rows
     # costs seconds of driver/commit overhead for zero benefit.
-    qdir = _ann_stream_query_dir(spark, emb, sf_dir, n_queries)
+    qdir = session_artifact(
+        "ann_stream", sf_dir,
+        partial(_write_ann_stream_queries, emb, n_queries), n_queries,
+    )
 
     stream = (
         spark.readStream.schema(
@@ -653,9 +638,6 @@ def stream_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return streaming_ann_probe(spark, sf_dir)
 
 
-# sf_dir -> TemporaryDirectory of the time-split 2-file event feed;
-# cached so repeat invocations measure the stream, not the fixture
-_TOPK_FEED_DIRS: dict[str, object] = {}
 # state dirs of completed runs — bounded rolling pool (the returned
 # DataFrame reads the final version lazily; by the time a dir rotates
 # out, that query's result has long been collected)
@@ -728,7 +710,7 @@ def _run_update_upsert(
     )
 
 
-def _topk_feed_dir(spark: SparkSession, sf_dir: str) -> str:
+def _write_topk_feed(spark: SparkSession, sf_dir: str, workdir: str) -> str:
     """Events split into two files AT THE TIME MIDPOINT, ``ts``
     pre-normalized to epoch-micros longs.
 
@@ -740,14 +722,7 @@ def _topk_feed_dir(spark: SparkSession, sf_dir: str) -> str:
     watermark to hold ALL state until the end, hiding eviction.)
     """
     import os as _os
-    import tempfile
 
-    key = (sf_dir, _fix_fp(sf_dir, "events"))
-    with _FIX_LOCK:
-        hit = _TOPK_FEED_DIRS.get(key)
-    if hit is not None:
-        return hit.name
-    tmp = tempfile.TemporaryDirectory(prefix="spark_topk_feed_")
     ev = read_table(spark, sf_dir, "events").select(
         "event_id",
         F.expr(
@@ -768,19 +743,17 @@ def _topk_feed_dir(spark: SparkSession, sf_dir: str) -> str:
         .coalesce(1)
         .write.mode("overwrite")
         .partitionBy("half")
-        .parquet(tmp.name)
+        .parquet(workdir)
     )
     # pin file order for the mtime-ordered source: half 1 newer
     for half in (0, 1):
-        d = _os.path.join(tmp.name, f"half={half}")
+        d = _os.path.join(workdir, f"half={half}")
         for f in _os.listdir(d):
             if f.endswith(".parquet"):
                 p = _os.path.join(d, f)
                 st = _os.stat(p)
                 _os.utime(p, (st.st_atime, st.st_mtime + half * 600))
-    with _FIX_LOCK:
-        stored = _TOPK_FEED_DIRS.setdefault(key, tmp)
-    return stored.name
+    return workdir
 
 
 @query(
@@ -842,7 +815,10 @@ def stream_topk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     tz = spark.conf.get("spark.sql.session.timeZone")
-    feed = _topk_feed_dir(spark, sf_dir)
+    # cached so repeat invocations measure the stream, not the fixture
+    feed = session_artifact(
+        "topk_feed", sf_dir, partial(_write_topk_feed, spark, sf_dir)
+    )
     stream = (
         spark.readStream.schema("event_id long, ts_us long, user_id long")
         .option("maxFilesPerTrigger", 1)
@@ -888,11 +864,7 @@ def stream_topk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Late-data drop semantics, oracle-checked
 # ---------------------------------------------------------------------------
 
-# sf_dir -> TemporaryDirectory of the REVERSE-time 2-file feed
-_LATE_FEED_DIRS: dict[str, object] = {}
-
-
-def _late_feed_dir(spark: SparkSession, sf_dir: str) -> str:
+def _write_late_feed(spark: SparkSession, sf_dir: str, workdir: str) -> str:
     """Events split at the epoch-micros midpoint like the topk feed,
     but with the LATER half's file mtime pinned OLDER — the file
     source therefore processes the later half first, so every
@@ -900,14 +872,7 @@ def _late_feed_dir(spark: SparkSession, sf_dir: str) -> str:
     watermark.  This is the deterministic late-data fixture: which
     rows are late is a pure function of the data."""
     import os as _os
-    import tempfile
 
-    key = (sf_dir, _fix_fp(sf_dir, "events"))
-    with _FIX_LOCK:
-        hit = _LATE_FEED_DIRS.get(key)
-    if hit is not None:
-        return hit.name
-    tmp = tempfile.TemporaryDirectory(prefix="spark_late_feed_")
     ev = read_table(spark, sf_dir, "events").select(
         "event_id",
         F.expr(
@@ -940,18 +905,16 @@ def _late_feed_dir(spark: SparkSession, sf_dir: str) -> str:
         .coalesce(1)
         .write.mode("overwrite")
         .partitionBy("batch")
-        .parquet(tmp.name)
+        .parquet(workdir)
     )
     for b in (0, 1, 2):
-        d = _os.path.join(tmp.name, f"batch={b}")
+        d = _os.path.join(workdir, f"batch={b}")
         for f in _os.listdir(d):
             if f.endswith(".parquet"):
                 p = _os.path.join(d, f)
                 st = _os.stat(p)
                 _os.utime(p, (st.st_atime, st.st_mtime + b * 600))
-    with _FIX_LOCK:
-        stored = _LATE_FEED_DIRS.setdefault(key, tmp)
-    return stored.name
+    return workdir
 
 
 @query(
@@ -984,7 +947,9 @@ def _late_feed_dir(spark: SparkSession, sf_dir: str) -> str:
 )
 def stream_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     tz = spark.conf.get("spark.sql.session.timeZone")
-    feed = _late_feed_dir(spark, sf_dir)
+    feed = session_artifact(
+        "late_feed", sf_dir, partial(_write_late_feed, spark, sf_dir)
+    )
     stream = (
         spark.readStream.schema("event_id long, ts_us long, event_type string")
         .option("maxFilesPerTrigger", 1)
@@ -1013,11 +978,7 @@ def stream_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Stream-stream LEFT OUTER join with oracle-checked eviction semantics
 # ---------------------------------------------------------------------------
 
-# sf_dir -> TemporaryDirectory of the 3-batch outer-join feed
-_OUTER_FEED_DIRS: dict[str, object] = {}
-
-
-def _outer_feed_dir(spark: SparkSession, sf_dir: str) -> str:
+def _write_outer_feed(spark: SparkSession, sf_dir: str, workdir: str) -> str:
     """Three ts-ascending micro-batch files: older half, newer half
     (carrying one click + one purchase sentinel at max(ts) + 2h),
     then ONE sentinel batch.  The halves arrive in event-time order
@@ -1033,14 +994,7 @@ def _outer_feed_dir(spark: SparkSession, sf_dir: str) -> str:
     the oracle.  (r13: previously the first sentinel pair was its own
     batch — four micro-batches for the same rows.)"""
     import os as _os
-    import tempfile
 
-    key = (sf_dir, _fix_fp(sf_dir, "events"))
-    with _FIX_LOCK:
-        hit = _OUTER_FEED_DIRS.get(key)
-    if hit is not None:
-        return hit.name
-    tmp = tempfile.TemporaryDirectory(prefix="spark_outer_feed_")
     ev = read_table(spark, sf_dir, "events").select(
         "event_id",
         F.expr(
@@ -1080,18 +1034,16 @@ def _outer_feed_dir(spark: SparkSession, sf_dir: str) -> str:
         .coalesce(1)
         .write.mode("overwrite")
         .partitionBy("batch")
-        .parquet(tmp.name)
+        .parquet(workdir)
     )
     for b in (0, 1, 2):
-        d = _os.path.join(tmp.name, f"batch={b}")
+        d = _os.path.join(workdir, f"batch={b}")
         for f in _os.listdir(d):
             if f.endswith(".parquet"):
                 p = _os.path.join(d, f)
                 st = _os.stat(p)
                 _os.utime(p, (st.st_atime, st.st_mtime + b * 600))
-    with _FIX_LOCK:
-        stored = _OUTER_FEED_DIRS.setdefault(key, tmp)
-    return stored.name
+    return workdir
 
 
 @query(
@@ -1118,7 +1070,7 @@ def _outer_feed_dir(spark: SparkSession, sf_dir: str) -> str:
     "where the watermark is the MIN over both sides' nodes and a "
     "batch runs under the watermark its predecessor committed — "
     "both facts the sentinel design of the feed had to respect, see "
-    "_outer_feed_dir).  The feed replays in event-time order and "
+    "_write_outer_feed).  The feed replays in event-time order and "
     "in-feed sentinels walk the watermark an hour past every "
     "real join window, so the streaming output equals the plain "
     "batch left join EXACTLY — full streaming/batch parity as the "
@@ -1130,7 +1082,9 @@ def _outer_feed_dir(spark: SparkSession, sf_dir: str) -> str:
 def stream_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
-    feed = _outer_feed_dir(spark, sf_dir)
+    feed = session_artifact(
+        "outer_feed", sf_dir, partial(_write_outer_feed, spark, sf_dir)
+    )
     stream = (
         spark.readStream.schema(
             "event_id long, ts_us long, user_id long, event_type string"
@@ -1199,9 +1153,6 @@ def stream_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Streaming decontamination gate (stream-static semi-join, stateless)
 # ---------------------------------------------------------------------------
 
-# sf_dir -> TemporaryDirectory holding the 2-file training-doc feed
-_DECON_FEED_DIRS: dict[str, object] = {}
-
 from dados_publicos_etl_spark.functions.text import (  # noqa: E402
     duck_shingles_sql as _duck_sh,
 )
@@ -1209,20 +1160,12 @@ from dados_publicos_etl_spark.functions.text import (  # noqa: E402
 _DECON_DUCK_SH = _duck_sh("text", n=4)
 
 
-def _doc_feed_dir(spark: SparkSession, sf_dir: str) -> str:
+def _write_doc_feed(spark: SparkSession, sf_dir: str, workdir: str) -> str:
     """Training documents (source <> 'src0') split into two parquet
     files by doc_id parity — two micro-batches under
     maxFilesPerTrigger=1.  A document's rows live entirely in ONE
     file, so every per-doc decision completes within its own batch
     (the property that lets the gate run stateless)."""
-    import tempfile
-
-    key = (sf_dir, _fix_fp(sf_dir, "documents"))
-    with _FIX_LOCK:
-        hit = _DECON_FEED_DIRS.get(key)
-    if hit is not None:
-        return hit.name
-    tmp = tempfile.TemporaryDirectory(prefix="spark_decon_feed_")
     docs = read_table(spark, sf_dir, "documents").filter(
         F.col("source") != "src0"
     )
@@ -1231,11 +1174,9 @@ def _doc_feed_dir(spark: SparkSession, sf_dir: str) -> str:
             docs.filter(F.col("doc_id") % 2 == half)
             .coalesce(1)
             .write.mode("append")
-            .parquet(tmp.name)
+            .parquet(workdir)
         )
-    with _FIX_LOCK:
-        stored = _DECON_FEED_DIRS.setdefault(key, tmp)
-    return stored.name
+    return workdir
 
 
 @query(
@@ -1286,7 +1227,9 @@ def stream_decontaminate_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint()
     )
-    feed = _doc_feed_dir(spark, sf_dir)
+    feed = session_artifact(
+        "decon_feed", sf_dir, partial(_write_doc_feed, spark, sf_dir)
+    )
     stream = (
         spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1)

@@ -1,20 +1,50 @@
-"""Bounded tempdir pools for disk-backed intermediate relations.
+"""Session-scoped temp storage: build-once artifacts and bounded
+tempdir pools.
 
-Two repo-wide patterns write parquet to tempdirs whose lifetime
-outlives the writing function: datasource cuts in iterative loops
-(operators/graph.py — re-rooting a plan on a scan resets the
-self-join chain, see BENCH_NOTES "self-join chain degradation") and
-streaming foreachBatch state tables (streaming/windows.py, sinks.py
-— the returned DataFrame lazily reads the final state version).
+``session_artifact`` is the ONE build-once-per-corpus cache of the
+package.  A query that derives something expensive from a corpus (a
+pair graph, a signature table, a feed fixture, a trained quantizer)
+asks for it by name; the first call builds it, every later call in
+the process reuses it.  The contract:
 
-Both previously accumulated one ``TemporaryDirectory`` handle per
-round/run for the process lifetime.  ``TempDirPool`` caps that: a
-rolling window of the newest ``keep`` dirs per purpose, older dirs
-deleted as new ones arrive (by the time a dir rotates out, its
-consumer has materialized — iterative loops eagerly localCheckpoint
-within a round or two, and a query result is collected before the
-same query has run ``keep`` more times), and whatever survives is
-removed atexit.
+- **Key**: ``(name, sf_dir, params)``.  ``params`` carries whatever
+  else the artifact depends on (bucket count, probe size); an
+  artifact tied to session state (catalog tables) puts the
+  ``applicationId`` in it, so a restarted session rebuilds.
+- **Fingerprint**: ``(entry, mtime_ns, size)`` of every top-level
+  ``*.parquet`` entry of ``sf_dir``.  A corpus regenerated under the
+  same path changes it, and the next call rebuilds instead of
+  serving a stale snapshot.
+- **Lock**: lookup and publication take ``CACHE_LOCK``; ``build``
+  runs OUTSIDE it, because it launches Spark jobs.  Concurrent first
+  calls may both build; the first to publish wins and the loser's
+  directory is removed at once, so both callers get the same value.
+- **Eviction**: publishing a new fingerprint for a key evicts the old
+  entry and removes its directory.
+- **Lifetime**: each artifact owns one ``TemporaryDirectory`` (under
+  ``tempfile``'s default location, i.e. ``TMPDIR``) that lives as
+  long as the process; its finalizer removes it at exit.
+- **Values**: a path, a schema, a model or a count, never a
+  DataFrame (``TypeError``): a DataFrame is bound to the session that
+  made it, and would outlive that session in the cache.  Callers read
+  a stored path back per call, passing the stored schema when a warm
+  hit must not run a schema-inference job.
+
+At 100 TB an artifact is a table a pipeline persists next to the
+corpus; this function is the one place where that switch is made.
+
+``TempDirPool`` serves the other pattern: per-run dirs whose
+lifetime outlives the writing function but not many later runs —
+datasource cuts in iterative loops (operators/graph.py — re-rooting a
+plan on a scan resets the self-join chain, see BENCH_NOTES
+"self-join chain degradation") and streaming foreachBatch state
+tables (streaming/windows.py, sinks.py — the returned DataFrame
+lazily reads the final state version).  It keeps a rolling window of
+the newest ``keep`` dirs per purpose, deleting older dirs as new ones
+arrive (by the time a dir rotates out, its consumer has materialized
+— iterative loops eagerly localCheckpoint within a round or two, and
+a query result is collected before the same query has run ``keep``
+more times), and removes whatever survives atexit.
 """
 
 from __future__ import annotations
@@ -23,34 +53,74 @@ import atexit
 import os
 import tempfile
 import threading
+from typing import Any, Callable
 
-# Shared guard for the session-level build-once caches (portable
-# MinHash signatures, persisted LSH/IVF indexes, hive fixtures,
-# quantizer models): population is checked and written under this
-# lock so concurrent first calls do not double-compute and leak a
-# TemporaryDirectory handle (round-8 ADVICE fix).
+from pyspark.sql import DataFrame
+
 CACHE_LOCK = threading.Lock()
+# (name, sf_dir, params) -> (fingerprint, TemporaryDirectory, value)
+_ARTIFACTS: dict[tuple, tuple] = {}
 
 
-def corpus_fingerprint(sf_dir: str | None, table: str | None = None):
-    """Best-effort identity of a corpus directory (or one table in
-    it): (mtime_ns, size) of the table's parquet if given, else of
-    the directory itself.  Session caches key on this next to the
-    path so a corpus REGENERATED under the same path misses the
-    cache instead of serving a stale snapshot."""
+def corpus_fingerprint(sf_dir: str | None) -> tuple | None:
+    """``(entry, mtime_ns, size)`` of every top-level ``*.parquet``
+    entry of ``sf_dir``; None when it cannot be listed."""
     if not sf_dir:
         return None
-    candidates = []
-    if table:
-        candidates.append(os.path.join(str(sf_dir), f"{table}.parquet"))
-    candidates.append(str(sf_dir))
-    for cand in candidates:
-        try:
-            st = os.stat(cand)
-            return (st.st_mtime_ns, st.st_size)
-        except OSError:
-            continue
-    return None
+    try:
+        with os.scandir(sf_dir) as it:
+            return tuple(sorted(
+                (e.name, st.st_mtime_ns, st.st_size)
+                for e in it
+                if e.name.endswith(".parquet")
+                for st in (e.stat(),)
+            ))
+    except OSError:
+        return None
+
+
+def _remove(tmp: tempfile.TemporaryDirectory) -> None:
+    try:
+        tmp.cleanup()
+    except OSError:
+        pass
+
+
+def session_artifact(
+    name: str, sf_dir: str, build: Callable[[str], Any], *params
+) -> Any:
+    """Return the artifact ``name`` of the corpus at ``sf_dir``,
+    calling ``build(workdir)`` on a miss; ``build`` writes under the
+    fresh ``workdir`` and returns the value to cache.  See the module
+    docstring for the key, lock, eviction and lifetime rules."""
+    key = (name, sf_dir, params)
+    fp = corpus_fingerprint(sf_dir)
+    with CACHE_LOCK:
+        held = _ARTIFACTS.get(key)
+    if held is not None and held[0] == fp:
+        return held[2]
+    tmp = tempfile.TemporaryDirectory(prefix=f"spark_{name}_")
+    try:
+        value = build(tmp.name)
+        items = value if isinstance(value, (tuple, list)) else (value,)
+        if any(isinstance(v, DataFrame) for v in items):
+            raise TypeError(
+                f"session artifact {name!r} must not hold a DataFrame: "
+                "store its path (and schema) and read it back per call"
+            )
+    except BaseException:
+        _remove(tmp)
+        raise
+    with CACHE_LOCK:
+        held = _ARTIFACTS.get(key)
+        if held is not None and held[0] == fp:
+            winner, dropped = held, tmp  # lost the race to publish
+        else:
+            winner = _ARTIFACTS[key] = (fp, tmp, value)
+            dropped = held[1] if held is not None else None  # stale
+    if dropped is not None:
+        _remove(dropped)
+    return winner[2]
 
 
 class TempDirPool:

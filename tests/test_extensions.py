@@ -1806,7 +1806,7 @@ def test_countmin_one_sided_guarantee_all_terms(spark, sf_dir):
     assert any(r.est > r.t for r in probes)
 
 
-def test_k_core_peel_fixpoint_and_core_property(spark, sf_dir):
+def test_k_core_peel_fixpoint_and_core_property(spark, sf_dir, tmp_path):
     """The bounded peel must (a) reach fixpoint before the unroll
     limit — otherwise the fixed-round contract is not the true
     2-core — and (b) leave a survivor set in which every node keeps
@@ -1838,16 +1838,16 @@ def test_k_core_peel_fixpoint_and_core_property(spark, sf_dir):
     li = spark.createDataFrame(
         pd.DataFrame(li_rows, columns=["l_orderkey", "l_partkey"])
     )
+    # a fresh sf_dir, so the planted graph is its own session artifact
     orig = G.read_table
     try:
         G.read_table = lambda _s, _d, name: {"lineitem": li}[name]
         planted = {
             r.l_partkey: r.peel_round
-            for r in QUERIES["k_core_peel"].fn(spark, "planted_kcore").collect()
+            for r in QUERIES["k_core_peel"].fn(spark, str(tmp_path)).collect()
         }
     finally:
         G.read_table = orig
-        G._KC_GRAPH_CACHE.pop("planted_kcore", None)
     assert planted == {5: 1, 4: 2, 1: 0, 2: 0, 3: 0}
 
 
@@ -2418,41 +2418,102 @@ def test_repeated_line_scrub_null_and_empty_docs(spark, tmp_path):
     assert rows[3].scrubbed_text == ""
 
 
-def test_linkage_cache_evicts_stale_fingerprint(spark, tmp_path):
-    """r11 ADVICE: regenerating a corpus under the same path must
-    EVICT (and clean up) the superseded cache entry, not leak one
-    pair parquet per regeneration for the process lifetime."""
+def test_session_artifact_contract(spark, tmp_path):
+    """tmpstore.session_artifact, the one build-once cache: a hit
+    returns the same value without rebuilding; a rewritten corpus
+    table evicts the old entry and deletes its directory (driven
+    through the linkage pair table over a regenerated customer
+    table); two concurrent first calls get one value and the losing
+    build's directory is removed; a DataFrame value is refused."""
     import os
+    import sys
+    import threading
+    from urllib.parse import urlparse
 
     from dados_publicos_etl_spark.io import read_table
     from dados_publicos_etl_spark.operators import linkage as L
+    from dados_publicos_etl_spark.tmpstore import session_artifact
 
-    base = read_table(spark, "/root/testdata/sf0.001", "customer")
+    corpus = tmp_path / "corpus"
+    corpus.mkdir()
+    (corpus / "t.parquet").write_bytes(b"v1")
+    built = []
+
+    def build(workdir):
+        built.append(workdir)
+        return workdir
+
+    # hit: same value, no second build
+    first = session_artifact("contract_hit", str(corpus), build)
+    assert session_artifact("contract_hit", str(corpus), build) == first
+    assert built == [first] and os.path.isdir(first)
+
+    # eviction: the linkage family rebuilds for a regenerated table
+    # and deletes the superseded pair parquet
+    linkage_dir = str(tmp_path / "linkage")
+    base = read_table(spark, SF_SMOKE, "customer")
 
     def write_snapshot(df):
         rows = df.collect()
         spark.createDataFrame(rows, df.schema).coalesce(1).write.mode(
             "overwrite"
-        ).parquet(f"{tmp_path}/customer.parquet")
+        ).parquet(f"{linkage_dir}/customer.parquet")
+
+    def pair_workdir():
+        files = L.snm_pair_table(spark, linkage_dir).inputFiles()
+        return os.path.dirname(os.path.dirname(urlparse(files[0]).path))
 
     write_snapshot(base.limit(15))
-    L.snm_pair_table(spark, str(tmp_path)).count()
-    old_entries = [
-        (k, v) for k, v in L._LINKAGE_CACHE.items()
-        if k[0] == str(tmp_path)
-    ]
-    assert len(old_entries) == 1
-    old_dir = old_entries[0][1][0].name
-
+    old_dir = pair_workdir()
+    assert pair_workdir() == old_dir  # a hit
     write_snapshot(base.limit(25))
-    L.snm_pair_table(spark, str(tmp_path)).count()
-    entries = [
-        (k, v) for k, v in L._LINKAGE_CACHE.items()
-        if k[0] == str(tmp_path)
+    new_dir = pair_workdir()
+    assert new_dir != old_dir
+    assert not os.path.exists(old_dir) and os.path.isdir(new_dir)
+
+    # race: more first calls than cores, all building at once; one
+    # value wins and every losing build's directory is gone
+    n = 8
+    barrier = threading.Barrier(n, timeout=60)
+    raced, got = [], []
+
+    def racing_build(workdir):
+        raced.append(workdir)
+        barrier.wait()  # every build in flight before any publishes
+        return workdir
+
+    threads = [
+        threading.Thread(
+            target=lambda: got.append(
+                session_artifact("contract_race", str(corpus), racing_build)
+            )
+        )
+        for _ in range(n)
     ]
-    assert len(entries) == 1  # stale fingerprint evicted
-    assert entries[0][0] != old_entries[0][0]
-    assert not os.path.exists(old_dir)  # and its parquet cleaned up
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert len(raced) == n and len(got) == n and len(set(got)) == 1
+    assert [os.path.isdir(d) for d in raced].count(True) == 1
+    assert os.path.isdir(got[0])
+
+    # a DataFrame is session-bound: refused, and its directory removed
+    seen = []
+
+    def df_build(workdir):
+        seen.append(workdir)
+        return spark.range(1)
+
+    with pytest.raises(TypeError):
+        session_artifact("contract_df", str(corpus), df_build)
+    assert not os.path.exists(seen[0])
 
 
 def test_longest_repeated_ngram_exact_planted(spark, tmp_path):

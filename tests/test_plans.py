@@ -1179,6 +1179,65 @@ def test_package_collect_sites_are_inventoried():
     )
 
 
+def test_build_once_caches_live_only_in_tmpstore():
+    """Static inventory of session caches: ``tmpstore.session_artifact``
+    is the one build-once-per-corpus cache (key, fingerprint, lock,
+    eviction, lifetime decided once).  Fails if any other package
+    module defines a module-level ``_*_CACHE`` / ``_*_DIRS`` /
+    ``_WORKSPACES`` dict or reaches for the helper's internals
+    (``CACHE_LOCK``, ``corpus_fingerprint``) to hand-roll one — route
+    the new cache through ``session_artifact`` instead."""
+    import ast
+    import os
+    import re
+
+    import dados_publicos_etl_spark as pkg
+
+    cache_name = re.compile(r"_\w*_(CACHE|DIRS)|_WORKSPACES")
+    internals = {"CACHE_LOCK", "corpus_fingerprint"}
+    root = os.path.dirname(pkg.__file__)
+    offenders: list[str] = []
+    for dirpath, _dirs, files in os.walk(root):
+        for f in files:
+            path = os.path.join(dirpath, f)
+            if not f.endswith(".py") or f == "tmpstore.py":
+                continue
+            with open(path) as fh:
+                tree = ast.parse(fh.read(), filename=path)
+            for node in tree.body:
+                if isinstance(node, ast.Assign):
+                    targets, value = node.targets, node.value
+                elif isinstance(node, ast.AnnAssign):
+                    targets, value = [node.target], node.value
+                else:
+                    continue
+                is_dict = isinstance(value, (ast.Dict, ast.DictComp)) or (
+                    isinstance(value, ast.Call)
+                    and isinstance(value.func, ast.Name)
+                    and value.func.id == "dict"
+                )
+                for t in targets:
+                    if (
+                        is_dict
+                        and isinstance(t, ast.Name)
+                        and cache_name.fullmatch(t.id)
+                    ):
+                        offenders.append(f"{f}:{node.lineno} {t.id}")
+            for node in ast.walk(tree):
+                if isinstance(node, ast.ImportFrom):
+                    names = {a.name for a in node.names}
+                elif isinstance(node, ast.Attribute):
+                    names = {node.attr}
+                else:
+                    continue
+                for name in sorted(names & internals):
+                    offenders.append(f"{f}:{node.lineno} {name}")
+    assert not offenders, (
+        f"hand-rolled build-once caches outside tmpstore.py: {offenders}"
+        " — use tmpstore.session_artifact"
+    )
+
+
 def test_driver_collects_bounded_at_10x(spark, tmp_path_factory):
     """Dynamic half: every collect-bearing query runs at smoke scale
     AND at an FK-consistent 10x replica under a collect-size
