@@ -42,15 +42,9 @@ from dados_publicos_etl_spark.functions.text import (
 from dados_publicos_etl_spark.io import read_table
 from dados_publicos_etl_spark.plans.registry import query
 from dados_publicos_etl_spark.session import machine_sized_shuffle
-from dados_publicos_etl_spark.tmpstore import TempDirPool, session_artifact
+from dados_publicos_etl_spark.tmpstore import reroot, session_artifact
 
 _THRESH = 0.8
-
-# Bounded pool for per-round datasource-cut dirs: a cut's files are
-# dead once its consumer eagerly materializes (every cutting loop
-# localCheckpoints within a round or two), so a rolling window of 8
-# per purpose is ample — see tmpstore.py.
-_CUTS = TempDirPool()
 
 
 @machine_sized_shuffle
@@ -196,9 +190,7 @@ def connected_components(
         # that need >4 rounds get the labels relation re-rooted on a
         # parquet read.
         if (_it + 1) % 4 == 0:
-            cpath = f"{_CUTS.new_dir('cc_cut', 'spark_cc_cut_')}/labels"
-            labels.write.mode("overwrite").parquet(cpath)
-            labels = labels.sparkSession.read.parquet(cpath)
+            labels = reroot(labels, "cc_cut")
     return labels
 
 
@@ -856,9 +848,7 @@ def k_core_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
         # ~3 self-join links; a full 12-round peel would cross the
         # ~19-link wall checkpointing cannot reset.
         if r % 4 == 0:
-            kpath = f"{_CUTS.new_dir('kc_cut', 'spark_kc_cut_')}/adj"
-            adj.write.mode("overwrite").parquet(kpath)
-            adj = spark.read.parquet(kpath)
+            adj = reroot(adj, "kc_cut")
         active = survivors
     out = layers[0]
     for extra in layers[1:]:
@@ -1166,25 +1156,15 @@ def boruvka_msf(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             if pending == 0:
                 break  # already idempotent — skip the remaining jumps
-        mpath = f"{_CUTS.new_dir('msf_map', 'spark_msf_map_')}/mapping"
-        parent.select(
-            F.col("comp").alias("old_comp"),
-            F.col("parent").alias("new_comp"),
-        ).write.mode("overwrite").parquet(mpath)
-        mapping = spark.read.parquet(mpath)
-        # The parquet re-root is LOAD-BEARING beyond lineage hygiene
-        # (r10 finding, measured): localCheckpoint's LogicalRDD
-        # PRESERVES the source plan's estimated statistics, and
-        # SizeInBytesOnlyStatsPlanVisitor.visitJoin multiplies them —
-        # each pointer jump SQUARES the carried sizeInBytes, so
-        # without a per-round reset the estimate reaches
-        # base^(jumps^rounds) by round 3 and Dataset.checkpoint
-        # spends MINUTES multiplying million-digit BigInts
-        # driver-side (the r10 attempt to drop this write hung the
-        # sf0.01 differential exactly that way).  A parquet scan's
-        # stats are its file size — the reset costs one tiny write
-        # job per round and caps stat growth at one round's jump
-        # chain.
+        # the per-round parquet re-root is load-bearing: it resets the
+        # estimated stats each pointer jump squares (tmpstore.py)
+        mapping = reroot(
+            parent.select(
+                F.col("comp").alias("old_comp"),
+                F.col("parent").alias("new_comp"),
+            ),
+            "msf_map",
+        )
         # lazy re-stamp: the next round's nominate count (or the
         # final forest action) materializes it.
         labels = (

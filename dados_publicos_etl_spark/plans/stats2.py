@@ -28,6 +28,7 @@ from dados_publicos_etl_spark.operators.ranking import prefix_sums_by_range
 from dados_publicos_etl_spark.plans.mining import _EDGES_SQL, _co_edges
 from dados_publicos_etl_spark.plans.registry import query
 from dados_publicos_etl_spark.session import machine_sized_shuffle
+from dados_publicos_etl_spark.tmpstore import new_dir
 
 # ---------------------------------------------------------------------------
 # Spearman rank correlation (daily volume vs daily revenue, per class)
@@ -1023,7 +1024,7 @@ def csv_rfc4180_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             "'x,', chr(13), chr(10), '\"\"tail')"
         ).alias("torture"),
     )
-    out_dir = _RT_DIRS.new_dir("csv_rfc", "spark_csv_rfc_")
+    out_dir = new_dir("csv_rfc", "spark_csv_rfc_")
     (
         torture.write.mode("overwrite")
         .option("header", "true")
@@ -1040,15 +1041,6 @@ def csv_rfc4180_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .csv(out_dir)
     )
     return back.select("doc_id", F.md5("torture").alias("h"))
-
-
-# Round-trip output dirs: bounded rolling pool (newest 8 per purpose,
-# atexit-cleaned) — the returned lazy DataFrames stay readable until
-# the same query has run 8 more times, and nothing accumulates for
-# the process lifetime.
-from dados_publicos_etl_spark.tmpstore import TempDirPool  # noqa: E402
-
-_RT_DIRS = TempDirPool()
 
 
 # ---------------------------------------------------------------------------
@@ -1289,7 +1281,7 @@ def parquet_codec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("cents"),
     )
-    root = _RT_DIRS.new_dir("codec_rt", "spark_codec_rt_")
+    root = new_dir("codec_rt", "spark_codec_rt_")
     LAST_CODEC_DIR[0] = root
     parts = []
     for codec in _PQ_CODECS:

@@ -70,12 +70,15 @@ def stream_events_foreach_batch(
     return n_batches["n"]
 
 
+from dados_publicos_etl_spark.io import (  # noqa: E402
+    epoch_micros_sql,
+    parquet_ts_unit,
+)
 from dados_publicos_etl_spark.plans.registry import query  # noqa: E402
+from dados_publicos_etl_spark.streaming.windows import (  # noqa: E402
+    run_state_table,
+)
 from dados_publicos_etl_spark.tmpstore import session_artifact  # noqa: E402
-
-# state dirs of completed runs — kept for the session so returned
-# DataFrames stay readable; removed by finalizers at interpreter exit
-_CDC_STATE_DIRS: list = []
 
 
 def _cdc_feed_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -102,6 +105,15 @@ def _cdc_feed_dir(spark: SparkSession, sf_dir: str) -> str:
         return workdir
 
     return session_artifact("cdc_feed", sf_dir, build)
+
+
+def _cdc_feed_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The CDC feed as a file stream, one file per micro-batch."""
+    return (
+        spark.readStream.schema(_RAW_EVENTS_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(_cdc_feed_dir(spark, sf_dir))
+    )
 
 
 @query(
@@ -132,17 +144,9 @@ def _cdc_feed_dir(spark: SparkSession, sf_dir: str) -> str:
     "batch never reads the file it overwrites.",
 )
 def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from dados_publicos_etl_spark.io import parquet_ts_unit, epoch_micros_sql
-    from dados_publicos_etl_spark.streaming.windows import _streaming_shuffle
-
-    feed = _cdc_feed_dir(spark, sf_dir)
     unit = parquet_ts_unit(f"{sf_dir}/events.parquet")
-    state_tmp = tempfile.TemporaryDirectory(prefix="spark_cdc_state_")
-    state = {"path": None, "version": 0}
 
-    def upsert(batch_df: DataFrame, _bid: int) -> None:
+    def upsert(prev: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         b = (
             batch_df.withColumn(
                 "ts_us", F.expr(epoch_micros_sql("ts", unit))
@@ -155,44 +159,27 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("last"),
             )
         )
-        if state["path"] is not None:
-            s = spark.read.parquet(state["path"]).alias("s")
-            merged = (
-                s.join(b.alias("b"), "user_id", "full_outer")
-                .select(
-                    "user_id",
-                    (
-                        F.coalesce(F.col("s.n_events"), F.lit(0))
-                        + F.coalesce(F.col("b.n_events"), F.lit(0))
-                    ).alias("n_events"),
-                    F.greatest(
-                        F.col("s.last"), F.col("b.last")
-                    ).alias("last"),
-                )
+        if prev is None:
+            return b
+        return (
+            prev.alias("s")
+            .join(b.alias("b"), "user_id", "full_outer")
+            .select(
+                "user_id",
+                (
+                    F.coalesce(F.col("s.n_events"), F.lit(0))
+                    + F.coalesce(F.col("b.n_events"), F.lit(0))
+                ).alias("n_events"),
+                F.greatest(F.col("s.last"), F.col("b.last")).alias("last"),
             )
-        else:
-            merged = b
-        state["version"] += 1
-        new_path = f"{state_tmp.name}/v{state['version']}"
-        merged.write.mode("overwrite").parquet(new_path)
-        state["path"] = new_path
+        )
 
-    stream = (
-        spark.readStream.schema(_RAW_EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
-    with _streaming_shuffle(spark):
-        q = stream.writeStream.foreachBatch(upsert).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
     # the state table is DATA-scale (one row per user) — never
-    # collect it; keep the final version's directory alive for the
-    # session (finalizer removes it at exit) and hand back the scan
-    _CDC_STATE_DIRS.append(state_tmp)
-    return spark.read.parquet(state["path"]).select(
+    # collect it; the serving read is a scan of the final version
+    state = run_state_table(
+        spark, _cdc_feed_stream(spark, sf_dir), upsert, "stream_cdc_upsert"
+    )
+    return state.select(
         "user_id",
         "n_events",
         F.col("last.event_type").alias("last_type"),
@@ -240,48 +227,27 @@ _SHQ_BIN = 10  # fixed value-bin width (values ~0-500 -> ~50 bins/type)
     "mergeable's merge law with the stream_cdc_upsert machinery.",
 )
 def stream_histogram_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from pyspark.sql import Window as W
 
-    from dados_publicos_etl_spark.streaming.windows import (
-        _streaming_shuffle,
-    )
-
-    feed = _cdc_feed_dir(spark, sf_dir)
-    state_tmp = tempfile.TemporaryDirectory(prefix="spark_shq_state_")
-    state = {"path": None, "version": 0}
-
-    def merge_hist(batch_df: DataFrame, _bid: int) -> None:
+    def merge_hist(prev: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         b = batch_df.groupBy(
             "event_type",
             F.floor(F.col("value") / _SHQ_BIN).cast("long").alias("bin"),
         ).agg(F.count(F.lit(1)).alias("cnt"))
-        if state["path"] is not None:
-            s = spark.read.parquet(state["path"])
-            b = (
-                s.unionByName(b)
-                .groupBy("event_type", "bin")
-                .agg(F.sum("cnt").alias("cnt"))
-            )
-        state["version"] += 1
-        new_path = f"{state_tmp.name}/v{state['version']}"
-        b.write.mode("overwrite").parquet(new_path)
-        state["path"] = new_path
+        if prev is None:
+            return b
+        return (
+            prev.unionByName(b)
+            .groupBy("event_type", "bin")
+            .agg(F.sum("cnt").alias("cnt"))
+        )
 
-    stream = (
-        spark.readStream.schema(_RAW_EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
+    hist = run_state_table(
+        spark,
+        _cdc_feed_stream(spark, sf_dir),
+        merge_hist,
+        "stream_histogram_quantile",
     )
-    with _streaming_shuffle(spark):
-        q = stream.writeStream.foreachBatch(merge_hist).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    _CDC_STATE_DIRS.append(state_tmp)
-    hist = spark.read.parquet(state["path"])
     wcum = W.partitionBy("event_type").orderBy("bin")
     wall = W.partitionBy("event_type")
     cum = hist.select(
@@ -353,17 +319,7 @@ def stream_histogram_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     "stream_histogram_quantile's bin counts).",
 )
 def stream_kl_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from dados_publicos_etl_spark.streaming.windows import (
-        _streaming_shuffle,
-    )
-
-    feed = _cdc_feed_dir(spark, sf_dir)
-    state_tmp = tempfile.TemporaryDirectory(prefix="spark_skl_state_")
-    state = {"path": None, "version": 0}
-
-    def merge_counts(batch_df: DataFrame, _bid: int) -> None:
+    def merge_counts(prev: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         b = batch_df.groupBy(
             # NTZ arithmetic: timestamp_micros yields LTZ and would
             # shift the day bucket under a non-UTC driver session
@@ -373,31 +329,17 @@ def stream_kl_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("day"),
             "event_type",
         ).agg(F.count(F.lit(1)).alias("c"))
-        if state["path"] is not None:
-            s = spark.read.parquet(state["path"])
-            b = (
-                s.unionByName(b)
-                .groupBy("day", "event_type")
-                .agg(F.sum("c").alias("c"))
-            )
-        state["version"] += 1
-        new_path = f"{state_tmp.name}/v{state['version']}"
-        b.write.mode("overwrite").parquet(new_path)
-        state["path"] = new_path
+        if prev is None:
+            return b
+        return (
+            prev.unionByName(b)
+            .groupBy("day", "event_type")
+            .agg(F.sum("c").alias("c"))
+        )
 
-    stream = (
-        spark.readStream.schema(_RAW_EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
+    daily = run_state_table(
+        spark, _cdc_feed_stream(spark, sf_dir), merge_counts, "stream_kl_drift"
     )
-    with _streaming_shuffle(spark):
-        q = stream.writeStream.foreachBatch(merge_counts).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    _CDC_STATE_DIRS.append(state_tmp)
-    daily = spark.read.parquet(state["path"])
     day_tot = daily.groupBy("day").agg(F.sum("c").alias("n_d"))
     gmix = daily.groupBy("event_type").agg(F.sum("c").alias("g"))
     n_g = daily.agg(F.sum("c")).first()[0]
@@ -462,16 +404,6 @@ _SHLL_M = 64  # portable HLL registers (p = 6), matching
     "cardinality.",
 )
 def stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from dados_publicos_etl_spark.streaming.windows import (
-        _streaming_shuffle,
-    )
-
-    feed = _cdc_feed_dir(spark, sf_dir)
-    state_tmp = tempfile.TemporaryDirectory(prefix="spark_shll_state_")
-    state = {"path": None, "version": 0}
-
     def regs_of(df: DataFrame) -> DataFrame:
         h = F.md5(F.col("user_id").cast("string"))
         w = F.conv(F.substring(h, 3, 6), 16, 10).cast("long")
@@ -491,32 +423,22 @@ def stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.max("r").alias("r"))
         )
 
-    def merge_regs(batch_df: DataFrame, _bid: int) -> None:
+    def merge_regs(prev: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         b = regs_of(batch_df)
-        if state["path"] is not None:
-            s = spark.read.parquet(state["path"])
-            b = (
-                s.unionByName(b)
-                .groupBy("event_type", "bucket")
-                .agg(F.max("r").alias("r"))
-            )
-        state["version"] += 1
-        new_path = f"{state_tmp.name}/v{state['version']}"
-        b.write.mode("overwrite").parquet(new_path)
-        state["path"] = new_path
+        if prev is None:
+            return b
+        return (
+            prev.unionByName(b)
+            .groupBy("event_type", "bucket")
+            .agg(F.max("r").alias("r"))
+        )
 
-    stream = (
-        spark.readStream.schema(_RAW_EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
+    regs = run_state_table(
+        spark,
+        _cdc_feed_stream(spark, sf_dir),
+        merge_regs,
+        "stream_hll_distinct",
     )
-    with _streaming_shuffle(spark):
-        q = stream.writeStream.foreachBatch(merge_regs).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    _CDC_STATE_DIRS.append(state_tmp)
-    return spark.read.parquet(state["path"]).select(
+    return regs.select(
         "event_type", "bucket", F.col("r").cast("long").alias("r")
     )

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 from contextlib import contextmanager
 from functools import partial
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
@@ -22,7 +23,7 @@ from pyspark.sql import functions as F
 from dados_publicos_etl_spark.functions.numeric import money_sum
 from dados_publicos_etl_spark.io import read_table
 from dados_publicos_etl_spark.plans.registry import query
-from dados_publicos_etl_spark.tmpstore import TempDirPool, session_artifact
+from dados_publicos_etl_spark.tmpstore import new_dir, reroot, session_artifact
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss"
 
@@ -67,6 +68,73 @@ def _streaming_shuffle(spark: SparkSession, n: int = 4):
             spark.conf.unset(_NODATA_KEY)
         else:
             spark.conf.set(_NODATA_KEY, prev_nodata)
+
+
+# purpose -> run metadata (output mode, batch count, streaming
+# progress incl. numRowsRemoved / numRowsDroppedByWatermark) of the
+# most recent run_state_table drive — pytest pins the watermark
+# eviction and late-drop claims against it
+_STREAM_LAST_RUNS: dict[str, dict] = {}
+
+
+def run_state_table(
+    spark: SparkSession,
+    stream: DataFrame,
+    merge: Callable[[DataFrame | None, DataFrame], DataFrame],
+    purpose: str,
+) -> DataFrame:
+    """Drive ``stream`` to completion through a ``foreachBatch``
+    state table and return the final state as a batch DataFrame.
+
+    Per micro-batch the state becomes ``reroot(merge(state, batch))``
+    — ``merge(None, batch)`` for the first — so every version is a
+    parquet table in its own pool dir (tmpstore.reroot) and the
+    returned DataFrame is a lazy scan of the last one, in ``spark``.
+    With no batch at all the result is ``merge(None, <empty
+    batch>)``, so an empty feed yields zero rows of the usual schema.
+
+    The query runs in UPDATE mode under ``_streaming_shuffle``: an
+    aggregation emits only the keys its batch changed, each with its
+    CURRENT value (the merge is a keyed upsert, ``_upsert``), and the
+    watermark evicts closed windows from the state store (complete
+    mode would retain every key and re-emit them each trigger — the
+    unbounded anti-pattern).  On a stateless stream update mode is
+    append.  Run metadata lands in ``_STREAM_LAST_RUNS[purpose]``.
+    """
+    state: DataFrame | None = None
+    n_batches = 0
+
+    def step(batch: DataFrame, _bid: int) -> None:
+        nonlocal state, n_batches
+        state = reroot(merge(state, batch), purpose, spark)
+        n_batches += 1
+
+    with _streaming_shuffle(spark):
+        q = stream.writeStream.outputMode("update").foreachBatch(step).start()
+        try:
+            q.processAllAvailable()
+            _STREAM_LAST_RUNS[purpose] = {
+                "output_mode": "update",
+                "n_batches": n_batches,
+                "progress": list(q.recentProgress or []),
+            }
+        finally:
+            q.stop()
+    if state is None:
+        return merge(None, spark.createDataFrame([], stream.schema))
+    return state
+
+
+def _upsert(
+    keys: list[str], prev: DataFrame | None, batch: DataFrame
+) -> DataFrame:
+    """Keyed-upsert merge for run_state_table: a batch row replaces
+    the state row with the same ``keys``."""
+    if prev is None:
+        return batch
+    return prev.join(batch, keys, "left_anti").unionByName(batch)
+
+
 _DUCK_BUCKET = (
     # naive-timestamp arithmetic: DuckDB's to_timestamp() returns
     # TIMESTAMPTZ and strftime would render it in the local zone,
@@ -272,7 +340,7 @@ def streaming_tumbling_counts(
 ) -> DataFrame:
     """True Structured Streaming variant of the tumbling window:
     readStream over the events parquet -> watermark -> window agg ->
-    UPDATE-mode keyed upsert sink (``_run_update_upsert``); returns
+    UPDATE-mode keyed upsert sink (``run_state_table``); returns
     the completed state table as a DataFrame.
 
     Update mode + the 1-hour watermark keep streaming state bounded
@@ -302,8 +370,11 @@ def streaming_tumbling_counts(
             "n_events",
         )
     )
-    return _run_update_upsert(
-        spark, agg, ["window_start", "event_type"], "stream_true_streaming"
+    return run_state_table(
+        spark,
+        agg,
+        partial(_upsert, ["window_start", "event_type"]),
+        "stream_true_streaming",
     )
 
 
@@ -477,8 +548,11 @@ def streaming_static_enrich(
             "sum_value",
         )
     )
-    return _run_update_upsert(
-        spark, agg, ["window_start", "c_mktsegment"], "stream_static_enrich"
+    return run_state_table(
+        spark,
+        agg,
+        partial(_upsert, ["window_start", "c_mktsegment"]),
+        "stream_static_enrich",
     )
 
 
@@ -500,11 +574,6 @@ def streaming_static_enrich(
 )
 def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     return streaming_static_enrich(spark, sf_dir)
-
-
-# sink dirs of completed probe runs — kept alive so the returned
-# DataFrames stay readable; finalizers remove them at interpreter exit
-_ANN_SINK_DIRS: list = []
 
 
 def _write_ann_stream_queries(
@@ -585,10 +654,7 @@ def streaming_ann_probe(
     # a serving stream runs indefinitely, so accumulating results on
     # the driver is unbounded state by construction.  The returned
     # DataFrame is a scan of the sink — data-scale stays distributed.
-    import tempfile
-
-    sink_tmp = tempfile.TemporaryDirectory(prefix="spark_ann_sink_")
-    _ANN_SINK_DIRS.append(sink_tmp)
+    sink_dir = new_dir("stream_ann_probe", "spark_ann_sink_")
 
     def probe_batch(bdf: DataFrame, bid: int) -> None:
         # query vectors per batch are a handful of rows (the serving
@@ -600,7 +666,7 @@ def streaming_ann_probe(
                 index_df=index_df,
             )
             res.write.mode("overwrite").parquet(
-                f"{sink_tmp.name}/batch_id={bid}"
+                f"{sink_dir}/batch_id={bid}"
             )
 
     with _streaming_shuffle(spark):
@@ -610,7 +676,7 @@ def streaming_ann_probe(
         finally:
             q.stop()
     return (
-        spark.read.parquet(sink_tmp.name)
+        spark.read.parquet(sink_dir)
         .select("query_id", "neighbor_id", "cos_sim", "rank")
     )
 
@@ -636,78 +702,6 @@ def _stream_ann_oracle() -> str:
 )
 def stream_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return streaming_ann_probe(spark, sf_dir)
-
-
-# state dirs of completed runs — bounded rolling pool (the returned
-# DataFrame reads the final version lazily; by the time a dir rotates
-# out, that query's result has long been collected)
-_STATE_DIRS = TempDirPool()
-# run metadata of the most recent stream_topk_windows execution
-# (output mode, batch count, streaming progress) — pytest pins the
-# watermark-eviction claim against this
-_TOPK_LAST_RUN: dict = {}
-# query name -> run metadata for every update-upsert drive-to-
-# completion run (same shape as _TOPK_LAST_RUN)
-_STREAM_LAST_RUNS: dict[str, dict] = {}
-
-
-def _run_update_upsert(
-    spark: SparkSession,
-    agg: DataFrame,
-    keys: list[str],
-    purpose: str,
-) -> DataFrame:
-    """Drive an UPDATE-mode streaming aggregation to completion via a
-    ``foreachBatch`` keyed upsert into a versioned parquet state
-    table, and return the final state as a batch DataFrame.
-
-    This is the bounded-state sink shape every drive-to-completion
-    query in this package uses (see ``stream_cdc_upsert``): update
-    mode emits only the keys whose aggregate changed in the batch —
-    each carrying its CURRENT value, so the upsert is
-    delete-matching-keys + insert — and the watermark EVICTS closed
-    windows from the state store (complete mode would retain every
-    key forever and re-emit the whole result each trigger — the
-    unbounded anti-pattern).  Run metadata (mode, batch count,
-    streaming progress incl. ``numRowsRemoved``) lands in
-    ``_STREAM_LAST_RUNS[purpose]``.
-    """
-    state_dir = _STATE_DIRS.new_dir(purpose, f"spark_{purpose}_")
-    state: dict = {"path": None, "version": 0}
-
-    def upsert(bdf: DataFrame, _bid: int) -> None:
-        if state["path"] is not None:
-            s = spark.read.parquet(state["path"])
-            merged = s.join(bdf, keys, "left_anti").unionByName(bdf)
-        else:
-            merged = bdf
-        state["version"] += 1
-        new_path = f"{state_dir}/v{state['version']}"
-        merged.write.mode("overwrite").parquet(new_path)
-        state["path"] = new_path
-
-    with _streaming_shuffle(spark):
-        q = agg.writeStream.outputMode("update").foreachBatch(upsert).start()
-        try:
-            q.processAllAvailable()
-            _STREAM_LAST_RUNS[purpose] = {
-                "output_mode": "update",
-                "n_batches": state["version"],
-                "progress": list(q.recentProgress or []),
-            }
-        finally:
-            q.stop()
-    if state["path"] is None:
-        return spark.createDataFrame([], agg.schema)
-    # EAGERLY materialize off the pooled state dir: the TempDirPool
-    # rotates this dir out after 8 newer runs of the same purpose, so
-    # a lazily-returned parquet read deferred past that would hit an
-    # unreadable path — localCheckpoint pins the rows in block storage
-    return (
-        spark.read.parquet(state["path"])
-        .select(*agg.columns)
-        .localCheckpoint(eager=True)
-    )
 
 
 def _write_topk_feed(spark: SparkSession, sf_dir: str, workdir: str) -> str:
@@ -810,7 +804,7 @@ def stream_topk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     result equals the batch oracle — and (b) the watermark advanced
     by batch 0 evicts most of file 0's windows during batch 1, which
     the pytest pins via ``numRowsRemoved`` in the run's progress
-    (captured in ``_TOPK_LAST_RUN``).
+    (captured in ``_STREAM_LAST_RUNS["stream_topk_windows"]``).
     """
     from pyspark.sql import Window as W
 
@@ -838,11 +832,12 @@ def stream_topk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    sink = _run_update_upsert(
-        spark, agg, ["window_start", "user_id"], "stream_topk_windows"
+    sink = run_state_table(
+        spark,
+        agg,
+        partial(_upsert, ["window_start", "user_id"]),
+        "stream_topk_windows",
     )
-    _TOPK_LAST_RUN.clear()
-    _TOPK_LAST_RUN.update(_STREAM_LAST_RUNS["stream_topk_windows"])
     rk = F.row_number().over(
         W.partitionBy("window_start").orderBy(
             F.desc("n_events"), "user_id"
@@ -969,8 +964,11 @@ def stream_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    return _run_update_upsert(
-        spark, agg, ["window_start", "event_type"], "stream_late_drop"
+    return run_state_table(
+        spark,
+        agg,
+        partial(_upsert, ["window_start", "event_type"]),
+        "stream_late_drop",
     )
 
 
@@ -1235,10 +1233,8 @@ def stream_decontaminate_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(feed)
     )
-    state_dir = _STATE_DIRS.new_dir("decon_gate", "spark_decon_gate_")
-    state: dict = {"path": None, "version": 0}
 
-    def gate(bdf: DataFrame, _bid: int) -> None:
+    def gate(prev: DataFrame | None, bdf: DataFrame) -> DataFrame:
         sh = bdf.select("doc_id", tokens("text").alias("toks")).select(
             "doc_id",
             F.explode(shingles_from_tokens(F.col("toks"), n=4)).alias("s"),
@@ -1259,39 +1255,6 @@ def stream_decontaminate_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.coalesce("n_shared", F.lit(0)) > 0).alias("contaminated"),
             )
         )
-        if state["path"] is not None:
-            prev = spark.read.parquet(state["path"])
-            merged = prev.join(out, ["doc_id"], "left_anti").unionByName(out)
-        else:
-            merged = out
-        state["version"] += 1
-        new_path = f"{state_dir}/v{state['version']}"
-        merged.write.mode("overwrite").parquet(new_path)
-        state["path"] = new_path
+        return _upsert(["doc_id"], prev, out)
 
-    with _streaming_shuffle(spark):
-        q = stream.writeStream.outputMode("update").foreachBatch(gate).start()
-        try:
-            q.processAllAvailable()
-            _STREAM_LAST_RUNS["stream_decontaminate_gate"] = {
-                "output_mode": "update",
-                "n_batches": state["version"],
-                "stateless": True,
-                "progress": list(q.recentProgress or []),
-            }
-        finally:
-            q.stop()
-    cols = ["doc_id", "n_shared_shingles", "contaminated"]
-    if state["path"] is None:
-        return spark.createDataFrame([], "doc_id long").selectExpr(
-            "doc_id",
-            "CAST(0 AS LONG) AS n_shared_shingles",
-            "CAST(false AS BOOLEAN) AS contaminated",
-        )
-    # eager for the same TempDirPool-rotation reason as
-    # _run_update_upsert above
-    return (
-        spark.read.parquet(state["path"])
-        .select(*cols)
-        .localCheckpoint(eager=True)
-    )
+    return run_state_table(spark, stream, gate, "stream_decontaminate_gate")

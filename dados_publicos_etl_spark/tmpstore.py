@@ -34,17 +34,35 @@ At 100 TB an artifact is a table a pipeline persists next to the
 corpus; this function is the one place where that switch is made.
 
 ``TempDirPool`` serves the other pattern: per-run dirs whose
-lifetime outlives the writing function but not many later runs —
-datasource cuts in iterative loops (operators/graph.py — re-rooting a
-plan on a scan resets the self-join chain, see BENCH_NOTES
-"self-join chain degradation") and streaming foreachBatch state
-tables (streaming/windows.py, sinks.py — the returned DataFrame
-lazily reads the final state version).  It keeps a rolling window of
-the newest ``keep`` dirs per purpose, deleting older dirs as new ones
-arrive (by the time a dir rotates out, its consumer has materialized
-— iterative loops eagerly localCheckpoint within a round or two, and
-a query result is collected before the same query has run ``keep``
-more times), and removes whatever survives atexit.
+lifetime outlives the writing function but not many later runs.  The
+package has ONE pool (``_POOL``; callers ask ``new_dir(purpose,
+prefix)``), and its contract is a rolling window: **a dir lives until
+``keep`` newer dirs of its purpose exist**, then it is deleted; what
+survives is removed atexit.  By the time a dir rotates out its
+consumer is done — an iterative loop has moved past the round that
+read it, and a query result has been collected before its query has
+written ``keep`` more dirs — so the DataFrames handed out over pool
+dirs stay lazy scans, never eager checkpoints.
+
+``reroot(df, purpose)`` is the one write-then-read-back of the
+package: it writes ``df`` as parquet into a fresh pool dir and reads
+it back with the schema of the DataFrame it wrote (no
+schema-inference job).  Two kinds of caller need it:
+
+- **Lineage cuts** in iterative loops (operators/graph.py).
+  Re-rooting on a parquet scan is LOAD-BEARING, not hygiene: chained
+  self-joins degrade super-linearly past ~19 links, and
+  ``localCheckpoint``'s LogicalRDD keeps the source plan's estimated
+  statistics, which each self-join multiplies — a pointer-jump loop
+  squares its ``sizeInBytes`` every jump until the driver spends
+  minutes on million-digit BigInts (r10, measured).  A parquet
+  scan's statistics are its file size, so a cut resets both the join
+  chain and the stats (BENCH_NOTES "self-join chain degradation").
+  A localCheckpoint or a reliable checkpoint resets neither.
+- **Streaming state tables** (``streaming.windows.run_state_table``):
+  each micro-batch's merged state lands in a new dir, so a batch
+  never overwrites the version it reads, and the next batch's plan
+  starts from a scan instead of a lineage that grows per batch.
 """
 
 from __future__ import annotations
@@ -55,7 +73,7 @@ import tempfile
 import threading
 from typing import Any, Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 CACHE_LOCK = threading.Lock()
 # (name, sf_dir, params) -> (fingerprint, TemporaryDirectory, value)
@@ -149,3 +167,26 @@ class TempDirPool:
                 except OSError:
                     pass
         self._dirs.clear()
+
+
+_POOL = TempDirPool()
+
+
+def new_dir(purpose: str, prefix: str) -> str:
+    """A fresh dir from the package's one pool (see module docstring
+    for its lifetime)."""
+    return _POOL.new_dir(purpose, prefix)
+
+
+def reroot(
+    df: DataFrame, purpose: str, spark: SparkSession | None = None
+) -> DataFrame:
+    """Write ``df`` as parquet into a fresh pool dir and return a scan
+    of it read with ``df``'s schema: same rows and column types, a
+    plan rooted on a datasource (see module docstring).  The scan
+    belongs to ``spark`` (default: ``df``'s session) — a foreachBatch
+    batch lives in the stream's cloned session, whose conf is frozen
+    at query start."""
+    path = os.path.join(new_dir(purpose, f"spark_{purpose}_"), "t")
+    df.write.parquet(path)
+    return (spark or df.sparkSession).read.schema(df.schema).parquet(path)

@@ -970,7 +970,7 @@ def test_stream_topk_windows_state_is_watermark_bounded(spark):
         tuple(r)
         for r in QUERIES["stream_topk_windows"].fn(spark, sf).collect()
     )
-    run = SW._TOPK_LAST_RUN
+    run = SW._STREAM_LAST_RUNS["stream_topk_windows"]
     assert run["output_mode"] == "update"
     assert run["n_batches"] >= 2, "feed must drive multiple batches"
     removed = sum(
@@ -2515,6 +2515,115 @@ def test_session_artifact_contract(spark, tmp_path):
         session_artifact("contract_df", str(corpus), df_build)
     assert not os.path.exists(seen[0])
 
+
+
+def test_reroot_contract(spark):
+    """tmpstore.reroot, the one write-then-read-back: the scan has the
+    input's rows and column types, is rooted on a parquet relation,
+    and its dir is deleted once ``keep`` newer dirs of the same
+    purpose exist."""
+    import datetime
+    import os
+    from urllib.parse import urlparse
+
+    from dados_publicos_etl_spark import tmpstore
+
+    df = spark.createDataFrame(
+        [
+            (1, "a", 0.5, datetime.date(2024, 1, 2), [1, 2], (3, "x")),
+            (2, None, None, None, None, None),
+        ],
+        "id long, s string, d double, day date, xs array<long>, "
+        "st struct<n:int, t:string>",
+    )
+    rooted = tmpstore.reroot(df, "contract_reroot")
+    assert rooted.dtypes == df.dtypes
+    assert sorted(rooted.collect()) == sorted(df.collect())
+    plan = rooted._jdf.queryExecution().optimizedPlan().toString()
+    assert "Relation" in plan and "parquet" in plan
+
+    def dir_of(frame):
+        path = urlparse(frame.inputFiles()[0]).path
+        return os.path.dirname(os.path.dirname(path))
+
+    first = dir_of(rooted)
+    keep = tmpstore._POOL.keep
+    for _ in range(keep - 1):
+        tmpstore.reroot(df, "contract_reroot")
+    assert os.path.isdir(first)  # keep - 1 newer dirs: still alive
+    tmpstore.reroot(df, "contract_reroot")
+    assert not os.path.exists(first)
+
+
+def _state_feed(spark, feed_dir, n_files):
+    """A (k, v) file feed with one parquet file per part."""
+    feed_dir.mkdir()
+    for i in range(n_files):
+        spark.createDataFrame(
+            [(k, i * 10 + k) for k in range(3)], "k long, v long"
+        ).coalesce(1).write.parquet(f"{feed_dir}/part{i}")
+    return (
+        spark.readStream.schema("k long, v long")
+        .option("maxFilesPerTrigger", 1)
+        .option("recursiveFileLookup", "true")
+        .parquet(str(feed_dir))
+    )
+
+
+def _sum_by_key(prev, batch):
+    """A sinks-style aggregating merge: per-key sum of ``v``."""
+    from pyspark.sql import functions as F
+
+    b = batch.groupBy("k").agg(F.sum("v").alias("total"))
+    if prev is None:
+        return b
+    return prev.unionByName(b).groupBy("k").agg(F.sum("total").alias("total"))
+
+
+def test_run_state_table_contract(spark, tmp_path, monkeypatch):
+    """streaming.windows.run_state_table, the one foreachBatch state
+    table: a 3-file feed runs 3 batches whose merged state equals the
+    batch aggregate, the run lands in _STREAM_LAST_RUNS, and with a
+    pool window of 2 only 2 of the 3 state versions stay on disk —
+    the final one still readable."""
+    import glob
+    import os
+    import tempfile
+
+    from dados_publicos_etl_spark import tmpstore
+    from dados_publicos_etl_spark.streaming import windows as SW
+
+    purpose = "contract_state_table"
+    monkeypatch.setattr(tmpstore._POOL, "keep", 2)
+    stream = _state_feed(spark, tmp_path / "feed", 3)
+    state = SW.run_state_table(spark, stream, _sum_by_key, purpose)
+    assert sorted(tuple(r) for r in state.collect()) == [
+        (0, 30), (1, 33), (2, 36)
+    ]
+    run = SW._STREAM_LAST_RUNS[purpose]
+    assert run["output_mode"] == "update"
+    assert run["n_batches"] == 3
+    assert sum(p.get("numInputRows", 0) for p in run["progress"]) == 9
+    alive = glob.glob(
+        os.path.join(tempfile.gettempdir(), f"spark_{purpose}_*")
+    )
+    assert len(alive) <= 2, alive
+
+
+def test_run_state_table_empty_feed(spark, tmp_path):
+    """Over an empty feed no batch runs; the driver returns zero rows
+    with the schema the merge gives an empty batch (at the parent the
+    sinks loops read back a state path that was never written)."""
+    from dados_publicos_etl_spark.streaming import windows as SW
+
+    stream = _state_feed(spark, tmp_path / "feed", 0)
+    state = SW.run_state_table(
+        spark, stream, _sum_by_key, "contract_state_empty"
+    )
+    empty = spark.createDataFrame([], "k long, v long")
+    assert state.schema == _sum_by_key(None, empty).schema
+    assert state.count() == 0
+    assert SW._STREAM_LAST_RUNS["contract_state_empty"]["n_batches"] == 0
 
 def test_longest_repeated_ngram_exact_planted(spark, tmp_path):
     """Plant a known longest verbatim repeat and assert the binary

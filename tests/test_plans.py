@@ -1180,13 +1180,17 @@ def test_package_collect_sites_are_inventoried():
 
 
 def test_build_once_caches_live_only_in_tmpstore():
-    """Static inventory of session caches: ``tmpstore.session_artifact``
-    is the one build-once-per-corpus cache (key, fingerprint, lock,
-    eviction, lifetime decided once).  Fails if any other package
-    module defines a module-level ``_*_CACHE`` / ``_*_DIRS`` /
-    ``_WORKSPACES`` dict or reaches for the helper's internals
+    """Static inventory of session caches and temp dirs:
+    ``tmpstore.session_artifact`` is the one build-once-per-corpus
+    cache (key, fingerprint, lock, eviction, lifetime decided once)
+    and ``tmpstore``'s one ``TempDirPool`` owns every per-run dir.
+    Fails if any other package module defines a module-level
+    ``_*_CACHE`` / ``_*_DIRS`` / ``_WORKSPACES`` dict, a module-level
+    ``_*_DIRS`` list (a keep-alive list), constructs a
+    ``TempDirPool``, or reaches for the helper's internals
     (``CACHE_LOCK``, ``corpus_fingerprint``) to hand-roll one — route
-    the new cache through ``session_artifact`` instead."""
+    the new cache through ``session_artifact`` and the new dir
+    through ``tmpstore.new_dir`` / ``tmpstore.reroot`` instead."""
     import ast
     import os
     import re
@@ -1194,6 +1198,7 @@ def test_build_once_caches_live_only_in_tmpstore():
     import dados_publicos_etl_spark as pkg
 
     cache_name = re.compile(r"_\w*_(CACHE|DIRS)|_WORKSPACES")
+    dirs_name = re.compile(r"_\w*_DIRS")
     internals = {"CACHE_LOCK", "corpus_fingerprint"}
     root = os.path.dirname(pkg.__file__)
     offenders: list[str] = []
@@ -1211,19 +1216,35 @@ def test_build_once_caches_live_only_in_tmpstore():
                     targets, value = [node.target], node.value
                 else:
                     continue
-                is_dict = isinstance(value, (ast.Dict, ast.DictComp)) or (
-                    isinstance(value, ast.Call)
+                called = (
+                    value.func.id
+                    if isinstance(value, ast.Call)
                     and isinstance(value.func, ast.Name)
-                    and value.func.id == "dict"
+                    else None
+                )
+                is_dict = (
+                    isinstance(value, (ast.Dict, ast.DictComp))
+                    or called == "dict"
+                )
+                is_list = (
+                    isinstance(value, (ast.List, ast.ListComp))
+                    or called == "list"
                 )
                 for t in targets:
-                    if (
-                        is_dict
-                        and isinstance(t, ast.Name)
-                        and cache_name.fullmatch(t.id)
+                    if not isinstance(t, ast.Name):
+                        continue
+                    if (is_dict and cache_name.fullmatch(t.id)) or (
+                        is_list and dirs_name.fullmatch(t.id)
                     ):
                         offenders.append(f"{f}:{node.lineno} {t.id}")
             for node in ast.walk(tree):
+                if isinstance(node, ast.Call):
+                    fn = node.func
+                    if "TempDirPool" in (
+                        getattr(fn, "id", None), getattr(fn, "attr", None)
+                    ):
+                        offenders.append(f"{f}:{node.lineno} TempDirPool()")
+                    continue
                 if isinstance(node, ast.ImportFrom):
                     names = {a.name for a in node.names}
                 elif isinstance(node, ast.Attribute):
@@ -1233,8 +1254,8 @@ def test_build_once_caches_live_only_in_tmpstore():
                 for name in sorted(names & internals):
                     offenders.append(f"{f}:{node.lineno} {name}")
     assert not offenders, (
-        f"hand-rolled build-once caches outside tmpstore.py: {offenders}"
-        " — use tmpstore.session_artifact"
+        f"hand-rolled caches or dir pools outside tmpstore.py: {offenders}"
+        " — use tmpstore.session_artifact / new_dir / reroot"
     )
 
 
