@@ -10,20 +10,31 @@ Spark-first replacement:
 - counts ride along with the job via ``df.observe`` (zero extra
   scans — the reference's eager ``df.count()`` at script.py:49 cost a
   full extra pass);
-- when a layer must be audited at rest, one distributed
-  ``spark.read...agg(count, countDistinct(input_file_name()))`` job
-  replaces the serial per-file loop;
-- the audit row is an append-mode single-row DataFrame with the
-  reference's exact schema (schemas.MONITORING).
+- a layer audited at rest costs ONE scan job and nothing else: the
+  layer opens with an empty user schema (counting reads no column,
+  so no schema-inference job runs), the file count is the relation's
+  listing (``inputFiles()`` — like the reference, which counts the
+  blobs it lists, an empty file counts as a file), and the row count
+  is an ``Observation`` on a ``noop`` write (:func:`observed_count`,
+  one job, one stage);
+- the audit row is appended driver-side, as the reference's one-row
+  streaming insert is (monitor.py:152): one parquet file with the
+  reference's exact schema (schemas.MONITORING), written in memory
+  with Arrow and put through the session's Hadoop ``FileSystem`` for
+  the sink path — any URI a Spark write accepts — under a
+  ``_``-prefixed name that readers skip, then renamed into place, so
+  no reader sees a partial file and no Spark job runs.
 """
 
 from __future__ import annotations
 
 import time
+import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from dados_publicos_etl_spark.schemas import MONITORING
 
@@ -44,50 +55,50 @@ def observe_counts(df: DataFrame, name: str = "audit") -> tuple[DataFrame, Obser
     return df.observe(obs, F.count(F.lit(1)).alias("qtd_rows")), obs
 
 
+def observed_count(df: DataFrame, name: str = "audit") -> int:
+    """Rows of ``df`` from the cheapest action that still flows every
+    row through an observation: a ``noop`` write (one job)."""
+    observed, obs = observe_counts(df, name)
+    observed.write.format("noop").mode("overwrite").save()
+    return int(obs.get["qtd_rows"])
+
+
 def count_layer(spark: SparkSession, path: str, fmt: str = "parquet",
                 **options) -> tuple[int, int]:
     """(n_files, n_rows) of a storage layer in ONE distributed job
     (reference: serial pandas loop, monitor.py:70-121)."""
-    df = spark.read.format(fmt).options(**options).load(path)
-    # project input_file_name() first: Spark 4 rejects nondeterministic
-    # expressions directly inside aggregate functions.
-    row = (
-        df.select(F.input_file_name().alias("_file"))
-        .agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.countDistinct("_file").alias("files"),
-        )
-        .head()
-    )
-    return int(row["files"]), int(row["rows"])
+    df = spark.read.format(fmt).options(**options).schema(T.StructType([])).load(path)
+    return len(df.inputFiles()), observed_count(df, "count_layer")
 
 
 def _now() -> str:
     return time.strftime("%Y-%m-%d %H:%M:%S")
 
 
-def monitoring_row(
-    spark: SparkSession,
-    nm_project: str,
-    step: str,
-    qtd_files: int,
-    qtd_rows: int,
-    dt_start: str,
-    dt_end: str,
-) -> DataFrame:
-    """One audit row with the reference's schema
-    (monitor.py:142-150), UUID generated engine-side."""
-    base = spark.range(1).select(
-        F.expr("uuid()").alias("ID_MONITORING"),
-        F.lit(nm_project).alias("NM_PROJECT"),
-        F.lit(step).alias("STEP"),
-        F.lit(qtd_files).cast("long").alias("QTD_FILES"),
-        F.lit(qtd_rows).cast("long").alias("QTD_ROWS"),
-        F.lit(dt_start).alias("DT_START"),
-        F.lit(dt_end).alias("DT_END"),
-    )
-    assert base.schema == MONITORING
-    return base
+def _append_row(spark: SparkSession, sink_path: str, values: list) -> None:
+    """Append one MONITORING row to the parquet table at ``sink_path``
+    as one new file, without a Spark job."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(MONITORING)
+    table = pa.Table.from_pylist([dict(zip(schema.names, values))], schema=schema)
+    buf = pa.BufferOutputStream()
+    pq.write_table(table, buf)
+    hadoop = spark.sparkContext._jvm.org.apache.hadoop.fs
+    sink = hadoop.Path(sink_path)
+    fs = sink.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    name = f"part-{uuid.uuid4()}.parquet"
+    tmp = hadoop.Path(sink, "_" + name)
+    out = fs.create(tmp, False)
+    try:
+        out.write(buf.getvalue().to_pybytes())
+    finally:
+        out.close()
+    if not fs.rename(tmp, hadoop.Path(sink, name)):
+        fs.delete(tmp, False)
+        raise OSError(f"could not rename the audit row into {sink_path}")
 
 
 def audit_layer(
@@ -100,13 +111,12 @@ def audit_layer(
     **options,
 ) -> AuditResult:
     """Reference O4 (monitor.run): time the count job, produce the
-    audit row, optionally append it to a parquet audit table."""
+    audit row (uuid4 id, monitor.py:32-36), optionally append it to a
+    parquet audit table."""
     dt_start = _now()
     files, rows = count_layer(spark, path, fmt=fmt, **options)
     dt_end = _now()
-    row = monitoring_row(
-        spark, nm_project, step, files, rows, dt_start, dt_end
-    )
     if sink_path:
-        row.write.mode("append").parquet(sink_path)
+        _append_row(spark, sink_path, [str(uuid.uuid4()), nm_project, step,
+                                       files, rows, dt_start, dt_end])
     return AuditResult(step, files, rows, dt_start, dt_end)

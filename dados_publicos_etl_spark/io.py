@@ -355,6 +355,17 @@ def unescape_path_name(s: str) -> str:
     return "".join(out)
 
 
+def partitioned_schema(schema: T.StructType, partition_by: list[str]) -> T.StructType:
+    """The schema a parquet dataset written from ``schema`` with
+    ``partitionBy(*partition_by)`` reads back as: the data columns,
+    then the partition columns.  Reading with it runs no
+    schema-inference job, and works when the write had zero rows."""
+    return T.StructType(
+        [f for f in schema.fields if f.name not in partition_by]
+        + [schema[c] for c in partition_by]
+    )
+
+
 def compact_partitions(
     spark: SparkSession,
     path: str,
@@ -399,12 +410,16 @@ def compact_partitions(
     }
     if not todo:
         return todo
-    full_schema = {
-        f.name: f.dataType for f in spark.read.parquet(path).schema.fields
-    }
+    schema = spark.read.parquet(path).schema
+    full_schema = {f.name: f.dataType for f in schema.fields}
+    # each partition dir holds only the data columns: reading it with
+    # them skips a schema-inference job per partition
+    data_schema = T.StructType(
+        [f for f in schema.fields if f.name not in partition_by]
+    )
     for rel in todo:
         n_out = max(1, math.ceil(stats[rel][1] / target_file_bytes))
-        part_df = spark.read.parquet(os.path.join(path, rel))
+        part_df = spark.read.schema(data_schema).parquet(os.path.join(path, rel))
         # re-attach the partition columns encoded in the dir names,
         # cast back to the dataset's schema types so the overwrite
         # doesn't silently widen them to string.  Dir names carry

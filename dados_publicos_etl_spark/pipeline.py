@@ -26,7 +26,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from dados_publicos_etl_spark.audit import AuditResult, observe_counts
+from dados_publicos_etl_spark.audit import observed_count
 
 
 @dataclass
@@ -71,16 +71,9 @@ class Pipeline:
         for st in self.stages:
             t0 = time.perf_counter()
             out = st.fn(cur)
-            observed, obs = observe_counts(out, f"{self.name}.{st.name}")
-            # cheapest possible action that still flows every row
-            # through the observation
-            observed.write.format("noop").mode("overwrite").save()
+            rows = observed_count(out, f"{self.name}.{st.name}")
             runs.append(
-                StageRun(
-                    st.name,
-                    int(obs.get["qtd_rows"]),
-                    round(time.perf_counter() - t0, 4),
-                )
+                StageRun(st.name, rows, round(time.perf_counter() - t0, 4))
             )
             cur = out
         return cur, runs

@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dados_publicos_etl_spark.functions.numeric import money_sum
-from dados_publicos_etl_spark.io import read_table
+from dados_publicos_etl_spark.io import partitioned_schema, read_table
 from dados_publicos_etl_spark.plans.registry import query
 from dados_publicos_etl_spark.tmpstore import session_artifact
 
@@ -1840,29 +1840,23 @@ def retractable_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HP_PRIORITY = "1-URGENT"
 
 
-def _hive_orders_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Partitioned copy of orders, a session artifact: the query
-    measures the pruned READ, not the layout write."""
+def _hive_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Scan of a partitioned copy of orders, a session artifact: the
+    query measures the pruned READ, not the layout write."""
 
-    def build(workdir: str) -> str:
+    def build(workdir: str):
         path = workdir + "/orders"
-        (
-            read_table(spark, sf_dir, "orders")
-            .select(
-                "o_orderkey",
-                "o_orderstatus",
-                F.round(F.col("o_totalprice") * 100, 0)
-                .cast("long")
-                .alias("cents"),
-                "o_orderpriority",
-            )
-            .write.mode("overwrite")
-            .partitionBy("o_orderpriority")
-            .parquet(path)
+        od = read_table(spark, sf_dir, "orders").select(
+            "o_orderkey",
+            "o_orderstatus",
+            F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("cents"),
+            "o_orderpriority",
         )
-        return path
+        od.write.mode("overwrite").partitionBy("o_orderpriority").parquet(path)
+        return path, partitioned_schema(od.schema, ["o_orderpriority"])
 
-    return session_artifact("hive_orders", sf_dir, build)
+    path, schema = session_artifact("hive_orders", sf_dir, build)
+    return spark.read.schema(schema).parquet(path)
 
 
 @query(
@@ -1893,8 +1887,7 @@ def _hive_orders_dir(spark: SparkSession, sf_dir: str) -> str:
     "names).",
 )
 def hive_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _hive_orders_dir(spark, sf_dir)
-    scan = spark.read.parquet(d).filter(
+    scan = _hive_orders(spark, sf_dir).filter(
         F.col("o_orderpriority") == _HP_PRIORITY
     )
     return scan.groupBy("o_orderstatus").agg(

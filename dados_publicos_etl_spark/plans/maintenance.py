@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dados_publicos_etl_spark.io import read_table
+from dados_publicos_etl_spark.io import partitioned_schema, read_table
 from dados_publicos_etl_spark.plans.registry import query
 from dados_publicos_etl_spark.tmpstore import session_artifact
 
@@ -123,7 +123,7 @@ def sorted_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dados_publicos_etl_spark.io import compact_partitions
 
-    def build(ws: str) -> str:
+    def build(ws: str):
         path = f"{ws}/orders_parts"
         od = read_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice", "o_orderpriority"
@@ -137,10 +137,10 @@ def compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         compact_partitions(
             spark, path, ["o_orderpriority"], min_files_to_compact=2
         )
-        return path
+        return path, partitioned_schema(od.schema, ["o_orderpriority"])
 
-    path = session_artifact("maint_compaction", sf_dir, build)
-    return spark.read.parquet(path).select(
+    path, schema = session_artifact("maint_compaction", sf_dir, build)
+    return spark.read.schema(schema).parquet(path).select(
         "o_orderkey", "o_totalprice", "o_orderpriority"
     )
 
@@ -169,7 +169,7 @@ _RETAIN_FROM = "1999-01"  # keep months >= this; drop 1995-1998
 def retention_enforcement(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dados_publicos_etl_spark.io import enforce_retention
 
-    def build(ws: str) -> str:
+    def build(ws: str):
         path = f"{ws}/orders_by_month"
         od = read_table(spark, sf_dir, "orders").select(
             "o_orderkey",
@@ -181,10 +181,10 @@ def retention_enforcement(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(path)
         )
         enforce_retention(path, "order_month", _RETAIN_FROM)
-        return path
+        return path, partitioned_schema(od.schema, ["order_month"])
 
-    path = session_artifact("maint_retention", sf_dir, build)
-    return spark.read.parquet(path).select(
+    path, schema = session_artifact("maint_retention", sf_dir, build)
+    return spark.read.schema(schema).parquet(path).select(
         "o_orderkey", F.col("order_month").cast("string").alias("order_month")
     )
 

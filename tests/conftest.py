@@ -15,6 +15,12 @@ SF_SMOKE = os.environ.get("SPARK_GRAFT_SF_SMOKE", "/root/testdata/sf0.001")
 SF_CORRECT = os.environ.get("SPARK_GRAFT_SF_CORRECT", "/root/testdata/sf0.01")
 
 
+def next_job_id(spark) -> int:
+    """The DAGScheduler's next job id: the difference across a call is
+    the number of Spark jobs it ran."""
+    return spark._jsparkSession.sparkContext().dagScheduler().nextJobId()
+
+
 @pytest.fixture(scope="session")
 def spark(tmp_path_factory):
     from dados_publicos_etl_spark.session import get_session
@@ -34,3 +40,16 @@ def spark(tmp_path_factory):
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE
+
+
+@pytest.fixture
+def zero_row_sf_dir(tmp_path) -> str:
+    """A corpus dir holding every ``SF_SMOKE`` table with its schema
+    and zero rows: the degenerate input every query must survive."""
+    import pyarrow.parquet as pq
+
+    for name in sorted(os.listdir(SF_SMOKE)):
+        if name.endswith(".parquet"):
+            table = pq.read_table(os.path.join(SF_SMOKE, name))
+            pq.write_table(table.slice(0, 0), str(tmp_path / name))
+    return str(tmp_path)

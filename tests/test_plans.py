@@ -3,12 +3,14 @@ scale are checked, not assumed (SURVEY.md §4.2)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from dados_publicos_etl_spark.io import read_table
 from dados_publicos_etl_spark.plans import QUERIES
 from dados_publicos_etl_spark.plans import catalog  # noqa: F401
+from tests.conftest import next_job_id
 
 
 def _plan(df) -> str:
@@ -794,6 +796,20 @@ def test_hive_partition_prune_reaches_file_listing(spark, sf_dir):
     head = scan.split("ReadSchema")[0]
     assert "PartitionFilters: [" in head
     assert "1-URGENT" in head.split("PartitionFilters: [")[1].split("]")[0]
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["compaction_roundtrip", "retention_enforcement", "hive_partition_prune"],
+)
+def test_partitioned_roundtrip_on_zero_rows(spark, zero_row_sf_dir, name):
+    """A zero-row partitioned write leaves no data file to infer a
+    schema from: the read-back uses the schema stored with the
+    artifact, returns zero rows, and a warm hit runs no job."""
+    assert QUERIES[name].fn(spark, zero_row_sf_dir).count() == 0
+    j0 = next_job_id(spark)
+    QUERIES[name].fn(spark, zero_row_sf_dir)
+    assert next_job_id(spark) - j0 == 0
 
 
 def test_log_parse_stays_jvm_side(spark, sf_dir):
