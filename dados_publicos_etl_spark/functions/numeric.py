@@ -32,3 +32,13 @@ def money_sum_sql(expr: str, scale: int = SCALE) -> str:
         f"(CAST(SUM(CAST(ROUND(({expr}) * {scale}, 0) AS BIGINT)) AS DOUBLE)"
         f" / {scale}.0)"
     )
+
+
+def leading_zero_rank(w: Column, bits: int) -> Column:
+    """Leading-zero count of a ``bits``-wide non-negative long ``w``
+    (``bits`` when ``w`` is 0): the HyperLogLog register rank and the
+    geometric-noise draw.  Returns INT; callers cast.  DuckDB twin:
+    ``CASE WHEN w = 0 THEN bits ELSE bits - length(bin(w)) END``."""
+    return F.when(w == 0, F.lit(bits)).otherwise(
+        F.lit(bits) - F.length(F.bin(w))
+    )

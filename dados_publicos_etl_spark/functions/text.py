@@ -5,6 +5,12 @@ once here so Spark plans and DuckDB oracles can agree on semantics:
   token   := maximal run of non-whitespace ( split on \\s+ )
   word    := maximal run of [A-Za-z0-9]+
   norm(t) := lower(t) with whitespace runs collapsed to single spaces
+
+The portable hash is defined here too: the first ``n`` hex chars of
+an ``md5`` digest read as a long (``hex_long``; DuckDB twin
+``duck_md5_long_sql``).  Every operator whose result must match the
+oracle bit for bit — dedup, sampling, Bloom filters, HyperLogLog,
+noise seeds — hashes through it.
 """
 
 from __future__ import annotations
@@ -120,18 +126,29 @@ def md5_hashed_shingles(shingle_arr: Column, hexlen: int = 7) -> Column:
     column reference (same no-CSE warning as shingles_from_tokens).
     """
     return F.array_distinct(
-        F.transform(
-            shingle_arr,
-            lambda s: F.conv(F.substring(F.md5(s), 1, hexlen), 16, 10).cast(
-                "long"
-            ),
-        )
+        F.transform(shingle_arr, lambda s: hex_long(F.md5(s), hexlen))
     )
 
 
+def hex_long(hex_col: Column | str, n: int, start: int = 1) -> Column:
+    """The portable hash: ``n`` hex chars of ``hex_col`` from ``start``
+    (1-based) read as a long — ``conv(substring(h, start, n), 16, 10)``
+    cast to BIGINT.  Over an ``md5`` digest it is bit-identical on
+    Spark and DuckDB (``duck_md5_long_sql``), which hash()/xxhash64
+    are not.  NULL in, NULL out on both engines.
+
+    ``n`` bounds the universe at ``16**n`` values: 7 hex chars (28
+    bits) keep the minhash permutation's ``a*h + b`` inside int64
+    (see operators/dedup.py), 15 (60 bits) is the widest that never
+    reaches the sign bit.  Callers slice one digest column more than
+    once (HyperLogLog bucket from chars 1-2, rank word from 3-8)
+    instead of hashing twice."""
+    return F.conv(F.substring(hex_col, start, n), 16, 10).cast("long")
+
+
 def duck_md5_long_sql(expr: str, hexlen: int = 7) -> str:
-    """DuckDB fragment equivalent to the md5->long bucketing of
-    ``md5_hashed_shingles`` for a single string expression."""
+    """DuckDB fragment equal to ``hex_long(F.md5(expr), hexlen)``, the
+    oracle side of the portable hash."""
     return f"CAST(('0x' || substr(md5({expr}), 1, {hexlen})) AS BIGINT)"
 
 

@@ -45,6 +45,7 @@ from dados_publicos_etl_spark.functions.text import (
     WS,
     duck_md5_long_sql,
     duck_shingles_sql,
+    hex_long,
     md5_hashed_shingles,
     shingles_from_tokens,
     tokens,
@@ -1564,16 +1565,7 @@ def decontaminate_bloom_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def pos(col, j: int):
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit(f"cb{j}:"), col)), 1, 8
-                ),
-                16,
-                10,
-            ).cast("long")
-            % _CB_M
-        )
+        return hex_long(F.md5(F.concat(F.lit(f"cb{j}:"), col)), 8) % _CB_M
 
     bench_pos = bench.select(
         F.explode(
@@ -1720,22 +1712,17 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.transform(
                 F.sequence(F.lit(1), F.size("toks") - 1),
                 lambda i: (
-                    F.conv(
-                        F.substring(
-                            F.md5(
-                                F.concat(
-                                    F.lit("ds:"),
-                                    F.element_at(F.col("toks"), i),
-                                    F.lit(" "),
-                                    F.element_at(F.col("toks"), i + 1),
-                                )
-                            ),
-                            1,
-                            7,
+                    hex_long(
+                        F.md5(
+                            F.concat(
+                                F.lit("ds:"),
+                                F.element_at(F.col("toks"), i),
+                                F.lit(" "),
+                                F.element_at(F.col("toks"), i + 1),
+                            )
                         ),
-                        16,
-                        10,
-                    ).cast("long")
+                        7,
+                    )
                     % _DS_B
                 ),
             )

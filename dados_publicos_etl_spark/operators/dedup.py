@@ -52,6 +52,7 @@ from dados_publicos_etl_spark.functions.text import (
     duck_shingles_sql,
     fingerprint_md5,
     hashed_shingles_from_tokens,
+    hex_long,
     jaccard_tokens,
     md5_hashed_shingles,
     shingles,
@@ -215,43 +216,6 @@ def minhash_signature(feat_col: F.Column, n_hashes: int = N_HASHES) -> F.Column:
     )
 
 
-def lsh_candidate_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    feat_col: str = "sh",
-    n_hashes: int = N_HASHES,
-    band_size: int = BAND_SIZE,
-) -> DataFrame:
-    """Candidate near-dup pairs via banded MinHash-LSH.
-
-    signature -> slice into bands -> explode (band_idx, band_hash) ->
-    self-join on the band bucket.  The only shuffle is on bucket keys;
-    no cross join ever forms.  Returns distinct (id_a < id_b) pairs.
-
-    The signature table is materialized before banding: the band
-    hashes index into ``sig`` eight times, and Catalyst would inline
-    (and re-evaluate) the full n_hashes-min expression per reference
-    (measured ~1.5s -> 0.4s for the candidate stage at sf0.1).
-    """
-    sig = docs.select(
-        F.col(id_col).alias("id"),
-        minhash_signature(F.col(feat_col), n_hashes).alias("sig"),
-    ).localCheckpoint()
-    bands = band_table(sig, n_hashes, band_size)
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-
-
 # Portable minhash permutation family: pi_i(h) = (a_i*h + b_i) mod p
 # over the 28-bit md5 shingle universe.  p prime > universe makes the
 # family universal; a < p and h < 2^28 keep a*h < 2^59, safely inside
@@ -269,9 +233,7 @@ _MH_AB = tuple(
 
 def _mh_band_hash_spark(sig: F.Column, bi: int, band_size: int) -> F.Column:
     parts = [sig[bi * band_size + j] for j in range(band_size)]
-    return F.conv(
-        F.substring(F.md5(F.concat_ws("|", *parts)), 1, 15), 16, 10
-    ).cast("long")
+    return hex_long(F.md5(F.concat_ws("|", *parts)), 15)
 
 
 def _mh_perm(a: int, b: int):
@@ -1381,10 +1343,7 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "pos",
         F.greatest(F.col("ntok") - (_WN_K - 1), F.lit(1)).alias("ng"),
-        (
-            F.conv(F.substring(F.md5("gram"), 1, 8), 16, 10).cast("long")
-            % _WN_M
-        ).alias("h"),
+        (hex_long(F.md5("gram"), 8) % _WN_M).alias("h"),
     )
     # Second window over the SAME (doc_id, pos) partitioning/order —
     # Catalyst reuses the exchange+sort, so the whole fingerprint

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dados_publicos_etl_spark.functions.numeric import leading_zero_rank
+from dados_publicos_etl_spark.functions.text import hex_long
 from dados_publicos_etl_spark.io import read_table
 from dados_publicos_etl_spark.plans.registry import query
 
@@ -352,13 +354,8 @@ def _with_dp_noise(
             parts.append(F.col(k))
             parts.append(F.lit("|"))
         parts.append(F.lit(salt + tag))
-        w = F.conv(
-            F.substring(F.md5(F.concat(*parts).cast("binary")), 1, 6),
-            16,
-            10,
-        ).cast("long")
-        return F.when(w == 0, F.lit(bits)).otherwise(
-            F.lit(bits) - F.length(F.bin(w))
+        return leading_zero_rank(
+            hex_long(F.md5(F.concat(*parts).cast("binary")), 6), bits
         )
 
     eta = (geo("1") - geo("2")).cast("long")

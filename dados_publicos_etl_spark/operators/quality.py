@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dados_publicos_etl_spark.functions.text import hex_long
 from dados_publicos_etl_spark.io import read_table
 from dados_publicos_etl_spark.plans.registry import query
 
@@ -946,22 +947,17 @@ def merkle_table_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def hashed(df: DataFrame) -> DataFrame:
-        h = F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        F.col("k").cast("string"),
-                        F.col("cents").cast("string"),
-                        F.col("o_orderstatus"),
-                    )
-                ),
-                1,
-                7,
+        h = hex_long(
+            F.md5(
+                F.concat_ws(
+                    "|",
+                    F.col("k").cast("string"),
+                    F.col("cents").cast("string"),
+                    F.col("o_orderstatus"),
+                )
             ),
-            16,
-            10,
-        ).cast("long")
+            7,
+        )
         return df.select(
             "k", (F.col("k") % _MERKLE_BUCKETS).alias("bucket"), h.alias("h")
         )

@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from dados_publicos_etl_spark.functions.text import hex_long
 from dados_publicos_etl_spark.io import read_table
 from dados_publicos_etl_spark.plans.registry import query
 
@@ -34,11 +35,7 @@ def hash_bucket(c: Column | str, buckets: int = 256) -> Column:
     control; identical SQL exists on any engine with md5().
     """
     col = F.col(c) if isinstance(c, str) else c
-    return (
-        F.conv(F.substring(F.md5(col.cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        % buckets
-    )
+    return hex_long(F.md5(col.cast("string")), 8) % buckets
 
 
 def sample_bernoulli(df: DataFrame, id_col: str, rate: float) -> DataFrame:
@@ -372,18 +369,11 @@ def weighted_sample_aes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     orders = read_table(spark, sf_dir, "orders")
     u = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("o_orderkey").cast("string"), F.lit(":aes42")
-                    )
-                ),
-                1,
-                6,
+        hex_long(
+            F.md5(
+                F.concat(F.col("o_orderkey").cast("string"), F.lit(":aes42"))
             ),
-            16,
-            10,
+            6,
         ).cast("double")
         + 0.5
     ) / 16777216.0
@@ -1187,11 +1177,7 @@ _SERPENTINE_SQL = f"""sized AS (
 def shard_manifest_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents").select(
         "doc_id",
-        F.conv(
-            F.substring(F.md5(F.col("text").cast("binary")), 1, 15), 16, 10
-        )
-        .cast("long")
-        .alias("content_h"),
+        hex_long(F.md5(F.col("text").cast("binary")), 15).alias("content_h"),
     )
     return (
         _serpentine_shards(spark, sf_dir)

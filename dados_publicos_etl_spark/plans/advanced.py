@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dados_publicos_etl_spark.functions.numeric import money_sum
+from dados_publicos_etl_spark.functions.text import hex_long
 from dados_publicos_etl_spark.io import partitioned_schema, read_table
 from dados_publicos_etl_spark.plans.registry import query
 from dados_publicos_etl_spark.tmpstore import session_artifact
@@ -1521,18 +1522,8 @@ def bloom_filter_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     m, bpw, k = _BLOOM_M, _BLOOM_BPW, _BLOOM_K
 
     def pos(key: str, j: int):
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit(f"b{j}:"), F.col(key).cast("string"))),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % m
-        )
+        salted = F.concat(F.lit(f"b{j}:"), F.col(key).cast("string"))
+        return hex_long(F.md5(salted), 8) % m
 
     dim = (
         read_table(spark, sf_dir, "customer")

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from dados_publicos_etl_spark.functions.text import hex_long
 from dados_publicos_etl_spark.io import read_table
 from dados_publicos_etl_spark.plans.registry import query
 
@@ -889,23 +890,21 @@ def geo_proximity_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = cust.select(
         F.col("c_custkey").alias("id"),
         (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.col("c_custkey").cast("string"), F.lit(":lat"))), 1, 6
+            hex_long(
+                F.md5(
+                    F.concat(F.col("c_custkey").cast("string"), F.lit(":lat"))
                 ),
-                16,
-                10,
-            ).cast("long")
+                6,
+            )
             % 1000
         ).cast("double").alias("xi"),
         (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.col("c_custkey").cast("string"), F.lit(":lon"))), 1, 6
+            hex_long(
+                F.md5(
+                    F.concat(F.col("c_custkey").cast("string"), F.lit(":lon"))
                 ),
-                16,
-                10,
-            ).cast("long")
+                6,
+            )
             % 1000
         ).cast("double").alias("yi"),
     ).select(

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dados_publicos_etl_spark.functions.numeric import leading_zero_rank
+from dados_publicos_etl_spark.functions.text import hex_long
 from dados_publicos_etl_spark.io import read_table
 from dados_publicos_etl_spark.operators.ranking import prefix_sums_by_range
 from dados_publicos_etl_spark.plans.mining import _EDGES_SQL, _co_edges
@@ -417,19 +419,12 @@ def dbscan_core_points(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def coord(salt: str):
         return (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.col("c_custkey").cast("string"), F.lit(salt)
-                        )
-                    ),
-                    1,
-                    6,
+            hex_long(
+                F.md5(
+                    F.concat(F.col("c_custkey").cast("string"), F.lit(salt))
                 ),
-                16,
-                10,
-            ).cast("long")
+                6,
+            )
             % 1000
         ).cast("double") / 1000.0
 
@@ -575,18 +570,13 @@ def hll_portable_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hashed = keyed.select(
         "half",
-        (
-            F.conv(F.substring("h", 1, 2), 16, 10).cast("long") % _HLL_M
-        ).alias("bucket"),
-        F.conv(F.substring("h", 3, 6), 16, 10).cast("long").alias("w"),
+        (hex_long("h", 2) % _HLL_M).alias("bucket"),
+        hex_long("h", 6, start=3).alias("w"),
     )
     ranks = hashed.select(
         "half",
         "bucket",
-        F.when(F.col("w") == 0, F.lit(25))
-        .otherwise(F.lit(25) - F.length(F.bin("w")))
-        .cast("long")
-        .alias("r"),
+        leading_zero_rank(F.col("w"), 25).cast("long").alias("r"),
     )
     regs = ranks.groupBy("bucket").agg(
         F.max(F.when(F.col("half") == 0, F.col("r")).otherwise(0)).alias(

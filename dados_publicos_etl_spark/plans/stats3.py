@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dados_publicos_etl_spark.functions.numeric import leading_zero_rank
+from dados_publicos_etl_spark.functions.text import hex_long
 from dados_publicos_etl_spark.io import read_table
 from dados_publicos_etl_spark.operators.ranking import (
     ntile_expr,
@@ -413,15 +415,11 @@ def hll_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("b").cast("long").alias("n_b"),
         F.sum(F.col("a") * F.col("b")).cast("long").alias("n_both"),
     )
-    w = F.conv(F.substring("h", 3, 6), 16, 10).cast("long")
     ranks = flagged.select(
         "in_a",
         "in_b",
-        (
-            F.conv(F.substring("h", 1, 2), 16, 10).cast("long") % _HI_M
-        ).alias("bucket"),
-        F.when(w == 0, F.lit(25))
-        .otherwise(F.lit(25) - F.length(F.bin(w)))
+        (hex_long("h", 2) % _HI_M).alias("bucket"),
+        leading_zero_rank(hex_long("h", 6, start=3), 25)
         .cast("long")
         .alias("r"),
     )

@@ -70,6 +70,10 @@ def stream_events_foreach_batch(
     return n_batches["n"]
 
 
+from dados_publicos_etl_spark.functions.numeric import (  # noqa: E402
+    leading_zero_rank,
+)
+from dados_publicos_etl_spark.functions.text import hex_long  # noqa: E402
 from dados_publicos_etl_spark.io import (  # noqa: E402
     epoch_micros_sql,
     parquet_ts_unit,
@@ -406,16 +410,11 @@ _SHLL_M = 64  # portable HLL registers (p = 6), matching
 def stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     def regs_of(df: DataFrame) -> DataFrame:
         h = F.md5(F.col("user_id").cast("string"))
-        w = F.conv(F.substring(h, 3, 6), 16, 10).cast("long")
         return (
             df.select(
                 "event_type",
-                (
-                    F.conv(F.substring(h, 1, 2), 16, 10).cast("long")
-                    % _SHLL_M
-                ).alias("bucket"),
-                F.when(w == 0, F.lit(25))
-                .otherwise(F.lit(25) - F.length(F.bin(w)))
+                (hex_long(h, 2) % _SHLL_M).alias("bucket"),
+                leading_zero_rank(hex_long(h, 6, start=3), 25)
                 .cast("long")
                 .alias("r"),
             )

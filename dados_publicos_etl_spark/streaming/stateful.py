@@ -11,8 +11,6 @@ time windows can't express.
 
 from __future__ import annotations
 
-import os
-import uuid
 from collections.abc import Iterable
 
 import pandas as pd
@@ -20,6 +18,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from dados_publicos_etl_spark.streaming.windows import run_memory_sink
 
 OUTPUT_SCHEMA = "user_id long, n_events long, total_value double"
 STATE_SCHEMA = "n long, total double"
@@ -54,20 +54,9 @@ def streaming_running_totals(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"stateful_out_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     # memory sink in update mode appends every state emission; the
     # last row per user is the final total.
-    snap = spark.table(name)
+    snap = run_memory_sink(spark, out, "update", "stateful_out")
     from pyspark.sql import Window as W
 
     w = W.partitionBy("user_id").orderBy(F.desc("n_events"))
@@ -164,23 +153,12 @@ def streaming_running_totals_v2(
             outputMode="Update",
             timeMode="None",
         )
-        name = f"tws_out_{uuid.uuid4().hex[:8]}"
-        q = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        snap = run_memory_sink(spark, out, "update", "tws_out")
     finally:
         if prev_provider is None:
             spark.conf.unset(_PROVIDER_KEY)
         else:
             spark.conf.set(_PROVIDER_KEY, prev_provider)
-    snap = spark.table(name)
     from pyspark.sql import Window as W
 
     w = W.partitionBy("user_id").orderBy(F.desc("n_events"))
@@ -273,15 +251,4 @@ def streaming_session_close(
         outputMode="update",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    name = f"session_close_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return run_memory_sink(spark, out, "update", "session_close")

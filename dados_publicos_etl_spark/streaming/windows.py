@@ -12,6 +12,7 @@ reproduce them with epoch arithmetic, so results hash-match exactly.
 
 from __future__ import annotations
 
+import uuid
 from contextlib import contextmanager
 from functools import partial
 from typing import Callable
@@ -26,10 +27,11 @@ from dados_publicos_etl_spark.plans.registry import query
 from dados_publicos_etl_spark.tmpstore import new_dir, reroot, session_artifact
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss"
+_STREAM_SHUFFLE = 4  # shuffle partitions a stream plans with
 
 
 @contextmanager
-def _streaming_shuffle(spark: SparkSession, n: int = 4):
+def _streaming_shuffle(spark: SparkSession):
     """Bound stateful-stream parallelism while a query is planned,
     and skip no-data micro-batches for the drive-to-completion run.
 
@@ -58,7 +60,7 @@ def _streaming_shuffle(spark: SparkSession, n: int = 4):
     _NODATA_KEY = "spark.sql.streaming.noDataMicroBatches.enabled"
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     prev_nodata = spark.conf.get(_NODATA_KEY, None)
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    spark.conf.set("spark.sql.shuffle.partitions", str(_STREAM_SHUFFLE))
     spark.conf.set(_NODATA_KEY, "false")
     try:
         yield
@@ -123,6 +125,30 @@ def run_state_table(
     if state is None:
         return merge(None, spark.createDataFrame([], stream.schema))
     return state
+
+
+def run_memory_sink(
+    spark: SparkSession, stream: DataFrame, mode: str, prefix: str
+) -> DataFrame:
+    """Drive ``stream`` to completion into a memory sink named
+    ``<prefix>_<uuid8>`` in output ``mode`` and return the sink table.
+
+    The caller owns the session conf around the run: this module's
+    append-mode streams wrap the call in ``_streaming_shuffle``, while
+    ``stateful.streaming_session_close`` must not (its sessions close
+    on the no-data batches that wrapper skips)."""
+    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
+    q = (
+        stream.writeStream.outputMode(mode)
+        .format("memory")
+        .queryName(name)
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return spark.table(name)
 
 
 def _upsert(
@@ -416,8 +442,6 @@ def stream_true_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     "interval join, which is the oracle.",
 )
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from dados_publicos_etl_spark.streaming.source import read_event_stream
 
     # ONE streaming source, two filtered projections (stream
@@ -450,19 +474,8 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_user_id").alias("user_id"),
         F.expr("timestampdiff(MICROSECOND, c_ts, p_ts)").alias("gap_micros"),
     )
-    name = f"stream_join_{uuid.uuid4().hex[:8]}"
     with _streaming_shuffle(spark):
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(name)
+        return run_memory_sink(spark, joined, "append", "stream_join")
 
 
 @query(
@@ -481,8 +494,6 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "oracle.",
 )
 def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from dados_publicos_etl_spark.streaming.source import read_event_stream
 
     stream = read_event_stream(spark, sf_dir)
@@ -492,19 +503,8 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
     with _streaming_shuffle(spark):
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(name)
+        return run_memory_sink(spark, deduped, "append", "stream_dedup")
 
 
 def streaming_static_enrich(
@@ -1078,8 +1078,6 @@ def _write_outer_feed(spark: SparkSession, sf_dir: str, workdir: str) -> str:
     "whose join window has provably closed.",
 )
 def stream_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     feed = session_artifact(
         "outer_feed", sf_dir, partial(_write_outer_feed, spark, sf_dir)
     )
@@ -1131,20 +1129,10 @@ def stream_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    name = f"stream_outer_{uuid.uuid4().hex[:8]}"
     with _streaming_shuffle(spark):
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        sink = run_memory_sink(spark, joined, "append", "stream_outer")
     # sentinel rows (negative user_id) drop HERE, on the sink table
-    return spark.table(name).filter(F.col("user_id") >= 0)
+    return sink.filter(F.col("user_id") >= 0)
 
 
 # ---------------------------------------------------------------------------

@@ -9,7 +9,10 @@
    cell counts the catalog never exercises, including empty-cell
    drops, and
 3. the int16-LE byte replay (`_audio_byte_sql` get_bit arithmetic)
-   vs numpy ``frombuffer`` on arbitrary unicode payloads.
+   vs numpy ``frombuffer`` on arbitrary unicode payloads, and
+4. the portable hash (`functions.text.hex_long` over ``md5``) and the
+   HyperLogLog / geometric-noise rank (`functions.numeric.
+   leading_zero_rank`) vs their DuckDB twins.
 
 The catalog's differentials prove these on the fixture corpus; this
 file proves the CONSTRUCTIONS, so a future corpus regeneration or a
@@ -261,3 +264,68 @@ def test_semdedup_cell_rule_matches_sql_rule():
         assert (int(k_sql), int(nt_sql)) == (
             semdedup_n_cells(n), _ivf_n_train(semdedup_n_cells(n))
         ), n
+
+
+def test_hex_long_parity_with_duckdb(spark):
+    """``hex_long(md5(x), n, start)`` must equal DuckDB's
+    ``CAST(('0x' || substr(md5(x), start, n)) AS BIGINT)`` for every
+    slice the catalog takes (2/6/8-char HLL and Bloom slices, the
+    7-char minhash universe, the 15-char band hash, the rank word at
+    offset 3), on the empty string, ASCII, multi-byte UTF-8 and NULL
+    (NULL on both sides).  ``duck_md5_long_sql`` is the start-1 twin."""
+    from dados_publicos_etl_spark.functions.text import (
+        duck_md5_long_sql,
+        hex_long,
+    )
+
+    slices = [(2, 1), (6, 1), (7, 1), (8, 1), (15, 1), (6, 3)]
+    texts = ["", "hello world", "naïve café — 数据 🚀", None]
+    pdf = pd.DataFrame({"i": range(len(texts)), "x": texts})
+    sdf = spark.createDataFrame(pdf, "i long, x string")
+    got = sdf.select(
+        "i",
+        *[hex_long(F.md5("x"), n, start) for n, start in slices],
+    ).orderBy("i").collect()
+    oracle = [
+        f"CAST(('0x' || substr(md5(x), {start}, {n})) AS BIGINT)"
+        for n, start in slices
+    ]
+    con = duckdb.connect()
+    con.register("t", pdf)
+    duck = con.execute(
+        f"SELECT i, {', '.join(oracle)} FROM t ORDER BY i"
+    ).fetchall()
+    assert [tuple(r) for r in got] == duck
+    for i, *vals in duck:
+        if texts[i] is None:
+            assert vals == [None] * len(slices)
+        else:
+            assert all(0 <= v < 16**n for v, (n, _) in zip(vals, slices))
+    for (n, start), sql in zip(slices, oracle):
+        if start == 1:
+            assert duck_md5_long_sql("x", n) == sql
+
+
+def test_leading_zero_rank_parity_with_duckdb(spark):
+    """``leading_zero_rank(w, 25)`` vs the oracle's ``CASE WHEN w = 0
+    THEN 25 ELSE 25 - length(bin(w)) END`` at the edges of the 24-bit
+    word: 0 (rank 25), 1, the top bit alone and all bits set (rank 1:
+    a 24-bit word leaves the 25th bit always zero)."""
+    from dados_publicos_etl_spark.functions.numeric import leading_zero_rank
+
+    ws = [0, 1, 2**23, 2**24 - 1]
+    got = [
+        r.r
+        for r in spark.createDataFrame([(w,) for w in ws], "w long")
+        .select(leading_zero_rank(F.col("w"), 25).alias("r"))
+        .collect()
+    ]
+    duck = [
+        r
+        for (r,) in duckdb.execute(
+            "SELECT CASE WHEN w = 0 THEN 25 ELSE 25 - length(bin(w)) END"
+            f" FROM unnest({ws}::BIGINT[]) AS t(w)"
+        ).fetchall()
+    ]
+    assert got == duck == [25, 24, 1, 1]
+

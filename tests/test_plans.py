@@ -1275,6 +1275,79 @@ def test_build_once_caches_live_only_in_tmpstore():
     )
 
 
+def test_portable_hash_and_memory_sink_live_once():
+    """Static inventory of the portable hash and the memory-sink drive:
+    ``functions.text.hex_long`` is the one md5-hex-prefix -> long
+    expression, ``functions.numeric.leading_zero_rank`` the one
+    leading-zero rank, and ``streaming.windows.run_memory_sink`` the
+    one memory-sink stream runner.  Fails on any ``F.conv(...)`` or
+    ``F.length(F.bin(...))`` outside ``functions/`` and on any
+    ``.format("memory")`` outside ``run_memory_sink`` — call the
+    helper instead of re-deriving it."""
+    import ast
+    import os
+
+    import dados_publicos_etl_spark as pkg
+
+    def f_call(node, name: str) -> bool:
+        fn = getattr(node, "func", None)
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(fn, ast.Attribute)
+            and fn.attr == name
+            and isinstance(fn.value, ast.Name)
+            and fn.value.id == "F"
+        )
+
+    root = os.path.dirname(pkg.__file__)
+    offenders: list[str] = []
+    for dirpath, _dirs, files in os.walk(root):
+        in_functions = os.path.basename(dirpath) == "functions"
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, f)
+            with open(path) as fh:
+                tree = ast.parse(fh.read(), filename=path)
+            helper_lines: set[int] = set()
+            for node in ast.walk(tree):
+                if (
+                    isinstance(node, ast.FunctionDef)
+                    and node.name == "run_memory_sink"
+                    and f == "windows.py"
+                ):
+                    helper_lines |= set(
+                        range(node.lineno, node.end_lineno + 1)
+                    )
+            for node in ast.walk(tree):
+                if not isinstance(node, ast.Call):
+                    continue
+                if not in_functions and f_call(node, "conv"):
+                    offenders.append(f"{f}:{node.lineno} F.conv")
+                if (
+                    not in_functions
+                    and f_call(node, "length")
+                    and node.args
+                    and f_call(node.args[0], "bin")
+                ):
+                    offenders.append(f"{f}:{node.lineno} F.length(F.bin")
+                fn = node.func
+                if (
+                    isinstance(fn, ast.Attribute)
+                    and fn.attr == "format"
+                    and node.args
+                    and isinstance(node.args[0], ast.Constant)
+                    and node.args[0].value == "memory"
+                    and node.lineno not in helper_lines
+                ):
+                    offenders.append(f"{f}:{node.lineno} format('memory')")
+    assert not offenders, (
+        f"hand-rolled portable hash / memory sink: {offenders} — use"
+        " functions.text.hex_long, functions.numeric.leading_zero_rank"
+        " or streaming.windows.run_memory_sink"
+    )
+
+
 def test_driver_collects_bounded_at_10x(spark, tmp_path_factory):
     """Dynamic half: every collect-bearing query runs at smoke scale
     AND at an FK-consistent 10x replica under a collect-size

@@ -1,12 +1,30 @@
 #!/usr/bin/env python
 """Regenerate PLANS.md: formatted physical plans for the headline
 queries, so plan properties (pushdown, pruning, broadcast, partial
-aggregation) are reviewable without running Spark."""
+aggregation) are reviewable without running Spark.
+
+Two more modes prove that a refactor left plans alone:
+
+  python tools/dump_plans.py --all --sf <corpus dir> --out a.json
+  python tools/dump_plans.py --diff a.json b.json
+
+``--all`` builds every registered query and writes
+``{name: optimized plan}`` as JSON, normalized so two runs of the same
+code compare equal: exprIds (``#123``), plan ids, temp-dir paths and
+the ``_<hex8>`` suffix of memory-sink tables are masked.  A query
+whose build raises is recorded as ``ERROR: <exception>``.  ``--diff``
+prints the queries whose normalized plans differ (or exist on one
+side only) and exits 1 if there are any.
+"""
 
 from __future__ import annotations
 
+import argparse
+import json
 import os
+import re
 import sys
+import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -104,13 +122,91 @@ HEADLINE = [
 ]
 
 
-def main() -> None:
-    from dados_publicos_etl_spark.plans import QUERIES
+_NORMALIZE = [
+    (re.compile(r"#\d+"), "#"),
+    (re.compile(r"plan_id=\d+"), "plan_id="),
+    (
+        re.compile(
+            r"(?:file:)?%s/[^\s,\])]*" % re.escape(tempfile.gettempdir())
+        ),
+        "<tmp>",
+    ),
+    (re.compile(r"_[0-9a-f]{8}\b"), "_<hex8>"),
+]
+
+
+def normalize(plan: str) -> str:
+    for pat, repl in _NORMALIZE:
+        plan = pat.sub(repl, plan)
+    return plan
+
+
+def _session():
     from dados_publicos_etl_spark.plans import catalog  # noqa: F401
     from dados_publicos_etl_spark.session import get_session
 
-    spark = get_session(app_name="plans", master="local[4]",
-                        shuffle_partitions=4)
+    return get_session(app_name="plans", master="local[4]",
+                       shuffle_partitions=4)
+
+
+def dump_all(sf: str, out_path: str) -> None:
+    from dados_publicos_etl_spark.plans import QUERIES
+
+    spark = _session()
+    # full plans: the default elides fields past 25 ("... N more fields")
+    spark.conf.set("spark.sql.debug.maxToStringFields", "100000")
+    plans: dict[str, str] = {}
+    for name in sorted(QUERIES):
+        try:
+            df = QUERIES[name].fn(spark, sf)
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
+        except Exception as ex:  # noqa: BLE001 - recorded, then compared
+            plan = f"ERROR: {type(ex).__name__}: {str(ex).splitlines()[0]}"
+        plans[name] = normalize(plan)
+    with open(out_path, "w") as fh:
+        json.dump(plans, fh, indent=1, sort_keys=True)
+    print(f"wrote {len(plans)} plans to {out_path}")
+    spark.stop()
+
+
+def diff(a_path: str, b_path: str) -> int:
+    with open(a_path) as fh:
+        a = json.load(fh)
+    with open(b_path) as fh:
+        b = json.load(fh)
+    changed = sorted(n for n in a.keys() | b.keys() if a.get(n) != b.get(n))
+    for name in changed:
+        if name in a and name in b:
+            print(name)
+        else:
+            print(f"{name} (only in {a_path if name in a else b_path})")
+    print(f"{len(changed)} of {len(a.keys() | b.keys())} plans differ")
+    return 1 if changed else 0
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--all", action="store_true",
+                    help="dump every registered query's optimized plan")
+    ap.add_argument("--sf", help="corpus dir for --all")
+    ap.add_argument("--out", help="JSON file --all writes")
+    ap.add_argument("--diff", nargs=2, metavar=("A", "B"),
+                    help="list queries whose plans differ in two dumps")
+    args = ap.parse_args()
+    if args.diff:
+        sys.exit(diff(*args.diff))
+    if args.all:
+        if not (args.sf and args.out):
+            ap.error("--all needs --sf and --out")
+        dump_all(args.sf, args.out)
+        return
+    headline()
+
+
+def headline() -> None:
+    from dados_publicos_etl_spark.plans import QUERIES
+
+    spark = _session()
     sf = "/root/testdata/sf0.01"
     out = [
         "# PLANS — physical plans of headline queries (sf0.01)",
