@@ -230,9 +230,12 @@ def main() -> None:
     # Sidecar copy of the SAME payload (r12 verdict item #2): the r11
     # driver capture truncated the stdout line and nulled the whole
     # per-query round-over-round table.  The stdout contract above is
-    # unchanged; this file is a recovery path, never the primary.
+    # unchanged; this file is a recovery path, never the primary.  It
+    # lands in the gitignored .bench/, so a run leaves the checkout
+    # clean.
     try:
-        with open(os.path.join(REPO, "BENCH_SELF.json"), "w") as fh:
+        os.makedirs(os.path.join(REPO, ".bench"), exist_ok=True)
+        with open(os.path.join(REPO, ".bench", "BENCH_SELF.json"), "w") as fh:
             json.dump(payload, fh, indent=1)
             fh.write("\n")
     except OSError:

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dados_publicos_etl_spark.schemas import MONITORING
+from dados_publicos_etl_spark.tmpstore import observed
 
 
 @dataclass
@@ -51,8 +52,7 @@ class AuditResult:
 def observe_counts(df: DataFrame, name: str = "audit") -> tuple[DataFrame, Observation]:
     """Attach a row-count observation to a plan; the metric becomes
     available after the next action with NO extra scan."""
-    obs = Observation(name)
-    return df.observe(obs, F.count(F.lit(1)).alias("qtd_rows")), obs
+    return observed(df, name, qtd_rows=F.count(F.lit(1)))
 
 
 def observed_count(df: DataFrame, name: str = "audit") -> int:

@@ -19,6 +19,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from dados_publicos_etl_spark.session import read_nanos_as_long
+
 
 def parquet_ts_unit(path: str, col: str = "ts") -> str | None:
     """Sniff the physical timestamp unit ('ns'|'us'|'ms'|'s') of ``col``
@@ -85,13 +87,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     from dados_publicos_etl_spark import schemas
 
-    # Required session-wide for NANOS parquet; get_session sets it at
-    # build time.  For foreign sessions (the driver's own) set it once
-    # here rather than on every call — schema resolution happens at
-    # read time AND scan execution consults the conf later, so a
-    # save/restore around this read would break lazy execution.
-    if spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    read_nanos_as_long(spark)
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     expected = schemas.TESTDATA.get(name)
     if expected is not None:

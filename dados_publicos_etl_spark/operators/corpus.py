@@ -38,7 +38,7 @@ these operators exist for the north-star LLM-pipeline surface
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dados_publicos_etl_spark.functions.text import (
@@ -52,6 +52,7 @@ from dados_publicos_etl_spark.functions.text import (
 )
 from dados_publicos_etl_spark.io import read_table
 from dados_publicos_etl_spark.plans.registry import query
+from dados_publicos_etl_spark.tmpstore import checkpoint_observed
 
 _DUCK_TOKS = f"string_split_regex(lower(text), '{WS}')"
 
@@ -1731,24 +1732,18 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE conditional aggregation builds both domain models (the
     # bucket table is <= _DS_B rows — model-scale, never data-scale);
     # a second corpus pass scores.  Two scans total.
-    lr = (
-        feats.groupBy("b")
-        .agg(
+    lr, tot = checkpoint_observed(
+        feats.groupBy("b").agg(
             F.sum(
                 F.when(F.col("source") == "src0", 1).otherwise(0)
             ).alias("tc"),
             F.sum(
                 F.when(F.col("source") != "src0", 1).otherwise(0)
             ).alias("rc"),
-        )
-        .observe(
-            lr_obs := Observation(),
-            F.sum("tc").alias("t"),
-            F.sum("rc").alias("r"),
-        )
-        .localCheckpoint()
+        ),
+        t=F.sum("tc"),
+        r=F.sum("rc"),
     )
-    tot = lr_obs.get
     t_tot, r_tot = int(tot["t"] or 0), int(tot["r"] or 0)
     lr = lr.select(
         "b",

@@ -17,8 +17,9 @@ Spark-first design for the iterative part:
 - Near-dup clusters are shallow (diameter a handful), so the loop
   converges in a few rounds even at 100 TB; ``localCheckpoint``
   truncates the growing lineage each round so the plan stays flat.
-- Convergence is a driver-side count of changed labels per round —
-  an O(1)-result action, not a collect of data.
+- Convergence is the count of changed labels per round, observed on
+  the round's checkpoint job (``tmpstore.Rounds`` bounds the rounds
+  and raises ``FixpointNotReached`` instead of truncating).
 
 The oracle reproduces the fixpoint declaratively with a recursive CTE
 (transitive closure + MIN), which DuckDB terminates via recursive
@@ -30,7 +31,7 @@ from __future__ import annotations
 
 from functools import partial
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dados_publicos_etl_spark.functions.text import (
@@ -42,7 +43,12 @@ from dados_publicos_etl_spark.functions.text import (
 from dados_publicos_etl_spark.io import read_table
 from dados_publicos_etl_spark.plans.registry import query
 from dados_publicos_etl_spark.session import machine_sized_shuffle
-from dados_publicos_etl_spark.tmpstore import reroot, session_artifact
+from dados_publicos_etl_spark.tmpstore import (
+    Rounds,
+    checkpoint_observed,
+    reroot,
+    session_artifact,
+)
 
 _THRESH = 0.8
 
@@ -74,9 +80,9 @@ def connected_components(
          jobs) dominates the tiny label relation at every scale the
          per-round joins stay broadcast-able.
 
-    Convergence is a driver-side count on the already-materialized
-    round result (``localCheckpoint(eager=True)`` truncates lineage
-    so round N's plan doesn't replay rounds 1..N-1).
+    Convergence is the changed-label count observed on each round's
+    eager checkpoint; past ``max_iter`` changing rounds the call raises
+    ``FixpointNotReached`` (``tmpstore.Rounds``).
     """
     both = edges.select(
         F.col(src).alias("a"), F.col(dst).alias("b")
@@ -112,7 +118,8 @@ def connected_components(
             )
         )
     labels = labels.localCheckpoint()
-    for _it in range(max_iter):
+    rounds = Rounds("connected_components", max_iter)
+    for _ in rounds:
         # The label table is |V| rows over the DEDUP-PAIR graph —
         # orders of magnitude smaller than the corpus (only docs with
         # at least one near-dup edge appear), so broadcast it: the
@@ -167,30 +174,14 @@ def connected_components(
                 ).alias("label"),
                 "old_label",
             )
-        # r12: the convergence statistic rides the checkpoint job as
-        # an observed metric (CollectMetrics is a row pass-through;
-        # the checkpoint stays EAGER, so AQE coalescing is untouched
-        # — unlike the r10 lazy-fusion attempt this removes only the
-        # separate per-round count job).
-        obs = Observation()
-        new_labels = stepped.observe(
-            obs,
-            F.sum(
-                (F.col("label") < F.col("old_label")).cast("long")
-            ).alias("nc"),
-        ).localCheckpoint()
-        n_changed = int(obs.get["nc"] or 0)
+        new_labels, seen = checkpoint_observed(
+            stepped,
+            nc=F.sum((F.col("label") < F.col("old_label")).cast("long")),
+        )
         labels = new_labels.drop("old_label")
-        if n_changed == 0:
+        if rounds.fixpoint(not seen["nc"]):
             break
-        # Periodic datasource cut: chained self-joins degrade
-        # super-linearly past ~19 links regardless of checkpointing
-        # (BENCH_NOTES "self-join chain degradation"); each CC round
-        # now adds 3 links (hop + 2 jumps), so long-diameter graphs
-        # that need >4 rounds get the labels relation re-rooted on a
-        # parquet read.
-        if (_it + 1) % 4 == 0:
-            labels = reroot(labels, "cc_cut")
+        labels = rounds.cut(labels, "cc_cut")
     return labels
 
 
@@ -665,7 +656,7 @@ def cheapest_path_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _KC_K = 2        # core threshold: keep nodes with >= K surviving neighbors
-_KC_ROUNDS = 12  # fixed peel unroll; fixpoint asserted by pytest at test SFs
+_KC_ROUNDS = 12  # peel round bound, shared with the unrolled oracle
 _KC_MIN_ORDERS = 2  # co-purchase edge weight floor
 
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -787,49 +778,40 @@ def k_core_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivor-induced subgraph.  The survivor set is |V| rows (tiny
     next to |E|), so both semi-joins broadcast; the only per-round
     exchange over edge-scale data is the degree aggregate, partial-
-    aggregated map-side.  ``localCheckpoint`` on the rolling state
+    aggregated map-side.  The eager checkpoint of the survivor set
     each round keeps lineage flat and makes the 12-layer union a
     linear plan, not an exponential recompute.  At billions of edges
     the broadcast hint drops and adjacency/survivors co-partition on
     the node key once — the recurrence is unchanged.
 
     Removal round is well-defined (degree-0 isolates fall out via the
-    anti-join on the survivor set, same as the oracle's EXCEPT);
-    ``tests/test_extensions.py`` asserts the peel reaches fixpoint
-    before round _KC_ROUNDS, so the bounded unroll equals the true
-    2-core.  Reference scope: graph analytics extend SURVEY.md §2.B
-    (the reference ETL has no graph stage).
+    anti-join on the survivor set, same as the oracle's EXCEPT); a
+    peel that needs more than _KC_ROUNDS rounds raises
+    ``FixpointNotReached`` (``tmpstore.Rounds``), so the result is
+    always the true 2-core.  Reference scope: graph analytics extend
+    SURVEY.md §2.B (the reference ETL has no graph stage).
     """
     adj = _kcore_adjacency(spark, sf_dir)
     active = adj.select(F.col("u").alias("node")).distinct()
     layers = []
     prev_n = None
-    for r in range(1, _KC_ROUNDS + 1):
-        # One checkpoint per round, on the survivor set (|V| rows):
-        # it feeds three consumers (the removed anti-join + both
-        # semi-joins) and anchors the next round's lineage, so the
-        # 12-layer union stays a linear plan.  The rolling adjacency
-        # is NOT checkpointed — it only ever chains semi-joins onto
-        # the parquet-backed base, a flat plan by construction.
-        obs = Observation()
-        survivors = (
+    rounds = Rounds("k_core_peel", _KC_ROUNDS)
+    for r in rounds:
+        # The survivor set (|V| rows) is the round's checkpoint: it
+        # feeds three consumers (the removed anti-join + both
+        # semi-joins) and anchors the next round's lineage.
+        survivors, seen = checkpoint_observed(
             adj.groupBy("u")
             .agg(F.count(F.lit(1)).alias("deg"))
             .filter(F.col("deg") >= _KC_K)
-            .select(F.col("u").alias("node"))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint()
+            .select(F.col("u").alias("node")),
+            n=F.count(F.lit(1)),
         )
-        # Early exit at fixpoint: survivors ⊆ active every round, so
-        # an unchanged count means this round's removed layer — and
-        # every later one — is empty; the remaining unrolled rounds
-        # are identities on both engines.  r12: the count rides the
-        # checkpoint job as an observed metric instead of a separate
-        # per-round count job.
-        n = int(obs.get["n"] or 0)
-        if n == prev_n:
+        # survivors ⊆ active every round, so an unchanged count means
+        # this round's removed layer — and every later one — is empty
+        if rounds.fixpoint(seen["n"] == prev_n):
             break
-        prev_n = n
+        prev_n = seen["n"]
         removed = active.join(survivors, "node", "left_anti").select(
             "node", F.lit(r).cast("int").alias("peel_round")
         )
@@ -838,17 +820,12 @@ def k_core_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
         # action, no extra job): keeps every round's plan flat instead
         # of re-optimizing a 2r-deep semi-join chain — the chain was
         # pure replanning overhead, ~2x wall at sf0.1.
-        adj = (
+        adj = rounds.cut(
             adj.join(survivors, adj.u == survivors.node, "left_semi")
             .join(survivors, adj.v == survivors.node, "left_semi")
-            .localCheckpoint(eager=False)
+            .localCheckpoint(eager=False),
+            "kc_cut",
         )
-        # periodic datasource cut (BENCH_NOTES "self-join chain
-        # degradation"): survivors derive from adj, so each round adds
-        # ~3 self-join links; a full 12-round peel would cross the
-        # ~19-link wall checkpointing cannot reset.
-        if r % 4 == 0:
-            adj = reroot(adj, "kc_cut")
         active = survivors
     out = layers[0]
     for extra in layers[1:]:
@@ -863,14 +840,8 @@ _MSF_MAX_ROUNDS = 12  # Boruvka halves the component count per round:
                       # 2^12 components is far above any test graph
 _MSF_JUMPS = 8        # fixed pointer-jump depth: collapses nomination
                       # chains up to 2^8 long with no per-step driver
-                      # actions; kept under ~10 because CHAINED
-                      # SELF-JOINS degrade super-linearly past ~19 links
-                      # regardless of checkpointing (measured: a
-                      # join-checkpoint chain of a 100-row table goes
-                      # 0.1s -> 60s/step by link 24; a datasource
-                      # round-trip fully resets it, a localCheckpoint or
-                      # reliable checkpoint does NOT) — see BENCH_NOTES
-                      # "self-join chain degradation"
+                      # actions; kept under ~10 by the self-join
+                      # chain rule (tmpstore.py)
 
 
 def _boruvka_oracle() -> str:
@@ -987,17 +958,15 @@ def boruvka_msf(spark: SparkSession, sf_dir: str) -> DataFrame:
     Component count at least halves per round, so 100 TB needs the
     same ~log V rounds as sf0.001; the whole round is ~3 driver
     actions.  Early exit when no component nominates (graph fully
-    contracted).
+    contracted); a graph still nominating after _MSF_MAX_ROUNDS
+    rounds raises ``FixpointNotReached`` (``tmpstore.Rounds``).
     """
     edges = _copurchase_edges(spark, sf_dir)  # u, v, w
     # (r10 probe note: running the rounds with AQE disabled — to fold
     # each round into one job — was MEASURED SLOWER here: AQE's
     # partition coalescing is what keeps each tiny shuffle at 1-2
     # tasks, and without it every stage schedules shuffle_partitions
-    # tasks.  The job trim that DID land: the nominate checkpoint is
-    # lazy (count materializes it — one job, not two) and the label
-    # re-stamp broadcasts the lazily-checkpointed jump result
-    # directly instead of a per-round parquet write+read re-root.)
+    # tasks.)
     labels = (
         edges.select(F.col("u").alias("node"))
         .unionAll(edges.select(F.col("v").alias("node")))
@@ -1006,7 +975,8 @@ def boruvka_msf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
     forest = []
-    for rnd in range(1, _MSF_MAX_ROUNDS + 1):
+    rounds = Rounds("boruvka_msf", _MSF_MAX_ROUNDS)
+    for rnd in rounds:
         lu = labels.select(
             F.col("node").alias("lu_n"), F.col("label").alias("cu")
         )
@@ -1018,7 +988,7 @@ def boruvka_msf(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(F.broadcast(lv), edges.v == lv.lv_n)
             .filter(F.col("cu") != F.col("cv"))
         )
-        nominated = (
+        nominated, seen = checkpoint_observed(
             cross.select(F.col("cu").alias("comp"), "cu", "cv", "u", "v", "w")
             .unionAll(
                 cross.select(
@@ -1037,21 +1007,11 @@ def boruvka_msf(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.col("cv").alias("ecv"),
                     )
                 ).alias("edge")
-            )
-            .observe(nom_obs := Observation(), F.count(F.lit(1)).alias("n"))
-            .localCheckpoint()
+            ),
+            n=F.count(F.lit(1)),
         )
-        # Eager checkpoint (the r9 shape): the r10 attempt to fuse
-        # checkpoint+count via a LAZY checkpoint saved one job per
-        # round at sf0.1 but benched 4.97x (vs 1.56x) at the 10x
-        # probe — lazy-checkpoint materialization runs the
-        # aggregation outside AQE's coalescing, so every round paid
-        # full-width shuffle stages at scale.  r12: the count now
-        # rides the EAGER checkpoint job as an observed metric
-        # (CollectMetrics pass-through) — the job trim without the
-        # lazy pitfall; AQE coalescing is untouched.
-        n_nom = int(nom_obs.get["n"] or 0)
-        if n_nom == 0:
+        n_nom = seen["n"]
+        if rounds.fixpoint(n_nom == 0):
             break
         forest.append(
             nominated.select(
@@ -1283,18 +1243,13 @@ def hits_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("dst")
             .agg(F.sum("hub").alias("auth"))
         )
-    # r13 (r12 verdict item 5, the batch-4 observe pattern): the
-    # scalar MAX rides the EAGER localCheckpoint of the final auth
-    # table as an observed metric, so the unrolled 5-aggregate chain
-    # executes exactly ONCE and the crossJoin + separate max job are
-    # gone.  (The r10 note here documented a LAZY checkpoint benching
-    # slower — materialization outside AQE coalescing, the known
-    # pitfall; the eager checkpoint + Observation is the shape batch 4
-    # proved on the CC/k-core/Borůvka loops.)  auth is |suppliers|
-    # rows — model-sized, checkpoint-safe at any corpus scale.
-    obs = Observation()
-    auth = auth.observe(obs, F.max("auth").alias("mx")).localCheckpoint()
-    mx = obs.get["mx"]  # exact DECIMAL(38,0) path-count maximum
+    # the normalizer rides the checkpoint of the final auth table, so
+    # the unrolled 5-aggregate chain executes exactly once; auth is
+    # |suppliers| rows — model-sized, checkpoint-safe at any scale
+    auth, seen = checkpoint_observed(auth, mx=F.max("auth"))
+    # exact DECIMAL(38,0) path-count maximum; None only when auth (and
+    # so the result) has no rows
+    mx = seen["mx"]
     return (
         auth.select(
             F.concat(
@@ -1617,10 +1572,10 @@ def dedup_cluster_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _TRUSS_K = 4          # keep edges in >= (k-2) = 2 triangles
-# fixed unroll depth, chosen past the measured fixpoint (5/6/4 rounds
-# at sf0.001/0.01/0.1); Spark early-exits at the actual fixpoint and
-# the extra oracle rounds are no-ops on the converged set, so the
-# fixed unroll is exact, not an approximation — pinned by pytest
+# peel round bound, shared with the unrolled oracle and set past the
+# measured fixpoint (5/6/4 rounds at sf0.001/0.01/0.1): the extra
+# oracle rounds are no-ops on the converged set, so the unroll is
+# exact, and a graph needing more rounds raises FixpointNotReached
 _TRUSS_ROUNDS = 8
 
 
@@ -1679,8 +1634,9 @@ def _truss_oracle() -> str:
     """
 
 
-def _truss_peel_once(edges: DataFrame) -> DataFrame:
-    """One Spark peel round over the (tiny, a<b oriented) edge set."""
+def _truss_sides(edges: DataFrame) -> DataFrame:
+    """(a, b) once per triangle side of the (a<b oriented) edge set:
+    the a<b<c edge-iterator enumeration, one row per triangle."""
     # no broadcast hint on the edge table (round-8 ADVICE fix): a
     # real co-purchase edge set is not executor-broadcast-sized; AQE
     # picks broadcast at test scale from the checkpointed size stats
@@ -1701,12 +1657,18 @@ def _truss_peel_once(edges: DataFrame) -> DataFrame:
             F.col("e2.b").alias("z"),
         )
     )
-    sides = (
+    return (
         tri.select(F.col("x").alias("a"), F.col("y").alias("b"))
         .unionAll(tri.select(F.col("y").alias("a"), F.col("z").alias("b")))
         .unionAll(tri.select(F.col("x").alias("a"), F.col("z").alias("b")))
     )
-    supp = sides.groupBy("a", "b").agg(F.count(F.lit(1)).alias("s"))
+
+
+def _truss_peel_once(edges: DataFrame) -> DataFrame:
+    """One Spark peel round over the (tiny, a<b oriented) edge set."""
+    supp = _truss_sides(edges).groupBy("a", "b").agg(
+        F.count(F.lit(1)).alias("s")
+    )
     return (
         edges.join(supp, ["a", "b"])
         .filter(F.col("s") >= _TRUSS_K - 2)
@@ -1726,9 +1688,10 @@ def _truss_peel_once(edges: DataFrame) -> DataFrame:
     "away).  Each peel round is one a<b<c edge-iterator triangle "
     "enumeration (join volume = sum of degree squared, the "
     "triangle_count plan) + one per-edge count + one semi filter — "
-    "all on the bounded edge table, datasource-cut per round; the "
-    f"{_TRUSS_ROUNDS}-round unroll sits past the measured fixpoint "
-    "(Spark early-exits there; the oracle's extra rounds are no-ops "
+    "all on the bounded edge table, checkpointed per round; the "
+    f"{_TRUSS_ROUNDS}-round bound sits past the measured fixpoint "
+    "(Spark early-exits there and raises FixpointNotReached on a "
+    "graph that needs more; the oracle's extra rounds are no-ops "
     "on the converged set — asserted by the peel-once-more pytest, "
     "the Boruvka idempotency discipline), and the oracle unrolls "
     "the identical recurrence into MATERIALIZED CTEs.  Twelfth "
@@ -1739,71 +1702,20 @@ def _truss_peel_once(edges: DataFrame) -> DataFrame:
 def k_truss_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dados_publicos_etl_spark.plans.mining import _co_edges
 
-    e_obs = Observation()
-    edges = (
-        _co_edges(spark, sf_dir)
-        .observe(e_obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
+    edges, seen = checkpoint_observed(
+        _co_edges(spark, sf_dir), n=F.count(F.lit(1))
     )
-    n_edges = int(e_obs.get["n"] or 0)
-    converged = False
-    for _ in range(_TRUSS_ROUNDS):
-        obs = Observation()
-        nxt = (
-            _truss_peel_once(edges)
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint()
+    rounds = Rounds("k_truss_edges", _TRUSS_ROUNDS)
+    for _ in rounds:
+        # a peel only removes edges, so an unchanged cardinality (the
+        # previous round's is carried in ``seen``) is the fixpoint
+        prev_n = seen["n"]
+        edges, seen = checkpoint_observed(
+            _truss_peel_once(edges), n=F.count(F.lit(1))
         )
-        # fixpoint early-exit: a converged set peels to itself, so
-        # skipping the remaining no-op rounds cannot change the
-        # result.  r12: the previous round's cardinality is carried
-        # in n_edges, and this round's rides the checkpoint job as an
-        # observed metric — two fewer jobs per peel round.
-        n_nxt = int(obs.get["n"] or 0)
-        if n_nxt == n_edges:
-            edges = nxt
-            converged = True
+        if rounds.fixpoint(seen["n"] == prev_n):
             break
-        edges, n_edges = nxt, n_nxt
-    if not converged and _truss_peel_once(edges).count() != n_edges:
-        # Surface non-convergence LOUDLY (round-8 ADVICE fix): on a
-        # graph needing more rounds, Spark and the oracle still agree
-        # (same truncated recurrence) but the output would no longer
-        # be the true k-truss the query claims — raise rather than
-        # silently ship it.  The probe costs one extra peel count and
-        # runs only when the unroll budget was exhausted (never at
-        # the tested scale factors, whose fixpoints sit at 4-6).
-        raise RuntimeError(
-            f"k-truss did not converge within _TRUSS_ROUNDS="
-            f"{_TRUSS_ROUNDS}; raise the unroll depth (engine AND "
-            "oracle share the constant)"
-        )
-    # no broadcast hint on the edge table (round-8 ADVICE fix): a
-    # real co-purchase edge set is not executor-broadcast-sized; AQE
-    # picks broadcast at test scale from the checkpointed size stats
-    # and falls back to shuffle joins at corpus scale
-    e1 = edges.alias("e1")
-    e2 = edges.alias("e2")
-    e3 = edges.alias("e3")
-    tri = (
-        e1.join(e2, F.col("e2.a") == F.col("e1.b"))
-        .join(
-            e3,
-            (F.col("e3.a") == F.col("e1.a"))
-            & (F.col("e3.b") == F.col("e2.b")),
-        )
-        .select(
-            F.col("e1.a").alias("x"),
-            F.col("e1.b").alias("y"),
-            F.col("e2.b").alias("z"),
-        )
-    )
-    sides = (
-        tri.select(F.col("x").alias("a"), F.col("y").alias("b"))
-        .unionAll(tri.select(F.col("y").alias("a"), F.col("z").alias("b")))
-        .unionAll(tri.select(F.col("x").alias("a"), F.col("z").alias("b")))
-    )
-    supp = sides.groupBy("a", "b").agg(
+    supp = _truss_sides(edges).groupBy("a", "b").agg(
         F.count(F.lit(1)).cast("long").alias("support")
     )
     return edges.join(supp, ["a", "b"]).select("a", "b", "support")

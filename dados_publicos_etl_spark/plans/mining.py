@@ -27,7 +27,10 @@ from dados_publicos_etl_spark.functions.numeric import money_sum, money_sum_sql
 from dados_publicos_etl_spark.io import read_table
 from dados_publicos_etl_spark.plans.registry import query
 from dados_publicos_etl_spark.session import machine_sized_shuffle
-from dados_publicos_etl_spark.tmpstore import session_artifact
+from dados_publicos_etl_spark.tmpstore import (
+    checkpoint_observed,
+    session_artifact,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -1838,16 +1841,10 @@ def ppr_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     deg = und.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
     dund = und.join(F.broadcast(deg), "u").localCheckpoint()
-    from pyspark.sql import Observation
-
-    seed_obs = Observation()
-    nodes = (
-        und.select(F.col("u").alias("node"))
-        .distinct()
-        .observe(seed_obs, F.min("node").alias("m"))
-        .localCheckpoint()
+    nodes, seen = checkpoint_observed(
+        und.select(F.col("u").alias("node")).distinct(), m=F.min("node")
     )
-    seed = seed_obs.get["m"]
+    seed = seen["m"]
     # exact int64 fixed-point ranks (round-8 ADVICE fix): the spread
     # is an integer floor division per edge and the contribution sum
     # an integer aggregate, so partial-aggregation order cannot move

@@ -19,6 +19,8 @@ from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
 
 def get_session(
     app_name: str = "dados-publicos-etl-spark",
@@ -56,7 +58,7 @@ def get_session(
         # otherwise rejects; read them as long and let io.read_table
         # convert to microsecond TIMESTAMP_NTZ.  Set once here rather
         # than mutated per read.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config(NANOS_AS_LONG, "true")
         # InferFiltersFromGenerate adds a `size(arr) > 0` guard under
         # every explode(); when the array is a COMPUTED expression
         # (word shingles, span hashes), filter pushdown re-INLINES
@@ -93,6 +95,30 @@ def get_session(
     return spark
 
 
+def read_nanos_as_long(spark: SparkSession) -> None:
+    """``nanosAsLong`` for a session ``get_session`` did not build,
+    for the whole session: a scan consults it again at execution."""
+    if spark.conf.get(NANOS_AS_LONG, "false") != "true":
+        spark.conf.set(NANOS_AS_LONG, "true")
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str]):
+    """``conf`` set on ``spark`` for the block; each key then gets its
+    previous value back, or is unset if it had none."""
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 @contextmanager
 def iterative_shuffle(spark: SparkSession):
     """Scope ``spark.sql.shuffle.partitions`` to the machine for an
@@ -125,8 +151,8 @@ def iterative_shuffle(spark: SparkSession):
     Session-scoped conf is the only lever Spark exposes for the
     REDUCE side of an aggregation (a ``repartition(k)`` on the input
     does not resize the groupBy's own exchange); callers are the
-    single-threaded query functions, and the value is restored via
-    try/finally, so a raising round cannot leak the override.
+    single-threaded query functions, and ``scoped_conf`` restores the
+    value, so a raising round cannot leak the override.
     """
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
@@ -137,11 +163,8 @@ def iterative_shuffle(spark: SparkSession):
     if k >= (int(old) if str(old).lstrip("-").isdigit() else 0):
         yield  # already machine-sized (the engine's own sessions)
         return
-    spark.conf.set(key, str(k))
-    try:
+    with scoped_conf(spark, {key: str(k)}):
         yield
-    finally:
-        spark.conf.set(key, old)
 
 
 def machine_sized_shuffle(fn):

@@ -35,7 +35,7 @@ def stream_events_foreach_batch(
     dir gives source-offset recovery; together they make the sink
     restart-safe.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    read_nanos_as_long(spark)
     n_batches = {"n": 0}
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -79,6 +79,7 @@ from dados_publicos_etl_spark.io import (  # noqa: E402
     parquet_ts_unit,
 )
 from dados_publicos_etl_spark.plans.registry import query  # noqa: E402
+from dados_publicos_etl_spark.session import read_nanos_as_long  # noqa: E402
 from dados_publicos_etl_spark.streaming.windows import (  # noqa: E402
     run_state_table,
 )

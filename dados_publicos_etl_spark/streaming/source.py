@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dados_publicos_etl_spark.io import epoch_micros_sql, parquet_ts_meta
+from dados_publicos_etl_spark.session import read_nanos_as_long
 
 EVENTS_RAW_SCHEMA = (
     "event_id long, ts long, user_id long, event_type string, "
@@ -46,7 +47,7 @@ def read_event_stream(
     convert to epoch micros with session-timezone-independent
     expressions (NTZ diff from epoch / ``unix_micros``).
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    read_nanos_as_long(spark)
     unit, tz = parquet_ts_meta(os.path.join(sf_dir, "events.parquet"), "ts")
     if unit in ("ns", None):
         schema = EVENTS_RAW_SCHEMA

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from dados_publicos_etl_spark.session import scoped_conf
 from dados_publicos_etl_spark.streaming.windows import run_memory_sink
 
 OUTPUT_SCHEMA = "user_id long, n_events long, total_value double"
@@ -130,22 +131,17 @@ def streaming_running_totals_v2(
     google.protobuf is unavailable; see HAS_TWS).
 
     The v2 operator requires the RocksDB state store provider; the
-    conf is saved and restored around the query so later stateful
-    streams on the SHARED session keep their configured provider
-    (leaking it would silently switch every subsequent query's state
-    store).
+    conf is scoped to the query so later stateful streams on the
+    SHARED session keep their configured provider (leaking it would
+    silently switch every subsequent query's state store).
     """
     from dados_publicos_etl_spark.streaming.source import read_event_stream
 
-    _PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = spark.conf.get(_PROVIDER_KEY, None)
-    spark.conf.set(
-        _PROVIDER_KEY,
+    with scoped_conf(spark, {
+        "spark.sql.streaming.stateStore.providerClass":
         "org.apache.spark.sql.execution.streaming.state."
         "RocksDBStateStoreProvider",
-    )
-
-    try:
+    }):
         stream = read_event_stream(spark, sf_dir, ntz=True)
         out = stream.groupBy("user_id").transformWithStateInPandas(
             RunningTotalsProcessor(),
@@ -154,11 +150,6 @@ def streaming_running_totals_v2(
             timeMode="None",
         )
         snap = run_memory_sink(spark, out, "update", "tws_out")
-    finally:
-        if prev_provider is None:
-            spark.conf.unset(_PROVIDER_KEY)
-        else:
-            spark.conf.set(_PROVIDER_KEY, prev_provider)
     from pyspark.sql import Window as W
 
     w = W.partitionBy("user_id").orderBy(F.desc("n_events"))

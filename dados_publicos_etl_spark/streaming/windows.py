@@ -13,7 +13,6 @@ reproduce them with epoch arithmetic, so results hash-match exactly.
 from __future__ import annotations
 
 import uuid
-from contextlib import contextmanager
 from functools import partial
 from typing import Callable
 
@@ -24,13 +23,13 @@ from pyspark.sql import functions as F
 from dados_publicos_etl_spark.functions.numeric import money_sum
 from dados_publicos_etl_spark.io import read_table
 from dados_publicos_etl_spark.plans.registry import query
+from dados_publicos_etl_spark.session import scoped_conf
 from dados_publicos_etl_spark.tmpstore import new_dir, reroot, session_artifact
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss"
 _STREAM_SHUFFLE = 4  # shuffle partitions a stream plans with
 
 
-@contextmanager
 def _streaming_shuffle(spark: SparkSession):
     """Bound stateful-stream parallelism while a query is planned,
     and skip no-data micro-batches for the drive-to-completion run.
@@ -43,8 +42,9 @@ def _streaming_shuffle(spark: SparkSession):
     partitions ~1.1-3.0 s; below 4 it flattens).  On a
     real cluster raise it (~2-3x executor cores) — state partitioning
     is fixed at first checkpoint, so size it for peak key cardinality
-    up front.  The session value is restored afterwards; the stream
-    keeps the value captured at plan time.
+    up front.  The session value is restored afterwards
+    (``session.scoped_conf``); the stream keeps the value captured at
+    plan time.
 
     ``noDataMicroBatches`` is disabled for the same window: after the
     data batch, processAllAvailable otherwise waits out an EMPTY
@@ -57,19 +57,10 @@ def _streaming_shuffle(spark: SparkSession):
     emit on watermark advance (EventTimeTimeout session close —
     ``stateful.streaming_session_close``) must not use this wrapper.
     """
-    _NODATA_KEY = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_nodata = spark.conf.get(_NODATA_KEY, None)
-    spark.conf.set("spark.sql.shuffle.partitions", str(_STREAM_SHUFFLE))
-    spark.conf.set(_NODATA_KEY, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        if prev_nodata is None:
-            spark.conf.unset(_NODATA_KEY)
-        else:
-            spark.conf.set(_NODATA_KEY, prev_nodata)
+    return scoped_conf(spark, {
+        "spark.sql.shuffle.partitions": str(_STREAM_SHUFFLE),
+        "spark.sql.streaming.noDataMicroBatches.enabled": "false",
+    })
 
 
 # purpose -> run metadata (output mode, batch count, streaming

@@ -63,6 +63,36 @@ schema-inference job).  Two kinds of caller need it:
   each micro-batch's merged state lands in a new dir, so a batch
   never overwrites the version it reads, and the next batch's plan
   starts from a scan instead of a lineage that grows per batch.
+
+``observed(df, name, **aggs)`` is the one ``Observation`` builder:
+the scalars ride the next action over ``df`` (CollectMetrics passes
+rows through) at no job of their own.  ``checkpoint_observed`` rides
+them on an eager checkpoint, under the materialization rules of the
+iterative operators:
+
+- **A round's scalar rides its eager checkpoint** (r12): a change
+  count, a seed or a normalizer costs no job of its own.
+- **A lazy checkpoint loses AQE coalescing**: it materializes inside
+  the consuming job, whose shuffles then run at full width (r10:
+  Borůvka 4.97x vs 1.56x at the 10x probe); lazy checkpoints stay
+  only where they flatten a plan chain at no extra job.
+- **A cut every ``CUT_EVERY`` (4) rounds guards the self-join
+  chain**: a round adds ~3 self-join links, and past ~19 planning
+  degrades super-linearly however the state is checkpointed (a
+  100-row table: 0.1 s -> 60 s a step by link 24); ``Rounds.cut``
+  re-roots the state (``reroot``).
+
+``Rounds(query, bound)`` is the one bounded-round rule of the
+convergence loops (CC, k-core, Borůvka, k-truss): ``for r in rounds``
+runs rounds ``1..bound``, which may change the state, then a probe
+round ``bound + 1``; each round ends with
+``if rounds.fixpoint(<observed test>): break``.  A probe round with
+no fixpoint raises ``FixpointNotReached(query, bound)``, never a
+truncated state; a state already at its fixpoint when the bound is
+spent returns, equal to an oracle that unrolls ``bound`` rounds.
+Per-round side outputs (k-core layers, the Borůvka forest) stay in
+the caller; fixed-round loops (PageRank, PPR, Bellman-Ford, label
+propagation, HITS) stay plain ``for`` loops.
 """
 
 from __future__ import annotations
@@ -73,7 +103,7 @@ import tempfile
 import threading
 from typing import Any, Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 CACHE_LOCK = threading.Lock()
 # (name, sf_dir, params) -> (fingerprint, TemporaryDirectory, value)
@@ -190,3 +220,57 @@ def reroot(
     path = os.path.join(new_dir(purpose, f"spark_{purpose}_"), "t")
     df.write.parquet(path)
     return (spark or df.sparkSession).read.schema(df.schema).parquet(path)
+
+
+def observed(
+    df: DataFrame, name: str | None = None, **aggs: Column
+) -> tuple[DataFrame, Observation]:
+    """``df`` observing ``aggs`` (aliased by keyword) as one
+    ``Observation`` named ``name`` (default: a UUID)."""
+    obs = Observation(name)
+    return df.observe(obs, *(c.alias(k) for k, c in aggs.items())), obs
+
+
+def checkpoint_observed(
+    df: DataFrame, **aggs: Column
+) -> tuple[DataFrame, dict]:
+    """The eager ``localCheckpoint`` of ``df`` and the values of
+    ``aggs`` (None for a sum, min or max over no rows), in one job."""
+    df, obs = observed(df, **aggs)
+    return df.localCheckpoint(), obs.get
+
+
+CUT_EVERY = 4
+
+
+class FixpointNotReached(RuntimeError):
+    """A convergence loop spent its round bound without a fixpoint."""
+
+    def __init__(self, query: str, bound: int) -> None:
+        super().__init__(
+            f"{query} reached no fixpoint within {bound} rounds; raise "
+            "its round bound (engine and any unrolled oracle share it)"
+        )
+        self.query, self.bound = query, bound
+
+
+class Rounds:
+    """The bounded-round rule (see the module docstring)."""
+
+    def __init__(self, query: str, bound: int) -> None:
+        self.query, self.bound, self.round = query, bound, 0
+
+    def __iter__(self):
+        for self.round in range(1, self.bound + 2):
+            yield self.round
+
+    def fixpoint(self, reached: bool) -> bool:
+        """``reached``; raises ``FixpointNotReached`` in the probe round
+        without it."""
+        if not reached and self.round > self.bound:
+            raise FixpointNotReached(self.query, self.bound)
+        return reached
+
+    def cut(self, df: DataFrame, purpose: str) -> DataFrame:
+        """``reroot`` on every ``CUT_EVERY``-th round."""
+        return reroot(df, purpose) if self.round % CUT_EVERY == 0 else df

@@ -1348,6 +1348,94 @@ def test_portable_hash_and_memory_sink_live_once():
     )
 
 
+def test_observation_round_rule_and_conf_writes_live_once():
+    """Static inventory of observed metrics, convergence loops and
+    session conf writes: ``tmpstore.observed`` is the one
+    ``Observation`` builder (audit counts, round change counts, seeds
+    and normalizers all go through it or
+    ``tmpstore.checkpoint_observed``), every convergence loop of
+    ``operators/graph.py`` decides its ``break`` through
+    ``tmpstore.Rounds.fixpoint`` (so a spent round bound raises), and
+    ``session.py`` holds every runtime conf write (``scoped_conf``,
+    ``read_nanos_as_long``).  Fails on any ``Observation(...)`` or
+    ``.observe(...)`` call outside ``tmpstore.observed``, on any
+    ``for`` loop in graph.py that checkpoints and breaks without
+    calling ``.fixpoint(``, and on any ``<x>.conf.set(...)`` /
+    ``<x>.conf.unset(...)`` outside session.py."""
+    import ast
+    import os
+
+    import dados_publicos_etl_spark as pkg
+
+    def own_breaks(stmts) -> bool:
+        """A ``break`` of the loop whose body is ``stmts`` (not of a
+        nested loop or function)."""
+        todo = list(stmts)
+        while todo:
+            node = todo.pop()
+            if isinstance(node, ast.Break):
+                return True
+            if not isinstance(
+                node, (ast.For, ast.While, ast.FunctionDef, ast.Lambda)
+            ):
+                todo.extend(ast.iter_child_nodes(node))
+        return False
+
+    def call_name(node) -> str | None:
+        if not isinstance(node, ast.Call):
+            return None
+        return getattr(node.func, "attr", None) or getattr(
+            node.func, "id", None
+        )
+
+    def called(node, names: set[str]) -> bool:
+        return any(call_name(n) in names for n in ast.walk(node))
+
+    root = os.path.dirname(pkg.__file__)
+    offenders: list[str] = []
+    for dirpath, _dirs, files in os.walk(root):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, f)
+            with open(path) as fh:
+                tree = ast.parse(fh.read(), filename=path)
+            builder: set[int] = set()
+            for node in ast.walk(tree):
+                if (
+                    isinstance(node, ast.FunctionDef)
+                    and node.name == "observed"
+                    and f == "tmpstore.py"
+                ):
+                    builder |= set(range(node.lineno, node.end_lineno + 1))
+            for node in ast.walk(tree):
+                name = call_name(node)
+                if name in ("Observation", "observe") and (
+                    node.lineno not in builder
+                ):
+                    offenders.append(f"{f}:{node.lineno} {name}")
+                if (
+                    name in ("set", "unset")
+                    and getattr(getattr(node.func, "value", None), "attr", None)
+                    == "conf"
+                    and f != "session.py"
+                ):
+                    offenders.append(f"{f}:{node.lineno} conf.{name}")
+                if (
+                    f == "graph.py"
+                    and isinstance(node, ast.For)
+                    and own_breaks(node.body)
+                    and called(node, {"localCheckpoint", "checkpoint_observed"})
+                    and not called(node, {"fixpoint"})
+                ):
+                    offenders.append(f"{f}:{node.lineno} convergence loop")
+    assert not offenders, (
+        f"hand-rolled observed metrics, convergence loops or conf writes:"
+        f" {offenders} — use tmpstore.observed / checkpoint_observed,"
+        " tmpstore.Rounds, session.scoped_conf / read_nanos_as_long"
+    )
+
+
 def test_driver_collects_bounded_at_10x(spark, tmp_path_factory):
     """Dynamic half: every collect-bearing query runs at smoke scale
     AND at an FK-consistent 10x replica under a collect-size
