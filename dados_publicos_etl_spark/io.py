@@ -351,17 +351,6 @@ def unescape_path_name(s: str) -> str:
     return "".join(out)
 
 
-def partitioned_schema(schema: T.StructType, partition_by: list[str]) -> T.StructType:
-    """The schema a parquet dataset written from ``schema`` with
-    ``partitionBy(*partition_by)`` reads back as: the data columns,
-    then the partition columns.  Reading with it runs no
-    schema-inference job, and works when the write had zero rows."""
-    return T.StructType(
-        [f for f in schema.fields if f.name not in partition_by]
-        + [schema[c] for c in partition_by]
-    )
-
-
 def compact_partitions(
     spark: SparkSession,
     path: str,

@@ -61,7 +61,11 @@ from dados_publicos_etl_spark.functions.text import (
 )
 from dados_publicos_etl_spark.io import read_table
 from dados_publicos_etl_spark.plans.registry import query
-from dados_publicos_etl_spark.tmpstore import session_artifact
+from dados_publicos_etl_spark.tmpstore import (
+    open_table,
+    session_artifact,
+    write_table,
+)
 
 # ---------------------------------------------------------------------------
 # Exact dedup
@@ -251,13 +255,13 @@ def portable_sig_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     same construction); at 100 TB this is the signature table a
     pipeline PERSISTS next to the corpus, not recomputes per
     consumer."""
-    path = session_artifact(
+    table = session_artifact(
         "mh_sig", sf_dir, partial(_write_portable_sig, spark, sf_dir)
     )
-    return spark.read.parquet(path)
+    return open_table(spark, table)
 
 
-def _write_portable_sig(spark: SparkSession, sf_dir: str, workdir: str) -> str:
+def _write_portable_sig(spark: SparkSession, sf_dir: str, workdir: str):
     docs = read_table(spark, sf_dir, "documents")
     # staged selects (tokens -> shingles -> hashes) keep each
     # expensive tree single-evaluation (no CSE inside projections)
@@ -283,9 +287,7 @@ def _write_portable_sig(spark: SparkSession, sf_dir: str, workdir: str) -> str:
             ]
         ).alias("sig"),
     )
-    path = workdir + "/sig"
-    sig.write.mode("overwrite").parquet(path)
-    return path
+    return write_table(sig, workdir + "/sig")
 
 
 def _minhash_lsh_oracle() -> str:
@@ -592,15 +594,13 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("band"),
         ).select("doc_id", "band.band_idx", "band.band_hash")
 
-    # one persisted band index per corpus snapshot; the stored schema
-    # lets a warm hit read it back without a schema-inference job
+    # one persisted band index per corpus snapshot
     def build(workdir: str):
-        path = workdir + "/index"
-        portable_bands(snapshot).write.mode("overwrite").parquet(path)
-        return path, spark.read.parquet(path).schema
+        return write_table(portable_bands(snapshot), workdir + "/index")
 
-    path, schema = session_artifact("minhash_index", sf_dir, build)
-    index_df = spark.read.schema(schema).parquet(path)
+    index_df = open_table(
+        spark, session_artifact("minhash_index", sf_dir, build)
+    )
 
     inc_bands = portable_bands(incoming).select(
         F.col("doc_id").alias("incoming_id"), "band_idx", "band_hash"

@@ -45,9 +45,12 @@ from dados_publicos_etl_spark.plans.registry import query
 from dados_publicos_etl_spark.session import machine_sized_shuffle
 from dados_publicos_etl_spark.tmpstore import (
     Rounds,
+    Table,
     checkpoint_observed,
+    open_table,
     reroot,
     session_artifact,
+    write_table,
 )
 
 _THRESH = 0.8
@@ -226,12 +229,9 @@ def near_dup_pair_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("b.doc_id").alias("dst"),
             )
         )
-        path = workdir + "/pairs"
-        pairs.write.mode("overwrite").parquet(path)
-        return path, spark.read.parquet(path).schema
+        return write_table(pairs, workdir + "/pairs")
 
-    path, schema = session_artifact("pair_graph", sf_dir, build)
-    return spark.read.schema(schema).parquet(path)
+    return open_table(spark, session_artifact("pair_graph", sf_dir, build))
 
 
 @query(
@@ -295,10 +295,10 @@ def _pagerank_graph(spark: SparkSession, sf_dir: str):
     corpus) and parquet-backed: the tables never change across
     invocations on the same corpus, and building them (join +
     distinct + degree shuffle) dominated the query's wall time."""
-    wpath, npath, n = session_artifact(
+    wedges, nodes, n = session_artifact(
         "pr_graph", sf_dir, partial(_build_pagerank_graph, spark, sf_dir)
     )
-    return spark.read.parquet(wpath), spark.read.parquet(npath), n
+    return open_table(spark, wedges), open_table(spark, nodes), n
 
 
 def _build_pagerank_graph(spark: SparkSession, sf_dir: str, workdir: str):
@@ -325,17 +325,15 @@ def _build_pagerank_graph(spark: SparkSession, sf_dir: str, workdir: str):
     wedges = edges.join(F.broadcast(outdeg), "src").select(
         "src", "dst", (F.lit(1.0) / F.col("deg")).alias("w")
     )
-    wpath, npath = f"{workdir}/wedges", f"{workdir}/nodes"
-    wedges.write.mode("overwrite").parquet(wpath)
-    wedges_r = spark.read.parquet(wpath)
+    wtable = write_table(wedges, f"{workdir}/wedges")
+    wedges_r = open_table(spark, wtable)
     nodes = (
         wedges_r.select(F.col("src").alias("node"))
         .union(wedges_r.select(F.col("dst").alias("node")))
         .distinct()
     )
-    nodes.write.mode("overwrite").parquet(npath)
-    nodes_r = spark.read.parquet(npath)
-    return wpath, npath, nodes_r.count()
+    ntable = write_table(nodes, f"{workdir}/nodes")
+    return wtable, ntable, open_table(spark, ntable).count()
 
 
 def _pagerank_oracle() -> str:
@@ -417,7 +415,8 @@ def pagerank_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     result, not a data collect.
     """
     wedges, nodes, n = _pagerank_graph(spark, sf_dir)
-    pr = nodes.withColumn("pr", F.lit(1.0 / n))
+    n1 = max(n, 1)  # an empty graph (n = 0) ranks no rows
+    pr = nodes.withColumn("pr", F.lit(1.0 / n1))
     for it in range(_PR_ITERS):
         # Rank table is |V| rows (tiny next to |E|): broadcast it so
         # the edge table never shuffles — per round the only exchange
@@ -434,7 +433,7 @@ def pagerank_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select(
             "node",
             (
-                F.lit((1 - _PR_DAMP) / n)
+                F.lit((1 - _PR_DAMP) / n1)
                 + _PR_DAMP * F.coalesce("contrib", F.lit(0.0))
             ).alias("pr"),
         )
@@ -576,13 +575,13 @@ def _bf_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus) and parquet-backed — same disk-cache pattern as the
     PageRank graph: the orders x lineitem aggregate is the dominant
     cost and is identical across repeat runs."""
-    path = session_artifact(
+    table = session_artifact(
         "bf_edges", sf_dir, partial(_build_bf_edges, spark, sf_dir)
     )
-    return spark.read.parquet(path)
+    return open_table(spark, table)
 
 
-def _build_bf_edges(spark: SparkSession, sf_dir: str, workdir: str) -> str:
+def _build_bf_edges(spark: SparkSession, sf_dir: str, workdir: str) -> Table:
     orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey"
     )
@@ -608,9 +607,7 @@ def _build_bf_edges(spark: SparkSession, sf_dir: str, workdir: str) -> str:
     ).unionAll(
         wedges.select(F.col("s").alias("a"), F.col("c").alias("b"), "w")
     )
-    path = workdir + "/und"
-    und.write.mode("overwrite").parquet(path)
-    return path
+    return write_table(und, workdir + "/und")
 
 
 @query(
@@ -668,15 +665,15 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus size.  Shared by the k-core peel and the Boruvka spanning
     forest.
     """
-    path = session_artifact(
+    table = session_artifact(
         "copurchase", sf_dir, partial(_build_copurchase_edges, spark, sf_dir)
     )
-    return spark.read.parquet(path)
+    return open_table(spark, table)
 
 
 def _build_copurchase_edges(
     spark: SparkSession, sf_dir: str, workdir: str
-) -> str:
+) -> Table:
     li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
@@ -694,9 +691,7 @@ def _build_copurchase_edges(
         .agg(F.count(F.lit(1)).alias("w"))
         .filter(F.col("w") >= _KC_MIN_ORDERS)
     )
-    path = f"{workdir}/edges"
-    pairs.write.mode("overwrite").parquet(path)
-    return path
+    return write_table(pairs, f"{workdir}/edges")
 
 
 def _kcore_adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:

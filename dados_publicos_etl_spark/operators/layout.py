@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dados_publicos_etl_spark.tmpstore import Table, open_table, write_table
+
 Z_BITS = 8  # bits per dimension (2 dims -> 16-bit z-value, 256 ranks)
 
 
@@ -69,9 +71,9 @@ def write_zordered(
     col_b: str,
     n_files: int = 8,
     bits: int = Z_BITS,
-) -> None:
+) -> Table:
     """Write ``df`` as parquet clustered on the z-order of numeric
-    columns (``col_a``, ``col_b``).
+    columns (``col_a``, ``col_b``); returns the table handle.
 
     Build cost: two approxQuantile passes (distributed sketches) +
     one range shuffle.  Read payoff: each output file covers a
@@ -87,12 +89,11 @@ def write_zordered(
         "_z",
         z_value(bucket_rank(col_a, ba), bucket_rank(col_b, bb), bits),
     )
-    (
+    return write_table(
         with_z.repartitionByRange(n_files, "_z")
         .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .parquet(path)
+        .drop("_z"),
+        path,
     )
 
 
@@ -102,11 +103,11 @@ def write_zordered(
 
 
 def write_globally_sorted(
-    df,
+    df: DataFrame,
     path: str,
     order_cols: list[str],
     num_files: int = 8,
-):
+) -> tuple[Table, DataFrame]:
     """Write ``df`` as a GLOBALLY sorted parquet layout: range
     partitions are globally ordered, rows sort within each file, so
     file k's max key <= file k+1's min key — a total order across the
@@ -119,23 +120,19 @@ def write_globally_sorted(
     any range predicate on the leading key prunes to the files whose
     [min, max] overlap, and k-way-merge reads need no re-sort.
 
-    Returns the manifest: one row per file with (file, n_rows,
-    min_key, max_key) on the leading order column, computed in ONE
-    job over input_file_name() — the caller can persist it beside
-    the data as the pruning index.
+    Returns the table handle and the manifest: one row per file with
+    (file, n_rows, min_key, max_key) on the leading order column,
+    computed in ONE job over input_file_name() — the caller can
+    persist it beside the data as the pruning index.
     """
-    from pyspark.sql import functions as F
-
-    (
+    table = write_table(
         df.repartitionByRange(num_files, *order_cols)
-        .sortWithinPartitions(*order_cols)
-        .write.mode("overwrite")
-        .parquet(path)
+        .sortWithinPartitions(*order_cols),
+        path,
     )
-    spark = df.sparkSession
     lead = order_cols[0]
     manifest = (
-        spark.read.parquet(path)
+        open_table(df.sparkSession, table)
         .groupBy(F.input_file_name().alias("file"))
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
@@ -144,4 +141,4 @@ def write_globally_sorted(
         )
         .orderBy("min_key")
     )
-    return manifest
+    return table, manifest

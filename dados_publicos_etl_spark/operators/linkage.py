@@ -33,7 +33,11 @@ from pyspark.sql import functions as F
 
 from dados_publicos_etl_spark.io import read_table
 from dados_publicos_etl_spark.plans.registry import query
-from dados_publicos_etl_spark.tmpstore import session_artifact
+from dados_publicos_etl_spark.tmpstore import (
+    open_table,
+    session_artifact,
+    write_table,
+)
 
 _SNM_WINDOW = 3  # compare each record with its next w neighbors
 _LEV_MAX = 2  # accept pairs within this edit distance
@@ -138,20 +142,18 @@ def snm_pair_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     is exactly <= w * n (linear in the table)."""
     from dados_publicos_etl_spark.session import iterative_shuffle
 
-    def build(workdir: str) -> str:
-        path = workdir + "/pairs"
+    def build(workdir: str):
         # machine-sized shuffle for the build: the pair parquet
         # inherits the window exchange's partition count, so a vanilla
         # session's 200 would write 200 tiny files that every cached
         # consumer then pays to list and read (no-op under the
         # engine's own sessions).
         with iterative_shuffle(spark):
-            _build_snm_pairs(spark, sf_dir).write.mode("overwrite").parquet(
-                path
+            return write_table(
+                _build_snm_pairs(spark, sf_dir), workdir + "/pairs"
             )
-        return path
 
-    return spark.read.parquet(session_artifact("snm_pairs", sf_dir, build))
+    return open_table(spark, session_artifact("snm_pairs", sf_dir, build))
 
 
 def entity_cluster_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -163,7 +165,7 @@ def entity_cluster_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         connected_components,
     )
 
-    def build(workdir: str) -> str:
+    def build(workdir: str):
         edges = (
             snm_pair_table(spark, sf_dir)
             .filter(F.col("lev_dist") <= _LEV_MAX)
@@ -172,11 +174,9 @@ def entity_cluster_table(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("custkey_b").alias("dst"),
             )
         )
-        path = workdir + "/comp"
-        connected_components(edges).write.mode("overwrite").parquet(path)
-        return path
+        return write_table(connected_components(edges), workdir + "/comp")
 
-    return spark.read.parquet(session_artifact("snm_comp", sf_dir, build))
+    return open_table(spark, session_artifact("snm_comp", sf_dir, build))
 
 
 def _snm_oracle() -> str:

@@ -36,7 +36,12 @@ from pyspark.sql import functions as F
 from dados_publicos_etl_spark.functions.vector import cosine, lit_vector
 from dados_publicos_etl_spark.io import read_table
 from dados_publicos_etl_spark.plans.registry import query
-from dados_publicos_etl_spark.tmpstore import session_artifact
+from dados_publicos_etl_spark.tmpstore import (
+    Table,
+    open_table,
+    session_artifact,
+    write_table,
+)
 
 EMBED_DIM = 64
 _COS_DOUBLE_SQL = """
@@ -1111,9 +1116,9 @@ def write_ivf_index(
     cache_key: str | None = None,
 ):
     """Persist an IVF index: the embedding table written as parquet
-    PARTITIONED BY cell id.  Returns the trained model
-    ``(cell_ids, centroids)`` (the only other index state; n_cells x
-    dim int64, kilobytes).
+    PARTITIONED BY cell id.  Returns its ``Table`` handle and the
+    trained model ``(cell_ids, centroids)`` (the only other index
+    state; n_cells x dim int64, kilobytes).
 
     This materializes the layout the in-memory ``ivf_topk`` docstring
     promises at 100 TB: probes read ONLY their n_probe cell
@@ -1130,13 +1135,8 @@ def write_ivf_index(
         emb, n_cells, id_col, vec_col, cache_key=cache_key
     )
     cells = _assign_cells(emb, cell_ids, cents, id_col, vec_col)
-    (
-        emb.join(F.broadcast(cells), id_col)
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(path)
-    )
-    return cell_ids, cents
+    table = write_table(emb.join(F.broadcast(cells), id_col), path, ["cell"])
+    return table, (cell_ids, cents)
 
 
 def append_ivf_index(
@@ -1179,7 +1179,7 @@ def session_ivf_index(
     vec_col: str = "embedding",
 ):
     """Build-once-per-(session, corpus) persisted IVF index; returns
-    ``(path, (cell_ids, centroids), index_df)``.
+    ``(table, (cell_ids, centroids))``.
 
     This is the steady-state deployment shape the index exists for:
     the partitioned-by-cell table is written ONCE per corpus snapshot
@@ -1188,31 +1188,25 @@ def session_ivf_index(
     artifact (``tmpstore.session_artifact``), so a regenerated corpus
     under the same path rebuilds instead of serving a stale index.
     """
-    spark = emb.sparkSession
 
     def build(workdir: str):
-        path = workdir + "/index"
-        model = write_ivf_index(
-            emb, path, n_cells=n_cells, id_col=id_col, vec_col=vec_col,
-            cache_key=sf_dir,
+        return write_ivf_index(
+            emb, workdir + "/index", n_cells=n_cells, id_col=id_col,
+            vec_col=vec_col, cache_key=sf_dir,
         )
-        return path, model, spark.read.parquet(path).schema
 
-    path, model, schema = session_artifact("ivf_index", sf_dir, build, n_cells)
-    # the stored schema spares each probe a schema-inference job
-    return path, model, spark.read.schema(schema).parquet(path)
+    return session_artifact("ivf_index", sf_dir, build, n_cells)
 
 
 def probe_ivf_index(
     spark: SparkSession,
-    path: str,
+    table: Table,
     centroids,
     query_rows,
     n_probe: int = 4,
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    index_df: DataFrame | None = None,
 ) -> DataFrame:
     """Search a persisted IVF index: nearest cells per query computed
     driver-side from the kilobyte centroid matrix, then a parquet
@@ -1220,17 +1214,16 @@ def probe_ivf_index(
     partition column -> Spark plans PartitionFilters, files of
     unprobed cells are never opened), exact cosine re-rank inside.
 
-    ``centroids``: the ``(cell_ids, centroid_matrix)`` model from
-    ``write_ivf_index``.  ``query_rows``: iterable of (query_id,
-    vector) pairs — or (query_id, vector, milli_quantized_vector)
-    triples when the caller already quantized in Spark SQL (the
-    registered queries do, so both engines share one quantization
-    site; raw pairs fall back to the numpy mirror) — the ad-hoc
+    ``table``, ``centroids``: the index handle and the ``(cell_ids,
+    centroid_matrix)`` model ``write_ivf_index`` returns.
+    ``query_rows``: iterable of (query_id, vector) pairs — or
+    (query_id, vector, milli_quantized_vector) triples when the caller
+    already quantized in Spark SQL (the registered queries do, so both
+    engines share one quantization site; raw pairs fall back to the
+    numpy mirror) — the ad-hoc
     query set, tiny by definition.  The (query_id, cell, qv) probe
     table rides in ONE broadcast, so the probe is a single join
-    against the pruned scan.  ``index_df``: pass the reader
-    DataFrame built at index-write time to skip re-listing the index
-    directory and re-inferring its schema per probe.
+    against the pruned scan.
     """
     import numpy as np
 
@@ -1253,8 +1246,7 @@ def probe_ivf_index(
     probes = spark.createDataFrame(
         probe_rows, "query_id long, cell int, qv array<double>"
     )
-    idx = index_df if index_df is not None else spark.read.parquet(path)
-    idx = idx.filter(F.col("cell").isin(cells_needed))
+    idx = open_table(spark, table).filter(F.col("cell").isin(cells_needed))
     cands = (
         idx.join(F.broadcast(probes), "cell")
         .filter(F.col(id_col) != F.col("query_id"))
@@ -1341,7 +1333,7 @@ def similarity_ivf_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def similarity_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    path, model, index_df = session_ivf_index(emb, sf_dir, n_cells=16)
+    table, model = session_ivf_index(emb, sf_dir, n_cells=16)
     qrows = [
         (r["vec_id"], r["embedding"], r["qq"])
         for r in emb.filter("vec_id < 10")
@@ -1352,9 +1344,7 @@ def similarity_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .collect()
     ]
-    return probe_ivf_index(
-        spark, path, model, qrows, n_probe=4, k=5, index_df=index_df
-    )
+    return probe_ivf_index(spark, table, model, qrows, n_probe=4, k=5)
 
 
 # ---------------------------------------------------------------------------
@@ -1972,7 +1962,7 @@ def similarity_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def ivf_balance_report(spark: SparkSession, path: str) -> DataFrame:
+def ivf_balance_report(spark: SparkSession, table: Table) -> DataFrame:
     """Cell-occupancy report for a persisted IVF index — the rebuild
     trigger that completes the incremental-ingest loop: appends under
     a FROZEN quantizer slowly skew cell sizes as the data drifts, and
@@ -1985,7 +1975,7 @@ def ivf_balance_report(spark: SparkSession, path: str) -> DataFrame:
     come from parquet metadata paths without touching vector data.
     """
     counts = (
-        spark.read.parquet(path)
+        open_table(spark, table)
         .groupBy("cell")
         .agg(F.count(F.lit(1)).alias("n_vectors"))
     )
@@ -2042,8 +2032,8 @@ def ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    path, _model, _index_df = session_ivf_index(emb, sf_dir, n_cells=16)
-    return ivf_balance_report(spark, path)
+    table, _model = session_ivf_index(emb, sf_dir, n_cells=16)
+    return ivf_balance_report(spark, table)
 
 
 @query(

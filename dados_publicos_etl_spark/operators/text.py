@@ -25,7 +25,11 @@ from dados_publicos_etl_spark.functions.text import (
 )
 from dados_publicos_etl_spark.io import read_table
 from dados_publicos_etl_spark.plans.registry import query
-from dados_publicos_etl_spark.tmpstore import session_artifact
+from dados_publicos_etl_spark.tmpstore import (
+    open_table,
+    session_artifact,
+    write_table,
+)
 
 
 # Tiny per-language stopword marker sets for the n-gram/stopword
@@ -687,7 +691,7 @@ def _bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     of BPE training, a session artifact so repeat invocations pay
     only the merge rounds."""
 
-    def build(workdir: str) -> str:
+    def build(workdir: str):
         docs = read_table(spark, sf_dir, "documents")
         words = docs.select(
             F.explode(
@@ -703,11 +707,9 @@ def _bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.array_join(F.split("word", ""), " ").alias("seq"),
             )
         )
-        path = f"{workdir}/vocab"
-        vocab.write.mode("overwrite").parquet(path)
-        return path
+        return write_table(vocab, f"{workdir}/vocab")
 
-    return spark.read.parquet(session_artifact("bpe_vocab", sf_dir, build))
+    return open_table(spark, session_artifact("bpe_vocab", sf_dir, build))
 
 
 def _bpe_cte_chain() -> str:
@@ -823,10 +825,10 @@ def _bpe_train(spark: SparkSession, sf_dir: str):
     """Run the merge-learning loop; returns (merges, final vocab DF
     with the post-merge segmentation).  Training is deterministic per
     corpus, so both are a session artifact."""
-    merges, path = session_artifact(
+    merges, table = session_artifact(
         "bpe_final", sf_dir, partial(_run_bpe_merges, spark, sf_dir)
     )
-    return merges, spark.read.parquet(path)
+    return merges, open_table(spark, table)
 
 
 def _run_bpe_merges(spark: SparkSession, sf_dir: str, workdir: str):
@@ -878,9 +880,7 @@ def _run_bpe_merges(spark: SparkSession, sf_dir: str, workdir: str):
                 )
             ).alias("seq"),
         ).localCheckpoint()
-    path = f"{workdir}/final"
-    vocab.write.mode("overwrite").parquet(path)
-    return merges, path
+    return merges, write_table(vocab, f"{workdir}/final")
 
 
 # ---------------------------------------------------------------------------

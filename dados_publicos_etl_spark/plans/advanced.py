@@ -12,9 +12,13 @@ from pyspark.sql import functions as F
 
 from dados_publicos_etl_spark.functions.numeric import money_sum
 from dados_publicos_etl_spark.functions.text import hex_long
-from dados_publicos_etl_spark.io import partitioned_schema, read_table
+from dados_publicos_etl_spark.io import read_table
 from dados_publicos_etl_spark.plans.registry import query
-from dados_publicos_etl_spark.tmpstore import session_artifact
+from dados_publicos_etl_spark.tmpstore import (
+    open_table,
+    session_artifact,
+    write_table,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -1836,18 +1840,15 @@ def _hive_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     query measures the pruned READ, not the layout write."""
 
     def build(workdir: str):
-        path = workdir + "/orders"
         od = read_table(spark, sf_dir, "orders").select(
             "o_orderkey",
             "o_orderstatus",
             F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("cents"),
             "o_orderpriority",
         )
-        od.write.mode("overwrite").partitionBy("o_orderpriority").parquet(path)
-        return path, partitioned_schema(od.schema, ["o_orderpriority"])
+        return write_table(od, workdir + "/orders", ["o_orderpriority"])
 
-    path, schema = session_artifact("hive_orders", sf_dir, build)
-    return spark.read.schema(schema).parquet(path)
+    return open_table(spark, session_artifact("hive_orders", sf_dir, build))
 
 
 @query(

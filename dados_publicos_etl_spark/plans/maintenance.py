@@ -28,9 +28,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dados_publicos_etl_spark.io import partitioned_schema, read_table
+from dados_publicos_etl_spark.io import read_table
 from dados_publicos_etl_spark.plans.registry import query
-from dados_publicos_etl_spark.tmpstore import session_artifact
+from dados_publicos_etl_spark.tmpstore import (
+    open_table,
+    session_artifact,
+    write_table,
+)
 
 
 _ZORDER_COLS = ["l_orderkey", "l_partkey", "l_suppkey", "l_quantity",
@@ -58,14 +62,14 @@ _ZORDER_COLS = ["l_orderkey", "l_partkey", "l_suppkey", "l_quantity",
 def zorder_layout_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dados_publicos_etl_spark.operators.layout import write_zordered
 
-    def build(ws: str) -> str:
-        path = f"{ws}/lineitem_z"
+    def build(ws: str):
         li = read_table(spark, sf_dir, "lineitem").select(*_ZORDER_COLS)
-        write_zordered(li, path, "l_extendedprice", "l_quantity")
-        return path
+        return write_zordered(
+            li, f"{ws}/lineitem_z", "l_extendedprice", "l_quantity"
+        )
 
-    path = session_artifact("maint_zorder", sf_dir, build)
-    return spark.read.parquet(path).select(*_ZORDER_COLS)
+    table = session_artifact("maint_zorder", sf_dir, build)
+    return open_table(spark, table).select(*_ZORDER_COLS)
 
 
 @query(
@@ -89,16 +93,17 @@ def sorted_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_globally_sorted,
     )
 
-    def build(ws: str) -> str:
-        path = f"{ws}/orders_sorted"
+    def build(ws: str):
         od = read_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey", "o_totalprice"
         )
-        write_globally_sorted(od, path, ["o_orderkey"])
-        return path
+        # the handle; the manifest stays an unrun plan
+        return write_globally_sorted(
+            od, f"{ws}/orders_sorted", ["o_orderkey"]
+        )[0]
 
-    path = session_artifact("maint_sorted_export", sf_dir, build)
-    return spark.read.parquet(path).select(
+    table = session_artifact("maint_sorted_export", sf_dir, build)
+    return open_table(spark, table).select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
 
@@ -124,23 +129,19 @@ def compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dados_publicos_etl_spark.io import compact_partitions
 
     def build(ws: str):
-        path = f"{ws}/orders_parts"
         od = read_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice", "o_orderpriority"
         )
-        (
-            od.repartition(6)
-            .write.mode("overwrite")
-            .partitionBy("o_orderpriority")
-            .parquet(path)
+        table = write_table(
+            od.repartition(6), f"{ws}/orders_parts", ["o_orderpriority"]
         )
         compact_partitions(
-            spark, path, ["o_orderpriority"], min_files_to_compact=2
+            spark, table.path, ["o_orderpriority"], min_files_to_compact=2
         )
-        return path, partitioned_schema(od.schema, ["o_orderpriority"])
+        return table
 
-    path, schema = session_artifact("maint_compaction", sf_dir, build)
-    return spark.read.schema(schema).parquet(path).select(
+    table = session_artifact("maint_compaction", sf_dir, build)
+    return open_table(spark, table).select(
         "o_orderkey", "o_totalprice", "o_orderpriority"
     )
 
@@ -170,21 +171,16 @@ def retention_enforcement(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dados_publicos_etl_spark.io import enforce_retention
 
     def build(ws: str):
-        path = f"{ws}/orders_by_month"
         od = read_table(spark, sf_dir, "orders").select(
             "o_orderkey",
             F.date_format("o_orderdate", "yyyy-MM").alias("order_month"),
         )
-        (
-            od.write.mode("overwrite")
-            .partitionBy("order_month")
-            .parquet(path)
-        )
-        enforce_retention(path, "order_month", _RETAIN_FROM)
-        return path, partitioned_schema(od.schema, ["order_month"])
+        table = write_table(od, f"{ws}/orders_by_month", ["order_month"])
+        enforce_retention(table.path, "order_month", _RETAIN_FROM)
+        return table
 
-    path, schema = session_artifact("maint_retention", sf_dir, build)
-    return spark.read.schema(schema).parquet(path).select(
+    table = session_artifact("maint_retention", sf_dir, build)
+    return open_table(spark, table).select(
         "o_orderkey", F.col("order_month").cast("string").alias("order_month")
     )
 

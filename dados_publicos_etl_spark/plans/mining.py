@@ -29,7 +29,9 @@ from dados_publicos_etl_spark.plans.registry import query
 from dados_publicos_etl_spark.session import machine_sized_shuffle
 from dados_publicos_etl_spark.tmpstore import (
     checkpoint_observed,
+    open_table,
     session_artifact,
+    write_table,
 )
 
 
@@ -68,7 +70,7 @@ def co_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     by basket size (~O(rows x basket_size), never O(n^2)), collapsed
     to at most C(50,2) = 1225 rows."""
 
-    def build(workdir: str) -> str:
+    def build(workdir: str):
         li = read_table(spark, sf_dir, "lineitem")
         baskets = li.select(
             "l_orderkey", (F.col("l_partkey") % 50).alias("item")
@@ -85,11 +87,9 @@ def co_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        path = f"{workdir}/pairs"
-        pairs.write.mode("overwrite").parquet(path)
-        return path
+        return write_table(pairs, f"{workdir}/pairs")
 
-    return spark.read.parquet(session_artifact("co_pairs", sf_dir, build))
+    return open_table(spark, session_artifact("co_pairs", sf_dir, build))
 
 
 def _co_edges(spark: SparkSession, sf_dir: str) -> DataFrame:

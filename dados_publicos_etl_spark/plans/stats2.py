@@ -30,7 +30,7 @@ from dados_publicos_etl_spark.operators.ranking import prefix_sums_by_range
 from dados_publicos_etl_spark.plans.mining import _EDGES_SQL, _co_edges
 from dados_publicos_etl_spark.plans.registry import query
 from dados_publicos_etl_spark.session import machine_sized_shuffle
-from dados_publicos_etl_spark.tmpstore import new_dir
+from dados_publicos_etl_spark.tmpstore import new_dir, open_table, write_table
 
 # ---------------------------------------------------------------------------
 # Spearman rank correlation (daily volume vs daily revenue, per class)
@@ -1275,12 +1275,9 @@ def parquet_codec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     LAST_CODEC_DIR[0] = root
     parts = []
     for codec in _PQ_CODECS:
-        path = f"{root}/{codec}"
-        orders.write.mode("overwrite").option(
-            "compression", codec
-        ).parquet(path)
+        table = write_table(orders, f"{root}/{codec}", compression=codec)
         parts.append(
-            spark.read.parquet(path).agg(
+            open_table(spark, table).agg(
                 F.lit(codec).alias("codec"),
                 F.count(F.lit(1)).alias("n_rows"),
                 F.sum("cents").alias("checksum_cents"),

@@ -24,7 +24,14 @@ from dados_publicos_etl_spark.functions.numeric import money_sum
 from dados_publicos_etl_spark.io import read_table
 from dados_publicos_etl_spark.plans.registry import query
 from dados_publicos_etl_spark.session import scoped_conf
-from dados_publicos_etl_spark.tmpstore import new_dir, reroot, session_artifact
+from dados_publicos_etl_spark.tmpstore import (
+    Table,
+    new_dir,
+    open_table,
+    reroot,
+    session_artifact,
+    write_table,
+)
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss"
 _STREAM_SHUFFLE = 4  # shuffle partitions a stream plans with
@@ -620,7 +627,7 @@ def streaming_ann_probe(
     emb = read_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    path, centroids, index_df = session_ivf_index(emb, sf_dir, n_cells=16)
+    index, centroids = session_ivf_index(emb, sf_dir, n_cells=16)
 
     # Input scaffolding, cached per (corpus, n_queries): the query
     # files stand in for an external stream landing zone, so repeat
@@ -646,19 +653,16 @@ def streaming_ann_probe(
     # the driver is unbounded state by construction.  The returned
     # DataFrame is a scan of the sink — data-scale stays distributed.
     sink_dir = new_dir("stream_ann_probe", "spark_ann_sink_")
+    last: Table | None = None  # the latest batch's table
 
     def probe_batch(bdf: DataFrame, bid: int) -> None:
+        nonlocal last
         # query vectors per batch are a handful of rows (the serving
         # request), so this collect is request-scale, not data-scale
         q = [(r.vec_id, r.embedding, r.qq) for r in bdf.collect()]
         if q:
-            res = probe_ivf_index(
-                spark, path, centroids, q, n_probe=4, k=5,
-                index_df=index_df,
-            )
-            res.write.mode("overwrite").parquet(
-                f"{sink_dir}/batch_id={bid}"
-            )
+            res = probe_ivf_index(spark, index, centroids, q, n_probe=4, k=5)
+            last = write_table(res, f"{sink_dir}/batch_id={bid}")
 
     with _streaming_shuffle(spark):
         q = stream.writeStream.foreachBatch(probe_batch).start()
@@ -666,9 +670,9 @@ def streaming_ann_probe(
             q.processAllAvailable()
         finally:
             q.stop()
-    return (
-        spark.read.parquet(sink_dir)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
+    # every batch writes one schema; its batch_id= dirs are partitions
+    return open_table(spark, last._replace(path=sink_dir)).select(
+        "query_id", "neighbor_id", "cos_sim", "rank"
     )
 
 

@@ -24,11 +24,11 @@ the process reuses it.  The contract:
 - **Lifetime**: each artifact owns one ``TemporaryDirectory`` (under
   ``tempfile``'s default location, i.e. ``TMPDIR``) that lives as
   long as the process; its finalizer removes it at exit.
-- **Values**: a path, a schema, a model or a count, never a
+- **Values**: a ``Table`` handle, a model or a count, never a
   DataFrame (``TypeError``): a DataFrame is bound to the session that
-  made it, and would outlive that session in the cache.  Callers read
-  a stored path back per call, passing the stored schema when a warm
-  hit must not run a schema-inference job.
+  made it, and would outlive that session in the cache.  ``build``
+  persists a table with ``write_table`` and returns the handle;
+  callers reopen it per call with ``open_table``.
 
 At 100 TB an artifact is a table a pipeline persists next to the
 corpus; this function is the one place where that switch is made.
@@ -44,10 +44,15 @@ read it, and a query result has been collected before its query has
 written ``keep`` more dirs — so the DataFrames handed out over pool
 dirs stay lazy scans, never eager checkpoints.
 
-``reroot(df, purpose)`` is the one write-then-read-back of the
-package: it writes ``df`` as parquet into a fresh pool dir and reads
-it back with the schema of the DataFrame it wrote (no
-schema-inference job).  Two kinds of caller need it:
+``write_table`` and ``open_table`` are the one persisted-table
+handle: ``write_table`` writes parquet and returns ``Table(path,
+schema)``, ``open_table`` reopens it with that schema, so reopening a
+table the engine wrote — zero-row and partitioned ones too — runs no
+schema-inference job.  Only readers of external input open parquet
+without a schema (``io.read_table``, ``io.compact_partitions``,
+``io.read_current_version``, ``stateful.streaming_session_close``).
+``reroot(df, purpose)`` is the pair on a fresh pool dir.  Two kinds
+of caller need it:
 
 - **Lineage cuts** in iterative loops (operators/graph.py).
   Re-rooting on a parquet scan is LOAD-BEARING, not hygiene: chained
@@ -101,9 +106,10 @@ import atexit
 import os
 import tempfile
 import threading
-from typing import Any, Callable
+from typing import Any, Callable, NamedTuple, Sequence
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql.types import StructType
 
 CACHE_LOCK = threading.Lock()
 # (name, sf_dir, params) -> (fingerprint, TemporaryDirectory, value)
@@ -154,7 +160,7 @@ def session_artifact(
         if any(isinstance(v, DataFrame) for v in items):
             raise TypeError(
                 f"session artifact {name!r} must not hold a DataFrame: "
-                "store its path (and schema) and read it back per call"
+                "return its write_table handle and open_table it per call"
             )
     except BaseException:
         _remove(tmp)
@@ -208,18 +214,41 @@ def new_dir(purpose: str, prefix: str) -> str:
     return _POOL.new_dir(purpose, prefix)
 
 
+class Table(NamedTuple):
+    """A parquet table the engine wrote and its read-back schema."""
+
+    path: str
+    schema: StructType
+
+
+def write_table(
+    df: DataFrame, path: str, partition_by: Sequence[str] = (), **options
+) -> Table:
+    """Write ``df`` as parquet at ``path`` (overwriting); the handle's
+    schema lists the data columns, then the ``partition_by`` ones."""
+    writer = df.write.mode("overwrite").options(**options)
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(path)
+    data = [f for f in df.schema.fields if f.name not in partition_by]
+    return Table(path, StructType(data + [df.schema[c] for c in partition_by]))
+
+
+def open_table(spark: SparkSession, table: Table) -> DataFrame:
+    """A scan of ``table`` read with its stored schema: no job."""
+    return spark.read.schema(table.schema).parquet(table.path)
+
+
 def reroot(
     df: DataFrame, purpose: str, spark: SparkSession | None = None
 ) -> DataFrame:
-    """Write ``df`` as parquet into a fresh pool dir and return a scan
-    of it read with ``df``'s schema: same rows and column types, a
-    plan rooted on a datasource (see module docstring).  The scan
-    belongs to ``spark`` (default: ``df``'s session) — a foreachBatch
-    batch lives in the stream's cloned session, whose conf is frozen
-    at query start."""
+    """Write ``df`` into a fresh pool dir and reopen it: same rows and
+    column types, a plan rooted on a datasource (see module
+    docstring).  The scan belongs to ``spark`` (default: ``df``'s
+    session) — a foreachBatch batch lives in the stream's cloned
+    session, whose conf is frozen at query start."""
     path = os.path.join(new_dir(purpose, f"spark_{purpose}_"), "t")
-    df.write.parquet(path)
-    return (spark or df.sparkSession).read.schema(df.schema).parquet(path)
+    return open_table(spark or df.sparkSession, write_table(df, path))
 
 
 def observed(

@@ -513,15 +513,16 @@ def test_ivf_persisted_index_prunes_partitions(spark, sf_dir, tmp_path):
     emb = read_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    path = str(tmp_path / "ivf_index")
-    centroids = write_ivf_index(emb, path, n_cells=16)
+    index, centroids = write_ivf_index(
+        emb, str(tmp_path / "ivf_index"), n_cells=16
+    )
 
     queries = [
         (r.vec_id, r.embedding)
         for r in emb.filter("vec_id < 5").collect()
     ]
     probed = probe_ivf_index(
-        spark, path, centroids, queries, n_probe=4, k=5
+        spark, index, centroids, queries, n_probe=4, k=5
     )
     plan = probed._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "cell" in plan
@@ -1117,6 +1118,7 @@ def test_ivf_append_equals_full_rebuild(spark, tmp_path):
         append_ivf_index,
         probe_ivf_index,
     )
+    from dados_publicos_etl_spark.tmpstore import write_table
 
     sf = SF_CORRECT
     emb = read_table(spark, sf, "embeddings").select("vec_id", "embedding")
@@ -1127,19 +1129,14 @@ def test_ivf_append_equals_full_rebuild(spark, tmp_path):
 
     def write(df, path):
         cells = _assign_cells(df, *centroids, "vec_id", "embedding")
-        (
-            df.join(F.broadcast(cells), "vec_id")
-            .write.mode("append")
-            .partitionBy("cell")
-            .parquet(path)
+        return write_table(
+            df.join(F.broadcast(cells), "vec_id"), str(path), ["cell"]
         )
 
-    inc_path = str(tmp_path / "incremental")
-    write(snapshot, inc_path)
-    append_ivf_index(increment, inc_path, centroids)
+    inc = write(snapshot, tmp_path / "incremental")
+    append_ivf_index(increment, inc.path, centroids)
 
-    full_path = str(tmp_path / "full")
-    write(emb, full_path)
+    full = write(emb, tmp_path / "full")
 
     qrows = [
         (r.vec_id, r.embedding)
@@ -1151,7 +1148,7 @@ def test_ivf_append_equals_full_rebuild(spark, tmp_path):
             spark, p, centroids, qrows, n_probe=4, k=5
         ).collect()
     )
-    a, b = probe(inc_path), probe(full_path)
+    a, b = probe(inc), probe(full)
     assert a == b and len(a) == 50
 
 
@@ -1230,9 +1227,8 @@ def test_ivf_balance_report_flags_skewed_appends(spark, tmp_path):
 
     sf = SF_CORRECT
     emb = read_table(spark, sf, "embeddings").select("vec_id", "embedding")
-    path = str(tmp_path / "idx")
-    centroids = write_ivf_index(emb, path, n_cells=16)
-    base = ivf_balance_report(spark, path).collect()
+    index, centroids = write_ivf_index(emb, str(tmp_path / "idx"), n_cells=16)
+    base = ivf_balance_report(spark, index).collect()
     base_skew = base[0].index_skew
     # drifted append: 300 copies of ONE vector -> lands in one cell
     hot = emb.filter("vec_id = 1").collect()[0].embedding
@@ -1240,8 +1236,8 @@ def test_ivf_balance_report_flags_skewed_appends(spark, tmp_path):
         [(10_000 + i, [float(x) for x in hot]) for i in range(300)],
         "vec_id long, embedding array<double>",
     )
-    append_ivf_index(inc, path, centroids)
-    after = ivf_balance_report(spark, path)
+    append_ivf_index(inc, index.path, centroids)
+    after = ivf_balance_report(spark, index)
     rows = after.collect()
     assert rows[0].index_skew > base_skew * 2
     assert sum(r.n_vectors for r in rows) == 500 + 300

@@ -1436,6 +1436,96 @@ def test_observation_round_rule_and_conf_writes_live_once():
     )
 
 
+def test_engine_tables_reopen_through_the_handle():
+    """Static inventory of parquet opens: a table the engine wrote is
+    reopened through ``tmpstore.open_table`` with the schema
+    ``tmpstore.write_table`` stored, never by a schema-inference
+    read.  Fails on any ``.read...parquet(...)`` chain without a
+    ``.schema(...)`` outside the readers of external input
+    (``io.read_table``, ``io.compact_partitions``,
+    ``io.read_current_version``, ``stateful.streaming_session_close``)
+    — persist with ``write_table`` and reopen with ``open_table``."""
+    import ast
+    import os
+
+    import dados_publicos_etl_spark as pkg
+
+    external = {
+        ("io.py", "read_table"),
+        ("io.py", "compact_partitions"),
+        ("io.py", "read_current_version"),
+        ("stateful.py", "streaming_session_close"),
+    }
+
+    def chain(node) -> list[str]:
+        """Attribute names along a call chain, outermost first."""
+        names = []
+        while isinstance(node, (ast.Attribute, ast.Call)):
+            if isinstance(node, ast.Call):
+                node = node.func
+            else:
+                names.append(node.attr)
+                node = node.value
+        return names
+
+    root = os.path.dirname(pkg.__file__)
+    offenders: list[str] = []
+    for dirpath, _dirs, files in os.walk(root):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, f)
+            with open(path) as fh:
+                tree = ast.parse(fh.read(), filename=path)
+            allowed: set[int] = set()
+            for node in ast.walk(tree):
+                if (
+                    isinstance(node, ast.FunctionDef)
+                    and (f, node.name) in external
+                ):
+                    allowed |= set(range(node.lineno, node.end_lineno + 1))
+            for node in ast.walk(tree):
+                if not isinstance(node, ast.Call):
+                    continue
+                names = chain(node.func)
+                if (
+                    names[:1] == ["parquet"]
+                    and "read" in names
+                    and "schema" not in names
+                    and node.lineno not in allowed
+                ):
+                    offenders.append(f"{f}:{node.lineno}")
+    assert not offenders, (
+        f"schema-inference reopens of engine-written tables: {offenders}"
+        " — use tmpstore.write_table / open_table"
+    )
+
+
+@pytest.mark.parametrize(
+    "rows, partition_by", [(3, ["part"]), (0, ["part"]), (0, [])]
+)
+def test_open_table_runs_no_job(spark, tmp_path, rows, partition_by):
+    """``open_table`` reopens a table, partitioned or zero-row, with
+    the schema ``write_table`` returned: no job, the written rows,
+    partition columns last."""
+    from dados_publicos_etl_spark.tmpstore import open_table, write_table
+
+    df = spark.createDataFrame(
+        [(i, f"p{i % 2}", [float(i)]) for i in range(rows)],
+        "id long, part string, xs array<double>",
+    )
+    table = write_table(df, str(tmp_path / "t"), partition_by)
+    j0 = next_job_id(spark)
+    back = open_table(spark, table)
+    assert next_job_id(spark) - j0 == 0
+    assert back.schema == table.schema
+    assert back.columns == (
+        ["id", "xs", "part"] if partition_by else ["id", "part", "xs"]
+    )
+    got = sorted(back.select("id", "part", "xs").collect())
+    assert got == sorted(df.collect())
+
+
 def test_driver_collects_bounded_at_10x(spark, tmp_path_factory):
     """Dynamic half: every collect-bearing query runs at smoke scale
     AND at an FK-consistent 10x replica under a collect-size

@@ -120,10 +120,12 @@ def test_k_truss_raises_past_its_round_bound(spark, monkeypatch):
         G.k_truss_edges(spark, SF_SMOKE)
 
 
-def test_hits_authorities_on_zero_rows(spark, zero_row_sf_dir):
-    """An empty graph observes no maximum authority (None): the query
-    returns the oracle's zero rows, not rows of NULL ``auth_norm``."""
-    spec = QUERIES["hits_authorities"]
+@pytest.mark.parametrize("name", ["hits_authorities", "pagerank_suppliers"])
+def test_hits_authorities_on_zero_rows(spark, zero_row_sf_dir, name):
+    """An empty graph has no maximum authority (None) and no node
+    count (0): each rank query returns the oracle's zero rows, not
+    rows of NULL scores or a ``ZeroDivisionError``."""
+    spec = QUERIES[name]
     out = spec.fn(spark, zero_row_sf_dir)
     assert out.count() == 0
     compare(out, spec.oracle, zero_row_sf_dir)

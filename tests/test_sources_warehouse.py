@@ -746,9 +746,10 @@ def test_globally_sorted_export_files_are_totally_ordered(
         "l_extendedprice", "l_orderkey", "l_linenumber"
     )
     path = str(tmp_path / "sorted_li")
-    manifest = write_globally_sorted(
+    _table, manifest = write_globally_sorted(
         li, path, ["l_extendedprice", "l_orderkey", "l_linenumber"]
-    ).collect()
+    )
+    manifest = manifest.collect()
     assert sum(r.n_rows for r in manifest) == li.count()
     assert len(manifest) > 1
     for prev, nxt in zip(manifest, manifest[1:]):

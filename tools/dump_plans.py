@@ -6,15 +6,22 @@ aggregation) are reviewable without running Spark.
 Two more modes prove that a refactor left plans alone:
 
   python tools/dump_plans.py --all --sf <corpus dir> --out a.json
-  python tools/dump_plans.py --diff a.json b.json
+  python tools/dump_plans.py --diff parent.json [parent2.json ...] b.json
 
 ``--all`` builds every registered query and writes
 ``{name: optimized plan}`` as JSON, normalized so two runs of the same
 code compare equal: exprIds (``#123``), plan ids, temp-dir paths and
 the ``_<hex8>`` suffix of memory-sink tables are masked.  A query
-whose build raises is recorded as ``ERROR: <exception>``.  ``--diff``
-prints the queries whose normalized plans differ (or exist on one
-side only) and exits 1 if there are any.
+whose build raises is recorded as ``ERROR: <exception>``.
+
+``--diff P1 [P2 ...] C`` prints the queries whose normalized plan in
+the change's dump ``C`` matches the plan of none of the parent dumps
+``P1 ...`` (or that exist on one side only), and exits 1 if there are
+any.  Several parent dumps absorb plans that differ between two runs
+of the same code: ``table_profile``'s distinct-aggregate ``Expand``
+order follows exprIds (Catalyst's ``RewriteDistinctAggregates``), so
+two parent dumps that caught both orders settle it without a manual
+cross-check.
 """
 
 from __future__ import annotations
@@ -169,18 +176,25 @@ def dump_all(sf: str, out_path: str) -> None:
     spark.stop()
 
 
-def diff(a_path: str, b_path: str) -> int:
-    with open(a_path) as fh:
-        a = json.load(fh)
-    with open(b_path) as fh:
-        b = json.load(fh)
-    changed = sorted(n for n in a.keys() | b.keys() if a.get(n) != b.get(n))
+def diff(parent_paths: list[str], change_path: str) -> int:
+    parents = []
+    for path in parent_paths:
+        with open(path) as fh:
+            parents.append(json.load(fh))
+    with open(change_path) as fh:
+        change = json.load(fh)
+    names = set(change).union(*parents)
+    changed = sorted(
+        n for n in names if all(p.get(n) != change.get(n) for p in parents)
+    )
     for name in changed:
-        if name in a and name in b:
-            print(name)
+        if name not in change:
+            print(f"{name} (only in the parent dumps)")
+        elif not any(name in p for p in parents):
+            print(f"{name} (only in {change_path})")
         else:
-            print(f"{name} (only in {a_path if name in a else b_path})")
-    print(f"{len(changed)} of {len(a.keys() | b.keys())} plans differ")
+            print(name)
+    print(f"{len(changed)} of {len(names)} plans match no parent dump")
     return 1 if changed else 0
 
 
@@ -190,11 +204,14 @@ def main() -> None:
                     help="dump every registered query's optimized plan")
     ap.add_argument("--sf", help="corpus dir for --all")
     ap.add_argument("--out", help="JSON file --all writes")
-    ap.add_argument("--diff", nargs=2, metavar=("A", "B"),
-                    help="list queries whose plans differ in two dumps")
+    ap.add_argument("--diff", nargs="+", metavar="DUMP",
+                    help="parent dumps then the change's dump: list "
+                    "queries whose plan matches no parent dump")
     args = ap.parse_args()
     if args.diff:
-        sys.exit(diff(*args.diff))
+        if len(args.diff) < 2:
+            ap.error("--diff needs at least one parent dump and a change dump")
+        sys.exit(diff(args.diff[:-1], args.diff[-1]))
     if args.all:
         if not (args.sf and args.out):
             ap.error("--all needs --sf and --out")

@@ -12,7 +12,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
-def main() -> None:
+def render() -> str:
+    """The text of CATALOG.md for the current registry."""
     from dados_publicos_etl_spark.plans import QUERIES
     from dados_publicos_etl_spark.plans import catalog  # noqa: F401
 
@@ -37,10 +38,13 @@ def main() -> None:
         check = "oracle" if spec.oracle else "rows-only"
         desc = " ".join(spec.description.split())
         lines.append(f"| `{name}` | {check} | {desc} |")
-    out = os.path.join(REPO, "CATALOG.md")
-    with open(out, "w") as fh:
-        fh.write("\n".join(lines) + "\n")
-    print(f"wrote CATALOG.md ({len(QUERIES)} queries)")
+    return "\n".join(lines) + "\n"
+
+
+def main() -> None:
+    with open(os.path.join(REPO, "CATALOG.md"), "w") as fh:
+        fh.write(render())
+    print("wrote CATALOG.md")
 
 
 if __name__ == "__main__":
