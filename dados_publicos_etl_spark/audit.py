@@ -20,14 +20,14 @@ Spark-first replacement:
 - the audit row is appended driver-side, as the reference's one-row
   streaming insert is (monitor.py:152): one parquet file with the
   reference's exact schema (schemas.MONITORING), written in memory
-  with Arrow and put through the session's Hadoop ``FileSystem`` for
-  the sink path — any URI a Spark write accepts — under a
-  ``_``-prefixed name that readers skip, then renamed into place, so
-  no reader sees a partial file and no Spark job runs.
+  with Arrow and put at the sink path — any URI a Spark write
+  accepts — by the lake's one atomic write, ``io.put_file``, so no
+  reader sees a partial file and no Spark job runs.
 """
 
 from __future__ import annotations
 
+import os
 import time
 import uuid
 from dataclasses import dataclass
@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dados_publicos_etl_spark.io import put_file
 from dados_publicos_etl_spark.schemas import MONITORING
 from dados_publicos_etl_spark.tmpstore import observed
 
@@ -75,7 +76,7 @@ def _now() -> str:
     return time.strftime("%Y-%m-%d %H:%M:%S")
 
 
-def _append_row(spark: SparkSession, sink_path: str, values: list) -> None:
+def _append_row(sink_path: str, values: list) -> None:
     """Append one MONITORING row to the parquet table at ``sink_path``
     as one new file, without a Spark job."""
     import pyarrow as pa
@@ -86,19 +87,8 @@ def _append_row(spark: SparkSession, sink_path: str, values: list) -> None:
     table = pa.Table.from_pylist([dict(zip(schema.names, values))], schema=schema)
     buf = pa.BufferOutputStream()
     pq.write_table(table, buf)
-    hadoop = spark.sparkContext._jvm.org.apache.hadoop.fs
-    sink = hadoop.Path(sink_path)
-    fs = sink.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    name = f"part-{uuid.uuid4()}.parquet"
-    tmp = hadoop.Path(sink, "_" + name)
-    out = fs.create(tmp, False)
-    try:
-        out.write(buf.getvalue().to_pybytes())
-    finally:
-        out.close()
-    if not fs.rename(tmp, hadoop.Path(sink, name)):
-        fs.delete(tmp, False)
-        raise OSError(f"could not rename the audit row into {sink_path}")
+    put_file(os.path.join(sink_path, f"part-{uuid.uuid4()}.parquet"),
+             buf.getvalue().to_pybytes())
 
 
 def audit_layer(
@@ -117,6 +107,6 @@ def audit_layer(
     files, rows = count_layer(spark, path, fmt=fmt, **options)
     dt_end = _now()
     if sink_path:
-        _append_row(spark, sink_path, [str(uuid.uuid4()), nm_project, step,
-                                       files, rows, dt_start, dt_end])
+        _append_row(sink_path, [str(uuid.uuid4()), nm_project, step,
+                                files, rows, dt_start, dt_end])
     return AuditResult(step, files, rows, dt_start, dt_end)

@@ -6,6 +6,11 @@ of files" exactly as the reference treats GCS prefixes
 driver-side pandas loops (CSV->Parquet conversion, per-file counting)
 become single distributed Spark jobs here; that is its main
 scalability cliff and the first thing this engine fixes.
+
+The lake operations (BOM rewrite, compaction, retention, versioned
+publish, ``ingest.land_file``, the audit row) go through the session's
+Hadoop ``FileSystem`` (:func:`_fs`), so they run on any Hadoop URI, and
+each file they write driver-side is one atomic :func:`put_file`.
 """
 
 from __future__ import annotations
@@ -14,7 +19,8 @@ import abc
 import codecs
 import glob
 import os
-import shutil
+import re
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -22,28 +28,62 @@ from pyspark.sql import types as T
 from dados_publicos_etl_spark.session import read_nanos_as_long
 
 
-def parquet_ts_unit(path: str, col: str = "ts") -> str | None:
-    """Sniff the physical timestamp unit ('ns'|'us'|'ms'|'s') of ``col``
-    from a parquet footer (file or directory-of-files).
+def _fs(path: str):
+    """``(FileSystem, Path)`` of ``path`` under the active session's
+    Hadoop configuration: the lake operations run on any Hadoop URI."""
+    sc = SparkSession.active().sparkContext
+    p = sc._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(sc._jsc.hadoopConfiguration()), p
+
+
+def _read_bytes(fs, path, n: int | None = None) -> bytes:
+    """The first ``n`` bytes (all when None) of a Hadoop file."""
+    stream = fs.open(path)
+    try:
+        return bytes(stream.readAllBytes() if n is None else stream.readNBytes(n))
+    finally:
+        stream.close()
+
+
+def put_file(path: str, data: bytes, tail: str | None = None) -> None:
+    """Atomically put ``data``, then the bytes of the file ``tail``
+    (copied JVM-side), at ``path``: they are written under a
+    ``_``-prefixed name that readers skip, then renamed into place.
+    ``FileSystem.rename`` (2-4 ms) returns False when the target
+    exists; only then does the OVERWRITE rename of ``FileContext``
+    (28-39 ms) replace it."""
+    sc = SparkSession.active().sparkContext
+    hadoop = sc._jvm.org.apache.hadoop
+    fs, dst = _fs(path)
+    tmp = hadoop.fs.Path(dst.getParent(), f"_{uuid.uuid4().hex}-{dst.getName()}")
+    src = sc._jvm.java.io.ByteArrayInputStream(data)
+    if tail is not None:
+        src = sc._jvm.java.io.SequenceInputStream(src, fs.open(hadoop.fs.Path(tail)))
+    hadoop.io.IOUtils.copyBytes(src, fs.create(tmp, False), 1 << 16, True)  # closes both
+    if not fs.rename(tmp, dst):
+        rename = hadoop.fs.Options.Rename
+        overwrite = sc._gateway.new_array(rename, 1)
+        overwrite[0] = rename.OVERWRITE
+        conf = sc._jsc.hadoopConfiguration()
+        hadoop.fs.FileContext.getFileContext(fs.getUri(), conf).rename(tmp, dst, overwrite)
+
+
+def parquet_ts_meta(path: str, col: str = "ts") -> tuple[str | None, str | None]:
+    """Sniff ``(unit, tz)`` of the timestamp column ``col`` from a
+    parquet footer (file or directory-of-files): the physical unit
+    ('ns'|'us'|'ms'|'s', None when the column isn't a timestamp) and
+    the tz annotation.
 
     The streaming readers declare ``col`` as ``long`` (so NANOS files
     are readable at all under ``nanosAsLong``) and must then rescale
     the raw int64 to microseconds — but the right divisor depends on
     the unit the WRITER used, which only the footer knows.  Hardcoding
-    one unit is how you land every window in 1970.  Footer read is a
-    driver-side metadata peek, not a data scan.
-
-    Returns None when the column isn't a timestamp (already numeric).
-    """
-    return parquet_ts_meta(path, col)[0]
-
-
-def parquet_ts_meta(path: str, col: str = "ts") -> tuple[str | None, str | None]:
-    """Like :func:`parquet_ts_unit` but returns ``(unit, tz)`` — the
-    tz annotation distinguishes parquet TIMESTAMP adjusted-to-UTC
-    (tz set, Spark reads TIMESTAMP) from wall-time NTZ (tz None,
-    Spark reads TIMESTAMP_NTZ); readers that branch their declared
-    schema on the unit need both."""
+    one unit is how you land every window in 1970.  The tz annotation
+    distinguishes parquet TIMESTAMP adjusted-to-UTC (tz set, Spark
+    reads TIMESTAMP) from wall-time NTZ (tz None, Spark reads
+    TIMESTAMP_NTZ); readers that branch their declared schema on the
+    unit need both.  Footer read is a driver-side metadata peek, not
+    a data scan, of a local path (pyarrow, no Hadoop filesystem)."""
     import pyarrow.parquet as pq
 
     if os.path.isdir(path):
@@ -61,7 +101,7 @@ def epoch_micros_sql(col: str, unit: str | None) -> str:
     double precision, so float division would drift by up to 1 us.
 
     ``unit=None`` means the column is a plain numeric (not a parquet
-    timestamp at all — :func:`parquet_ts_unit` returns None then); it
+    timestamp at all — :func:`parquet_ts_meta` returns None then); it
     is treated as ALREADY epoch micros, the engine's wire convention.
     """
     scale = {
@@ -220,23 +260,16 @@ def add_utf8_bom(path: str) -> int:
     (/root/reference/src/utils/scraping.py:146-151).  Returns the
     number of files rewritten.  Driver-side by design: it pairs with
     ``single_file=True`` exports, never with large parallel output.
+    Each rewrite is one :func:`put_file` (BOM, then the old bytes): a
+    reader sees the old file or the new one, each with a valid ``.crc``.
     """
+    fs, pattern = _fs(os.path.join(path, "part-*.csv"))
     fixed = 0
-    for f in glob.glob(os.path.join(path, "part-*.csv")):
-        with open(f, "rb") as fh:
-            head = fh.read(3)
-        if head == codecs.BOM_UTF8:
+    for status in fs.globStatus(pattern) or []:
+        f = status.getPath()
+        if _read_bytes(fs, f, 3) == codecs.BOM_UTF8:
             continue
-        tmp = f + ".bom.tmp"
-        with open(f, "rb") as src, open(tmp, "wb") as dst:
-            dst.write(codecs.BOM_UTF8)
-            shutil.copyfileobj(src, dst)
-        os.replace(tmp, f)
-        # drop Hadoop's checksum sidecar — the rewrite invalidates it
-        # and a later spark.read would fail on ChecksumException.
-        crc = os.path.join(os.path.dirname(f), "." + os.path.basename(f) + ".crc")
-        if os.path.exists(crc):
-            os.remove(crc)
+        put_file(f.toString(), codecs.BOM_UTF8, tail=f.toString())
         fixed += 1
     return fixed
 
@@ -377,49 +410,34 @@ def compact_partitions(
     """
     import math
 
-    from pyspark.sql import functions as F
-
-    # partition dir -> (n_files, total_bytes), from a driver-side walk
+    # partition dir -> (n_files, total_bytes), from a driver-side listing
+    fs, root = _fs(path)
+    prefix = len(fs.makeQualified(root).toString()) + 1
     stats: dict[str, tuple[int, int]] = {}
-    for root, _dirs, files in os.walk(path):
-        pq_files = [f for f in files if f.endswith(".parquet")]
-        if not pq_files:
+    files = fs.listFiles(root, True)
+    while files.hasNext():
+        status = files.next()
+        if not status.getPath().getName().endswith(".parquet"):
             continue
-        rel = os.path.relpath(root, path)
-        stats[rel] = (
-            len(pq_files),
-            sum(os.path.getsize(os.path.join(root, f)) for f in pq_files),
-        )
+        rel = status.getPath().getParent().toString()[prefix:]
+        n, size = stats.get(rel, (0, 0))
+        stats[rel] = (n + 1, size + status.getLen())
     todo = {
         rel: n for rel, (n, _b) in stats.items() if n >= min_files_to_compact
     }
     if not todo:
         return todo
     schema = spark.read.parquet(path).schema
-    full_schema = {f.name: f.dataType for f in schema.fields}
-    # each partition dir holds only the data columns: reading it with
-    # them skips a schema-inference job per partition
-    data_schema = T.StructType(
-        [f for f in schema.fields if f.name not in partition_by]
-    )
     for rel in todo:
         n_out = max(1, math.ceil(stats[rel][1] / target_file_bytes))
-        part_df = spark.read.schema(data_schema).parquet(os.path.join(path, rel))
-        # re-attach the partition columns encoded in the dir names,
-        # cast back to the dataset's schema types so the overwrite
-        # doesn't silently widen them to string.  Dir names carry
-        # Hive %XX-escaped values (space, ':', '%', ...) and the
-        # __HIVE_DEFAULT_PARTITION__ null sentinel — unescape before
-        # re-attaching, or the dynamic overwrite targets a NEW
-        # doubly-escaped directory and duplicates the partition.
-        for seg in rel.split(os.sep):
-            k, _, v = seg.partition("=")
-            k = unescape_path_name(k)
-            if v == HIVE_DEFAULT_PARTITION:
-                val = F.lit(None)
-            else:
-                val = F.lit(unescape_path_name(v))
-            part_df = part_df.withColumn(k, val.cast(full_schema[k]))
+        # basePath: Spark's partition discovery re-attaches the
+        # partition columns from the dir names (Hive %XX escapes and
+        # the NULL sentinel undone) typed by the dataset's schema, so
+        # the overwrite replaces the same dir; no inference job runs
+        part_df = (
+            spark.read.schema(schema).option("basePath", path)
+            .parquet(os.path.join(path, rel))
+        )
         # materialize BEFORE the write: the plan reads the very files
         # the dynamic overwrite is about to replace — localCheckpoint
         # pins the partition's (bounded) data so the rewrite can't
@@ -609,17 +627,15 @@ def enforce_retention(
     Returns ``{"dropped": n, "kept": m}`` partition counts.
     """
     prefix = f"{partition_col}="
+    fs, root = _fs(path)
     dropped = kept = 0
-    for entry in sorted(os.listdir(path)):
+    for status in fs.listStatus(root):
+        entry = status.getPath().getName()
         if not entry.startswith(prefix):
             continue
         raw = entry[len(prefix):]
-        value = unescape_path_name(raw)
-        if raw == HIVE_DEFAULT_PARTITION:
-            kept += 1
-            continue
-        if value < keep_from:
-            shutil.rmtree(os.path.join(path, entry))
+        if raw != HIVE_DEFAULT_PARTITION and unescape_path_name(raw) < keep_from:
+            fs.delete(status.getPath(), True)
             dropped += 1
         else:
             kept += 1
@@ -646,29 +662,25 @@ def publish_version(
 
     Returns the published version directory path.
     """
-    os.makedirs(table_root, exist_ok=True)
+    fs, root = _fs(table_root)
+    fs.mkdirs(root)
     versions = sorted(
-        int(d[1:])
-        for d in os.listdir(table_root)
-        if d.startswith("v") and d[1:].isdigit()
+        (int(status.getPath().getName()[1:]), status.getPath())
+        for status in fs.listStatus(root)
+        if re.fullmatch(r"v\d+", status.getPath().getName())
     )
-    new_v = (versions[-1] + 1) if versions else 1
+    new_v = (versions[-1][0] + 1) if versions else 1
     new_dir = os.path.join(table_root, f"v{new_v}")
     df.write.mode("overwrite").parquet(new_dir)
-    pointer_tmp = os.path.join(table_root, "_CURRENT.tmp")
-    with open(pointer_tmp, "w", encoding="utf-8") as fh:
-        fh.write(f"v{new_v}\n")
-    os.replace(pointer_tmp, os.path.join(table_root, "_CURRENT"))
+    put_file(os.path.join(table_root, "_CURRENT"), f"v{new_v}\n".encode())
     # GC beyond the retained window (never the one just published)
-    for v in versions[: max(0, len(versions) + 1 - keep_versions)]:
-        shutil.rmtree(os.path.join(table_root, f"v{v}"), ignore_errors=True)
+    for _v, old in versions[: max(0, len(versions) + 1 - keep_versions)]:
+        fs.delete(old, True)
     return new_dir
 
 
 def read_current_version(spark: SparkSession, table_root: str) -> DataFrame:
     """Resolve the ``_CURRENT`` pointer and read that version."""
-    with open(
-        os.path.join(table_root, "_CURRENT"), encoding="utf-8"
-    ) as fh:
-        v = fh.read().strip()
+    fs, pointer = _fs(os.path.join(table_root, "_CURRENT"))
+    v = _read_bytes(fs, pointer).decode("utf-8").strip()
     return spark.read.parquet(os.path.join(table_root, v))

@@ -70,6 +70,17 @@ def brute_force_topk(
     )
 
 
+def _query_vector(emb: DataFrame) -> tuple[DataFrame, list[float]]:
+    """The corpus to rank and its ``vec_id = 0`` query vector.  The
+    oracles cross-join the corpus with that one-row vector, so with no
+    ``vec_id = 0`` row the corpus to rank is empty (and the vector a
+    zero placeholder no row meets)."""
+    row = emb.filter(F.col("vec_id") == 0).select("embedding").head()
+    if row is None:
+        return emb.limit(0), [0.0] * EMBED_DIM
+    return emb, [float(x) for x in row[0]]
+
+
 @query(
     "similarity_topk",
     oracle=f"""
@@ -84,9 +95,8 @@ def brute_force_topk(
     "(exact baseline; narrow map + TakeOrderedAndProject).",
 )
 def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = read_table(spark, sf_dir, "embeddings")
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
-    return brute_force_topk(emb, [float(x) for x in qvec], k=10)
+    emb, qvec = _query_vector(read_table(spark, sf_dir, "embeddings"))
+    return brute_force_topk(emb, qvec, k=10)
 
 
 @query(
@@ -579,6 +589,8 @@ def _collect_quantized_sample(
         .collect()
     )
     train = np.array([r["qv"] for r in rows], dtype="int64")
+    if not rows:  # an empty corpus: keep the sample 2-D
+        train = train.reshape(0, expect_dim or 0)
     if expect_dim is not None and train.shape[1] != expect_dim:
         raise ValueError(
             f"embedding dim {train.shape[1]} != oracle dim {expect_dim}; "
@@ -601,7 +613,7 @@ def _lloyd_int(train, k: int, rounds: int):
 
     ids = list(range(min(k, len(train))))
     cents = train[: len(ids)].copy()
-    for _ in range(rounds):
+    for _ in range(rounds if ids else 0):  # an empty sample: no cells
         # exact squared L2 via the dot expansion — an (n, k) int64
         # matrix instead of the (n, k, dim) difference tensor, so
         # training stays in-memory when n_cells scales with the
@@ -1437,7 +1449,7 @@ def pq_topk(
         .collect()
     )
     q_ids = [int(r[id_col]) for r in qrows]
-    q_mat = np.vstack([np.asarray(r["qq"], dtype="int64") for r in qrows])
+    q_mat = np.array([r["qq"] for r in qrows], dtype="int64")
     # ADC LUT per query per subspace: exact int64 ||q_j - book[j,c]||^2
     luts = [
         [
@@ -1618,7 +1630,7 @@ def ivfpq_topk(
         .collect()
     )
     q_ids = [int(r[id_col]) for r in qrows]
-    q_mat = np.vstack([np.asarray(r["qq"], dtype="int64") for r in qrows])
+    q_mat = np.array([r["qq"] for r in qrows], dtype="int64")
     luts = [
         [
             ((books[j][1] - q_mat[qi, j * sd : (j + 1) * sd]) ** 2).sum(axis=1)
@@ -1951,9 +1963,8 @@ def contrastive_pair_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     "is selective.",
 )
 def similarity_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = read_table(spark, sf_dir, "embeddings")
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
-    cos = cosine(F.col("embedding"), lit_vector([float(x) for x in qvec]))
+    emb, qvec = _query_vector(read_table(spark, sf_dir, "embeddings"))
+    cos = cosine(F.col("embedding"), lit_vector(qvec))
     return (
         emb.filter((F.col("label") == 3) & (F.col("vec_id") != 0))
         .select("vec_id", "label", F.round(cos, 4).alias("cos_sim"))
@@ -2175,9 +2186,8 @@ def hybrid_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from dados_publicos_etl_spark.functions.text import distinct_tokens
 
-    emb = read_table(spark, sf_dir, "embeddings")
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
-    qlit = F.array(*[F.lit(float(x)) for x in qvec])
+    emb, qvec = _query_vector(read_table(spark, sf_dir, "embeddings"))
+    qlit = lit_vector(qvec)
     dense = (
         emb.select(
             F.col("vec_id").alias("id"),

@@ -16,8 +16,9 @@ tested offline.
 from __future__ import annotations
 
 import io
-import os
 import zipfile
+
+from dados_publicos_etl_spark.io import put_file
 
 
 def http_fetch(url: str, chunk_size: int = 8192) -> bytes:
@@ -70,9 +71,7 @@ def extract_zip_member(
 
 
 def land_file(content: bytes, dest_path: str) -> str:
-    """Write ingested bytes to the raw layer (local/Hadoop-mounted
-    path); returns the path for spark.read."""
-    os.makedirs(os.path.dirname(dest_path), exist_ok=True)
-    with open(dest_path, "wb") as fh:
-        fh.write(content)
+    """Write ingested bytes to the raw layer at any Hadoop URI, in one
+    atomic put (``io.put_file``); returns the path for spark.read."""
+    put_file(dest_path, content)
     return dest_path

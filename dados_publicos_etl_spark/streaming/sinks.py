@@ -13,9 +13,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_RAW_EVENTS_SCHEMA = (
-    "event_id long, ts long, user_id long, event_type string, "
-    "value double, props string"
+from dados_publicos_etl_spark.streaming.source import (
+    EVENTS_RAW_SCHEMA,
+    read_event_stream,
 )
 
 
@@ -35,7 +35,6 @@ def stream_events_foreach_batch(
     dir gives source-offset recovery; together they make the sink
     restart-safe.
     """
-    read_nanos_as_long(spark)
     n_batches = {"n": 0}
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -47,21 +46,9 @@ def stream_events_foreach_batch(
         )
         n_batches["n"] += 1
 
-    # layout-aware (see streaming/source.py): directory-layout tables
-    # stream directly, single-file layout keeps the leaf-name filter
-    import os
-
-    table = f"{sf_dir}/events.parquet"
-    if os.path.isdir(table):
-        stream = spark.readStream.schema(_RAW_EVENTS_SCHEMA).parquet(table)
-    else:
-        stream = (
-            spark.readStream.schema(_RAW_EVENTS_SCHEMA)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
     q = (
-        stream.writeStream.foreachBatch(sink)
+        read_event_stream(spark, sf_dir)
+        .writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
@@ -76,10 +63,9 @@ from dados_publicos_etl_spark.functions.numeric import (  # noqa: E402
 from dados_publicos_etl_spark.functions.text import hex_long  # noqa: E402
 from dados_publicos_etl_spark.io import (  # noqa: E402
     epoch_micros_sql,
-    parquet_ts_unit,
+    parquet_ts_meta,
 )
 from dados_publicos_etl_spark.plans.registry import query  # noqa: E402
-from dados_publicos_etl_spark.session import read_nanos_as_long  # noqa: E402
 from dados_publicos_etl_spark.streaming.windows import (  # noqa: E402
     run_state_table,
 )
@@ -97,7 +83,7 @@ def _cdc_feed_dir(spark: SparkSession, sf_dir: str) -> str:
         # (the scale-probe replica layout) — a pathGlobFilter on the
         # parent dir would match only the leaf-FILE form and feed
         # NOTHING on a directory layout
-        src = spark.read.schema(_RAW_EVENTS_SCHEMA).parquet(
+        src = spark.read.schema(EVENTS_RAW_SCHEMA).parquet(
             f"{sf_dir}/events.parquet"
         )
         for half in (0, 1):
@@ -115,7 +101,7 @@ def _cdc_feed_dir(spark: SparkSession, sf_dir: str) -> str:
 def _cdc_feed_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CDC feed as a file stream, one file per micro-batch."""
     return (
-        spark.readStream.schema(_RAW_EVENTS_SCHEMA)
+        spark.readStream.schema(EVENTS_RAW_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(_cdc_feed_dir(spark, sf_dir))
     )
@@ -149,7 +135,7 @@ def _cdc_feed_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     "batch never reads the file it overwrites.",
 )
 def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    unit = parquet_ts_unit(f"{sf_dir}/events.parquet")
+    unit = parquet_ts_meta(f"{sf_dir}/events.parquet")[0]
 
     def upsert(prev: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         b = (

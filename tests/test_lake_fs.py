@@ -1,0 +1,50 @@
+"""The medallion lake on a non-local Hadoop URI.
+
+``perfbench/etl.py``'s ``etl_medallion`` op sequence (ingest, clean,
+trusted CSV with BOM, refined parquet, warehouse, audits, daily
+partition overwrites, compaction, retention, versioned publish) runs on
+a ``viewfs://`` mount over a local directory, and every op's result
+equals the DuckDB ``etl.expected`` one.  ``viewfs`` ships with Hadoop,
+so this exercises the lake's filesystem decision without a cluster: an
+op that reaches for the local filesystem API instead of the session's
+Hadoop ``FileSystem`` writes into a ``./viewfs:/...`` directory or
+finds nothing to list.
+"""
+
+from __future__ import annotations
+
+import os
+import uuid
+
+PERFBENCH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench"
+)
+
+
+def test_etl_medallion_ops_on_a_viewfs_lake(spark, tmp_path, monkeypatch):
+    monkeypatch.syspath_prepend(PERFBENCH)
+    import check
+    import etl
+    import gen
+
+    cnae_dir = gen.cnae(str(tmp_path / "inputs"), 917)
+    want = etl.expected(cnae_dir, str(tmp_path / "landed"))
+    # a mount-table name of its own: Hadoop caches a FileSystem per
+    # URI authority, so the mount is read when this name is first used
+    table = f"lake{uuid.uuid4().hex[:12]}"
+    key = f"fs.viewfs.mounttable.{table}.link./lake"
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    conf.set(key, (tmp_path / "lake").as_uri())
+    (tmp_path / "lake").mkdir()
+    got = {}
+    try:
+        for name, op in etl.ops(spark, cnae_dir, f"viewfs://{table}/lake"):
+            got[name] = op()
+    finally:
+        spark.sql("DROP TABLE IF EXISTS cnae")
+        conf.unset(key)
+    for name, expected in want.items():
+        if isinstance(expected, dict):
+            assert got[name] == expected, name
+        else:
+            assert check.result_hash(got[name]) == check.result_hash(expected), name

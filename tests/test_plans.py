@@ -1501,6 +1501,92 @@ def test_engine_tables_reopen_through_the_handle():
     )
 
 
+def test_lake_operations_use_the_hadoop_filesystem():
+    """Static inventory of the lake operations: listing, reading,
+    writing, renaming and deleting lake files go through the session's
+    Hadoop ``FileSystem`` (``io._fs`` / ``io.put_file``), so every
+    operation runs on any Hadoop URI.  Fails on a call to the local
+    filesystem API (``os`` listing, creating, replacing or removing,
+    ``shutil``, ``glob``, builtin ``open``) in one of them, and on
+    ``io.py`` importing ``shutil``."""
+    import ast
+    import os
+
+    import dados_publicos_etl_spark as pkg
+
+    lake = {
+        "io.py": {
+            "add_utf8_bom",
+            "compact_partitions",
+            "enforce_retention",
+            "publish_version",
+            "read_current_version",
+        },
+        "sources/ingest.py": {"land_file"},
+        "audit.py": {"_append_row"},
+    }
+    local = {
+        "open", "os.listdir", "os.walk", "os.makedirs", "os.replace",
+        "os.remove", "os.path.exists", "os.path.getsize",
+    }
+    root = os.path.dirname(pkg.__file__)
+    seen: set[str] = set()
+    offenders: list[str] = []
+    for rel, names in lake.items():
+        with open(os.path.join(root, rel)) as fh:
+            tree = ast.parse(fh.read(), filename=rel)
+        imported = {
+            a.name for n in ast.walk(tree) if isinstance(n, ast.Import)
+            for a in n.names
+        } | {n.module for n in ast.walk(tree) if isinstance(n, ast.ImportFrom)}
+        if rel == "io.py" and "shutil" in imported:
+            offenders.append("io.py imports shutil")
+        for fn in ast.walk(tree):
+            if not (isinstance(fn, ast.FunctionDef) and fn.name in names):
+                continue
+            seen.add(fn.name)
+            for node in ast.walk(fn):
+                if not isinstance(node, ast.Call):
+                    continue
+                call = ast.unparse(node.func)
+                if call in local or call.startswith(("shutil.", "glob.")):
+                    offenders.append(f"{rel}:{node.lineno} {fn.name} calls {call}")
+    assert seen == set().union(*lake.values())
+    assert not offenders, (
+        f"lake operations on the local filesystem API: {offenders}"
+        " — go through io._fs / io.put_file"
+    )
+
+
+def test_dump_plans_canonicalises_distinct_aggregate_expand():
+    """Two runs of the same code may number ``RewriteDistinctAggregates``
+    groups in either order; ``tools/dump_plans.normalize`` maps both to
+    one plan, and still tells a plan whose filters pair a distinct
+    column with another group apart."""
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "tools"))
+    from dump_plans import normalize
+
+    def plan(first: str, second: str, a_gid: int, b_gid: int) -> str:
+        return "\n".join([
+            f"Aggregate [count(a#1) FILTER (WHERE (gid#9 = {a_gid})) AS a_nd#5L,"
+            f" count(b#2) FILTER (WHERE (gid#9 = {b_gid})) AS b_nd#6L,"
+            " first(count(1)#7L, true) FILTER (WHERE (gid#9 = 0)) AS n#8L]",
+            f"+- Aggregate [{first}, {second}, gid#9], [{first}, {second},"
+            " gid#9, count(1) AS count(1)#7L]",
+            f"   +- Expand [[null, null, 0, x#3], [{first}, null, 1, null],"
+            f" [null, {second}, 2, null]], [{first}, {second}, gid#9, x#3]",
+            "      +- Relation [a#1,b#2,x#3] parquet",
+        ])
+
+    ab = normalize(plan("a#1", "b#2", 1, 2))
+    assert normalize(plan("b#2", "a#1", 2, 1)) == ab
+    assert normalize(plan("a#1", "b#2", 2, 1)) != ab
+
+
 @pytest.mark.parametrize(
     "rows, partition_by", [(3, ["part"]), (0, ["part"]), (0, [])]
 )

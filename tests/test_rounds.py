@@ -120,11 +120,27 @@ def test_k_truss_raises_past_its_round_bound(spark, monkeypatch):
         G.k_truss_edges(spark, SF_SMOKE)
 
 
-@pytest.mark.parametrize("name", ["hits_authorities", "pagerank_suppliers"])
+@pytest.mark.parametrize(
+    "name",
+    [
+        "hits_authorities",
+        "pagerank_suppliers",
+        "similarity_topk",
+        "similarity_filtered_topk",
+        "hybrid_rrf_fusion",
+        "similarity_ivf",
+        "similarity_ivf_exact",
+        "similarity_ivf_persisted",
+        "similarity_ivfpq",
+        "ivf_cell_balance",
+    ],
+)
 def test_hits_authorities_on_zero_rows(spark, zero_row_sf_dir, name):
     """An empty graph has no maximum authority (None) and no node
-    count (0): each rank query returns the oracle's zero rows, not
-    rows of NULL scores or a ``ZeroDivisionError``."""
+    count (0); an empty embeddings table has no ``vec_id = 0`` query
+    vector and trains no IVF cell: each query returns the oracle's
+    zero rows, not rows of NULL scores, a ``ZeroDivisionError``, a
+    ``TypeError`` or a numpy ``AxisError``."""
     spec = QUERIES[name]
     out = spec.fn(spark, zero_row_sf_dir)
     assert out.count() == 0

@@ -11,17 +11,16 @@ Two more modes prove that a refactor left plans alone:
 ``--all`` builds every registered query and writes
 ``{name: optimized plan}`` as JSON, normalized so two runs of the same
 code compare equal: exprIds (``#123``), plan ids, temp-dir paths and
-the ``_<hex8>`` suffix of memory-sink tables are masked.  A query
-whose build raises is recorded as ``ERROR: <exception>``.
+the ``_<hex8>`` suffix of memory-sink tables are masked, and each
+distinct-aggregate ``Expand`` is put in one canonical order (Catalyst's
+``RewriteDistinctAggregates`` orders its groups by exprIds, which
+permuted ``table_profile``'s plan between runs).  A query whose build
+raises is recorded as ``ERROR: <exception>``.
 
 ``--diff P1 [P2 ...] C`` prints the queries whose normalized plan in
 the change's dump ``C`` matches the plan of none of the parent dumps
 ``P1 ...`` (or that exist on one side only), and exits 1 if there are
-any.  Several parent dumps absorb plans that differ between two runs
-of the same code: ``table_profile``'s distinct-aggregate ``Expand``
-order follows exprIds (Catalyst's ``RewriteDistinctAggregates``), so
-two parent dumps that caught both orders settle it without a manual
-cross-check.
+any.
 """
 
 from __future__ import annotations
@@ -142,10 +141,68 @@ _NORMALIZE = [
 ]
 
 
+def _split_top(s: str) -> list[str]:
+    """``s`` split at the commas outside any bracket or parenthesis."""
+    parts, depth, start = [], 0, 0
+    for i, c in enumerate(s):
+        if c in "([":
+            depth += 1
+        elif c in ")]":
+            depth -= 1
+        elif c == "," and depth == 0:
+            parts.append(s[start:i].strip())
+            start = i + 1
+    return parts + [s[start:].strip()]
+
+
+_EXPAND = re.compile(r"^(.*?Expand )(\[.*\])\s*$")
+
+
+def _canonical_expands(plan: str) -> str:
+    """One form for each distinct-aggregate ``Expand`` (the one with a
+    ``gid`` column).  ``RewriteDistinctAggregates`` orders the distinct
+    groups by exprIds, so two runs of the same code permute the
+    distinct columns (in the ``Expand`` output and the ``Aggregate``
+    lists above it) and the ``gid`` each group gets.  The columns and
+    the projections are sorted, and the ``gid`` literals renumbered in
+    projection order, in the ``Expand`` and in the lines above it."""
+    lines = plan.split("\n")
+    start = 0
+    for at, line in enumerate(lines):
+        m = _EXPAND.match(line)
+        if not m or "gid#" not in m.group(2):
+            continue
+        projections, outputs = (_split_top(x[1:-1]) for x in _split_top(m.group(2)))
+        if "gid#" not in outputs:
+            continue
+        g = outputs.index("gid#")
+        perm = sorted(range(g), key=outputs.__getitem__)
+        rows = [[p[i] for i in perm] + p[g:] for p in (_split_top(x[1:-1]) for x in projections)]
+        rows.sort(key=lambda r: r[:g] + r[g + 1:])
+        gids = dict(zip((r[g] for r in rows), sorted((r[g] for r in rows), key=int)))
+        for r in rows:
+            r[g] = gids[r[g]]
+        old_cols = ", ".join(outputs[:g])
+        new_cols = ", ".join(outputs[i] for i in perm)
+        lines[at] = "%s[%s], [%s]" % (
+            m.group(1),
+            ", ".join("[%s]" % ", ".join(r) for r in rows),
+            ", ".join([new_cols] + outputs[g:]),
+        )
+        for k in range(start, at):
+            lines[k] = re.sub(
+                r"gid# = (\d+)",
+                lambda n: "gid# = " + gids.get(n.group(1), n.group(1)),
+                lines[k].replace(old_cols, new_cols),
+            )
+        start = at + 1
+    return "\n".join(lines)
+
+
 def normalize(plan: str) -> str:
     for pat, repl in _NORMALIZE:
         plan = pat.sub(repl, plan)
-    return plan
+    return _canonical_expands(plan)
 
 
 def _session():
