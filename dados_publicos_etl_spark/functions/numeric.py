@@ -42,3 +42,12 @@ def leading_zero_rank(w: Column, bits: int) -> Column:
     return F.when(w == 0, F.lit(bits)).otherwise(
         F.lit(bits) - F.length(F.bin(w))
     )
+
+
+def epoch_micros(col: str) -> Column:
+    """Microseconds since 1970-01-01 00:00:00 of the TIMESTAMP_NTZ
+    column ``col`` — session-timezone-independent (``unix_micros``
+    needs LTZ).  DuckDB twin: ``epoch_us(col)``."""
+    return F.expr(
+        f"timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', {col})"
+    )

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from dados_publicos_etl_spark.functions.numeric import epoch_micros
 from dados_publicos_etl_spark.functions.text import hex_long
 from dados_publicos_etl_spark.io import read_table
 from dados_publicos_etl_spark.plans.registry import query
@@ -1972,9 +1973,7 @@ def interval_union_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     ev = read_table(spark, sf_dir, "events")
-    us = F.expr(
-        "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
-    )
+    us = epoch_micros("ts")
     iv = ev.select("user_id", us.alias("s"), (us + _IUC_WIN_US).alias("e"))
     b = iv.select(
         "user_id", F.col("s").alias("t"), F.lit(1).alias("d")

@@ -1016,6 +1016,10 @@ def kmeans_lloyd_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("vec_id").alias("cell"), F.col("v").alias("c"))
         .collect()
     )
+    if not cents:  # no vector to seed a cell: nothing to assign
+        return spark.createDataFrame(
+            [], "cell long, n_members long, inertia long, centroid_l1 long"
+        )
 
     def assign(cent_rows: list[tuple[int, list[int]]]):
         cands = F.array(

@@ -23,7 +23,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dados_publicos_etl_spark.functions.numeric import leading_zero_rank
+from dados_publicos_etl_spark.functions.numeric import (
+    epoch_micros,
+    leading_zero_rank,
+)
 from dados_publicos_etl_spark.functions.text import hex_long
 from dados_publicos_etl_spark.io import read_table
 from dados_publicos_etl_spark.operators.ranking import prefix_sums_by_range
@@ -1346,9 +1349,7 @@ def diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dados_publicos_etl_spark.operators.sampling import hash_bucket
 
     ev = read_table(spark, sf_dir, "events")
-    ts_us = F.expr(
-        "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
-    )
+    ts_us = epoch_micros("ts")
     lo, hi = ev.agg(F.min(ts_us), F.max(ts_us)).first()
     mid = (int(lo) + int(hi)) // 2
     cells = ev.groupBy(

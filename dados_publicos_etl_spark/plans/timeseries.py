@@ -15,7 +15,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dados_publicos_etl_spark.functions.numeric import money_sum, money_sum_sql
+from dados_publicos_etl_spark.functions.numeric import (
+    epoch_micros,
+    money_sum,
+    money_sum_sql,
+)
 from dados_publicos_etl_spark.io import read_table
 from dados_publicos_etl_spark.plans.registry import query
 
@@ -170,9 +174,7 @@ def seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def time_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_table(spark, sf_dir, "events")
-    us = F.expr(
-        "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
-    )
+    us = epoch_micros("ts")
     anchor = F.col("event_id") % 5 == 0
     base = ev.select(
         "event_id",
@@ -502,9 +504,7 @@ def rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def nearest_event_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_table(spark, sf_dir, "events")
-    us = F.expr(
-        "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
-    )
+    us = epoch_micros("ts")
     click = F.col("event_type") == "click"
     base = ev.filter(
         F.col("event_type").isin("purchase", "click")

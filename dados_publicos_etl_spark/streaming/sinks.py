@@ -16,6 +16,8 @@ from pyspark.sql import functions as F
 from dados_publicos_etl_spark.streaming.source import (
     EVENTS_RAW_SCHEMA,
     read_event_stream,
+    read_feed,
+    write_feed,
 )
 
 
@@ -72,9 +74,9 @@ from dados_publicos_etl_spark.streaming.windows import (  # noqa: E402
 from dados_publicos_etl_spark.tmpstore import session_artifact  # noqa: E402
 
 
-def _cdc_feed_dir(spark: SparkSession, sf_dir: str) -> str:
-    """The 2-file split copy of events that forces multiple
-    micro-batches (scaffolding for an external CDC feed; a session
+def _cdc_feed_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events as a 2-batch file stream split by event_id parity
+    (scaffolding for an external CDC feed; the feed is a session
     artifact so repeat invocations measure the merge)."""
 
     def build(workdir: str) -> str:
@@ -86,25 +88,10 @@ def _cdc_feed_dir(spark: SparkSession, sf_dir: str) -> str:
         src = spark.read.schema(EVENTS_RAW_SCHEMA).parquet(
             f"{sf_dir}/events.parquet"
         )
-        for half in (0, 1):
-            (
-                src.filter(F.col("event_id") % 2 == half)
-                .coalesce(1)
-                .write.mode("append")
-                .parquet(workdir)
-            )
-        return workdir
+        return write_feed(src, F.col("event_id") % 2, workdir)
 
-    return session_artifact("cdc_feed", sf_dir, build)
-
-
-def _cdc_feed_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The CDC feed as a file stream, one file per micro-batch."""
-    return (
-        spark.readStream.schema(EVENTS_RAW_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(_cdc_feed_dir(spark, sf_dir))
-    )
+    feed = session_artifact("cdc_feed", sf_dir, build)
+    return read_feed(spark, feed, EVENTS_RAW_SCHEMA)
 
 
 @query(

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from dados_publicos_etl_spark.session import scoped_conf
+from dados_publicos_etl_spark.streaming.source import read_feed
 from dados_publicos_etl_spark.streaming.windows import run_memory_sink
 
 OUTPUT_SCHEMA = "user_id long, n_events long, total_value double"
@@ -226,9 +227,7 @@ def streaming_session_close(
     """
     raw = spark.read.parquet(events_dir)
     stream = (
-        spark.readStream.schema(raw.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(events_dir)
+        read_feed(spark, events_dir, raw.schema)
         # watermarks require TIMESTAMP (with zone); NTZ wall times are
         # interpreted in the session zone (UTC for engine sessions)
         .withColumn(ts_col, F.col(ts_col).cast("timestamp"))

@@ -8,6 +8,13 @@ window + memory sink).
 
 Window starts are epoch-aligned (Spark semantics); the oracles
 reproduce them with epoch arithmetic, so results hash-match exactly.
+
+The multi-batch queries (top-k leaderboard, late-data drop,
+stream-stream outer join, ANN probe, decontamination gate) replay a
+feed written by ``source.write_feed`` and streamed by
+``source.read_feed``.  Each keeps its own split rule as a ``batch``
+Column (time halves from window min/max, parity, sentinels), so an
+empty input table is an empty feed that drives no micro-batch.
 """
 
 from __future__ import annotations
@@ -20,10 +27,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from dados_publicos_etl_spark.functions.numeric import money_sum
+from dados_publicos_etl_spark.functions.numeric import epoch_micros, money_sum
 from dados_publicos_etl_spark.io import read_table
 from dados_publicos_etl_spark.plans.registry import query
 from dados_publicos_etl_spark.session import scoped_conf
+from dados_publicos_etl_spark.streaming.source import (
+    read_event_stream,
+    read_feed,
+    write_feed,
+)
 from dados_publicos_etl_spark.tmpstore import (
     Table,
     new_dir,
@@ -373,8 +385,6 @@ def streaming_tumbling_counts(
     trigger.  processAllAvailable drives the file feed to completion
     synchronously (pytest / driver safe).
     """
-    from dados_publicos_etl_spark.streaming.source import read_event_stream
-
     # the streaming file source requires a directory: stream the sf
     # dir with a glob filter selecting the events table file(s).
     # Watermarks require TIMESTAMP (LTZ), so unlike the batch path
@@ -440,8 +450,6 @@ def stream_true_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     "interval join, which is the oracle.",
 )
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dados_publicos_etl_spark.streaming.source import read_event_stream
-
     # ONE streaming source, two filtered projections (stream
     # self-join): halves source listing/scan work vs two independent
     # readStream pipelines on the same path.
@@ -492,8 +500,6 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "oracle.",
 )
 def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dados_publicos_etl_spark.streaming.source import read_event_stream
-
     stream = read_event_stream(spark, sf_dir)
     deduped = (
         stream.withWatermark("ts", "1 hour")
@@ -521,9 +527,6 @@ def streaming_static_enrich(
     UPDATE-mode keyed upsert (bounded state, watermark-evicted),
     not a complete-mode memory sink.
     """
-    from dados_publicos_etl_spark.functions.numeric import money_sum
-    from dados_publicos_etl_spark.streaming.source import read_event_stream
-
     tz = spark.conf.get("spark.sql.session.timeZone")
     stream = read_event_stream(spark, sf_dir)
     dim = read_table(spark, sf_dir, "customer").select(
@@ -577,30 +580,20 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _write_ann_stream_queries(
     emb: DataFrame, n_queries: int, workdir: str
 ) -> str:
-    # two files => two micro-batches under maxFilesPerTrigger=1.
-    # Each query row carries its Spark-SQL milli-quantized qq
-    # alongside the raw vector, so the probe's cell choice shares
-    # the one quantization site with the IVF oracle (round 8).
+    # two micro-batches, by vec_id parity.  Each query row carries
+    # its Spark-SQL milli-quantized qq alongside the raw vector, so
+    # the probe's cell choice shares the one quantization site with
+    # the IVF oracle.
     from dados_publicos_etl_spark.operators.similarity import (
         _MILLI_QUANT_EXPR,
     )
 
-    for half in (0, 1):
-        (
-            emb.filter(
-                (F.col("vec_id") < n_queries)
-                & (F.col("vec_id") % 2 == half)
-            )
-            .select(
-                "vec_id",
-                F.col("embedding").cast("array<double>").alias("embedding"),
-                F.expr(_MILLI_QUANT_EXPR.format(v="embedding")).alias("qq"),
-            )
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(workdir)
-        )
-    return workdir
+    queries = emb.filter(F.col("vec_id") < n_queries).select(
+        "vec_id",
+        F.col("embedding").cast("array<double>").alias("embedding"),
+        F.expr(_MILLI_QUANT_EXPR.format(v="embedding")).alias("qq"),
+    )
+    return write_feed(queries, F.col("vec_id") % 2, workdir)
 
 
 def streaming_ann_probe(
@@ -640,12 +633,8 @@ def streaming_ann_probe(
         partial(_write_ann_stream_queries, emb, n_queries), n_queries,
     )
 
-    stream = (
-        spark.readStream.schema(
-            "vec_id long, embedding array<double>, qq array<long>"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(qdir)
+    stream = read_feed(
+        spark, qdir, "vec_id long, embedding array<double>, qq array<long>"
     )
     # Per-batch results land in a parquet SINK table (path embeds
     # batch_id -> idempotent under replay), never a driver-side list:
@@ -670,6 +659,10 @@ def streaming_ann_probe(
             q.processAllAvailable()
         finally:
             q.stop()
+    if last is None:  # no query vector, so no batch wrote a table
+        return spark.createDataFrame(
+            [], "query_id long, neighbor_id long, cos_sim double, rank int"
+        )
     # every batch writes one schema; its batch_id= dirs are partitions
     return open_table(spark, last._replace(path=sink_dir)).select(
         "query_id", "neighbor_id", "cos_sim", "rank"
@@ -699,6 +692,20 @@ def stream_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return streaming_ann_probe(spark, sf_dir)
 
 
+# the events' epoch-micros bounds as window expressions, so a feed's
+# time split is a Column: no driver-side min/max, and an empty table
+# is an empty feed
+_TS_HI = "max(ts_us) OVER ()"
+_TS_MID = f"(min(ts_us) OVER () + {_TS_HI}) div 2"
+
+
+def _feed_events(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
+    """``event_id``, ``ts`` as epoch-micros ``ts_us`` and ``cols``."""
+    return read_table(spark, sf_dir, "events").select(
+        "event_id", epoch_micros("ts").alias("ts_us"), *cols
+    )
+
+
 def _write_topk_feed(spark: SparkSession, sf_dir: str, workdir: str) -> str:
     """Events split into two files AT THE TIME MIDPOINT, ``ts``
     pre-normalized to epoch-micros longs.
@@ -710,39 +717,8 @@ def _write_topk_feed(spark: SparkSession, sf_dir: str, workdir: str) -> str:
     by event_id parity — would interleave times and force the
     watermark to hold ALL state until the end, hiding eviction.)
     """
-    import os as _os
-
-    ev = read_table(spark, sf_dir, "events").select(
-        "event_id",
-        F.expr(
-            "timestampdiff(MICROSECOND, "
-            "TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
-        ).alias("ts_us"),
-        "user_id",
-    )
-    lo, hi = ev.agg(F.min("ts_us"), F.max("ts_us")).first()
-    mid = (lo + hi) // 2
-    # ONE write pass instead of two filtered writes: a single
-    # coalesced task splits rows into half=0/half=1 directories
-    # (partitionBy on write is a per-task file split, no shuffle).
-    # The consumer reads with recursiveFileLookup, so `half` stays a
-    # directory name, not a column.
-    (
-        ev.withColumn("half", (F.col("ts_us") > mid).cast("int"))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .partitionBy("half")
-        .parquet(workdir)
-    )
-    # pin file order for the mtime-ordered source: half 1 newer
-    for half in (0, 1):
-        d = _os.path.join(workdir, f"half={half}")
-        for f in _os.listdir(d):
-            if f.endswith(".parquet"):
-                p = _os.path.join(d, f)
-                st = _os.stat(p)
-                _os.utime(p, (st.st_atime, st.st_mtime + half * 600))
-    return workdir
+    ev = _feed_events(spark, sf_dir, "user_id")
+    return write_feed(ev, F.expr(f"IF(ts_us > {_TS_MID}, 1, 0)"), workdir)
 
 
 @query(
@@ -808,13 +784,9 @@ def stream_topk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = session_artifact(
         "topk_feed", sf_dir, partial(_write_topk_feed, spark, sf_dir)
     )
-    stream = (
-        spark.readStream.schema("event_id long, ts_us long, user_id long")
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(feed)
-        .withColumn("ts", F.timestamp_micros("ts_us"))
-    )
+    stream = read_feed(
+        spark, feed, "event_id long, ts_us long, user_id long"
+    ).withColumn("ts", F.timestamp_micros("ts_us"))
     agg = (
         stream.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "10 minutes"), "user_id")
@@ -861,19 +833,6 @@ def _write_late_feed(spark: SparkSession, sf_dir: str, workdir: str) -> str:
     earlier-half event arrives hours LATE relative to the advanced
     watermark.  This is the deterministic late-data fixture: which
     rows are late is a pure function of the data."""
-    import os as _os
-
-    ev = read_table(spark, sf_dir, "events").select(
-        "event_id",
-        F.expr(
-            "timestampdiff(MICROSECOND, "
-            "TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
-        ).alias("ts_us"),
-        "event_type",
-    )
-    lo, hi = ev.agg(F.min("ts_us"), F.max("ts_us")).first()
-    mid = (lo + hi) // 2
-    mid3 = (mid + hi) // 2
     # THREE files: the later half split in two — batch 0 = its older
     # part (mid, mid3], batch 1 = its newest part (mid3, hi] — then
     # the earlier half last.  Two properties make this race-free:
@@ -885,26 +844,11 @@ def _write_late_feed(spark: SparkSession, sf_dir: str, workdir: str) -> str:
     # mid3 - 1h, which is hours past every earlier-half window
     # (the half-gap is a quarter of the corpus time span), so ALL
     # of batch 2 drops deterministically.
-    (
-        ev.withColumn(
-            "batch",
-            F.when(F.col("ts_us") > mid3, 1)
-            .when(F.col("ts_us") > mid, 0)
-            .otherwise(2),
-        )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .partitionBy("batch")
-        .parquet(workdir)
+    batch = F.expr(
+        f"CASE WHEN ts_us > ({_TS_MID} + {_TS_HI}) div 2 THEN 1"
+        f" WHEN ts_us > {_TS_MID} THEN 0 ELSE 2 END"
     )
-    for b in (0, 1, 2):
-        d = _os.path.join(workdir, f"batch={b}")
-        for f in _os.listdir(d):
-            if f.endswith(".parquet"):
-                p = _os.path.join(d, f)
-                st = _os.stat(p)
-                _os.utime(p, (st.st_atime, st.st_mtime + b * 600))
-    return workdir
+    return write_feed(_feed_events(spark, sf_dir, "event_type"), batch, workdir)
 
 
 @query(
@@ -940,13 +884,9 @@ def stream_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = session_artifact(
         "late_feed", sf_dir, partial(_write_late_feed, spark, sf_dir)
     )
-    stream = (
-        spark.readStream.schema("event_id long, ts_us long, event_type string")
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(feed)
-        .withColumn("ts", F.timestamp_micros("ts_us"))
-    )
+    stream = read_feed(
+        spark, feed, "event_id long, ts_us long, event_type string"
+    ).withColumn("ts", F.timestamp_micros("ts_us"))
     agg = (
         stream.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "10 minutes"), "event_type")
@@ -986,20 +926,7 @@ def _write_outer_feed(spark: SparkSession, sf_dir: str, workdir: str) -> str:
     The streaming output therefore equals the plain batch left join —
     the oracle.  (r13: previously the first sentinel pair was its own
     batch — four micro-batches for the same rows.)"""
-    import os as _os
-
-    ev = read_table(spark, sf_dir, "events").select(
-        "event_id",
-        F.expr(
-            "timestampdiff(MICROSECOND, "
-            "TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
-        ).alias("ts_us"),
-        "user_id",
-        "event_type",
-    )
-    lo, hi = ev.agg(F.min("ts_us"), F.max("ts_us")).first()
-    mid = (lo + hi) // 2
-    adv = int(hi) + 2 * 3_600_000_000  # max(ts) + 2h
+    ev = _feed_events(spark, sf_dir, "user_id", "event_type")
     # r13 (one fewer micro-batch, identical output): the first
     # click+purchase sentinel pair rides IN the newer-half file
     # instead of its own batch.  The watermark committed at the end
@@ -1009,34 +936,20 @@ def _write_outer_feed(spark: SparkSession, sf_dir: str, workdir: str) -> str:
     # unmatched click.  Inner matches are unaffected (they emit on
     # sight within addBatch; all real rows still arrive in event-time
     # order, nothing is ever late), so the sink table is
-    # row-identical to the 4-batch feed — oracle-checked.
-    sentinels = spark.createDataFrame(
-        [
-            (-1, adv, -1, "click", 1),
-            (-2, adv, -2, "purchase", 1),
-            (-3, adv, -3, "click", 2),
-        ],
-        "event_id long, ts_us long, user_id long, event_type string,"
-        " batch int",
-    )
-    (
-        ev.withColumn(
-            "batch", F.when(F.col("ts_us") <= mid, 0).otherwise(1)
+    # row-identical to the 4-batch feed — oracle-checked.  The
+    # sentinels sit at max(ts) + 2h; an empty table has no max and
+    # gets no sentinel.
+    adv = ev.agg((F.max("ts_us") + 2 * 3_600_000_000).alias("ts_us")).dropna()
+    sentinels = adv.crossJoin(
+        spark.createDataFrame(
+            [(-1, -1, "click", 1), (-2, -2, "purchase", 1), (-3, -3, "click", 2)],
+            "event_id long, user_id long, event_type string, batch int",
         )
-        .unionByName(sentinels)
-        .coalesce(1)
-        .write.mode("overwrite")
-        .partitionBy("batch")
-        .parquet(workdir)
     )
-    for b in (0, 1, 2):
-        d = _os.path.join(workdir, f"batch={b}")
-        for f in _os.listdir(d):
-            if f.endswith(".parquet"):
-                p = _os.path.join(d, f)
-                st = _os.stat(p)
-                _os.utime(p, (st.st_atime, st.st_mtime + b * 600))
-    return workdir
+    feed = ev.withColumn(
+        "batch", F.expr(f"IF(ts_us <= {_TS_MID}, 0, 1)")
+    ).unionByName(sentinels)
+    return write_feed(feed, F.col("batch"), workdir)
 
 
 @query(
@@ -1076,15 +989,9 @@ def stream_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = session_artifact(
         "outer_feed", sf_dir, partial(_write_outer_feed, spark, sf_dir)
     )
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts_us long, user_id long, event_type string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(feed)
-        .withColumn("ts", F.timestamp_micros("ts_us"))
-    )
+    stream = read_feed(
+        spark, feed, "event_id long, ts_us long, user_id long, event_type string"
+    ).withColumn("ts", F.timestamp_micros("ts_us"))
 
     def side_of(event_type: str, alias: str) -> DataFrame:
         return (
@@ -1150,14 +1057,7 @@ def _write_doc_feed(spark: SparkSession, sf_dir: str, workdir: str) -> str:
     docs = read_table(spark, sf_dir, "documents").filter(
         F.col("source") != "src0"
     )
-    for half in (0, 1):
-        (
-            docs.filter(F.col("doc_id") % 2 == half)
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(workdir)
-        )
-    return workdir
+    return write_feed(docs, F.col("doc_id") % 2, workdir)
 
 
 @query(
@@ -1211,11 +1111,7 @@ def stream_decontaminate_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = session_artifact(
         "decon_feed", sf_dir, partial(_write_doc_feed, spark, sf_dir)
     )
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
+    stream = read_feed(spark, feed, docs.schema)
 
     def gate(prev: DataFrame | None, bdf: DataFrame) -> DataFrame:
         sh = bdf.select("doc_id", tokens("text").alias("toks")).select(

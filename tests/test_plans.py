@@ -1558,6 +1558,65 @@ def test_lake_operations_use_the_hadoop_filesystem():
     )
 
 
+def test_streaming_feeds_replay_through_one_writer_and_reader():
+    """Static inventory of the micro-batch feeds in ``streaming/``: a
+    one-file-per-trigger file stream is opened only by
+    ``source.read_feed``, and a feed's replay order is pinned only by
+    ``source.write_feed``'s ``FileSystem.setTimes`` walk.  Fails on a
+    ``maxFilesPerTrigger`` option outside ``read_feed``, on a function
+    calling ``os.utime`` or ``os.listdir`` (under any alias of ``os``),
+    and on ``windows.py`` importing ``os``."""
+    import ast
+    import os
+
+    import dados_publicos_etl_spark as pkg
+
+    root = os.path.join(os.path.dirname(pkg.__file__), "streaming")
+    offenders: list[str] = []
+    found: set[str] = set()
+    for f in sorted(os.listdir(root)):
+        if not f.endswith(".py"):
+            continue
+        with open(os.path.join(root, f)) as fh:
+            tree = ast.parse(fh.read(), filename=f)
+        os_names = {
+            a.asname or a.name for n in ast.walk(tree)
+            if isinstance(n, ast.Import) for a in n.names if a.name == "os"
+        }
+        if f == "windows.py" and os_names:
+            offenders.append("windows.py imports os")
+        for top in tree.body:
+            name = getattr(top, "name", "<module>")
+            pins = False
+            for node in ast.walk(top):
+                if not isinstance(node, ast.Call):
+                    continue
+                call = node.func
+                if any(
+                    isinstance(a, ast.Constant) and a.value == "maxFilesPerTrigger"
+                    for a in node.args
+                ):
+                    if (f, name) == ("source.py", "read_feed"):
+                        found.add("read_feed reader")
+                    else:
+                        offenders.append(f"{f}:{node.lineno} {name} file-stream reader")
+                if isinstance(call, ast.Attribute):
+                    if call.attr == "setTimes" and name == "write_feed":
+                        found.add("write_feed setTimes")
+                    pins |= (
+                        call.attr in ("utime", "listdir")
+                        and isinstance(call.value, ast.Name)
+                        and call.value.id in os_names
+                    )
+            if pins:
+                offenders.append(f"{f}:{top.lineno} {name} pins mtimes with os")
+    assert not offenders, (
+        f"hand-built micro-batch feeds: {offenders}"
+        " — write with streaming.source.write_feed, read with read_feed"
+    )
+    assert found == {"read_feed reader", "write_feed setTimes"}
+
+
 def test_dump_plans_canonicalises_distinct_aggregate_expand():
     """Two runs of the same code may number ``RewriteDistinctAggregates``
     groups in either order; ``tools/dump_plans.normalize`` maps both to

@@ -133,14 +133,21 @@ def test_k_truss_raises_past_its_round_bound(spark, monkeypatch):
         "similarity_ivf_persisted",
         "similarity_ivfpq",
         "ivf_cell_balance",
+        "stream_ann_probe",
+        "kmeans_lloyd_exact",
+        "stream_topk_windows",
+        "stream_late_drop",
+        "stream_stream_outer_join",
     ],
 )
 def test_hits_authorities_on_zero_rows(spark, zero_row_sf_dir, name):
     """An empty graph has no maximum authority (None) and no node
     count (0); an empty embeddings table has no ``vec_id = 0`` query
-    vector and trains no IVF cell: each query returns the oracle's
-    zero rows, not rows of NULL scores, a ``ZeroDivisionError``, a
-    ``TypeError`` or a numpy ``AxisError``."""
+    vector, trains no IVF cell and seeds no k-means cell; an empty
+    events table has no time bounds and writes an empty micro-batch
+    feed: each query returns the oracle's zero rows, not rows of NULL
+    scores, a ``ZeroDivisionError``, a ``TypeError``, an
+    ``AttributeError`` or a numpy ``AxisError``."""
     spec = QUERIES[name]
     out = spec.fn(spark, zero_row_sf_dir)
     assert out.count() == 0
