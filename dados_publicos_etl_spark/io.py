@@ -7,6 +7,12 @@ driver-side pandas loops (CSV->Parquet conversion, per-file counting)
 become single distributed Spark jobs here; that is its main
 scalability cliff and the first thing this engine fixes.
 
+A parquet table the engine did not write is opened by ONE function,
+:func:`open_parquet`: its schema is the one Spark's inference would
+give, read from a single footer (:func:`parquet_footer`) without the
+inference job, and its event time goes through ONE rule
+(:func:`event_time`).  The streaming readers take the same footer.
+
 The lake operations (BOM rewrite, compaction, retention, versioned
 publish, ``ingest.land_file``, the audit row) go through the session's
 Hadoop ``FileSystem`` (:func:`_fs`), so they run on any Hadoop URI, and
@@ -17,12 +23,13 @@ from __future__ import annotations
 
 import abc
 import codecs
-import glob
+import json
 import os
 import re
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dados_publicos_etl_spark.session import read_nanos_as_long
@@ -68,92 +75,157 @@ def put_file(path: str, data: bytes, tail: str | None = None) -> None:
         hadoop.fs.FileContext.getFileContext(fs.getUri(), conf).rename(tmp, dst, overwrite)
 
 
-def parquet_ts_meta(path: str, col: str = "ts") -> tuple[str | None, str | None]:
-    """Sniff ``(unit, tz)`` of the timestamp column ``col`` from a
-    parquet footer (file or directory-of-files): the physical unit
-    ('ns'|'us'|'ms'|'s', None when the column isn't a timestamp) and
-    the tz annotation.
-
-    The streaming readers declare ``col`` as ``long`` (so NANOS files
-    are readable at all under ``nanosAsLong``) and must then rescale
-    the raw int64 to microseconds — but the right divisor depends on
-    the unit the WRITER used, which only the footer knows.  Hardcoding
-    one unit is how you land every window in 1970.  The tz annotation
-    distinguishes parquet TIMESTAMP adjusted-to-UTC (tz set, Spark
-    reads TIMESTAMP) from wall-time NTZ (tz None, Spark reads
-    TIMESTAMP_NTZ); readers that branch their declared schema on the
-    unit need both.  Footer read is a driver-side metadata peek, not
-    a data scan, of a local path (pyarrow, no Hadoop filesystem)."""
-    import pyarrow.parquet as pq
-
-    if os.path.isdir(path):
-        parts = sorted(glob.glob(os.path.join(path, "*.parquet")))
-        if not parts:
-            raise FileNotFoundError(f"no parquet files under {path}")
-        path = parts[0]
-    typ = pq.read_schema(path).field(col).type
-    return getattr(typ, "unit", None), getattr(typ, "tz", None)
+_SUMMARIES = ("_common_metadata", "_metadata")
 
 
-def epoch_micros_sql(col: str, unit: str | None) -> str:
-    """SQL expression rescaling a raw int64 ``col`` of ``unit`` to
-    epoch microseconds.  Integer arithmetic only — nanos ~1e18 exceed
-    double precision, so float division would drift by up to 1 us.
+def _listed(name: str) -> bool:
+    """Whether Spark's file index keeps a path component
+    (``InMemoryFileIndex.shouldFilterOutPathName``): not a ``_`` or
+    ``.`` name, other than a partition dir (``_c=1``) or a parquet
+    summary file, nor an in-flight ``._COPYING_`` file."""
+    hidden = (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+    return not hidden or name.startswith(_SUMMARIES)
 
-    ``unit=None`` means the column is a plain numeric (not a parquet
-    timestamp at all — :func:`parquet_ts_meta` returns None then); it
-    is treated as ALREADY epoch micros, the engine's wire convention.
-    """
-    scale = {
-        None: f"`{col}`",
-        "ns": f"`{col}` div 1000",
-        "us": f"`{col}`",
-        "ms": f"`{col}` * 1000",
-        "s": f"`{col}` * 1000000",
-    }
-    if unit not in scale:
-        raise ValueError(f"column {col!r}: unsupported timestamp unit {unit!r}")
-    return scale[unit]
+
+def _schema_file(fs, root):
+    """The file whose footer Spark's schema inference reads
+    (``ParquetUtils.inferSchema`` without ``mergeSchema``) in the
+    directory tree ``root``: a ``_common_metadata`` summary, else a
+    ``_metadata`` one, else the first data file in path order among
+    the files Spark lists.
+
+    An ordered descent finds that data file: it lists one directory
+    per level (the root, then the first non-empty branch), not the
+    whole tree, so the open costs no extra pass over a many-file
+    table.  Summary files are looked for in ``root`` only, where
+    parquet writers put them; Spark's inference would also take one
+    from a subdirectory."""
+
+    def first(directory, summaries):
+        children = {}
+        for status in fs.listStatus(directory):
+            name = status.getPath().getName()
+            if _listed(name):
+                children[name + "/" if status.isDirectory() else name] = status
+        for name in summaries:
+            if name in children:
+                return children[name]
+        # a subtree's paths all start with "<dir>/": ordering the
+        # children by that key orders them as their paths
+        for key in sorted(children):
+            if key.endswith("/"):
+                found = first(children[key].getPath(), ())
+                if found is not None:
+                    return found
+            elif key not in _SUMMARIES:
+                return children[key]
+        return None
+
+    found = first(root, _SUMMARIES)
+    if found is None:
+        raise FileNotFoundError(f"no parquet data file under {root}")
+    return found
+
+
+def _read_footer(
+    spark: SparkSession, fs, status
+) -> tuple[T.StructType, frozenset[str]]:
+    """The Spark schema of the parquet file ``status`` as inference
+    maps it (``ParquetFileFormat.readSchemaFromFooter`` with Spark's
+    own ``ParquetToSparkSchemaConverter`` under the session conf), and
+    the names of its TIMESTAMP(NANOS) columns, which that schema reads
+    as long (``nanosAsLong``)."""
+    read_nanos_as_long(spark)
+    jvm = spark.sparkContext._jvm
+    parquet = jvm.org.apache.parquet
+    footer = parquet.hadoop.ParquetFileReader.readFooter(
+        parquet.hadoop.util.HadoopInputFile.fromStatus(status, fs.getConf()),
+        parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+    )
+    sql = jvm.org.apache.spark.sql.execution.datasources.parquet
+    schema = T.StructType.fromJson(json.loads(
+        sql.ParquetFileFormat.readSchemaFromFooter(
+            parquet.hadoop.Footer(status.getPath(), footer),
+            sql.ParquetToSparkSchemaConverter(
+                spark._jsparkSession.sessionState().conf()
+            ),
+        ).json()
+    ))
+    message = footer.getFileMetaData().getSchema()
+    nanos = frozenset(
+        f.name
+        for f in schema.fields
+        if isinstance(f.dataType, T.LongType)
+        and str(message.getType(f.name).getLogicalTypeAnnotation()).startswith(
+            "TIMESTAMP"
+        )
+    )
+    return schema, nanos
+
+
+def parquet_footer(
+    spark: SparkSession, path: str
+) -> tuple[T.StructType, frozenset[str], bool]:
+    """The schema Spark's inference gives the parquet table at ``path``
+    (a file, or a directory tree of files), the names of its
+    TIMESTAMP(NANOS) columns, and whether ``path`` is a directory.
+
+    Inference without ``mergeSchema`` reads one footer
+    (:func:`_schema_file`); this reads it driver-side through the lake
+    filesystem (:func:`_fs`), so it runs no Spark job and works on any
+    Hadoop URI."""
+    fs, root = _fs(path)
+    status = fs.getFileStatus(root)
+    is_dir = status.isDirectory()
+    if is_dir:
+        status = _schema_file(fs, root)
+    return (*_read_footer(spark, fs, status), is_dir)
+
+
+def event_time(df: DataFrame, nanos: frozenset[str]) -> DataFrame:
+    """The engine's one event-time rule, applied where a table is
+    opened: each TIMESTAMP(NANOS) column in ``nanos`` (read as long)
+    truncates to a microsecond TIMESTAMP_NTZ, the truncation DuckDB
+    applies; a plain INT64 ``ts`` is already epoch microseconds (the
+    engine's wire convention) and becomes a TIMESTAMP_NTZ as is.
+
+    Integer division: nanos ~1e18 exceed double precision.  NTZ (UTC
+    wall time), as Spark 4 reads wall-time parquet timestamps: windows,
+    session_window bounds and date_format on NTZ do not depend on the
+    session time zone, so results cannot shift against the UTC-naive
+    DuckDB oracle on a non-UTC driver JVM."""
+    for field in df.schema.fields:
+        if field.name in nanos:
+            micros = f"`{field.name}` div 1000"
+        elif field.name == "ts" and isinstance(field.dataType, T.LongType):
+            micros = "`ts`"
+        else:
+            continue
+        df = df.withColumn(
+            field.name,
+            F.expr(
+                f"timestampadd(MICROSECOND, {micros}, "
+                "TIMESTAMP_NTZ '1970-01-01 00:00:00')"
+            ),
+        )
+    return df
+
+
+def open_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """A scan of the parquet table at ``path`` read with the schema
+    :func:`parquet_footer` pins from a single footer, with
+    :func:`event_time` applied.  No schema-inference job runs."""
+    schema, nanos, _ = parquet_footer(spark, path)
+    return event_time(spark.read.schema(schema).parquet(path), nanos)
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one testdata table (parquet folder-or-file) by name.
-
-    Some driver tables (``events``) carry parquet TIMESTAMP(NANOS),
-    which Spark's vectorized reader rejects.  We read nanos as long
-    (``spark.sql.legacy.parquet.nanosAsLong``) and truncate to
-    microsecond timestamps — the same truncation DuckDB applies, so
-    oracle comparisons stay exact.
-    """
-    from dados_publicos_etl_spark import schemas
-
-    read_nanos_as_long(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    expected = schemas.TESTDATA.get(name)
-    if expected is not None:
-        for field in expected.fields:
-            actual = df.schema[field.name].dataType if field.name in df.columns else None
-            if isinstance(field.dataType, T.TimestampType) and isinstance(
-                actual, T.LongType
-            ):
-                from pyspark.sql import functions as F
-
-                # integer division: nanos ~1e18 exceed double precision,
-                # so (x / 1000).cast("long") would drift by up to 1 us.
-                # TIMESTAMP_NTZ (UTC wall time), matching how Spark 4
-                # reads the other tables' parquet timestamps: windows,
-                # session_window bounds and date_format on NTZ are
-                # session-timezone-independent, so results can't shift
-                # against the UTC-naive DuckDB oracle on a non-UTC
-                # driver JVM (probed with TZ=America/Sao_Paulo).
-                df = df.withColumn(
-                    field.name,
-                    F.expr(
-                        f"timestampadd(MICROSECOND, `{field.name}` div 1000, "
-                        "TIMESTAMP_NTZ '1970-01-01 00:00:00')"
-                    ),
-                )
-    return df
+    """Open one testdata table (parquet file or folder) by name."""
+    return open_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def widen_scan(df: DataFrame) -> DataFrame:
@@ -427,13 +499,17 @@ def compact_partitions(
     }
     if not todo:
         return todo
-    schema = spark.read.parquet(path).schema
+    # the data columns of the footer inference reads, then the
+    # partition columns Spark's discovery types from the whole
+    # dataset's dir names: the schema inference gives, without its job
+    footer = _read_footer(spark, fs, _schema_file(fs, root))[0]
+    schema = spark.read.schema(footer).parquet(path).schema
     for rel in todo:
         n_out = max(1, math.ceil(stats[rel][1] / target_file_bytes))
         # basePath: Spark's partition discovery re-attaches the
         # partition columns from the dir names (Hive %XX escapes and
         # the NULL sentinel undone) typed by the dataset's schema, so
-        # the overwrite replaces the same dir; no inference job runs
+        # the overwrite replaces the same dir
         part_df = (
             spark.read.schema(schema).option("basePath", path)
             .parquet(os.path.join(path, rel))
@@ -583,8 +659,6 @@ def write_jsonl_shards(
     """
     import math
 
-    from pyspark.sql import functions as F
-
     df = df.localCheckpoint()  # one scan feeds sample, count, write
     n_rows = df.count()
     if n_rows == 0:
@@ -683,4 +757,4 @@ def read_current_version(spark: SparkSession, table_root: str) -> DataFrame:
     """Resolve the ``_CURRENT`` pointer and read that version."""
     fs, pointer = _fs(os.path.join(table_root, "_CURRENT"))
     v = _read_bytes(fs, pointer).decode("utf-8").strip()
-    return spark.read.parquet(os.path.join(table_root, v))
+    return open_parquet(spark, os.path.join(table_root, v))

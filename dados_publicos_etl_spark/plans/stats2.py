@@ -1351,7 +1351,8 @@ def diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_table(spark, sf_dir, "events")
     ts_us = epoch_micros("ts")
     lo, hi = ev.agg(F.min(ts_us), F.max(ts_us)).first()
-    mid = (int(lo) + int(hi)) // 2
+    # no events: no midpoint, and the oracle's one row of NULL means
+    mid = None if lo is None else (lo + hi) // 2
     cells = ev.groupBy(
         hash_bucket(F.col("user_id"), 2).alias("treated"),
         F.when(ts_us > mid, 1).otherwise(0).alias("post"),
@@ -1712,13 +1713,15 @@ def sequence_gap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     lo, hi, n = ids.agg(F.min("id"), F.max("id"), F.count("id")).first()
+    if not n:  # no ids: no gap starts, the oracle's zero rows
+        lo = hi = 0
     nxt = ids.select((F.col("id") + 1).alias("gap_start"))
     present = ids.select(F.col("id").alias("gap_start"))
     gap_starts = (
-        nxt.filter(F.col("gap_start") <= int(hi))
+        nxt.filter(F.col("gap_start") <= hi)
         .join(present, "gap_start", "left_anti")
     )
-    total_missing = int(hi) - int(lo) + 1 - int(n)
+    total_missing = hi - lo + 1 - n
     return (
         gap_starts.withColumn(
             "total_missing", F.lit(total_missing).cast("long")

@@ -107,7 +107,11 @@ def mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("pr") == _MW_A, 1).otherwise(0)).alias("c1"),
         F.sum(F.when(F.col("pr") == _MW_B, 1).otherwise(0)).alias("c2"),
     )
-    n1, n2 = (int(x) for x in ties.agg(F.sum("c1"), F.sum("c2")).first())
+    n1, n2 = ties.agg(F.sum("c1"), F.sum("c2")).first()
+    if n1 is None:  # no order of either priority: the oracle's NULL row
+        return spark.createDataFrame(
+            [(None,) * 4], "n1 int, n2 int, u2a long, z double"
+        )
     pooled = ties.withColumn("t", F.col("c1") + F.col("c2"))
     cum, _, _ = prefix_sums_by_range(pooled, [F.col("val")], "t")
     stats = cum.agg(

@@ -14,7 +14,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dados_publicos_etl_spark.streaming.source import (
-    EVENTS_RAW_SCHEMA,
     read_event_stream,
     read_feed,
     write_feed,
@@ -63,35 +62,30 @@ from dados_publicos_etl_spark.functions.numeric import (  # noqa: E402
     leading_zero_rank,
 )
 from dados_publicos_etl_spark.functions.text import hex_long  # noqa: E402
-from dados_publicos_etl_spark.io import (  # noqa: E402
-    epoch_micros_sql,
-    parquet_ts_meta,
-)
+from dados_publicos_etl_spark.io import read_table  # noqa: E402
 from dados_publicos_etl_spark.plans.registry import query  # noqa: E402
 from dados_publicos_etl_spark.streaming.windows import (  # noqa: E402
     run_state_table,
 )
-from dados_publicos_etl_spark.tmpstore import session_artifact  # noqa: E402
+from dados_publicos_etl_spark.tmpstore import (  # noqa: E402
+    Table,
+    session_artifact,
+)
 
 
 def _cdc_feed_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The events as a 2-batch file stream split by event_id parity
-    (scaffolding for an external CDC feed; the feed is a session
-    artifact so repeat invocations measure the merge)."""
+    """The normalized events as a 2-batch file stream split by
+    event_id parity (scaffolding for an external CDC feed; the feed is
+    a session artifact so repeat invocations measure the merge),
+    reopened with the schema it was written with."""
 
-    def build(workdir: str) -> str:
-        # point at the exact table path: works whether events.parquet
-        # is the testdata's single FILE or a directory of part files
-        # (the scale-probe replica layout) — a pathGlobFilter on the
-        # parent dir would match only the leaf-FILE form and feed
-        # NOTHING on a directory layout
-        src = spark.read.schema(EVENTS_RAW_SCHEMA).parquet(
-            f"{sf_dir}/events.parquet"
-        )
-        return write_feed(src, F.col("event_id") % 2, workdir)
+    def build(workdir: str) -> Table:
+        events = read_table(spark, sf_dir, "events")
+        feed = write_feed(events, F.col("event_id") % 2, workdir)
+        return Table(feed, events.schema)
 
     feed = session_artifact("cdc_feed", sf_dir, build)
-    return read_feed(spark, feed, EVENTS_RAW_SCHEMA)
+    return read_feed(spark, feed.path, feed.schema)
 
 
 @query(
@@ -122,20 +116,12 @@ def _cdc_feed_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     "batch never reads the file it overwrites.",
 )
 def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    unit = parquet_ts_meta(f"{sf_dir}/events.parquet")[0]
-
     def upsert(prev: DataFrame | None, batch_df: DataFrame) -> DataFrame:
-        b = (
-            batch_df.withColumn(
-                "ts_us", F.expr(epoch_micros_sql("ts", unit))
-            )
-            .groupBy("user_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.max(
-                    F.struct("ts_us", "event_id", "event_type", "value")
-                ).alias("last"),
-            )
+        b = batch_df.groupBy("user_id").agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.max(
+                F.struct("ts", "event_id", "event_type", "value")
+            ).alias("last"),
         )
         if prev is None:
             return b
@@ -298,14 +284,10 @@ def stream_histogram_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_kl_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     def merge_counts(prev: DataFrame | None, batch_df: DataFrame) -> DataFrame:
+        # the feed's ts is NTZ: its day bucket does not depend on the
+        # session time zone
         b = batch_df.groupBy(
-            # NTZ arithmetic: timestamp_micros yields LTZ and would
-            # shift the day bucket under a non-UTC driver session
-            F.expr(
-                "CAST(timestampadd(MICROSECOND, ts, "
-                "TIMESTAMP_NTZ '1970-01-01 00:00:00') AS DATE)"
-            ).alias("day"),
-            "event_type",
+            F.to_date("ts").alias("day"), "event_type"
         ).agg(F.count(F.lit(1)).alias("c"))
         if prev is None:
             return b
@@ -320,17 +302,15 @@ def stream_kl_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     day_tot = daily.groupBy("day").agg(F.sum("c").alias("n_d"))
     gmix = daily.groupBy("event_type").agg(F.sum("c").alias("g"))
-    n_g = daily.agg(F.sum("c")).first()[0]
-    if not n_g:  # empty feed -> loud, not float(None)
-        raise ValueError(
-            "stream_kl_drift: the event feed produced no state rows "
-            "(empty or unreadable events table?)"
-        )
+    # the all-time total as a one-row relation joined in: no driver
+    # round trip, and an empty feed joins to the oracle's zero rows
+    gtot = daily.agg(F.sum("c").alias("n_g"))
     p_d = F.col("c").cast("double") / F.col("n_d")
-    p_g = F.col("g").cast("double") / F.lit(float(n_g))
+    p_g = F.col("g").cast("double") / F.col("n_g")
     return (
         daily.join(day_tot, "day")
         .join(F.broadcast(gmix), "event_type")
+        .crossJoin(F.broadcast(gtot))
         .groupBy("day", "n_d")
         .agg(F.round(F.sum(p_d * F.log(p_d / p_g)), 6).alias("kl_nat"))
         .select(

@@ -1,14 +1,14 @@
 """Streaming file sources: the events table and replayable feeds.
 
-Structured Streaming's file source needs an explicit schema, and the
-driver testdata has carried both TIMESTAMP(NANOS) and TIMESTAMP(MICROS)
-``ts`` columns across rounds.  Declaring ``ts long`` keeps NANOS files
-readable (``spark.sql.legacy.parquet.nanosAsLong``), but the raw int64
-must then be rescaled by the unit the WRITER used — so every streaming
-reader of the events table goes through ``read_event_stream``, which
-sniffs the unit from the parquet footer exactly like the batch path
-(``io.read_table``) does.  Hardcoding a unit is the 1970-windows bug
-class.
+Structured Streaming's file source needs an explicit schema.  Every
+streaming reader of the events table goes through
+``read_event_stream``, which takes that schema from the table's
+footer (``io.parquet_footer``, through the lake filesystem, on any
+Hadoop URI) and applies the batch path's one event-time rule
+(``io.event_time``): a TIMESTAMP(NANOS) ``ts`` reads as long and
+truncates to microseconds, a plain INT64 ``ts`` is already epoch
+microseconds, and MICROS / MILLIS files read natively.  Hardcoding a
+unit is the 1970-windows bug class.
 
 The micro-batch queries replay a feed instead: ``write_feed`` writes a
 DataFrame once, one file per integer ``batch`` value, with the files'
@@ -20,20 +20,12 @@ micro-batches.  An empty DataFrame writes no file and drives no batch.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructType, TimestampNTZType, TimestampType
 
 from dados_publicos_etl_spark.functions.numeric import epoch_micros
-from dados_publicos_etl_spark.io import _fs, epoch_micros_sql, parquet_ts_meta
-from dados_publicos_etl_spark.session import read_nanos_as_long
-
-EVENTS_RAW_SCHEMA = (
-    "event_id long, ts long, user_id long, event_type string, "
-    "value double, props string"
-)
+from dados_publicos_etl_spark.io import _fs, event_time, parquet_footer
 
 
 def read_event_stream(
@@ -46,52 +38,35 @@ def read_event_stream(
     watermarks; render window bounds through ``to_utc_timestamp`` to
     stay session-timezone-stable.  ``ntz=True`` yields TIMESTAMP_NTZ
     (UTC wall time), matching the batch path for operators that only
-    format/compare timestamps.
-
-    The declared schema BRANCHES on the footer's physical unit:
-    NANOS (and plain-numeric) files read ``ts`` as long
-    (``nanosAsLong``) and rescale by integer arithmetic; MICROS /
-    MILLIS files are NOT long-readable under that conf, so they read
-    through Spark's native timestamp path (TIMESTAMP_NTZ for
-    wall-time files, TIMESTAMP for adjusted-to-UTC files) and
-    convert to epoch micros with session-timezone-independent
-    expressions (NTZ diff from epoch / ``unix_micros``).
+    format/compare timestamps.  Either way the epoch micros come from
+    session-timezone-independent expressions (NTZ diff from epoch, or
+    ``unix_micros`` for a file adjusted to UTC).
     """
-    read_nanos_as_long(spark)
-    unit, tz = parquet_ts_meta(os.path.join(sf_dir, "events.parquet"), "ts")
-    if unit in ("ns", None):
-        schema = EVENTS_RAW_SCHEMA
-        micros = F.expr(epoch_micros_sql("ts", unit))
-    elif tz is None:
-        # wall-time NTZ file: pure NTZ arithmetic, no session-tz term
-        schema = EVENTS_RAW_SCHEMA.replace("ts long", "ts timestamp_ntz")
-        micros = epoch_micros("ts")
-    else:
-        # instant-semantics file (adjusted to UTC): epoch extraction
-        schema = EVENTS_RAW_SCHEMA.replace("ts long", "ts timestamp")
-        micros = F.unix_micros("ts")
-    if ntz:
-        ts = F.timestamp_add(
-            "MICROSECOND", micros, F.expr("TIMESTAMP_NTZ '1970-01-01 00:00:00'")
-        )
-    else:
-        ts = F.timestamp_micros(micros)
-    # layout-aware source: the streaming file source requires a
-    # DIRECTORY basePath, so a directory-layout events.parquet (the
-    # scale-probe replica) is streamed directly, while the testdata's
-    # single-FILE layout keeps the parent dir + leaf-name filter (a
-    # pathGlobFilter alone would silently feed an EMPTY stream on the
-    # directory layout — measured as bogus <1x scale ratios)
     table = f"{sf_dir}/events.parquet"
-    if os.path.isdir(table):
-        reader = spark.readStream.schema(schema).parquet(table)
+    schema, nanos, is_dir = parquet_footer(spark, table)
+    # the streaming file source requires a DIRECTORY path: a
+    # directory-layout events.parquet (the scale-probe replica) is
+    # streamed directly, the testdata's single FILE through its parent
+    # dir and a leaf-name filter (a pathGlobFilter alone would feed an
+    # EMPTY stream on the directory layout)
+    reader = spark.readStream.schema(schema)
+    if is_dir:
+        stream = reader.parquet(table)
     else:
-        reader = (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
+        stream = reader.option("pathGlobFilter", "events.parquet").parquet(sf_dir)
+    # event_time leaves ts TIMESTAMP_NTZ, or TIMESTAMP (LTZ) for a
+    # file adjusted to UTC; convert only when that is not the one asked
+    stream = event_time(stream, nanos)
+    if ntz and isinstance(stream.schema["ts"].dataType, TimestampType):
+        ts = F.timestamp_add(
+            "MICROSECOND", F.unix_micros("ts"),
+            F.expr("TIMESTAMP_NTZ '1970-01-01 00:00:00'"),
         )
-    return reader.withColumn("ts", ts)
+    elif not ntz and isinstance(stream.schema["ts"].dataType, TimestampNTZType):
+        ts = F.timestamp_micros(epoch_micros("ts"))
+    else:
+        return stream
+    return stream.withColumn("ts", ts)
 
 
 def write_feed(df: DataFrame, batch: Column, workdir: str) -> str:

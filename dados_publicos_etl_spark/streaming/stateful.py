@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from dados_publicos_etl_spark.io import event_time, parquet_footer
 from dados_publicos_etl_spark.session import scoped_conf
 from dados_publicos_etl_spark.streaming.source import read_feed
 from dados_publicos_etl_spark.streaming.windows import run_memory_sink
@@ -217,22 +218,22 @@ def _session_close(
     )
 
 
-def streaming_session_close(
-    spark: SparkSession, events_dir: str, ts_col: str = "ts"
-) -> DataFrame:
+def streaming_session_close(spark: SparkSession, events_dir: str) -> DataFrame:
     """Drive the gap-timeout sessionizer over a directory of parquet
     event files, one micro-batch per file (watermark advances between
-    batches, closing idle sessions).  Returns every emission; filter
-    ``status = 'closed'`` for the final sessions.
+    batches, closing idle sessions).  The event time ``ts`` follows
+    ``io.event_time``: a plain INT64 ``ts`` is epoch microseconds.
+    Returns every emission; filter ``status = 'closed'`` for the final
+    sessions.
     """
-    raw = spark.read.parquet(events_dir)
+    schema, nanos, _ = parquet_footer(spark, events_dir)
     stream = (
-        read_feed(spark, events_dir, raw.schema)
+        event_time(read_feed(spark, events_dir, schema), nanos)
         # watermarks require TIMESTAMP (with zone); NTZ wall times are
         # interpreted in the session zone (UTC for engine sessions)
-        .withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-        .withColumn("ts_us", F.unix_micros(F.col(ts_col)))
-        .withWatermark(ts_col, "0 seconds")
+        .withColumn("ts", F.col("ts").cast("timestamp"))
+        .withColumn("ts_us", F.unix_micros("ts"))
+        .withWatermark("ts", "0 seconds")
     )
     out = stream.groupBy("user_id").applyInPandasWithState(
         _session_close,

@@ -48,9 +48,8 @@ dirs stay lazy scans, never eager checkpoints.
 handle: ``write_table`` writes parquet and returns ``Table(path,
 schema)``, ``open_table`` reopens it with that schema, so reopening a
 table the engine wrote — zero-row and partitioned ones too — runs no
-schema-inference job.  Only readers of external input open parquet
-without a schema (``io.read_table``, ``io.compact_partitions``,
-``io.read_current_version``, ``stateful.streaming_session_close``).
+schema-inference job.  A table the engine did not write is opened
+by ``io.open_parquet``, with a schema read from one footer.
 ``reroot(df, purpose)`` is the pair on a fresh pool dir.  Two kinds
 of caller need it:
 

@@ -53,3 +53,25 @@ def zero_row_sf_dir(tmp_path) -> str:
             table = pq.read_table(os.path.join(SF_SMOKE, name))
             pq.write_table(table.slice(0, 0), str(tmp_path / name))
     return str(tmp_path)
+
+
+@pytest.fixture
+def nanos_sf_dir(tmp_path) -> str:
+    """A corpus dir holding every ``SF_SMOKE`` table, with ``events.ts``
+    rewritten as parquet TIMESTAMP(NANOS): the unit another writer of
+    the event table may use."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    for name in sorted(os.listdir(SF_SMOKE)):
+        if not name.endswith(".parquet"):
+            continue
+        src = os.path.join(SF_SMOKE, name)
+        if name == "events.parquet":
+            table = pq.read_table(src)
+            i = table.schema.get_field_index("ts")
+            ts = table.column(i).cast(pa.timestamp("ns"))
+            pq.write_table(table.set_column(i, "ts", ts), str(tmp_path / name))
+        else:
+            os.symlink(src, tmp_path / name)
+    return str(tmp_path)

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from dados_publicos_etl_spark.plans import QUERIES
 from dados_publicos_etl_spark.plans import catalog  # noqa: F401
 from tests.conftest import SF_CORRECT, SF_SMOKE
+from tests.oracle_harness import compare
 
 
 def test_minhash_candidates_cover_exact_pairs(spark, sf_dir):
@@ -293,14 +294,18 @@ def test_streaming_matches_batch(spark, sf_dir):
 
 
 def test_event_stream_reads_all_physical_ts_units(spark, tmp_path):
-    """read_event_stream must branch its declared schema on the
-    footer's physical unit: NANOS files read ``ts`` as long under
-    nanosAsLong, but MICROS/MILLIS files are NOT long-readable under
-    that conf and go through Spark's native timestamp path (NTZ or
-    LTZ per the footer's tz annotation).  All variants of the same
-    logical data must produce identical results."""
+    """The stream reader takes its schema from the footer and applies
+    the one event-time rule: NANOS files read ``ts`` as long under
+    nanosAsLong and truncate to micros, a plain INT64 ``ts`` is already
+    epoch micros, and MICROS/MILLIS files go through Spark's native
+    timestamp path (NTZ or LTZ per the footer's tz annotation).  All
+    variants of the same logical data must produce identical results,
+    and the batch ``read_table`` must give the stream's epoch micros."""
     import uuid
 
+    from pyspark.sql.types import TimestampType
+
+    from dados_publicos_etl_spark.io import read_table
     from dados_publicos_etl_spark.streaming.source import read_event_stream
 
     t0 = 1_700_000_000_000_000  # epoch micros
@@ -323,6 +328,8 @@ def test_event_stream_reads_all_physical_ts_units(spark, tmp_path):
         # tz-aware -> parquet isAdjustedToUTC=true -> Spark TIMESTAMP
         "us_ltz": (base.assign(ts=base["ts"].dt.tz_localize("UTC")),
                    {"coerce_timestamps": "us"}),
+        # plain INT64 epoch micros, no timestamp annotation
+        "us_int64": (base.assign(ts=pd.Series(ts_us, dtype="int64")), {}),
     }
     results = {}
     for label, (pdf, kw) in variants.items():
@@ -353,9 +360,88 @@ def test_event_stream_reads_all_physical_ts_units(spark, tmp_path):
         results[label] = {
             r.user_id: (r.n, r.max_us) for r in spark.table(name).collect()
         }
+        batch = read_table(spark, str(d), "events")
+        if isinstance(batch.schema["ts"].dataType, TimestampType):
+            us = F.unix_micros("ts")
+        else:
+            us = F.expr(
+                "timestampdiff(MICROSECOND, "
+                "TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
+            )
+        batch = batch.select("event_id", us)
+        assert sorted(tuple(r) for r in batch.collect()) == list(
+            enumerate(ts_us)
+        ), f"unit variant {label}: batch epoch micros"
     expect = {1: (4, ts_us[6]), 2: (4, ts_us[7])}
     for label, got in results.items():
         assert got == expect, f"unit variant {label}: {got}"
+
+
+def test_open_parquet_pins_the_inferred_schema_without_a_job(spark, tmp_path):
+    """``io.open_parquet`` reads its schema from one footer: it equals
+    Spark's inferred schema, nullability included, on every SF_SMOKE
+    table, a file with REQUIRED columns, a Spark-written partitioned
+    directory and directories with parquet summary files, and the open
+    runs no Spark job."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dados_publicos_etl_spark.io import open_parquet
+    from tests.conftest import next_job_id
+
+    required = str(tmp_path / "required.parquet")
+    pq.write_table(
+        pa.table(
+            {"a": [1, 2], "b": ["x", None]},
+            schema=pa.schema(
+                [pa.field("a", pa.int64(), nullable=False),
+                 pa.field("b", pa.string())]
+            ),
+        ),
+        required,
+    )
+    parts = str(tmp_path / "parts")
+    spark.range(10).selectExpr("id", "CAST(id % 2 AS STRING) AS p").write.partitionBy(
+        "p"
+    ).parquet(parts)
+    # summary files: inference reads _common_metadata first, then
+    # _metadata, before any data file
+    summaries = []
+    for i, names in enumerate((("_metadata", "_common_metadata"), ("_metadata",))):
+        d = tmp_path / f"summary{i}"
+        d.mkdir()
+        pq.write_table(pa.table({"a": [1]}), d / "part-0.parquet")
+        for extra in names:
+            pq.write_metadata(
+                pa.schema([("a", pa.int64()), (extra.strip("_"), pa.float64())]),
+                d / extra,
+            )
+        summaries.append(str(d))
+    # path order, not name order: "nested/p=a-b/..." < "nested/p=a/..."
+    for sub, col in (("p=a", "x"), ("p=a-b", "y")):
+        (tmp_path / "nested" / sub).mkdir(parents=True)
+        pq.write_table(pa.table({col: [1]}), tmp_path / "nested" / sub / "part-0.parquet")
+    paths = [
+        os.path.join(SF_SMOKE, f)
+        for f in sorted(os.listdir(SF_SMOKE))
+        if f.endswith(".parquet")
+    ] + [required, parts, str(tmp_path / "nested")] + summaries
+    for path in paths:
+        j0 = next_job_id(spark)
+        pinned = open_parquet(spark, path).schema
+        assert next_job_id(spark) == j0, f"{path}: the open ran a job"
+        assert pinned == spark.read.parquet(path).schema, path
+
+
+def test_cdc_feed_queries_on_nanos_events(spark, nanos_sf_dir):
+    """The CDC feed carries the normalized events: on a TIMESTAMP(NANOS)
+    ``events.ts`` the day buckets of stream_kl_drift and the latest
+    event of stream_cdc_upsert equal their oracles."""
+    for name in ("stream_kl_drift", "stream_cdc_upsert"):
+        spec = QUERIES[name]
+        compare(spec.fn(spark, nanos_sf_dir), spec.oracle, nanos_sf_dir)
 
 
 def _ppm_bytes(arr):

@@ -9,12 +9,24 @@ so this exercises the lake's filesystem decision without a cluster: an
 op that reaches for the local filesystem API instead of the session's
 Hadoop ``FileSystem`` writes into a ``./viewfs:/...`` directory or
 finds nothing to list.
+
+The streaming queries read the corpus through the same filesystem:
+``stream_true_streaming`` and ``stream_cdc_upsert`` run with ``sf_dir``
+on a ``viewfs://`` mount of ``SF_SMOKE`` and equal their DuckDB oracles.
 """
 
 from __future__ import annotations
 
 import os
+import pathlib
 import uuid
+
+import pytest
+
+from dados_publicos_etl_spark.plans import QUERIES
+from dados_publicos_etl_spark.plans import catalog  # noqa: F401
+from tests.conftest import SF_SMOKE
+from tests.oracle_harness import compare
 
 PERFBENCH = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench"
@@ -48,3 +60,16 @@ def test_etl_medallion_ops_on_a_viewfs_lake(spark, tmp_path, monkeypatch):
             assert got[name] == expected, name
         else:
             assert check.result_hash(got[name]) == check.result_hash(expected), name
+
+
+@pytest.mark.parametrize("name", ["stream_true_streaming", "stream_cdc_upsert"])
+def test_streaming_queries_on_a_viewfs_corpus(spark, name):
+    table = f"sf{uuid.uuid4().hex[:12]}"
+    key = f"fs.viewfs.mounttable.{table}.link./sf"
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    conf.set(key, pathlib.Path(SF_SMOKE).as_uri())
+    try:
+        spec = QUERIES[name]
+        compare(spec.fn(spark, f"viewfs://{table}/sf"), spec.oracle, SF_SMOKE)
+    finally:
+        conf.unset(key)

@@ -110,8 +110,9 @@ def test_monitoring_row_schema_and_sink(spark, tmp_path):
 
 
 def test_compact_partitions_job_budget(spark, tmp_path):
-    """One schema-inference job for the dataset, then per over-split
-    partition one checkpoint job and one write job: 1 + 2P."""
+    """The dataset schema comes from one footer and the partition
+    listing (no job), then per over-split partition one checkpoint job
+    and one write job: 2P."""
     from dados_publicos_etl_spark.io import compact_partitions
 
     out = str(tmp_path / "parts")
@@ -120,7 +121,7 @@ def test_compact_partitions_job_budget(spark, tmp_path):
     j0 = next_job_id(spark)
     todo = compact_partitions(spark, out, ["p"], min_files_to_compact=2)
     assert len(todo) == 3
-    assert next_job_id(spark) - j0 == 1 + 2 * 3
+    assert next_job_id(spark) - j0 == 2 * 3
     back = spark.read.parquet(out)
     assert back.count() == 300 and dict(back.dtypes)["p"] == "int"
 

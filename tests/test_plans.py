@@ -647,6 +647,7 @@ _BNLJ_OK = {
     "hits_authorities",    # 1-row max-authority normalizer crossJoin
     "dq_report",           # scalar stats row
     "heavy_hitters_exact",  # 1-row N-total crossJoin onto candidates
+    "stream_kl_drift",     # 1-row all-time event-total crossJoin
     "kmeans_lloyd_exact",   # k-row centroid table broadcast per round
     "nb_classifier_train_score",  # |classes| = 5-row model table
     "psi_drift",           # 1-row totals
@@ -1441,21 +1442,15 @@ def test_engine_tables_reopen_through_the_handle():
     reopened through ``tmpstore.open_table`` with the schema
     ``tmpstore.write_table`` stored, never by a schema-inference
     read.  Fails on any ``.read...parquet(...)`` chain without a
-    ``.schema(...)`` outside the readers of external input
-    (``io.read_table``, ``io.compact_partitions``,
-    ``io.read_current_version``, ``stateful.streaming_session_close``)
-    — persist with ``write_table`` and reopen with ``open_table``."""
+    ``.schema(...)`` outside ``io.open_parquet``, the one opener of
+    external input — persist with ``write_table`` and reopen with
+    ``open_table``."""
     import ast
     import os
 
     import dados_publicos_etl_spark as pkg
 
-    external = {
-        ("io.py", "read_table"),
-        ("io.py", "compact_partitions"),
-        ("io.py", "read_current_version"),
-        ("stateful.py", "streaming_session_close"),
-    }
+    external = {("io.py", "open_parquet")}
 
     def chain(node) -> list[str]:
         """Attribute names along a call chain, outermost first."""
@@ -1498,6 +1493,63 @@ def test_engine_tables_reopen_through_the_handle():
     assert not offenders, (
         f"schema-inference reopens of engine-written tables: {offenders}"
         " — use tmpstore.write_table / open_table"
+    )
+
+
+def test_external_parquet_opens_through_one_footer_read():
+    """Static inventory of the external-parquet open: the schema of a
+    table the engine did not write comes from one footer read through
+    the lake filesystem (``io.parquet_footer``), and the event time is
+    rescaled by one rule (``io.event_time``).  Fails on ``io.py`` or a
+    ``streaming/`` module importing ``glob`` or ``pyarrow``, on a
+    ``streaming/`` module calling ``os.path.isdir``, and on an integer
+    ``div 1000`` timestamp rescale outside ``io.event_time``."""
+    import ast
+    import os
+
+    import dados_publicos_etl_spark as pkg
+
+    root = os.path.dirname(pkg.__file__)
+    offenders: list[str] = []
+    for dirpath, _dirs, files in os.walk(root):
+        for f in sorted(files):
+            if not f.endswith(".py"):
+                continue
+            rel = os.path.relpath(os.path.join(dirpath, f), root)
+            with open(os.path.join(dirpath, f)) as fh:
+                tree = ast.parse(fh.read(), filename=rel)
+            opener = rel == "io.py" or rel.startswith("streaming")
+            imported = {
+                a.name.split(".")[0] for n in ast.walk(tree)
+                if isinstance(n, ast.Import) for a in n.names
+            } | {
+                n.module.split(".")[0] for n in ast.walk(tree)
+                if isinstance(n, ast.ImportFrom) and n.module
+            }
+            if opener and imported & {"glob", "pyarrow"}:
+                offenders.append(f"{rel} imports {imported & {'glob', 'pyarrow'}}")
+            rule: set[int] = set()
+            for node in ast.walk(tree):
+                if isinstance(node, ast.FunctionDef) and (rel, node.name) == (
+                    "io.py", "event_time"
+                ):
+                    rule = set(range(node.lineno, node.end_lineno + 1))
+            for node in ast.walk(tree):
+                if (
+                    rel.startswith("streaming")
+                    and isinstance(node, ast.Call)
+                    and ast.unparse(node.func) == "os.path.isdir"
+                ):
+                    offenders.append(f"{rel}:{node.lineno} calls os.path.isdir")
+                if (
+                    isinstance(node, ast.Constant)
+                    and isinstance(node.value, str)
+                    and "div 1000" in node.value
+                    and node.lineno not in rule
+                ):
+                    offenders.append(f"{rel}:{node.lineno} rescales a timestamp")
+    assert not offenders, (
+        f"external opens outside io.open_parquet / io.event_time: {offenders}"
     )
 
 

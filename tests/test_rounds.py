@@ -10,6 +10,7 @@ from __future__ import annotations
 import pytest
 
 from dados_publicos_etl_spark import tmpstore
+from dados_publicos_etl_spark.plans import catalog  # noqa: F401
 from dados_publicos_etl_spark.plans.registry import QUERIES
 from dados_publicos_etl_spark.session import scoped_conf
 from dados_publicos_etl_spark.tmpstore import FixpointNotReached, Rounds
@@ -120,6 +121,10 @@ def test_k_truss_raises_past_its_round_bound(spark, monkeypatch):
         G.k_truss_edges(spark, SF_SMOKE)
 
 
+# queries whose oracle aggregates without GROUP BY: one row of NULLs
+_NULL_ROW = {"diff_in_diff", "mann_whitney_u"}
+
+
 @pytest.mark.parametrize(
     "name",
     [
@@ -138,19 +143,24 @@ def test_k_truss_raises_past_its_round_bound(spark, monkeypatch):
         "stream_topk_windows",
         "stream_late_drop",
         "stream_stream_outer_join",
+        "stream_kl_drift",
+        "diff_in_diff",
+        "sequence_gap_audit",
+        "mann_whitney_u",
     ],
 )
 def test_hits_authorities_on_zero_rows(spark, zero_row_sf_dir, name):
     """An empty graph has no maximum authority (None) and no node
     count (0); an empty embeddings table has no ``vec_id = 0`` query
     vector, trains no IVF cell and seeds no k-means cell; an empty
-    events table has no time bounds and writes an empty micro-batch
-    feed: each query returns the oracle's zero rows, not rows of NULL
-    scores, a ``ZeroDivisionError``, a ``TypeError``, an
-    ``AttributeError`` or a numpy ``AxisError``."""
+    events or orders table has no time or key bounds and writes an
+    empty micro-batch feed: each query returns the oracle's answer —
+    zero rows, or the one row of NULLs of an ungrouped aggregate —
+    not rows of NULL scores, a ``ZeroDivisionError``, a ``TypeError``,
+    a ``ValueError``, an ``AttributeError`` or a numpy ``AxisError``."""
     spec = QUERIES[name]
     out = spec.fn(spark, zero_row_sf_dir)
-    assert out.count() == 0
+    assert out.count() == (name in _NULL_ROW)
     compare(out, spec.oracle, zero_row_sf_dir)
 
 

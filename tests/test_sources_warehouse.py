@@ -584,43 +584,47 @@ def test_stateful_session_close_on_event_time_timeout(spark, tmp_path):
         streaming_session_close,
     )
 
-    d = tmp_path / "ev"
-    d.mkdir()
     t0 = 1_700_000_000_000_000  # epoch micros
     MIN = 60 * 1_000_000
 
-    def write(name, user, base_us, n=3):
-        pd.DataFrame(
-            {
-                "user_id": pd.Series([user] * n, dtype="int64"),
-                "ts": pd.to_datetime(
-                    [base_us + i * MIN for i in range(n)], unit="us"
-                ),
-            }
-        ).to_parquet(d / name, coerce_timestamps="us")
+    # the same events with ts a MICROS timestamp and a plain INT64 of
+    # epoch micros (the engine's event-time rule, io.event_time)
+    for unit in ("timestamp", "int64"):
+        d = tmp_path / unit
+        d.mkdir()
 
-    # users arrive 100 minutes apart; gap is 30 min, so each later
-    # batch's watermark closes the previous user's session
-    write("01.parquet", 1, t0)
-    write("02.parquet", 2, t0 + 100 * MIN)
-    write("03.parquet", 3, t0 + 200 * MIN)
-    write("04.parquet", 4, t0 + 300 * MIN)
+        def write(name, user, base_us, n=3):
+            us = [base_us + i * MIN for i in range(n)]
+            pd.DataFrame(
+                {
+                    "user_id": pd.Series([user] * n, dtype="int64"),
+                    "ts": pd.to_datetime(us, unit="us")
+                    if unit == "timestamp" else pd.Series(us, dtype="int64"),
+                }
+            ).to_parquet(d / name, coerce_timestamps="us")
 
-    out = streaming_session_close(spark, str(d))
-    closed = {
-        r["user_id"]: r
-        for r in out.filter("status = 'closed'").collect()
-    }
-    # sessions 1-3 closed: each later batch's watermark crosses the
-    # previous session's timeout, and the trailing empty micro-batch
-    # (watermark = last batch's max ts) closes session 3.  Session 4
-    # stays open — no watermark ever passes its timeout.
-    assert set(closed) == {1, 2, 3}
-    for uid, base in [(1, t0), (2, t0 + 100 * MIN), (3, t0 + 200 * MIN)]:
-        r = closed[uid]
-        assert r["start_us"] == base
-        assert r["end_us"] == base + 2 * MIN
-        assert r["n_events"] == 3
+        # users arrive 100 minutes apart; gap is 30 min, so each later
+        # batch's watermark closes the previous user's session
+        write("01.parquet", 1, t0)
+        write("02.parquet", 2, t0 + 100 * MIN)
+        write("03.parquet", 3, t0 + 200 * MIN)
+        write("04.parquet", 4, t0 + 300 * MIN)
+
+        out = streaming_session_close(spark, str(d))
+        closed = {
+            r["user_id"]: r
+            for r in out.filter("status = 'closed'").collect()
+        }
+        # sessions 1-3 closed: each later batch's watermark crosses the
+        # previous session's timeout, and the trailing empty micro-batch
+        # (watermark = last batch's max ts) closes session 3.  Session 4
+        # stays open — no watermark ever passes its timeout.
+        assert set(closed) == {1, 2, 3}, unit
+        for uid, base in [(1, t0), (2, t0 + 100 * MIN), (3, t0 + 200 * MIN)]:
+            r = closed[uid]
+            assert r["start_us"] == base, unit
+            assert r["end_us"] == base + 2 * MIN, unit
+            assert r["n_events"] == 3, unit
 
 
 def test_write_jsonl_shards_sizes_and_roundtrip(spark, sf_dir, tmp_path):
