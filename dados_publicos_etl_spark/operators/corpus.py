@@ -1297,7 +1297,7 @@ def corpus_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the global position rides the range-partitioned ranking — a
     # bare ROW_NUMBER() OVER (ORDER BY k) would funnel the whole
     # corpus key table through one Exchange SinglePartition task
-    ranked, _n = ranked_by_range(keyed, ["k", "doc_id"])
+    ranked, _, _ = ranked_by_range(keyed, ["k", "doc_id"])
     positioned = ranked.select("doc_id", (F.col("rn") - 1).alias("pos"))
     # floor, not a raw double->int cast (Spark truncates, DuckDB
     # rounds — same trap as benford_audit)

@@ -3,19 +3,25 @@
 A global ``ROW_NUMBER() OVER (ORDER BY ...)`` (no PARTITION BY) plans
 as one ``Exchange SinglePartition`` + one task sorting the whole
 relation — the classic 100 TB killer: at cluster scale one executor
-sorts the corpus while the rest idle.  The scalable shape (used by
-the ``global_row_number`` catalog query, and reused here by
-``decile_lift_table`` and ``vocab_coverage``):
+sorts the corpus while the rest idle.  The scalable shape, built once
+in :func:`_ranged` and shared by every rank, running sum and running
+max of the catalog:
 
 1. ``repartitionByRange`` on the sort key — range partitions are
    GLOBALLY ordered, so partition p's rows all rank before
    partition p+1's;
 2. materialize that layout (two jobs must see the SAME sampled range
    bounds);
-3. count rows per range partition — a P-row driver-side scalar;
-4. convert counts to cumulative offsets and add each partition's
-   offset to its LOCAL ``row_number`` — every partition ranks
-   independently; the only global step is the P-row offset scan.
+3. aggregate each range partition (row count, value sums, value max)
+   — a P-row driver-side collect;
+4. fold those rows into per-partition offsets (rows and values of
+   every EARLIER partition), broadcast them, and merge each with the
+   partition-LOCAL window (``row_number``, running sum, running max
+   over ``__rbr_pid``) — every partition ranks independently; the
+   only global step is the P-row offset scan.
+
+:func:`ranked_by_range` is the rank with 0..n running sums;
+:func:`prefix_max_by_range` the strictly-preceding running max.
 
 The reference has no distributed ranking operator (its pandas
 ``rank()`` equivalents are single-node); this module exists for the
@@ -24,61 +30,95 @@ The reference has no distributed ranking operator (its pandas
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from typing import Sequence
+
+from pyspark.sql import Column, DataFrame, Row, Window
 from pyspark.sql import functions as F
 
 _DEFAULT_PARTS = 16
 
 
-def ranked_by_range(
+def _ranged(
     df: DataFrame,
     order: list[Column | str],
-    num_partitions: int = _DEFAULT_PARTS,
-    rn_col: str = "rn",
-) -> tuple[DataFrame, int]:
-    """Append a global 1-based ``rn_col`` to ``df`` under the total
-    order ``order``, with NO SinglePartition exchange.
+    num_partitions: int,
+    *aggs: Column,
+) -> tuple[DataFrame, list[Row]]:
+    """The range-partitioned layout of ``df`` under ``order``, with its
+    partition id ``__rbr_pid``, and the ``(__rbr_pid, *aggs)`` row of
+    every non-empty range partition, in partition order.
 
-    Returns ``(ranked_df, total_row_count)`` — the count comes free
-    from the offset scan.  ``order`` must be a deterministic total
-    order (include a tie-break key), or ranks are not reproducible.
-
-    The ranged layout is localCheckpoint-materialized so the
-    offset-count job and the ranking job read the SAME physical
-    partitioning (``repartitionByRange`` samples range boundaries;
-    two independent executions could draw different bounds).  On a
-    real cluster, persist the ranged layout to storage instead —
-    identical two-job shape, and the layout is reusable by any
-    downstream rank consumer.
+    The layout is localCheckpoint-materialized so the statistics job
+    and the consumer's job read the SAME physical partitioning
+    (``repartitionByRange`` samples range boundaries; two independent
+    executions could draw different bounds).  On a real cluster,
+    persist the ranged layout to storage instead — identical two-job
+    shape, and the layout is reusable by any downstream consumer.
     """
     ranged = (
         df.repartitionByRange(num_partitions, *order)
         .withColumn("__rbr_pid", F.spark_partition_id())
         .localCheckpoint()
     )
-    counts = sorted(
-        ranged.groupBy("__rbr_pid").count().collect(),
+    stats = sorted(
+        ranged.groupBy("__rbr_pid").agg(*aggs).collect(),
         key=lambda r: r["__rbr_pid"],
     )
-    offsets: list[tuple[int, int]] = []
-    acc = 0
-    for r in counts:
-        offsets.append((r["__rbr_pid"], acc))
-        acc += r["count"]
+    return ranged, stats
+
+
+def ranked_by_range(
+    df: DataFrame,
+    order: list[Column | str],
+    sums: Sequence[str] = (),
+    num_partitions: int = _DEFAULT_PARTS,
+) -> tuple[DataFrame, int, tuple[int, ...]]:
+    """Append a global 1-based ``rn`` and, per integral column ``c``
+    of ``sums``, the global running sum ``cum_<c>`` to ``df`` under
+    the total order ``order`` — with NO SinglePartition exchange.
+
+    Returns ``(df + rn + cum_<c>..., total_rows, (total_<c>, ...))``:
+    the row count and every column's grand total come free from the
+    offset scan.  ``order`` must be a deterministic total order
+    (include a tie-break key), or ranks are not reproducible.  This
+    is also the scalable form of ``SUM(c) OVER (ORDER BY ...)``, whose
+    naive plan sorts the whole relation in one task; ``sums`` must be
+    integral (exact merge; float offsets would reorder additions).
+    """
+    ranged, stats = _ranged(
+        df,
+        order,
+        num_partitions,
+        F.count(F.lit(1)),
+        *[F.sum(c) for c in sums],
+    )
+    offsets: list[tuple] = []
+    acc_n, acc_v = 0, [0] * len(sums)
+    for pid, n, *s in stats:
+        offsets.append((pid, acc_n, *acc_v))
+        acc_n += n
+        acc_v = [a + (v or 0) for a, v in zip(acc_v, s)]
     off = df.sparkSession.createDataFrame(
-        offsets, "__rbr_pid int, __rbr_off long"
+        offsets,
+        "__rbr_pid int, __rbr_off long"
+        + "".join(f", __rbr_voff_{i} long" for i in range(len(sums))),
     )
     w = Window.partitionBy("__rbr_pid").orderBy(*order)
+    wcum = w.rowsBetween(Window.unboundedPreceding, 0)
+    local = {"__rbr_local": F.row_number().over(w)}
+    merged = {"rn": (F.col("__rbr_local") + F.col("__rbr_off")).cast("long")}
+    for i, c in enumerate(sums):
+        local[f"__rbr_vlocal_{i}"] = F.sum(c).over(wcum)
+        merged[f"cum_{c}"] = (
+            F.col(f"__rbr_vlocal_{i}") + F.col(f"__rbr_voff_{i}")
+        ).cast("long")
     ranked = (
-        ranged.withColumn("__rbr_local", F.row_number().over(w))
+        ranged.withColumns(local)
         .join(F.broadcast(off), "__rbr_pid")
-        .withColumn(
-            rn_col,
-            (F.col("__rbr_local") + F.col("__rbr_off")).cast("long"),
-        )
-        .drop("__rbr_pid", "__rbr_local", "__rbr_off")
+        .withColumns(merged)
+        .drop("__rbr_pid", *local, *off.columns[1:])
     )
-    return ranked, acc
+    return ranked, acc_n, tuple(acc_v)
 
 
 def ntile_expr(rn_col: str, n_rows: int, n_tiles: int) -> Column:
@@ -105,127 +145,6 @@ def ntile_expr(rn_col: str, n_rows: int, n_tiles: int) -> Column:
     ).cast("int")
 
 
-def prefix_sums_by_range(
-    df: DataFrame,
-    order: list[Column | str],
-    value_col: str,
-    num_partitions: int = _DEFAULT_PARTS,
-) -> tuple[DataFrame, int, int]:
-    """Global rank AND global running sum of ``value_col`` under the
-    total order ``order`` — with NO SinglePartition exchange.
-
-    The same two-job shape as :func:`ranked_by_range`, carrying one
-    more per-partition statistic: each range partition's value sum
-    becomes a cumulative offset added to the partition-local running
-    sum, exactly as row counts become rank offsets.  This is the
-    scalable form of ``SUM(x) OVER (ORDER BY ...)`` — the naive plan
-    sorts the whole relation in one task.  ``value_col`` must be
-    integral (exact merge; float offsets would reorder additions).
-
-    Returns ``(df + rn + cum, total_rows, total_value)``.
-    """
-    ranged = (
-        df.repartitionByRange(num_partitions, *order)
-        .withColumn("__rbr_pid", F.spark_partition_id())
-        .localCheckpoint()
-    )
-    stats = sorted(
-        ranged.groupBy("__rbr_pid")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum(value_col).alias("s"))
-        .collect(),
-        key=lambda r: r["__rbr_pid"],
-    )
-    offsets: list[tuple[int, int, int]] = []
-    acc_n, acc_s = 0, 0
-    for r in stats:
-        offsets.append((r["__rbr_pid"], acc_n, acc_s))
-        acc_n += r["n"]
-        acc_s += r["s"] or 0
-    off = df.sparkSession.createDataFrame(
-        offsets, "__rbr_pid int, __rbr_off long, __rbr_voff long"
-    )
-    w = Window.partitionBy("__rbr_pid").orderBy(*order)
-    out = (
-        ranged.withColumn("__rbr_local", F.row_number().over(w))
-        .withColumn(
-            "__rbr_vlocal",
-            F.sum(value_col).over(w.rowsBetween(Window.unboundedPreceding, 0)),
-        )
-        .join(F.broadcast(off), "__rbr_pid")
-        .withColumn(
-            "rn", (F.col("__rbr_local") + F.col("__rbr_off")).cast("long")
-        )
-        .withColumn(
-            "cum", (F.col("__rbr_vlocal") + F.col("__rbr_voff")).cast("long")
-        )
-        .drop("__rbr_pid", "__rbr_local", "__rbr_vlocal", "__rbr_off", "__rbr_voff")
-    )
-    return out, acc_n, acc_s
-
-
-def prefix_sums_multi_by_range(
-    df: DataFrame,
-    order: list[Column | str],
-    value_cols: list[str],
-    num_partitions: int = _DEFAULT_PARTS,
-) -> tuple[DataFrame, int, tuple[int, ...]]:
-    """:func:`prefix_sums_by_range` generalized to SEVERAL integral
-    value columns in ONE ranged pass (r12): the output carries ``rn``
-    plus one running sum ``cum_<col>`` per value column, and the
-    per-partition stats collect returns every column's grand total
-    alongside the row count — a consumer that previously paid a
-    separate ``agg().first()`` job for totals (ks_test_twosample's
-    sample sizes: one full extra execution of its tie-table subtree)
-    gets them from the offset scan it already does.
-
-    Returns ``(df + rn + cum_<c>..., total_rows, (total_<c>, ...))``.
-    """
-    ranged = (
-        df.repartitionByRange(num_partitions, *order)
-        .withColumn("__rbr_pid", F.spark_partition_id())
-        .localCheckpoint()
-    )
-    aggs = [F.count(F.lit(1)).alias("__n")] + [
-        F.sum(c).alias(f"__s_{i}") for i, c in enumerate(value_cols)
-    ]
-    stats = sorted(
-        ranged.groupBy("__rbr_pid").agg(*aggs).collect(),
-        key=lambda r: r["__rbr_pid"],
-    )
-    offsets: list[tuple] = []
-    acc_n = 0
-    acc_v = [0] * len(value_cols)
-    for r in stats:
-        offsets.append((r["__rbr_pid"], acc_n, *acc_v))
-        acc_n += r["__n"]
-        for i in range(len(value_cols)):
-            acc_v[i] += r[f"__s_{i}"] or 0
-    schema = "__rbr_pid int, __rbr_off long" + "".join(
-        f", __rbr_voff_{i} long" for i in range(len(value_cols))
-    )
-    off = df.sparkSession.createDataFrame(offsets, schema)
-    w = Window.partitionBy("__rbr_pid").orderBy(*order)
-    wcum = w.rowsBetween(Window.unboundedPreceding, 0)
-    out = ranged.withColumn("__rbr_local", F.row_number().over(w))
-    for i, c in enumerate(value_cols):
-        out = out.withColumn(f"__rbr_vlocal_{i}", F.sum(c).over(wcum))
-    out = (
-        out.join(F.broadcast(off), "__rbr_pid")
-        .withColumn(
-            "rn", (F.col("__rbr_local") + F.col("__rbr_off")).cast("long")
-        )
-        .drop("__rbr_pid", "__rbr_local", "__rbr_off")
-    )
-    for i, c in enumerate(value_cols):
-        out = out.withColumn(
-            f"cum_{c}",
-            (
-                F.col(f"__rbr_vlocal_{i}") + F.col(f"__rbr_voff_{i}")
-            ).cast("long"),
-        ).drop(f"__rbr_vlocal_{i}", f"__rbr_voff_{i}")
-    return out, acc_n, tuple(acc_v)
-
-
 def prefix_max_by_range(
     df: DataFrame,
     order: list[Column | str],
@@ -239,7 +158,7 @@ def prefix_max_by_range(
     exchange.  NULL for the globally-first row (empty frame), the
     exact window semantics.
 
-    Same two-job shape as :func:`ranked_by_range`: each range
+    The same ranged layout as :func:`ranked_by_range`: each range
     partition computes its LOCAL strictly-preceding running max; a
     P-row driver scan turns per-partition maxes into "max of every
     EARLIER partition" offsets; ``greatest`` merges the two (Spark's
@@ -248,21 +167,13 @@ def prefix_max_by_range(
     merge-order-independent, so unlike prefix sums this is exact for
     any orderable type.
     """
-    ranged = (
-        df.repartitionByRange(num_partitions, *order)
-        .withColumn("__rbr_pid", F.spark_partition_id())
-        .localCheckpoint()
-    )
-    stats = sorted(
-        ranged.groupBy("__rbr_pid").agg(F.max(value_col).alias("m")).collect(),
-        key=lambda r: r["__rbr_pid"],
-    )
+    ranged, stats = _ranged(df, order, num_partitions, F.max(value_col))
     offsets: list[tuple[int, object]] = []
     run = None
-    for r in stats:
-        offsets.append((r["__rbr_pid"], run))
-        if r["m"] is not None and (run is None or r["m"] > run):
-            run = r["m"]
+    for pid, m in stats:
+        offsets.append((pid, run))
+        if m is not None and (run is None or m > run):
+            run = m
     val_type = ranged.schema[value_col].dataType.simpleString()
     off = df.sparkSession.createDataFrame(
         offsets, f"__rbr_pid int, __rbr_pmax {val_type}"

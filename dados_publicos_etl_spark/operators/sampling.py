@@ -695,7 +695,7 @@ def _serpentine_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     sized = docs.select(
         "doc_id", F.size(tokens("text")).alias("n_tokens")
     )
-    ranked, _n = ranked_by_range(
+    ranked, _, _ = ranked_by_range(
         sized, [F.col("n_tokens").desc(), F.col("doc_id")]
     )
     r = F.col("rn") - 1
@@ -1057,15 +1057,13 @@ def epoch_schedule_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     "maps a training-step token index back to its source document "
     "(data-ablation forensics, membership auditing, resumable "
     "packing all need it).  The global running sum rides "
-    "prefix_sums_by_range (range partitions + broadcast offsets — "
+    "ranked_by_range (range partitions + broadcast offsets — "
     "never the SinglePartition sort the naive SUM() OVER (ORDER BY) "
     "plans); token counts are exact integers, so offsets merge "
     "order-independently at any scale.",
 )
 def token_stream_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dados_publicos_etl_spark.operators.ranking import (
-        prefix_sums_by_range,
-    )
+    from dados_publicos_etl_spark.operators.ranking import ranked_by_range
 
     docs = read_table(spark, sf_dir, "documents")
     tok = docs.select(
@@ -1074,12 +1072,14 @@ def token_stream_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("n_tokens"),
     )
-    cum, _n, _total = prefix_sums_by_range(tok, ["doc_id"], "n_tokens")
+    cum, _, _ = ranked_by_range(tok, ["doc_id"], ["n_tokens"])
     return cum.select(
         "doc_id",
         "n_tokens",
-        (F.col("cum") - F.col("n_tokens")).cast("long").alias("token_start"),
-        F.col("cum").cast("long").alias("token_end"),
+        (F.col("cum_n_tokens") - F.col("n_tokens"))
+        .cast("long")
+        .alias("token_start"),
+        F.col("cum_n_tokens").cast("long").alias("token_end"),
     )
 
 
@@ -1310,7 +1310,7 @@ _TB_NUM, _TB_DEN = 3, 5  # keep the best docs covering 60% of corpus tokens
     "compute exceeds unique data, train on the best-k-token subset), "
     "reported per (lang, source) so the mixture impact of the cut is "
     "visible.  Scale shape: the global quality ordering and running "
-    "token sum ride prefix_sums_by_range (range partitions + "
+    "token sum ride ranked_by_range (range partitions + "
     "P-row offset scan) — NO SinglePartition sort anywhere; the "
     "budget is exact integer arithmetic on the offset totals; the "
     "final rollup is one partial-aggregated GROUP BY.",
@@ -1326,9 +1326,7 @@ def token_budget_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     a single row).
     """
     from dados_publicos_etl_spark.functions.text import tokens
-    from dados_publicos_etl_spark.operators.ranking import (
-        prefix_sums_by_range,
-    )
+    from dados_publicos_etl_spark.operators.ranking import ranked_by_range
 
     docs = read_table(spark, sf_dir, "documents")
     t = docs.select(
@@ -1338,11 +1336,11 @@ def token_budget_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(tokens("text")).cast("long").alias("n_toks"),
         F.size(F.array_distinct(tokens("text"))).cast("long").alias("score"),
     )
-    ranked, _n_rows, total_toks = prefix_sums_by_range(
-        t, [F.col("score").desc(), F.col("doc_id").asc()], "n_toks"
+    ranked, _, (total_toks,) = ranked_by_range(
+        t, [F.col("score").desc(), F.col("doc_id").asc()], ["n_toks"]
     )
     budget = total_toks * _TB_NUM // _TB_DEN
-    sel = F.col("cum") <= F.lit(budget)
+    sel = F.col("cum_n_toks") <= F.lit(budget)
     return ranked.groupBy("lang", "source").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum(F.when(sel, 1).otherwise(0)).cast("long").alias("n_selected"),

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from dados_publicos_etl_spark.functions.numeric import money_sum
 from dados_publicos_etl_spark.functions.text import hex_long
-from dados_publicos_etl_spark.io import read_table
+from dados_publicos_etl_spark.io import _fs, put_file, read_table
 from dados_publicos_etl_spark.plans.registry import query
 from dados_publicos_etl_spark.tmpstore import (
     open_table,
@@ -1092,7 +1092,7 @@ def global_row_number(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_orderpriority") == "1-URGENT")
         .select("o_orderkey", "o_totalprice")
     )
-    ranked, _ = ranked_by_range(
+    ranked, _, _ = ranked_by_range(
         orders,
         [F.desc("o_totalprice"), "o_orderkey"],
         num_partitions=_GRN_PARTS,
@@ -1178,25 +1178,31 @@ def _corrupt_scan_dir(spark: SparkSession, sf_dir: str) -> str:
     """A copy of documents.parquet plus one deliberately corrupt
     parquet file (valid magic, garbage body — the torn-write /
     truncated-upload artifact every 100 TB ingest eventually meets),
-    built once per (session, corpus)."""
+    built once per (session, corpus) through the lake filesystem."""
     import os
-    import shutil
 
     def build(workdir: str) -> str:
-        src = os.path.join(sf_dir, "documents.parquet")
-        if os.path.isdir(src):  # directory layout (scale-probe replica)
-            for i, part in enumerate(sorted(os.listdir(src))):
-                if part.endswith(".parquet"):
-                    shutil.copy(
-                        os.path.join(src, part),
-                        os.path.join(workdir, f"part-{i:03d}.parquet"),
-                    )
-        else:
-            shutil.copy(src, os.path.join(workdir, "part-000.parquet"))
-        with open(os.path.join(workdir, "part-bad.parquet"), "wb") as f:
-            # parquet magic + garbage: footer parse fails, row count is
-            # unrecoverable — exactly the shape ignoreCorruptFiles skips
-            f.write(b"PAR1" + b"\x00garbage\x00" * 64)
+        sc = spark.sparkContext
+        hadoop_fs = sc._jvm.org.apache.hadoop.fs
+        fs, src = _fs(os.path.join(sf_dir, "documents.parquet"))
+        dst_fs, dst = _fs(workdir)
+        # a file lists as itself; a folder (scale-probe replica) as its parts
+        parts = sorted(
+            (st.getPath() for st in fs.listStatus(src)
+             if st.getPath().getName().endswith(".parquet")),
+            key=lambda p: p.getName(),
+        )
+        for i, part in enumerate(parts):
+            hadoop_fs.FileUtil.copy(
+                fs, part, dst_fs, hadoop_fs.Path(dst, f"part-{i:03d}.parquet"),
+                False, sc._jsc.hadoopConfiguration(),
+            )
+        # parquet magic + garbage: footer parse fails, row count is
+        # unrecoverable — exactly the shape ignoreCorruptFiles skips
+        put_file(
+            os.path.join(workdir, "part-bad.parquet"),
+            b"PAR1" + b"\x00garbage\x00" * 64,
+        )
         return workdir
 
     return session_artifact("corrupt_scan", sf_dir, build)
@@ -1220,8 +1226,6 @@ def _corrupt_scan_dir(spark: SparkSession, sf_dir: str) -> str:
     "stack; without the conf one bad object fails a 100 TB job.",
 )
 def scan_corrupt_tolerant(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     d = _corrupt_scan_dir(spark, sf_dir)
     # the tolerance is a READ OPTION, not a session conf toggle: the
     # returned DataFrame is lazy, so a conf set/restore around plan
@@ -1246,7 +1250,10 @@ def scan_corrupt_tolerant(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n").alias("n_rows"),
         F.count(F.lit(1)).alias("n_files_read"),
     )
-    n_listed = len([x for x in os.listdir(d) if x.endswith(".parquet")])
+    fs, root = _fs(d)
+    n_listed = sum(
+        st.getPath().getName().endswith(".parquet") for st in fs.listStatus(root)
+    )
     return stats.select(
         F.col("n_rows").cast("long"),
         (F.lit(n_listed) - F.col("n_files_read"))

@@ -273,7 +273,7 @@ def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    ranked, _ = ranked_by_range(tf, [F.desc("cnt"), "token"])
+    ranked, _, _ = ranked_by_range(tf, [F.desc("cnt"), "token"])
     ranked = ranked.select("cnt", "rn")
     agg = ranked.agg(
         F.sum("cnt").alias("total"),
@@ -1094,73 +1094,6 @@ def kmeans_lloyd_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("long"),
         )
         .select("cell", "n_members", "inertia", "centroid_l1")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Chi-square independence test (categorical feature screening)
-# ---------------------------------------------------------------------------
-
-
-@query(
-    "chi_square_independence",
-    oracle="""
-    WITH cells AS (
-      SELECT l_returnflag AS a, l_linestatus AS b,
-             CAST(COUNT(*) AS BIGINT) AS o
-      FROM lineitem GROUP BY a, b
-    ), margins AS (
-      SELECT a, b, o,
-             SUM(o) OVER (PARTITION BY a) AS row_n,
-             SUM(o) OVER (PARTITION BY b) AS col_n,
-             SUM(o) OVER () AS n
-      FROM cells
-    ), contrib AS (
-      SELECT a, b, o,
-             (CAST(row_n AS DOUBLE) * col_n) / n AS e
-      FROM margins
-    )
-    SELECT a, b, o,
-           ROUND(e, 4) AS expected,
-           ROUND((o - e) * (o - e) / e, 6) AS contribution,
-           ROUND(SUM((o - e) * (o - e) / e) OVER (), 6) AS chi2
-    FROM contrib
-    """,
-    description="Chi-square independence test between two categorical "
-    "columns (returnflag x linestatus) — the feature-screening / "
-    "drift primitive behind contingency audits: observed cell counts "
-    "from ONE partial-aggregated GROUP BY, margins and expected "
-    "counts via windows over the |A|x|B| CELL table (never the "
-    "rows), per-cell contributions and the chi-square statistic "
-    "attached to every cell.  All inputs are exact integer counts, "
-    "so the float expression tree is identical on both engines and "
-    "rounds identically.",
-)
-def chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = read_table(spark, sf_dir, "lineitem")
-    cells = li.groupBy(
-        F.col("l_returnflag").alias("a"),
-        F.col("l_linestatus").alias("b"),
-    ).agg(F.count(F.lit(1)).alias("o"))
-    wa = Window.partitionBy("a")
-    wb = Window.partitionBy("b")
-    wall = Window.partitionBy()
-    e = (
-        F.sum("o").over(wa).cast("double")
-        * F.sum("o").over(wb)
-        / F.sum("o").over(wall)
-    )
-    contrib = (F.col("o") - F.col("e")) * (F.col("o") - F.col("e")) / F.col("e")
-    return (
-        cells.withColumn("e", e)
-        .select(
-            "a",
-            "b",
-            "o",
-            F.round("e", 4).alias("expected"),
-            F.round(contrib, 6).alias("contribution"),
-            F.round(F.sum(contrib).over(wall), 6).alias("chi2"),
-        )
     )
 
 

@@ -80,6 +80,12 @@ def query(
     __spark_entry__.rows_only() (round-9 verdict item #8)."""
 
     def deco(fn: SparkQuery) -> SparkQuery:
+        if name in QUERIES:
+            first = QUERIES[name].fn
+            raise ValueError(
+                f"query {name!r} is already registered by "
+                f"{first.__module__}.{first.__qualname__}"
+            )
         QUERIES[name] = QuerySpec(name=name, fn=fn, oracle=oracle,
                                   description=description,
                                   rows_only_reason=rows_only_reason)

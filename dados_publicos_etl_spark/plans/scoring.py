@@ -407,7 +407,7 @@ def decile_lift_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Range-partitioned global rank instead of a SinglePartition
     # NTILE window: every partition ranks independently, the only
     # global step is the P-row offset scan (see operators/ranking.py).
-    ranked, n_rows = ranked_by_range(
+    ranked, n_rows, _ = ranked_by_range(
         scored,
         [F.desc("l_discount"), "l_orderkey", "l_linenumber", "bad"],
     )
@@ -660,7 +660,7 @@ def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("dk"),
     ).select("custkey", "monetary_c", "dk.dim", "dk.keyv")
-    ranked, total = ranked_by_range(
+    ranked, total, _ = ranked_by_range(
         melted, ["dim", F.desc("keyv"), "custkey"]
     )
     n = total // 3
@@ -720,7 +720,7 @@ _PARETO_PCTS = (1, 5, 10, 25, 50)
     "total revenue carried by the top 1/5/10/25/50% of orders — the "
     "'do 20% of orders make 80% of revenue?' readout.  The global "
     "rank AND the global running revenue both come from "
-    "prefix_sums_by_range (operators/ranking.py): per-range-"
+    "ranked_by_range (operators/ranking.py): per-range-"
     "partition local cumsum + broadcast per-partition value offsets "
     "— the scalable form of SUM() OVER (ORDER BY ...), whose naive "
     "plan funnels the whole fact table through one task.  Exact "
@@ -728,17 +728,15 @@ _PARETO_PCTS = (1, 5, 10, 25, 50)
     "exact totals.  Plan-pinned SinglePartition-free.",
 )
 def pareto_revenue_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dados_publicos_etl_spark.operators.ranking import (
-        prefix_sums_by_range,
-    )
+    from dados_publicos_etl_spark.operators.ranking import ranked_by_range
 
     orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_totalprice",
         F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("cents"),
     )
-    ranked, n, s = prefix_sums_by_range(
-        orders, [F.desc("o_totalprice"), "o_orderkey"], "cents"
+    ranked, n, (s,) = ranked_by_range(
+        orders, [F.desc("o_totalprice"), "o_orderkey"], ["cents"]
     )
     # one output row PER pct even when two pcts land on the same rank
     # (small n): a broadcast (pct, target-rank) dimension joined on rn,
@@ -755,7 +753,9 @@ def pareto_revenue_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "pct",
             F.col("rn").cast("long").alias("n_orders"),
-            (F.col("cum").cast("double") / float(s)).alias("revenue_share"),
+            (F.col("cum_cents").cast("double") / float(s)).alias(
+                "revenue_share"
+            ),
         )
         .orderBy("pct")
     )

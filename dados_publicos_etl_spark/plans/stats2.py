@@ -29,7 +29,7 @@ from dados_publicos_etl_spark.functions.numeric import (
 )
 from dados_publicos_etl_spark.functions.text import hex_long
 from dados_publicos_etl_spark.io import read_table
-from dados_publicos_etl_spark.operators.ranking import prefix_sums_by_range
+from dados_publicos_etl_spark.operators.ranking import ranked_by_range
 from dados_publicos_etl_spark.plans.mining import _EDGES_SQL, _co_edges
 from dados_publicos_etl_spark.plans.registry import query
 from dados_publicos_etl_spark.session import machine_sized_shuffle
@@ -207,8 +207,9 @@ _KS_B = "5-LOW"
     "the range-partitioned prefix-sum machinery "
     "(operators/ranking.py): per-partition running sums plus a P-row "
     "offset table, NO SinglePartition window anywhere in the plan.  "
-    "Sample sizes are a 1-row scalar aggregate (the PageRank n-count "
-    "pattern).  Output: exact integer D numerator, D, and the "
+    "The sample sizes are that scan's grand totals, and an empty "
+    "tie table gives the oracle's zero rows.  Output: exact integer "
+    "D numerator, D, and the "
     "sqrt(n1*n2/(n1+n2))-scaled KS lambda.",
 )
 def ks_test_twosample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -230,13 +231,11 @@ def ks_test_twosample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # gap cumsum is assembled by linearity: cum_gap = n2*cum_c1 -
     # n1*cum_c2, the SAME exact integers as prefixing the per-row
     # gap directly.
-    from dados_publicos_etl_spark.operators.ranking import (
-        prefix_sums_multi_by_range,
-    )
-
-    cums, _, (n1, n2) = prefix_sums_multi_by_range(
-        ties, [F.col("val")], ["c1", "c2"]
-    )
+    cums, _, (n1, n2) = ranked_by_range(ties, [F.col("val")], ["c1", "c2"])
+    if n1 + n2 == 0:  # no tie group: the oracle's GROUP BY gives no row
+        return spark.createDataFrame(
+            [], "n1 int, n2 int, d_num long, d_stat double, ks_lambda double"
+        )
     cum = cums.withColumn(
         "cum",
         F.lit(int(n2)) * F.col("cum_c1") - F.lit(int(n1)) * F.col("cum_c2"),
@@ -858,8 +857,6 @@ def kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     "order-deterministic).",
 )
 def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dados_publicos_etl_spark.operators.ranking import ranked_by_range
-
     orders = read_table(spark, sf_dir, "orders")
     daily = orders.groupBy(
         F.datediff(
@@ -885,7 +882,7 @@ def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             / (F.col("b.d") - F.col("a.d")).cast("double")
         ).alias("s")
     )
-    ranked, n = ranked_by_range(slopes, [F.col("s")])
+    ranked, n, _ = ranked_by_range(slopes, [F.col("s")])
     k1, k2 = (n + 1) // 2, (n + 2) // 2
     return ranked.filter(F.col("rn").isin(k1, k2)).agg(
         F.lit(n).cast("long").alias("n_pairs"),
@@ -1088,18 +1085,18 @@ def equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("val")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    cum, _, n = prefix_sums_by_range(ties, [F.col("val")], "cnt")
+    cum, _, (n,) = ranked_by_range(ties, [F.col("val")], ["cnt"])
     b = _EQD_B
     # integer floors via div; k covers (B*cum_prev/n, B*cum/n]
-    lo = F.expr(f"({b} * (cum - cnt)) div {int(n)} + 1")
-    hi = F.expr(f"({b} * cum) div {int(n)}")
+    lo = F.expr(f"({b} * (cum_cnt - cnt)) div {int(n)} + 1")
+    hi = F.expr(f"({b} * cum_cnt) div {int(n)}")
     return (
         cum.filter(hi >= lo)
         .select(
-            F.explode(F.expr(f"sequence(({b} * (cum - cnt)) div {int(n)} + 1,"
-                             f" ({b} * cum) div {int(n)})")).alias("bucket"),
+            F.explode(F.expr(f"sequence(({b} * (cum_cnt - cnt)) div {int(n)} + 1,"
+                             f" ({b} * cum_cnt) div {int(n)})")).alias("bucket"),
             F.col("val").alias("upper_value"),
-            F.col("cum").cast("long").alias("cum_rows"),
+            F.col("cum_cnt").cast("long").alias("cum_rows"),
         )
         .filter((F.col("bucket") >= 1) & (F.col("bucket") <= b))
     )
@@ -1177,10 +1174,6 @@ def quantile_normalize_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # collect.  Halves the sampling passes, materializations and
     # collects of the previous two-call shape; cumulative integers
     # are unchanged, so the oracle hash is too.
-    from dados_publicos_etl_spark.operators.ranking import (
-        prefix_sums_multi_by_range,
-    )
-
     ties = (
         cust.filter(F.col("c_mktsegment").isin(_QN_A, _QN_B))
         .select(
@@ -1199,9 +1192,7 @@ def quantile_normalize_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("sg") == 1, F.col("cnt")).otherwise(0).alias("cb"),
         )
     )
-    cums, _, (a_n, b_n) = prefix_sums_multi_by_range(
-        ties, ["sg", "val"], ["ca", "cb"]
-    )
+    cums, _, (a_n, b_n) = ranked_by_range(ties, ["sg", "val"], ["ca", "cb"])
     a_cum = cums.filter(F.col("sg") == 0).withColumnRenamed("cum_ca", "cum")
     b_cum = cums.filter(F.col("sg") == 1).withColumnRenamed("cum_cb", "cum")
     a_bounds = (

@@ -22,7 +22,6 @@ from dados_publicos_etl_spark.functions.text import hex_long
 from dados_publicos_etl_spark.io import read_table
 from dados_publicos_etl_spark.operators.ranking import (
     ntile_expr,
-    prefix_sums_by_range,
     ranked_by_range,
 )
 from dados_publicos_etl_spark.plans.registry import QUERIES, query
@@ -86,7 +85,7 @@ _MW_B = "5-LOW"
     "TIE-GROUP table in one hash aggregate; doubled midranks come "
     "from the running tie count (r2 = 2*below + t + 1, integer-exact "
     "on both engines), and the one data-scale ordered scan — the "
-    "cumulative tie count over values — rides prefix_sums_by_range "
+    "cumulative tie count over values — rides ranked_by_range "
     "(range partitions + broadcast offsets, NO SinglePartition "
     "window).  The tie-corrected normal approximation "
     "z = (U - n1n2/2) / sqrt(n1n2/12 ((N+1) - sum(t^3-t)/(N(N-1)))) "
@@ -113,10 +112,10 @@ def mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
             [(None,) * 4], "n1 int, n2 int, u2a long, z double"
         )
     pooled = ties.withColumn("t", F.col("c1") + F.col("c2"))
-    cum, _, _ = prefix_sums_by_range(pooled, [F.col("val")], "t")
+    cum, _, _ = ranked_by_range(pooled, [F.col("val")], ["t"])
     stats = cum.agg(
         F.sum(
-            F.col("c1") * (2 * F.col("cum") - F.col("t") + 1)
+            F.col("c1") * (2 * F.col("cum_t") - F.col("t") + 1)
         ).alias("r2a"),
         F.sum(
             F.col("t").cast("decimal(38,0)") * F.col("t") * F.col("t")
@@ -280,7 +279,7 @@ def nb_score_reliability(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("correct").cast("int").alias("ok"),
         "score",
     )
-    ranked, n = ranked_by_range(
+    ranked, n, _ = ranked_by_range(
         preds, [F.desc("score"), F.col("doc_id")]
     )
     tiled = ranked.withColumn("decile", ntile_expr("rn", n, 10))

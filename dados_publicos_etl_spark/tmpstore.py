@@ -107,8 +107,11 @@ import tempfile
 import threading
 from typing import Any, Callable, NamedTuple, Sequence
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql.types import StructType
+
+from dados_publicos_etl_spark.io import _fs
 
 CACHE_LOCK = threading.Lock()
 # (name, sf_dir, params) -> (fingerprint, TemporaryDirectory, value)
@@ -116,20 +119,21 @@ _ARTIFACTS: dict[tuple, tuple] = {}
 
 
 def corpus_fingerprint(sf_dir: str | None) -> tuple | None:
-    """``(entry, mtime_ns, size)`` of every top-level ``*.parquet``
-    entry of ``sf_dir``; None when it cannot be listed."""
+    """``(entry, modification time, length)`` of every top-level
+    ``*.parquet`` entry of ``sf_dir``, listed through the lake
+    filesystem (any Hadoop URI); None when it cannot be listed."""
     if not sf_dir:
         return None
     try:
-        with os.scandir(sf_dir) as it:
-            return tuple(sorted(
-                (e.name, st.st_mtime_ns, st.st_size)
-                for e in it
-                if e.name.endswith(".parquet")
-                for st in (e.stat(),)
-            ))
-    except OSError:
+        fs, root = _fs(sf_dir)
+        listing = fs.listStatus(root)
+    except Py4JJavaError:
         return None
+    return tuple(sorted(
+        (st.getPath().getName(), st.getModificationTime(), st.getLen())
+        for st in listing
+        if st.getPath().getName().endswith(".parquet")
+    ))
 
 
 def _remove(tmp: tempfile.TemporaryDirectory) -> None:

@@ -712,7 +712,7 @@ def test_random_ranked_by_range_matches_native_ntile(
         "l_orderkey",
         "l_linenumber",
     ]
-    ranked, total = ranked_by_range(li, order, num_partitions=parts)
+    ranked, total, _ = ranked_by_range(li, order, num_partitions=parts)
     if total == 0:
         return
     got = ranked.select(
@@ -733,9 +733,9 @@ def test_random_ranked_by_range_matches_native_ntile(
 
 
 # dimension 14: the range-partitioned global RUNNING SUM
-# (operators/ranking.prefix_sums_by_range) vs the engines' native
-# SUM() OVER (ORDER BY ...) — the prefix-sum sibling of dimension 13
-# now backs ks_test_twosample / equidepth_histogram /
+# (operators/ranking.ranked_by_range with one sum column) vs the
+# engines' native SUM() OVER (ORDER BY ...) — the prefix-sum form of
+# dimension 13 backs ks_test_twosample / equidepth_histogram /
 # quantile_normalize_grid / pareto_revenue_curve, so its offset
 # arithmetic gets swept under random predicates, partition counts,
 # value columns, and sort directions.
@@ -749,13 +749,11 @@ def test_random_ranked_by_range_matches_native_ntile(
 def test_random_prefix_sums_match_native_window_sum(
     spark, pred, parts, vcol, direction
 ):
-    """prefix_sums_by_range's rank AND cumulative sum must equal the
+    """ranked_by_range's rank AND cumulative sum must equal the
     native global ROW_NUMBER + SUM() OVER for any filter, partition
     count, value column and direction (exact integer cents so no
     float accumulation enters the check)."""
-    from dados_publicos_etl_spark.operators.ranking import (
-        prefix_sums_by_range,
-    )
+    from dados_publicos_etl_spark.operators.ranking import ranked_by_range
 
     li = (
         read_table(spark, SF_DIR, "lineitem")
@@ -771,12 +769,10 @@ def test_random_prefix_sums_match_native_window_sum(
         "l_orderkey",
         "l_linenumber",
     ]
-    cum, total, total_v = prefix_sums_by_range(
-        li, order, "v", num_partitions=parts
-    )
+    cum, total, _ = ranked_by_range(li, order, ["v"], num_partitions=parts)
     if total == 0:
         return
-    got = cum.select("l_orderkey", "l_linenumber", "rn", "cum")
+    got = cum.select("l_orderkey", "l_linenumber", "rn", F.col("cum_v").alias("cum"))
     oracle = f"""
     SELECT l_orderkey, l_linenumber,
            CAST(ROW_NUMBER() OVER w AS BIGINT) AS rn,

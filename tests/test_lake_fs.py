@@ -10,9 +10,12 @@ op that reaches for the local filesystem API instead of the session's
 Hadoop ``FileSystem`` writes into a ``./viewfs:/...`` directory or
 finds nothing to list.
 
-The streaming queries read the corpus through the same filesystem:
-``stream_true_streaming`` and ``stream_cdc_upsert`` run with ``sf_dir``
-on a ``viewfs://`` mount of ``SF_SMOKE`` and equal their DuckDB oracles.
+The corpus queries read the corpus through the same filesystem:
+``stream_true_streaming``, ``stream_cdc_upsert`` and
+``scan_corrupt_tolerant`` run with ``sf_dir`` on a ``viewfs://`` mount
+of ``SF_SMOKE`` and equal their DuckDB oracles, and the corpus
+fingerprint that keys session artifacts lists the mount like the local
+path.
 """
 
 from __future__ import annotations
@@ -62,14 +65,31 @@ def test_etl_medallion_ops_on_a_viewfs_lake(spark, tmp_path, monkeypatch):
             assert check.result_hash(got[name]) == check.result_hash(expected), name
 
 
-@pytest.mark.parametrize("name", ["stream_true_streaming", "stream_cdc_upsert"])
-def test_streaming_queries_on_a_viewfs_corpus(spark, name):
+@pytest.fixture
+def viewfs_corpus(spark):
+    """``SF_SMOKE`` mounted at ``viewfs://<fresh name>/sf``."""
     table = f"sf{uuid.uuid4().hex[:12]}"
     key = f"fs.viewfs.mounttable.{table}.link./sf"
     conf = spark.sparkContext._jsc.hadoopConfiguration()
     conf.set(key, pathlib.Path(SF_SMOKE).as_uri())
-    try:
-        spec = QUERIES[name]
-        compare(spec.fn(spark, f"viewfs://{table}/sf"), spec.oracle, SF_SMOKE)
-    finally:
-        conf.unset(key)
+    yield f"viewfs://{table}/sf"
+    conf.unset(key)
+
+
+@pytest.mark.parametrize(
+    "name", ["stream_true_streaming", "stream_cdc_upsert", "scan_corrupt_tolerant"]
+)
+def test_corpus_queries_on_a_viewfs_corpus(spark, viewfs_corpus, name):
+    spec = QUERIES[name]
+    compare(spec.fn(spark, viewfs_corpus), spec.oracle, SF_SMOKE)
+
+
+def test_corpus_fingerprint_on_a_viewfs_corpus(spark, viewfs_corpus):
+    from dados_publicos_etl_spark.tmpstore import corpus_fingerprint
+
+    remote = corpus_fingerprint(viewfs_corpus)
+    local = corpus_fingerprint(SF_SMOKE)
+    assert remote is not None and remote
+    assert [(n, size) for n, _, size in remote] == [
+        (n, size) for n, _, size in local
+    ]

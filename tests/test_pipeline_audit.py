@@ -5,6 +5,7 @@ from __future__ import annotations
 import glob
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from dados_publicos_etl_spark import audit
@@ -166,6 +167,22 @@ def test_catalog_md_matches_registry():
         assert fh.read() == render(), (
             "CATALOG.md is stale: run python tools/gen_catalog.py"
         )
+
+
+def test_query_registry_rejects_a_duplicate_name():
+    """A second ``@query`` of a registered name raises, naming the
+    first registration, and leaves the first spec in place: one name
+    runs one query, never whichever module imported last."""
+    from dados_publicos_etl_spark.plans import QUERIES
+    from dados_publicos_etl_spark.plans import catalog  # noqa: F401
+    from dados_publicos_etl_spark.plans.registry import query
+
+    first = QUERIES["chi_square_independence"]
+    with pytest.raises(ValueError, match="operators.quality"):
+        query("chi_square_independence", oracle="SELECT 1")(
+            lambda spark, sf_dir: None
+        )
+    assert QUERIES["chi_square_independence"] is first
 
 
 def test_tempdir_pool_rolls_and_cleans():

@@ -900,9 +900,10 @@ def test_ranked_by_range_no_single_partition(spark, sf_dir):
     li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_discount"
     )
-    ranked, total = ranked_by_range(
+    ranked, total, totals = ranked_by_range(
         li, [F.desc("l_discount"), "l_orderkey", "l_linenumber"]
     )
+    assert totals == ()
     plan = _plan(ranked)
     assert "SinglePartition" not in plan
     assert ranked.count() == total
@@ -916,15 +917,12 @@ def test_ranked_by_range_no_single_partition(spark, sf_dir):
 
 
 def test_prefix_sums_multi_matches_single_calls(spark, sf_dir):
-    """r12: prefix_sums_multi_by_range must return, in ONE ranged
-    pass, exactly the rn / per-column running sums / totals that two
-    independent prefix_sums_by_range calls produce — it exists so
-    consumers (ks_test_twosample, quantile_normalize_grid) can drop
+    """One ranked_by_range call with TWO running sums must return
+    exactly the rn / per-column running sums / totals that two
+    one-sum calls produce — the multi-sum form is what lets
+    consumers (ks_test_twosample, quantile_normalize_grid) drop
     their extra sampling passes and totals jobs."""
-    from dados_publicos_etl_spark.operators.ranking import (
-        prefix_sums_by_range,
-        prefix_sums_multi_by_range,
-    )
+    from dados_publicos_etl_spark.operators.ranking import ranked_by_range
 
     li = (
         read_table(spark, sf_dir, "lineitem")
@@ -934,22 +932,60 @@ def test_prefix_sums_multi_matches_single_calls(spark, sf_dir):
             F.sum(F.col("l_linenumber").cast("long")).alias("c2"),
         )
     )
-    multi, n_m, (t1_m, t2_m) = prefix_sums_multi_by_range(
-        li, [F.col("k")], ["c1", "c2"]
-    )
-    one, n_1, t1 = prefix_sums_by_range(li, [F.col("k")], "c1")
-    two, n_2, t2 = prefix_sums_by_range(li, [F.col("k")], "c2")
-    assert (n_m, t1_m, t2_m) == (n_1, t1, t2)
+    multi, n_m, (t1_m, t2_m) = ranked_by_range(li, [F.col("k")], ["c1", "c2"])
+    one, n_1, (t1,) = ranked_by_range(li, [F.col("k")], ["c1"])
+    two, n_2, (t2,) = ranked_by_range(li, [F.col("k")], ["c2"])
+    assert (n_m, t1_m, t2_m) == (n_1, t1, t2) == (n_2, t1, t2)
     got = {
         r["k"]: (r["rn"], r["cum_c1"], r["cum_c2"])
         for r in multi.select("k", "rn", "cum_c1", "cum_c2").collect()
     }
-    want1 = {r["k"]: (r["rn"], r["cum"]) for r in one.collect()}
-    want2 = {r["k"]: r["cum"] for r in two.collect()}
+    want1 = {r["k"]: (r["rn"], r["cum_c1"]) for r in one.collect()}
+    want2 = {r["k"]: r["cum_c2"] for r in two.collect()}
     assert len(got) == n_m
     for k, (rn, ca, cb) in got.items():
         assert (rn, ca) == want1[k]
         assert cb == want2[k]
+
+
+def test_ranking_skeleton_exists_once():
+    """operators/ranking.py holds the ranged layout once: one
+    repartitionByRange, one partition-id column, one eager
+    checkpoint, shared by the rank-and-running-sums function and the
+    running max.  The former one-sum and multi-sum copies are
+    neither defined nor imported anywhere, and the rank column has
+    one fixed name."""
+    import ast
+    import inspect
+    import os
+
+    import dados_publicos_etl_spark as pkg
+    from dados_publicos_etl_spark.operators import ranking
+
+    with open(ranking.__file__) as fh:
+        src = fh.read()
+    for call in ("repartitionByRange(", "spark_partition_id(", "localCheckpoint("):
+        assert src.count(call) == 1, call
+    gone = {"prefix_sums_by_range", "prefix_sums_multi_by_range"}
+    offenders: list[str] = []
+    roots = [os.path.dirname(pkg.__file__), os.path.dirname(__file__)]
+    for root in roots:
+        for dirpath, _dirs, files in os.walk(root):
+            for f in files:
+                if not f.endswith(".py"):
+                    continue
+                path = os.path.join(dirpath, f)
+                with open(path) as fh:
+                    tree = ast.parse(fh.read(), filename=path)
+                for node in ast.walk(tree):
+                    if isinstance(node, ast.FunctionDef) and node.name in gone:
+                        offenders.append(f"{f}:{node.lineno} def {node.name}")
+                    if isinstance(node, ast.ImportFrom):
+                        for alias in node.names:
+                            if alias.name in gone:
+                                offenders.append(f"{f}:{node.lineno} {alias.name}")
+    assert not offenders, offenders
+    assert "rn_col" not in inspect.signature(ranking.ranked_by_range).parameters
 
 
 def test_matryoshka_single_pass_plan(spark, sf_dir):
@@ -1149,7 +1185,7 @@ _COLLECT_CONSTANT = {
     "similarity_filtered_topk",
     "similarity_topk", "stream_kl_drift", "stream_late_drop",
     "stream_stream_outer_join", "stream_topk_windows", "theil_sen_trend",
-    "token_budget_curation",  # r10: prefix_sums_by_range P-row offsets
+    "token_budget_curation",  # r10: ranked_by_range P-row offsets
     "token_stream_offsets", "training_shard_assignment", "vocab_coverage",
 }
 
@@ -1183,13 +1219,13 @@ def test_package_collect_sites_are_inventoried():
                     and node.func.attr == "collect"
                 ):
                     sites.append(f"{f}:{node.lineno}")
-    # 16 = r11's 13 + r12's three bounded additions: ranking.py
-    # prefix_sums_multi_by_range (P-row offsets) and the two
-    # kmeans_lloyd_exact driver-Lloyd collects (k=4 seed rows;
-    # k*dims = 64 centroid-component rows per round — both constant
-    # in the corpus, swept by the 10x recorder below).
-    assert len(sites) == 16, (
-        f"{len(sites)} .collect() call sites (expected 16): {sites} "
+    # 13 = r12's 16 less three of ranking.py's four P-row offset
+    # collects, which became the one in ranking._ranged; r12 added
+    # the two kmeans_lloyd_exact driver-Lloyd collects (k=4 seed
+    # rows; k*dims = 64 centroid-component rows per round — both
+    # constant in the corpus, swept by the 10x recorder below).
+    assert len(sites) == 13, (
+        f"{len(sites)} .collect() call sites (expected 13): {sites} "
         "— a site was added or removed; re-run "
         "tools/collect_audit.py and update "
         "_COLLECT_TRAIN_CAPPED/_COLLECT_CONSTANT."

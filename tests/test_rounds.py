@@ -121,8 +121,10 @@ def test_k_truss_raises_past_its_round_bound(spark, monkeypatch):
         G.k_truss_edges(spark, SF_SMOKE)
 
 
-# queries whose oracle aggregates without GROUP BY: one row of NULLs
-_NULL_ROW = {"diff_in_diff", "mann_whitney_u"}
+# queries whose oracle answers an empty corpus with rows: one row of
+# NULLs of an ungrouped aggregate, or one zero-coverage row per
+# vocabulary size
+_EMPTY_ROWS = {"diff_in_diff": 1, "mann_whitney_u": 1, "vocab_coverage": 5}
 
 
 @pytest.mark.parametrize(
@@ -147,6 +149,22 @@ _NULL_ROW = {"diff_in_diff", "mann_whitney_u"}
         "diff_in_diff",
         "sequence_gap_audit",
         "mann_whitney_u",
+        # the range-partitioned rank and running sums (operators/ranking.py)
+        "ks_test_twosample",
+        "nb_score_reliability",
+        "decile_lift_table",
+        "rfm_segmentation",
+        "pareto_revenue_curve",
+        "pareto_frontier",
+        "vocab_coverage",
+        "equidepth_histogram",
+        "quantile_normalize_grid",
+        "global_row_number",
+        "training_shard_assignment",
+        "shard_manifest_checksum",
+        "token_stream_offsets",
+        "token_budget_curation",
+        "corpus_global_shuffle",
     ],
 )
 def test_hits_authorities_on_zero_rows(spark, zero_row_sf_dir, name):
@@ -154,13 +172,14 @@ def test_hits_authorities_on_zero_rows(spark, zero_row_sf_dir, name):
     count (0); an empty embeddings table has no ``vec_id = 0`` query
     vector, trains no IVF cell and seeds no k-means cell; an empty
     events or orders table has no time or key bounds and writes an
-    empty micro-batch feed: each query returns the oracle's answer —
-    zero rows, or the one row of NULLs of an ungrouped aggregate —
+    empty micro-batch feed; an empty relation ranks with no range
+    partition, no offset and zero totals: each query returns the
+    oracle's answer — zero rows, or the rows of ``_EMPTY_ROWS`` —
     not rows of NULL scores, a ``ZeroDivisionError``, a ``TypeError``,
     a ``ValueError``, an ``AttributeError`` or a numpy ``AxisError``."""
     spec = QUERIES[name]
     out = spec.fn(spark, zero_row_sf_dir)
-    assert out.count() == (name in _NULL_ROW)
+    assert out.count() == _EMPTY_ROWS.get(name, 0)
     compare(out, spec.oracle, zero_row_sf_dir)
 
 
