@@ -92,38 +92,14 @@ def shingles(c: Column | str, n: int = 3) -> Column:
     return shingles_from_tokens(tokens(c), n)
 
 
-def hashed_shingles_from_tokens(tok_col_name: str) -> Column:
-    """Distinct 3-gram shingles as xxhash64 longs over a pre-split
-    token array column — no string materialization.
-
-    Functionally interchangeable with ``shingles`` for similarity
-    (hash collisions are ~1e-13 per pair) but ~6x cheaper to compute
-    and to set-intersect, so the MinHash/SimHash pipelines use this
-    form; only the DuckDB-oracle-checked exact query pays for string
-    shingles.  Docs shorter than 3 tokens clamp into one shingle.
-    """
-    from pyspark.sql import functions as _F
-
-    t = tok_col_name
-    return _F.expr(
-        f"array_distinct(transform("
-        f"  sequence(1, greatest(size({t}) - 2, 1)),"
-        f"  i -> xxhash64(element_at({t}, i),"
-        f"                element_at({t}, least(i + 1, size({t}))),"
-        f"                element_at({t}, least(i + 2, size({t})))"
-        f")))"
-    )
-
-
 def md5_hashed_shingles(shingle_arr: Column, hexlen: int = 7) -> Column:
     """Distinct PORTABLE shingle hashes: md5 of each shingle string,
-    first ``hexlen`` hex chars as a long — the cross-engine sibling
-    of ``hashed_shingles_from_tokens`` (xxhash64 exists only in
-    Spark; md5 is bit-identical on Spark and DuckDB).  The default
-    7 hex chars give a 28-bit universe, sized so the minhash
-    permutation family's ``a*h + b`` stays inside int64
-    (see operators/dedup.py).  Pass a MATERIALIZED shingle-array
-    column reference (same no-CSE warning as shingles_from_tokens).
+    first ``hexlen`` hex chars as a long (``hex_long``), bit-identical
+    on Spark and DuckDB, unlike xxhash64.  The default 7 hex chars
+    give a 28-bit universe, sized so the minhash permutation family's
+    ``a*h + b`` stays inside int64 (see operators/dedup.py); SimHash
+    takes 15 (60 bits).  Pass a MATERIALIZED shingle-array column
+    reference (same no-CSE warning as shingles_from_tokens).
     """
     return F.array_distinct(
         F.transform(shingle_arr, lambda s: hex_long(F.md5(s), hexlen))

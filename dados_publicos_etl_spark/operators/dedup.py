@@ -19,13 +19,13 @@ Five tiers, each with the 100 TB story explicit:
 - **MinHash + LSH**: deterministic minhash signatures over shingles,
   banded into buckets; candidate pairs only form inside a bucket
   (shuffle on band buckets, never a cross join), then exact Jaccard
-  re-ranks.  The catalog query uses PORTABLE hashing (md5 shingle
-  buckets + universal-hash permutations (a*h+b) mod p — identical
-  integer arithmetic on Spark and DuckDB), so the whole
-  sign-band-candidate-verify pipeline is oracle-checked; the
-  incremental index path keeps the cheaper xxhash64 form.
-- **SimHash**: 64-bit signature via sign-aggregated shingle hashes;
-  near-dup candidates pair on any equal 16-bit chunk (pigeonhole
+  re-ranks.  Hashing is PORTABLE (md5 shingle buckets + universal-
+  hash permutations (a*h+b) mod p — identical integer arithmetic on
+  Spark and DuckDB), so the whole sign-band-candidate-verify
+  pipeline is oracle-checked, the incremental probe against a
+  persisted band index included.
+- **SimHash**: 60-bit signature via sign-aggregated shingle hashes;
+  near-dup candidates pair on any equal 15-bit chunk (pigeonhole
   covers Hamming<=3 exactly; we keep pairs up to Hamming 6).
 - **embedding cosine**: semantic near-dup over the embedding column —
   min-id survivorship inside label blocks (see
@@ -33,9 +33,9 @@ Five tiers, each with the 100 TB story explicit:
   exact label blocks to the LSH/IVF candidate generators in
   operators/similarity.py, the survivorship rule is unchanged.
 
-The incremental MinHash index is xxhash64-based (cheaper, Spark-only
-hash) -> rows-only driver check, golden- and property-pinned; pytest
-additionally cross-checks LSH recall against the exact tier.
+Every banded tier pairs its candidates through operators/lsh.py
+(``band_table`` / ``candidate_pairs``); pytest additionally
+cross-checks LSH recall against the exact tier.
 """
 
 from __future__ import annotations
@@ -51,7 +51,6 @@ from dados_publicos_etl_spark.functions.text import (
     duck_md5_long_sql,
     duck_shingles_sql,
     fingerprint_md5,
-    hashed_shingles_from_tokens,
     hex_long,
     jaccard_tokens,
     md5_hashed_shingles,
@@ -60,8 +59,10 @@ from dados_publicos_etl_spark.functions.text import (
     tokens,
 )
 from dados_publicos_etl_spark.io import read_table
+from dados_publicos_etl_spark.operators.lsh import band_table, candidate_pairs
 from dados_publicos_etl_spark.plans.registry import query
 from dados_publicos_etl_spark.tmpstore import (
+    Table,
     open_table,
     session_artifact,
     write_table,
@@ -188,38 +189,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 
-N_HASHES = 32
-BAND_SIZE = 4  # 8 bands of 4 -> s-curve threshold ~ (1/8)^(1/4) ~ 0.6
-
-
-def minhash_signature(feat_col: F.Column, n_hashes: int = N_HASHES) -> F.Column:
-    """Array of minhash values: min over features of xxhash64(seed_i, h(f)).
-
-    Pure expression form — no Python, no shuffle.
-
-    IMPORTANT: pass a column of ALREADY-HASHED features
-    (``array<long>``, e.g. ``hashed_shingles_from_tokens``), not raw
-    strings.  Catalyst has no common-subexpression elimination inside
-    an expression tree, so an inner string->long transform here would
-    be re-evaluated once PER PERMUTATION (n_hashes x the hashing
-    work — measured ~2x whole-stage cost at 32 hashes).  Feeding
-    pre-hashed longs keeps each permutation a single cheap
-    long->long hash.
-    """
-
-    def hasher(i: int):
-        # closure factory: a 2-arg lambda would be (element, index) to
-        # F.transform and the array index would shadow the seed.
-        return lambda h: F.xxhash64(F.lit(i), h)
-
-    return F.array(
-        *[
-            F.array_min(F.transform(feat_col, hasher(i)))
-            for i in range(n_hashes)
-        ]
-    )
-
-
 # Portable minhash permutation family: pi_i(h) = (a_i*h + b_i) mod p
 # over the 28-bit md5 shingle universe.  p prime > universe makes the
 # family universal; a < p and h < 2^28 keep a*h < 2^59, safely inside
@@ -235,11 +204,6 @@ _MH_AB = tuple(
 )
 
 
-def _mh_band_hash_spark(sig: F.Column, bi: int, band_size: int) -> F.Column:
-    parts = [sig[bi * band_size + j] for j in range(band_size)]
-    return hex_long(F.md5(F.concat_ws("|", *parts)), 15)
-
-
 def _mh_perm(a: int, b: int):
     # closure factory: PySpark counts default-bound params as lambda
     # arguments, so `lambda h, a=a: ...` would register as a 2-ary
@@ -247,13 +211,62 @@ def _mh_perm(a: int, b: int):
     return lambda h: (h * F.lit(a) + F.lit(b)) % F.lit(_MH_PRIME)
 
 
+def minhash_signatures(df: DataFrame, keep: list[str], tk: str) -> DataFrame:
+    """(keep…, sh, sig): the portable MinHash signature of the token
+    array column ``tk`` — its distinct 3-gram shingles as 28-bit md5
+    longs (``sh``) and their minima under the 32 universal
+    permutations (``sig``).  Staged selects (shingles -> hashes ->
+    minima) keep each expensive tree single-evaluation (no CSE inside
+    projections)."""
+    sh = df.select(
+        *keep, shingles_from_tokens(F.col(tk)).alias("_shs")
+    ).select(*keep, md5_hashed_shingles(F.col("_shs")).alias("sh"))
+    return sh.select(
+        *keep,
+        "sh",
+        F.array(
+            *[
+                F.array_min(F.transform(F.col("sh"), _mh_perm(a, b)))
+                for a, b in _MH_AB
+            ]
+        ).alias("sig"),
+    )
+
+
+def minhash_bands(sig: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """(id, band_idx, band_hash): 8 bands of 4 signature minima, each
+    band hashed as the 60-bit md5 of its ``|``-joined values (8 bands
+    of 4 -> s-curve threshold ~ (1/8)^(1/4) ~ 0.6)."""
+
+    def band(bi: int) -> F.Column:
+        values = [F.col("sig")[bi * 4 + j] for j in range(4)]
+        return hex_long(F.md5(F.concat_ws("|", *values)), 15)
+
+    return band_table(sig, [id_col], [band(bi) for bi in range(8)])
+
+
+# the DuckDB side of minhash_signatures (over ``sh``) and of
+# minhash_bands (over ``sig`` and the unnested ``band_idx``)
+_DUCK_MH_SIG = "[%s]" % ", ".join(
+    f"list_min(list_transform(sh, h -> (h * {a} + {b}) % {_MH_PRIME}))"
+    for a, b in _MH_AB
+)
+_DUCK_MH_BAND = duck_md5_long_sql(
+    "(%s)"
+    % " || '|' || ".join(
+        f"CAST(sig[band_idx*4+{j}] AS VARCHAR)" for j in range(1, 5)
+    ),
+    15,
+)
+
+
 def portable_sig_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The portable (doc_id, source, sh, sig) table — md5-hashed
     shingles plus the 32-permutation MinHash signature — a session
-    artifact.  Three catalog queries consume it (dedup_minhash_lsh,
-    dedup_minhash_incremental, and the calibration audit builds the
-    same construction); at 100 TB this is the signature table a
-    pipeline PERSISTS next to the corpus, not recomputes per
+    artifact.  Four catalog queries consume it (dedup_minhash_lsh,
+    dedup_minhash_incremental, minhash_calibration and
+    excerpt_containment_mining); at 100 TB this is the signature
+    table a pipeline PERSISTS next to the corpus, not recomputes per
     consumer."""
     table = session_artifact(
         "mh_sig", sf_dir, partial(_write_portable_sig, spark, sf_dir)
@@ -263,44 +276,15 @@ def portable_sig_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _write_portable_sig(spark: SparkSession, sf_dir: str, workdir: str):
     docs = read_table(spark, sf_dir, "documents")
-    # staged selects (tokens -> shingles -> hashes) keep each
-    # expensive tree single-evaluation (no CSE inside projections)
-    t = (
-        docs.select("doc_id", "source", tokens("text").alias("_tk"))
-        .select(
-            "doc_id",
-            "source",
-            shingles_from_tokens(F.col("_tk")).alias("_shs"),
-        )
-        .select(
-            "doc_id", "source", md5_hashed_shingles(F.col("_shs")).alias("sh")
-        )
-    )
-    sig = t.select(
-        "doc_id",
-        "source",
-        "sh",
-        F.array(
-            *[
-                F.array_min(F.transform(F.col("sh"), _mh_perm(a, b)))
-                for a, b in _MH_AB
-            ]
-        ).alias("sig"),
+    sig = minhash_signatures(
+        docs.select("doc_id", "source", tokens("text").alias("_tk")),
+        ["doc_id", "source"],
+        "_tk",
     )
     return write_table(sig, workdir + "/sig")
 
 
 def _minhash_lsh_oracle() -> str:
-    sig_items = ", ".join(
-        f"list_min(list_transform(sh, h -> (h * {a} + {b}) % {_MH_PRIME}))"
-        for a, b in _MH_AB
-    )
-    band_concat = (
-        "CAST(sig[band_idx*4+1] AS VARCHAR) || '|' || "
-        "CAST(sig[band_idx*4+2] AS VARCHAR) || '|' || "
-        "CAST(sig[band_idx*4+3] AS VARCHAR) || '|' || "
-        "CAST(sig[band_idx*4+4] AS VARCHAR)"
-    )
     jac = (
         "CAST(len(list_intersect(ha.sh, hb.sh)) AS DOUBLE)"
         " / len(list_distinct(list_concat(ha.sh, hb.sh)))"
@@ -314,10 +298,10 @@ def _minhash_lsh_oracle() -> str:
                s -> {duck_md5_long_sql('s')})) AS sh
       FROM t
     ), sig AS MATERIALIZED (
-      SELECT doc_id, [{sig_items}] AS sig FROM hs
+      SELECT doc_id, {_DUCK_MH_SIG} AS sig FROM hs
     ), bands AS MATERIALIZED (
       SELECT doc_id, band_idx,
-             {duck_md5_long_sql(f'({band_concat})', 15)} AS band_hash
+             {_DUCK_MH_BAND} AS band_hash
       FROM sig, UNNEST(generate_series(0, 7)) AS u(band_idx)
     ), cand AS (
       SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
@@ -353,35 +337,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the parquet scan replaces the per-query localCheckpoints
     cached = portable_sig_table(spark, sf_dir)
     t = cached.select("doc_id", "sh")
-    sig = cached.select("doc_id", "sig")
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band_idx"),
-                        _mh_band_hash_spark(F.col("sig"), bi, 4).alias(
-                            "band_hash"
-                        ),
-                    )
-                    for bi in range(8)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "band.band_idx", "band.band_hash")
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .distinct()
-    )
+    cands = candidate_pairs(minhash_bands(cached), "doc_id")
     ta = t.alias("ta")
     tb = t.alias("tb")
     jac = jaccard_tokens(F.col("ta.sh"), F.col("tb.sh"))
@@ -405,86 +361,34 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 _INCREMENTAL_THRESH = 0.8
 
 
-def band_table(
-    sig: DataFrame,
-    n_hashes: int = N_HASHES,
-    band_size: int = BAND_SIZE,
-) -> DataFrame:
-    """Explode a (id, sig) signature table into its banded form
-    (id, band_idx, band_hash) — the unit both the self-join dedup and
-    the persisted index store."""
-    n_bands = n_hashes // band_size
-    return sig.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band_idx"),
-                        F.xxhash64(
-                            *[
-                                F.col("sig")[bi * band_size + j]
-                                for j in range(band_size)
-                            ]
-                        ).alias("band_hash"),
-                    )
-                    for bi in range(n_bands)
-                ]
-            )
-        ).alias("band"),
-    ).select("id", "band.band_idx", "band.band_hash")
-
-
-def write_minhash_index(
-    docs: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    feat_col: str = "sh",
-    n_hashes: int = N_HASHES,
-    band_size: int = BAND_SIZE,
-) -> None:
-    """Persist the snapshot corpus's banded MinHash signatures as the
-    incremental-dedup index: (id, band_idx, band_hash) parquet.
+def write_band_index(snapshot: DataFrame, path: str) -> Table:
+    """Persist the snapshot corpus's (doc_id, sig) signatures, banded,
+    as the incremental-dedup index: (doc_id, band_idx, band_hash)
+    parquet.
 
     This is the steady-state shape of corpus ingestion at 100 TB:
-    the accumulated snapshot's signatures are computed ONCE when each
-    batch lands, and every subsequent increment probes this skinny
-    table (16 bytes of hash per band per doc) instead of
-    re-signaturing the whole history.  At petabyte scale write it
-    bucketed on band_hash (``bucketBy`` + ``saveAsTable``) so probe
-    joins co-locate without a shuffle; plain parquet keeps the
-    operator warehouse-free here.
+    the accumulated snapshot's signatures are banded ONCE when each
+    batch lands, and every later increment probes this skinny table
+    (8 bytes of hash per band per doc) instead of re-banding the
+    whole history.  At petabyte scale write it bucketed on band_hash
+    (``bucketBy`` + ``saveAsTable``) so probe joins co-locate without
+    a shuffle; plain parquet keeps the operator warehouse-free here.
     """
-    sig = docs.select(
-        F.col(id_col).alias("id"),
-        minhash_signature(F.col(feat_col), n_hashes).alias("sig"),
-    )
-    band_table(sig, n_hashes, band_size).write.mode("overwrite").parquet(path)
+    return write_table(minhash_bands(snapshot), path)
 
 
-def probe_minhash_index(
-    index_df: DataFrame,
-    incoming: DataFrame,
-    id_col: str = "doc_id",
-    feat_col: str = "sh",
-    n_hashes: int = N_HASHES,
-    band_size: int = BAND_SIZE,
-) -> DataFrame:
+def probe_band_index(index: DataFrame, incoming: DataFrame) -> DataFrame:
     """Candidate (incoming_id, snapshot_id) pairs: band the incoming
-    increment (tiny by definition) and broadcast it against ONE scan
-    of the persisted band index — the index never shuffles."""
-    inc_sig = incoming.select(
-        F.col(id_col).alias("id"),
-        minhash_signature(F.col(feat_col), n_hashes).alias("sig"),
-    )
-    inc_bands = band_table(inc_sig, n_hashes, band_size).select(
-        F.col("id").alias("incoming_id"), "band_idx", "band_hash"
+    (doc_id, sig) increment (tiny by definition) and broadcast it
+    against ONE scan of the persisted band index — the index never
+    shuffles.  The two sides hold disjoint documents, so, unlike
+    ``candidate_pairs``, the probe has no id order to keep."""
+    inc_bands = minhash_bands(incoming).select(
+        F.col("doc_id").alias("incoming_id"), "band_idx", "band_hash"
     )
     return (
-        index_df.join(
-            F.broadcast(inc_bands), ["band_idx", "band_hash"]
-        )
-        .select(F.col("incoming_id"), F.col("id").alias("snapshot_id"))
+        index.join(F.broadcast(inc_bands), ["band_idx", "band_hash"])
+        .select("incoming_id", F.col("doc_id").alias("snapshot_id"))
         .distinct()
     )
 
@@ -497,16 +401,6 @@ def _minhash_incremental_oracle() -> str:
     restricted to incoming (src0) x snapshot (everything else) — the
     round-6 verdict's prescribed conversion.  Only the persisted
     band-index IO stays pytest-only; the MATH is differential."""
-    sig_items = ", ".join(
-        f"list_min(list_transform(sh, h -> (h * {a} + {b}) % {_MH_PRIME}))"
-        for a, b in _MH_AB
-    )
-    band_concat = (
-        "CAST(sig[band_idx*4+1] AS VARCHAR) || '|' || "
-        "CAST(sig[band_idx*4+2] AS VARCHAR) || '|' || "
-        "CAST(sig[band_idx*4+3] AS VARCHAR) || '|' || "
-        "CAST(sig[band_idx*4+4] AS VARCHAR)"
-    )
     jac = (
         "CAST(len(list_intersect(hi.sh, hs.sh)) AS DOUBLE)"
         " / len(list_distinct(list_concat(hi.sh, hs.sh)))"
@@ -521,10 +415,10 @@ def _minhash_incremental_oracle() -> str:
                s -> {duck_md5_long_sql('s')})) AS sh
       FROM t
     ), sig AS MATERIALIZED (
-      SELECT doc_id, source, [{sig_items}] AS sig FROM h
+      SELECT doc_id, source, {_DUCK_MH_SIG} AS sig FROM h
     ), bands AS MATERIALIZED (
       SELECT doc_id, source, band_idx,
-             {duck_md5_long_sql(f'({band_concat})', 15)} AS band_hash
+             {_DUCK_MH_BAND} AS band_hash
       FROM sig, UNNEST(generate_series(0, 7)) AS u(band_idx)
     ), cand AS (
       SELECT DISTINCT i.doc_id AS incoming_id, s.doc_id AS snapshot_id
@@ -575,41 +469,16 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot = shingled.filter(F.col("source") != "src0")
     incoming = shingled.filter(F.col("source") == "src0")
 
-    def portable_bands(side: DataFrame) -> DataFrame:
-        sig = side.select("doc_id", "sig")
-        return sig.select(
-            "doc_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(bi).alias("band_idx"),
-                            _mh_band_hash_spark(F.col("sig"), bi, 4).alias(
-                                "band_hash"
-                            ),
-                        )
-                        for bi in range(8)
-                    ]
-                )
-            ).alias("band"),
-        ).select("doc_id", "band.band_idx", "band.band_hash")
-
     # one persisted band index per corpus snapshot
-    def build(workdir: str):
-        return write_table(portable_bands(snapshot), workdir + "/index")
-
     index_df = open_table(
-        spark, session_artifact("minhash_index", sf_dir, build)
+        spark,
+        session_artifact(
+            "minhash_index",
+            sf_dir,
+            lambda workdir: write_band_index(snapshot, workdir + "/index"),
+        ),
     )
-
-    inc_bands = portable_bands(incoming).select(
-        F.col("doc_id").alias("incoming_id"), "band_idx", "band_hash"
-    )
-    cands = (
-        index_df.join(F.broadcast(inc_bands), ["band_idx", "band_hash"])
-        .select("incoming_id", F.col("doc_id").alias("snapshot_id"))
-        .distinct()
-    )
+    cands = probe_band_index(index_df, incoming)
     inc_sh = incoming.select(
         F.col("doc_id").alias("incoming_id"), F.col("sh").alias("sh_inc")
     )
@@ -650,14 +519,14 @@ aggregate(
 
 def simhash64(feat_col_name: str) -> F.Column:
     """64-bit SimHash of a PRE-HASHED feature array (``array<long>``
-    of uniform hashes, e.g. ``hashed_shingles_from_tokens``), as
-    bigint.
+    of uniform hashes, e.g. ``md5_hashed_shingles(..., hexlen=15)``),
+    as bigint.
 
     For each bit b: sum over features of (+1 if bit b of the feature
     hash is set else -1); signature bit = sign of the sum.  Expecting
-    pre-hashed longs (same contract as ``minhash_signature``) lets
-    the kernel read bits directly instead of re-hashing per
-    reference.
+    pre-hashed longs (the contract of the MinHash permutations in
+    ``minhash_signatures`` too) lets the kernel read bits directly
+    instead of re-hashing per reference.
 
     Formulation: outer fold over the 64 bits, inner fold over the
     features, both with SCALAR accumulators.  Higher-order functions
@@ -798,39 +667,24 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
     sigs = simhash64_batch(shingled).localCheckpoint()
-    chunks = sigs.select(
-        "doc_id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("chunk_idx"),
-                        F.shiftright("sig", i * _SIMHASH_CHUNK)
-                        .bitwiseAND((1 << _SIMHASH_CHUNK) - 1)
-                        .alias("chunk"),
-                    )
-                    for i in range(4)
-                ]
+    chunks = band_table(
+        sigs,
+        ["doc_id", "sig"],
+        [
+            F.shiftright("sig", i * _SIMHASH_CHUNK).bitwiseAND(
+                (1 << _SIMHASH_CHUNK) - 1
             )
-        ).alias("c"),
-    ).select("doc_id", "sig", "c.chunk_idx", "c.chunk")
-    a = chunks.alias("a")
-    b = chunks.alias("b")
-    hamming = F.bit_count(F.col("a.sig").bitwiseXOR(F.col("b.sig")))
+            for i in range(4)
+        ],
+    )
+    hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
     return (
-        a.join(
-            b,
-            (F.col("a.chunk_idx") == F.col("b.chunk_idx"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        candidate_pairs(chunks, "doc_id", carry=["sig"])
         .select(
-            F.col("a.doc_id").alias("doc_id_a"),
-            F.col("b.doc_id").alias("doc_id_b"),
+            F.col("id_a").alias("doc_id_a"),
+            F.col("id_b").alias("doc_id_b"),
             hamming.alias("hamming"),
         )
-        .distinct()
         .filter(F.col("hamming") <= 6)
     )
 
@@ -1394,16 +1248,6 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_calibration_oracle() -> str:
-    sig_items = ", ".join(
-        f"list_min(list_transform(sh, h -> (h * {a} + {b}) % {_MH_PRIME}))"
-        for a, b in _MH_AB
-    )
-    band_concat = (
-        "CAST(sig[band_idx*4+1] AS VARCHAR) || '|' || "
-        "CAST(sig[band_idx*4+2] AS VARCHAR) || '|' || "
-        "CAST(sig[band_idx*4+3] AS VARCHAR) || '|' || "
-        "CAST(sig[band_idx*4+4] AS VARCHAR)"
-    )
     matches = " + ".join(
         f"CASE WHEN sa.sig[{i}] = sb.sig[{i}] THEN 1 ELSE 0 END"
         for i in range(1, 33)
@@ -1417,10 +1261,10 @@ def _minhash_calibration_oracle() -> str:
                s -> {duck_md5_long_sql('s')})) AS sh
       FROM t
     ), sig AS MATERIALIZED (
-      SELECT doc_id, [{sig_items}] AS sig FROM hs
+      SELECT doc_id, {_DUCK_MH_SIG} AS sig FROM hs
     ), bands AS MATERIALIZED (
       SELECT doc_id, band_idx,
-             {duck_md5_long_sql(f'({band_concat})', 15)} AS band_hash
+             {_DUCK_MH_BAND} AS band_hash
       FROM sig, UNNEST(generate_series(0, 7)) AS u(band_idx)
     ), cand AS (
       SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
@@ -1472,35 +1316,7 @@ def minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     cached = portable_sig_table(spark, sf_dir)
     t = cached.select("doc_id", "sh")
     sig = cached.select("doc_id", "sig")
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band_idx"),
-                        _mh_band_hash_spark(F.col("sig"), bi, 4).alias(
-                            "band_hash"
-                        ),
-                    )
-                    for bi in range(8)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "band.band_idx", "band.band_hash")
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
-        )
-        .distinct()
-    )
+    cand = candidate_pairs(minhash_bands(sig), "doc_id")
     ha = t.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
     hb = t.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
     sa = sig.select(F.col("doc_id").alias("id_a"), F.col("sig").alias("sig_a"))
@@ -1552,16 +1368,6 @@ _CONT_JAC_MAX = 0.8           # ... where Jaccard would MISS the pair
 
 
 def _containment_oracle() -> str:
-    sig_items = ", ".join(
-        f"list_min(list_transform(sh, h -> (h * {a} + {b}) % {_MH_PRIME}))"
-        for a, b in _MH_AB
-    )
-    band_concat = (
-        "CAST(sig[band_idx*4+1] AS VARCHAR) || '|' || "
-        "CAST(sig[band_idx*4+2] AS VARCHAR) || '|' || "
-        "CAST(sig[band_idx*4+3] AS VARCHAR) || '|' || "
-        "CAST(sig[band_idx*4+4] AS VARCHAR)"
-    )
     inter = "CAST(len(list_intersect(ha.sh, hb.sh)) AS DOUBLE)"
     jac = f"{inter} / len(list_distinct(list_concat(ha.sh, hb.sh)))"
     cont = f"GREATEST({inter} / len(ha.sh), {inter} / len(hb.sh))"
@@ -1590,10 +1396,10 @@ def _containment_oracle() -> str:
                x -> {duck_md5_long_sql('x')})) AS sh
       FROM shs
     ), sig AS MATERIALIZED (
-      SELECT id, [{sig_items}] AS sig FROM hs
+      SELECT id, {_DUCK_MH_SIG} AS sig FROM hs
     ), bands AS MATERIALIZED (
       SELECT id, band_idx,
-             {duck_md5_long_sql(f'({band_concat})', 15)} AS band_hash
+             {_DUCK_MH_BAND} AS band_hash
       FROM sig, UNNEST(generate_series(0, 7)) AS u(band_idx)
     ), cand AS (
       SELECT DISTINCT a.id AS id_a, b.id AS id_b
@@ -1652,9 +1458,8 @@ def excerpt_containment_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("int"),
         ).alias("tk"),
     )
-    exc_sh = exc.select(
-        "id", shingles_from_tokens(F.col("tk")).alias("_shs")
-    ).select("id", md5_hashed_shingles(F.col("_shs")).alias("sh"))
+    exc_signed = minhash_signatures(exc, ["id"], "tk")
+    exc_sh = exc_signed.select("id", "sh")
     # lazy (r12): both pair sides read it inside ONE final job,
     # where the first computation populates the checkpoint blocks
     # — the eager form paid a separate materialization job
@@ -1662,48 +1467,13 @@ def excerpt_containment_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # full-doc SIGNATURES also come from the cache; only the excerpt
     # side runs the 32-permutation min fold
-    exc_sig = exc_sh.select(
-        "id",
-        F.array(
-            *[
-                F.array_min(F.transform(F.col("sh"), _mh_perm(a, b)))
-                for a, b in _MH_AB
-            ]
-        ).alias("sig"),
-    )
     sig = (
         portable_sig_table(spark, sf_dir)
         .select(F.col("doc_id").alias("id"), "sig")
-        .unionAll(exc_sig)
+        .unionAll(exc_signed.select("id", "sig"))
         .localCheckpoint(eager=False)
     )
-    bands = sig.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band_idx"),
-                        _mh_band_hash_spark(F.col("sig"), bi, 4).alias(
-                            "band_hash"
-                        ),
-                    )
-                    for bi in range(8)
-                ]
-            )
-        ).alias("band"),
-    ).select("id", "band.band_idx", "band.band_hash")
-    a, b = bands.alias("a"), bands.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    cands = candidate_pairs(minhash_bands(sig, "id"), "id")
     ha = corpus.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
     hb = corpus.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
     inter = F.size(

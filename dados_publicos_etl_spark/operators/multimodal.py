@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dados_publicos_etl_spark.io import read_table
+from dados_publicos_etl_spark.operators.lsh import band_table, candidate_pairs
 from dados_publicos_etl_spark.plans.registry import query
 
 
@@ -722,44 +723,21 @@ def image_neardup_pairs(
     # (id, dhash) table before its self-join, else the decode+hash
     # scan — the expensive pixel pass — runs once PER SIDE.
     hashes = hashes.localCheckpoint()
-    bands = hashes.select(
-        id_col,
-        "dhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"),
-                        F.shiftrightunsigned(F.col("dhash"), 8 * b)
-                        .bitwiseAND(F.lit(255))
-                        .cast("int")
-                        .alias("band_val"),
-                    )
-                    for b in range(HAMMING_BANDS)
-                ]
-            )
-        ).alias("band"),
-    ).select(id_col, "dhash", "band.band_idx", "band.band_val")
-    a, b = bands.alias("a"), bands.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.dhash").alias("ha"),
-            F.col("b.dhash").alias("hb"),
-        )
-        .distinct()
+    bands = band_table(
+        hashes,
+        [id_col, "dhash"],
+        [
+            F.shiftrightunsigned(F.col("dhash"), 8 * b)
+            .bitwiseAND(F.lit(255))
+            .cast("int")
+            for b in range(HAMMING_BANDS)
+        ],
     )
     return (
-        cands.withColumn(
+        candidate_pairs(bands, id_col, carry=["dhash"])
+        .withColumn(
             "hamming",
-            F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))),
+            F.bit_count(F.col("dhash_a").bitwiseXOR(F.col("dhash_b"))),
         )
         .filter(F.col("hamming") <= hamming_max)
         .select(

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from dados_publicos_etl_spark.functions.vector import cosine, lit_vector
 from dados_publicos_etl_spark.io import read_table
+from dados_publicos_etl_spark.operators.lsh import candidate_pairs
 from dados_publicos_etl_spark.plans.registry import query
 from dados_publicos_etl_spark.tmpstore import (
     Table,
@@ -177,13 +178,14 @@ def add_rademacher_buckets(
     n_tables: int = N_TABLES,
     expect_dim: int | None = None,
 ) -> DataFrame:
-    """(id, table_idx, bucket) LSH keys, bit-reproducible on any
-    engine: bucket bit (t,p) = [ sum_d sign(t,p,d) * floor(v_d*1e6
-    + 0.5) > 0 ] with md5-derived ±1 signs, one row per table per
-    vector; the n_tables independent tables give OR-amplified recall
-    (a pair is a candidate if ANY table agrees).  The projection is
-    an Arrow-batched numpy matmul in ``mapInPandas`` (per row a
-    dim x n_planes*n_tables GEMV); the payload vector is
+    """(id, band_idx, band_hash) LSH keys — one band per table, its
+    hash the table's bucket — bit-reproducible on any engine: bucket
+    bit (t,p) = [ sum_d sign(t,p,d) * floor(v_d*1e6 + 0.5) > 0 ] with
+    md5-derived ±1 signs, one row per table per vector; the n_tables
+    independent tables give OR-amplified recall (a pair is a
+    candidate if ANY table agrees, see ``lsh.candidate_pairs``).  The
+    projection is an Arrow-batched numpy matmul in ``mapInPandas``
+    (per row a dim x n_planes*n_tables GEMV); the payload vector is
     deliberately NOT carried through — the bucket table is 12 bytes
     a row and the re-rank joins embeddings back by id.  The matmul
     is int64, so there is no float accumulation order to diverge."""
@@ -243,8 +245,8 @@ def add_rademacher_buckets(
                 pd.DataFrame(
                     {
                         id_col: ids,
-                        "table_idx": np.int32(t),
-                        "bucket": (
+                        "band_idx": np.int32(t),
+                        "band_hash": (
                             bits[:, t * n_planes : (t + 1) * n_planes]
                             @ weights
                         ).astype("int32"),
@@ -255,7 +257,7 @@ def add_rademacher_buckets(
             yield pd.concat(frames, ignore_index=True)
 
     return df.select(id_col, vec_col).mapInPandas(
-        project, schema=f"{id_col} long, table_idx int, bucket int"
+        project, schema=f"{id_col} long, band_idx int, band_hash int"
     )
 
 
@@ -372,8 +374,8 @@ def ann_topk_lsh(
         bucketed.alias("b")
         .join(
             F.broadcast(qb).alias("q"),
-            (F.col("b.table_idx") == F.col("q.table_idx"))
-            & (F.col("b.bucket") == F.col("q.bucket"))
+            (F.col("b.band_idx") == F.col("q.band_idx"))
+            & (F.col("b.band_hash") == F.col("q.band_hash"))
             & (F.col(f"b.{id_col}") != F.col(f"q.{id_col}")),
         )
         .select(
@@ -406,9 +408,7 @@ def ann_topk_lsh(
     )
 
 
-def cap_bucket_sizes(
-    bucketed: DataFrame, keys: list[str], cap: int
-) -> DataFrame:
+def cap_bucket_sizes(bucketed: DataFrame, cap: int) -> DataFrame:
     """Drop LSH buckets holding more than ``cap`` members — the
     hot-bucket guard every production LSH needs: one degenerate
     bucket (boilerplate, empty strings, zero vectors) otherwise
@@ -420,6 +420,7 @@ def cap_bucket_sizes(
     when genuinely similar.  One extra partial-aggregated count +
     broadcast anti-join of the (tiny) hot-bucket list.
     """
+    keys = ["band_idx", "band_hash"]
     hot = (
         bucketed.groupBy(*keys)
         .agg(F.count(F.lit(1)).alias("_n"))
@@ -441,7 +442,7 @@ def ann_pairs_lsh(
 ) -> DataFrame:
     """Approximate near-dup pairs: LSH candidates -> exact re-rank.
 
-    The bucket table (id, table_idx, bucket — 12 bytes/row) is
+    The bucket table (id, band_idx, band_hash — 12 bytes/row) is
     materialized before its self-join (signature pattern, see
     dedup_ngram_jaccard); candidate ids then join the embedding
     payloads back for the exact cosine re-rank, so vectors are read
@@ -455,25 +456,8 @@ def ann_pairs_lsh(
         n_planes=n_planes, n_tables=n_tables, expect_dim=expect_dim,
     )
     if bucket_cap is not None:
-        bucketed = cap_bucket_sizes(
-            bucketed, ["table_idx", "bucket"], bucket_cap
-        )
-    bucketed = bucketed.localCheckpoint()
-    a = bucketed.alias("a")
-    b = bucketed.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.table_idx") == F.col("b.table_idx"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .distinct()
-    )
+        bucketed = cap_bucket_sizes(bucketed, bucket_cap)
+    cands = candidate_pairs(bucketed.localCheckpoint(), id_col)
     va = emb.select(
         F.col(id_col).alias("id_a"), F.col(vec_col).alias("va")
     )
@@ -1857,20 +1841,7 @@ def mine_contrastive_pairs(
     bucketed = add_rademacher_buckets(
         emb, id_col=id_col, vec_col=vec_col, expect_dim=expect_dim
     ).localCheckpoint()
-    a, b = bucketed.alias("a"), bucketed.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.table_idx") == F.col("b.table_idx"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .distinct()
-    )
+    cands = candidate_pairs(bucketed, id_col)
     va = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
     vb = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
     scored = (

@@ -471,8 +471,9 @@ def pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("cnt"))
         .localCheckpoint()  # three downstream consumers, one agg job
     )
+    # no bigram (an empty corpus): the sum is NULL and no row survives
     total = float(
-        bgc.agg(F.sum("cnt").alias("t")).collect()[0]["t"]
+        bgc.agg(F.sum("cnt").alias("t")).collect()[0]["t"] or 0
     )
     uni1 = bgc.groupBy("w1").agg(F.sum("cnt").alias("c1"))
     uni2 = bgc.groupBy("w2").agg(F.sum("cnt").alias("c2"))

@@ -207,9 +207,9 @@ _KS_B = "5-LOW"
     "the range-partitioned prefix-sum machinery "
     "(operators/ranking.py): per-partition running sums plus a P-row "
     "offset table, NO SinglePartition window anywhere in the plan.  "
-    "The sample sizes are that scan's grand totals, and an empty "
-    "tie table gives the oracle's zero rows.  Output: exact integer "
-    "D numerator, D, and the "
+    "The sample sizes are that scan's grand totals; an empty tie "
+    "table gives the oracle's zero rows, and one empty sample a NULL "
+    "D and lambda.  Output: exact integer D numerator, D, and the "
     "sqrt(n1*n2/(n1+n2))-scaled KS lambda.",
 )
 def ks_test_twosample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -240,19 +240,19 @@ def ks_test_twosample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cum",
         F.lit(int(n2)) * F.col("cum_c1") - F.lit(int(n1)) * F.col("cum_c2"),
     )
+    # one empty sample: D is undefined, NULL like the oracle's x / 0
+    d = (
+        F.max(F.abs(F.col("cum"))).cast("double") / (float(n1) * float(n2))
+        if n1 and n2
+        else F.lit(None).cast("double")
+    )
     return cum.agg(
         F.lit(int(n1)).alias("n1"),
         F.lit(int(n2)).alias("n2"),
         F.max(F.abs(F.col("cum"))).cast("long").alias("d_num"),
+        F.round(d, 6).alias("d_stat"),
         F.round(
-            F.max(F.abs(F.col("cum"))).cast("double")
-            / (float(n1) * float(n2)),
-            6,
-        ).alias("d_stat"),
-        F.round(
-            F.max(F.abs(F.col("cum"))).cast("double")
-            / (float(n1) * float(n2))
-            * F.sqrt(F.lit(float(n1) * float(n2) / (float(n1) + float(n2)))),
+            d * F.sqrt(F.lit(float(n1) * float(n2) / (float(n1) + float(n2)))),
             6,
         ).alias("ks_lambda"),
     )
@@ -885,7 +885,8 @@ def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked, n, _ = ranked_by_range(slopes, [F.col("s")])
     k1, k2 = (n + 1) // 2, (n + 2) // 2
     return ranked.filter(F.col("rn").isin(k1, k2)).agg(
-        F.lit(n).cast("long").alias("n_pairs"),
+        # no pair: the oracle's MAX over zero rows is NULL, not 0
+        F.lit(n or None).cast("long").alias("n_pairs"),
         F.round(F.avg("s"), 6).alias("sen_slope_cents_per_day"),
     )
 

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType, TimestampNTZType, TimestampType
 
 from dados_publicos_etl_spark.functions.numeric import epoch_micros
-from dados_publicos_etl_spark.io import _fs, event_time, parquet_footer
+from dados_publicos_etl_spark.io import _files, _fs, event_time, parquet_footer
 
 
 def read_event_stream(
@@ -83,9 +83,7 @@ def write_feed(df: DataFrame, batch: Column, workdir: str) -> str:
         .parquet(workdir)
     )
     fs, root = _fs(workdir)
-    files = fs.listFiles(root, True)
-    while files.hasNext():
-        status = files.next()
+    for status in _files(fs, root):
         path = status.getPath()
         if path.getName().endswith(".parquet"):
             b = int(path.getParent().getName().partition("=")[2])

@@ -142,16 +142,13 @@ def test_minhash_incremental_flags_planted_neardups(spark):
     that near-duplicate the snapshot and pass clean incoming docs:
     planted copies (one-token edit of a snapshot doc) are flagged,
     unrelated docs are not."""
-    from pyspark.sql import functions as F
-
-    from dados_publicos_etl_spark.functions.text import (
-        hashed_shingles_from_tokens,
-        tokens,
-    )
+    from dados_publicos_etl_spark.functions.text import tokens
     from dados_publicos_etl_spark.operators.dedup import (
-        probe_minhash_index,
-        write_minhash_index,
+        minhash_signatures,
+        probe_band_index,
+        write_band_index,
     )
+    from dados_publicos_etl_spark.tmpstore import open_table
 
     base = [
         " ".join(f"w{i}t{j}" for j in range(40)) for i in range(20)
@@ -165,23 +162,22 @@ def test_minhash_incremental_flags_planted_neardups(spark):
         (110 + i, " ".join(f"x{i}u{j}" for j in range(40))) for i in range(5)
     ]
 
-    def shingled(rows):
+    def signed(rows):
         df = spark.createDataFrame(rows, "doc_id long, text string")
-        return df.select(
-            "doc_id", tokens("text").alias("_tk")
-        ).select("doc_id", hashed_shingles_from_tokens("_tk").alias("sh"))
+        return minhash_signatures(
+            df.select("doc_id", tokens("text").alias("_tk")), ["doc_id"], "_tk"
+        )
 
     import tempfile
 
     with tempfile.TemporaryDirectory() as d:
-        write_minhash_index(shingled(snap_rows), d + "/index")
-        index_df = spark.read.parquet(d + "/index")
-        cands = probe_minhash_index(index_df, shingled(inc_rows))
+        index = write_band_index(signed(snap_rows), d + "/index")
+        cands = probe_band_index(open_table(spark, index), signed(inc_rows))
         got = {
             (r.incoming_id, r.snapshot_id) for r in cands.collect()
         }
     flagged_incoming = {i for i, _ in got}
-    # every planted copy recalled (1-token edit => jaccard ~0.92)
+    # every planted copy recalled (1-token edit => jaccard 35/41 ~0.85)
     assert {100 + i for i in range(10)} <= flagged_incoming
     # no false candidates among the unrelated docs
     assert flagged_incoming.isdisjoint({110 + i for i in range(5)})
@@ -203,28 +199,27 @@ def test_streaming_incremental_dedup_ingestion(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from dados_publicos_etl_spark.functions.text import (
-        hashed_shingles_from_tokens,
-        tokens,
-    )
+    from dados_publicos_etl_spark.functions.text import tokens
     from dados_publicos_etl_spark.operators.dedup import (
-        probe_minhash_index,
-        write_minhash_index,
+        minhash_signatures,
+        probe_band_index,
+        write_band_index,
     )
+    from dados_publicos_etl_spark.tmpstore import open_table
 
     base = [" ".join(f"w{i}t{j}" for j in range(40)) for i in range(20)]
 
-    def shingled(df):
-        return df.select(
-            "doc_id", tokens("text").alias("_tk")
-        ).select("doc_id", hashed_shingles_from_tokens("_tk").alias("sh"))
+    def signed(df):
+        return minhash_signatures(
+            df.select("doc_id", tokens("text").alias("_tk")), ["doc_id"], "_tk"
+        )
 
     snap = spark.createDataFrame(
         [(i, base[i]) for i in range(20)], "doc_id long, text string"
     )
-    idx_path = str(tmp_path / "index")
-    write_minhash_index(shingled(snap), idx_path)
-    index_df = spark.read.parquet(idx_path)
+    index_df = open_table(
+        spark, write_band_index(signed(snap), str(tmp_path / "index"))
+    )
 
     stream_dir = tmp_path / "incoming"
     stream_dir.mkdir()
@@ -254,8 +249,7 @@ def test_streaming_incremental_dedup_ingestion(spark, tmp_path):
     landed = str(tmp_path / "landed")
 
     def ingest(batch_df, batch_id):
-        sh = shingled(batch_df)
-        flagged = probe_minhash_index(index_df, sh).select(
+        flagged = probe_band_index(index_df, signed(batch_df)).select(
             F.col("incoming_id").alias("doc_id")
         ).distinct()
         survivors = batch_df.join(flagged, "doc_id", "left_anti")

@@ -988,6 +988,56 @@ def test_ranking_skeleton_exists_once():
     assert "rn_col" not in inspect.signature(ranking.ranked_by_range).parameters
 
 
+def test_lsh_band_join_exists_once():
+    """The package holds one band-struct explode and one band-bucket
+    self-join, both in operators/lsh.py (``band_table`` /
+    ``candidate_pairs``), under the one key naming ``(band_idx,
+    band_hash)``; no other module defines either function.  The
+    deleted xxhash64 MinHash path is neither defined nor imported
+    anywhere in the package or its tests."""
+    import ast
+    import os
+    import re
+
+    import dados_publicos_etl_spark as pkg
+
+    explode = re.compile(r'\.alias\("(band_idx|chunk_idx|table_idx)"\)')
+    self_join = re.compile(r'F\.col\(f?"a\.(band_idx|chunk_idx|table_idx)"\)')
+    gone = {
+        "minhash_signature",
+        "hashed_shingles_from_tokens",
+        "write_minhash_index",
+        "probe_minhash_index",
+    }
+    explodes, joins, defs, offenders = [], [], [], []
+    roots = [os.path.dirname(pkg.__file__), os.path.dirname(__file__)]
+    for root in roots:
+        for dirpath, _dirs, files in os.walk(root):
+            for f in files:
+                if not f.endswith(".py"):
+                    continue
+                path = os.path.join(dirpath, f)
+                with open(path) as fh:
+                    src = fh.read()
+                if root == roots[0]:
+                    explodes += [f] * len(explode.findall(src))
+                    joins += [f] * len(self_join.findall(src))
+                for node in ast.walk(ast.parse(src, filename=path)):
+                    if isinstance(node, ast.FunctionDef):
+                        if node.name in gone:
+                            offenders.append(f"{f}:{node.lineno} def {node.name}")
+                        if node.name in ("band_table", "candidate_pairs"):
+                            defs.append(f"{f} {node.name}")
+                    if isinstance(node, ast.ImportFrom):
+                        for alias in node.names:
+                            if alias.name in gone:
+                                offenders.append(f"{f}:{node.lineno} {alias.name}")
+    assert explodes == ["lsh.py"], explodes
+    assert joins == ["lsh.py"], joins
+    assert sorted(defs) == ["lsh.py band_table", "lsh.py candidate_pairs"], defs
+    assert not offenders, offenders
+
+
 def test_matryoshka_single_pass_plan(spark, sf_dir):
     """r12 reshape: all four per-dimension rankings are window
     columns over ONE pair scan and the overlap-with-full join is a

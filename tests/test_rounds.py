@@ -124,7 +124,12 @@ def test_k_truss_raises_past_its_round_bound(spark, monkeypatch):
 # queries whose oracle answers an empty corpus with rows: one row of
 # NULLs of an ungrouped aggregate, or one zero-coverage row per
 # vocabulary size
-_EMPTY_ROWS = {"diff_in_diff": 1, "mann_whitney_u": 1, "vocab_coverage": 5}
+_EMPTY_ROWS = {
+    "diff_in_diff": 1,
+    "mann_whitney_u": 1,
+    "theil_sen_trend": 1,
+    "vocab_coverage": 5,
+}
 
 
 @pytest.mark.parametrize(
@@ -165,6 +170,18 @@ _EMPTY_ROWS = {"diff_in_diff": 1, "mann_whitney_u": 1, "vocab_coverage": 5}
         "token_stream_offsets",
         "token_budget_curation",
         "corpus_global_shuffle",
+        "theil_sen_trend",
+        "pmi_collocations",
+        # the banded LSH consumers (operators/lsh.py)
+        "dedup_minhash_lsh",
+        "dedup_minhash_incremental",
+        "minhash_calibration",
+        "excerpt_containment_mining",
+        "dedup_simhash",
+        "image_neardup_dhash",
+        "dedup_embedding_ann",
+        "contrastive_pair_mining",
+        "similarity_ann_lsh",
     ],
 )
 def test_hits_authorities_on_zero_rows(spark, zero_row_sf_dir, name):
@@ -173,14 +190,43 @@ def test_hits_authorities_on_zero_rows(spark, zero_row_sf_dir, name):
     vector, trains no IVF cell and seeds no k-means cell; an empty
     events or orders table has no time or key bounds and writes an
     empty micro-batch feed; an empty relation ranks with no range
-    partition, no offset and zero totals: each query returns the
-    oracle's answer — zero rows, or the rows of ``_EMPTY_ROWS`` —
-    not rows of NULL scores, a ``ZeroDivisionError``, a ``TypeError``,
-    a ``ValueError``, an ``AttributeError`` or a numpy ``AxisError``."""
+    partition, no offset and zero totals (and no pair: a NULL pair
+    count); an empty corpus has no bigram, signature, band or
+    candidate pair: each query returns the oracle's answer — zero
+    rows, or the rows of ``_EMPTY_ROWS`` — not rows of NULL scores, a
+    ``ZeroDivisionError``, a ``TypeError``, a ``ValueError``, an
+    ``AttributeError`` or a numpy ``AxisError``."""
     spec = QUERIES[name]
     out = spec.fn(spark, zero_row_sf_dir)
     assert out.count() == _EMPTY_ROWS.get(name, 0)
     compare(out, spec.oracle, zero_row_sf_dir)
+
+
+def test_ks_test_twosample_with_one_empty_sample(spark, tmp_path):
+    """With no order of the first priority the KS distance between the
+    two samples is undefined: ``d_stat`` and ``ks_lambda`` are NULL,
+    as in the oracle, not a Spark ``DIVIDE_BY_ZERO``."""
+    import os
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from dados_publicos_etl_spark.plans.stats2 import _KS_A
+
+    for name in sorted(os.listdir(SF_SMOKE)):
+        src = os.path.join(SF_SMOKE, name)
+        if name == "orders.parquet":
+            table = pq.read_table(src)
+            keep = pc.not_equal(table.column("o_orderpriority"), _KS_A)
+            pq.write_table(table.filter(keep), str(tmp_path / name))
+        elif name.endswith(".parquet"):
+            os.symlink(src, tmp_path / name)
+    spec = QUERIES["ks_test_twosample"]
+    out = spec.fn(spark, str(tmp_path))
+    (row,) = out.collect()
+    assert row.n1 == 0 and row.n2 > 0
+    assert row.d_stat is None and row.ks_lambda is None
+    compare(out, spec.oracle, str(tmp_path))
 
 
 def test_scoped_conf_restores_set_and_unset_keys(spark):

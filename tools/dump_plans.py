@@ -5,22 +5,29 @@ aggregation) are reviewable without running Spark.
 
 Two more modes prove that a refactor left plans alone:
 
-  python tools/dump_plans.py --all --sf <corpus dir> --out a.json
-  python tools/dump_plans.py --diff parent.json [parent2.json ...] b.json
+  python tools/dump_plans.py --all --sf <corpus dir> --out a.json \
+      [--only NAME ...]
+  python tools/dump_plans.py --diff parent.json [parent2.json ...] b.json \
+      [--only NAME ...]
 
 ``--all`` builds every registered query and writes
 ``{name: optimized plan}`` as JSON, normalized so two runs of the same
-code compare equal: exprIds (``#123``), plan ids, temp-dir paths and
-the ``_<hex8>`` suffix of memory-sink tables are masked, and each
+code compare equal: exprIds (``#123``), plan ids, temp-dir paths, the
+``_<hex8>`` suffix of memory-sink tables and the counter suffix of
+lambda variables (``x_87``, which depends on how many lambdas the
+process built before) are masked, and each
 distinct-aggregate ``Expand`` is put in one canonical order (Catalyst's
 ``RewriteDistinctAggregates`` orders its groups by exprIds, which
 permuted ``table_profile``'s plan between runs).  A query whose build
-raises is recorded as ``ERROR: <exception>``.
+raises is recorded as ``ERROR: <exception>``.  ``--only`` dumps just
+the named queries, so a refactor can check the plans it touched without
+building the whole catalog.
 
 ``--diff P1 [P2 ...] C`` prints the queries whose normalized plan in
 the change's dump ``C`` matches the plan of none of the parent dumps
 ``P1 ...`` (or that exist on one side only), and exits 1 if there are
-any.
+any.  With ``--only`` it compares just the named queries (a change dump
+made with ``--only`` against full parent dumps).
 """
 
 from __future__ import annotations
@@ -138,6 +145,8 @@ _NORMALIZE = [
         "<tmp>",
     ),
     (re.compile(r"_[0-9a-f]{8}\b"), "_<hex8>"),
+    # PySpark numbers each lambda variable from a per-process counter
+    (re.compile(r"(lambda [A-Za-z]\w*?)_\d+#"), r"\1_#"),
 ]
 
 
@@ -199,10 +208,14 @@ def _canonical_expands(plan: str) -> str:
     return "\n".join(lines)
 
 
-def normalize(plan: str) -> str:
+def _mask(plan: str) -> str:
     for pat, repl in _NORMALIZE:
         plan = pat.sub(repl, plan)
-    return _canonical_expands(plan)
+    return plan
+
+
+def normalize(plan: str) -> str:
+    return _canonical_expands(_mask(plan))
 
 
 def _session():
@@ -213,14 +226,19 @@ def _session():
                        shuffle_partitions=4)
 
 
-def dump_all(sf: str, out_path: str) -> None:
+def dump_all(sf: str, out_path: str, only: list[str] | None = None) -> None:
     from dados_publicos_etl_spark.plans import QUERIES
+    from dados_publicos_etl_spark.plans import catalog  # noqa: F401
 
+    names = sorted(only or QUERIES)
+    unknown = [n for n in names if n not in QUERIES]
+    if unknown:
+        raise SystemExit(f"unknown queries: {', '.join(unknown)}")
     spark = _session()
     # full plans: the default elides fields past 25 ("... N more fields")
     spark.conf.set("spark.sql.debug.maxToStringFields", "100000")
     plans: dict[str, str] = {}
-    for name in sorted(QUERIES):
+    for name in names:
         try:
             df = QUERIES[name].fn(spark, sf)
             plan = df._jdf.queryExecution().optimizedPlan().toString()
@@ -233,14 +251,17 @@ def dump_all(sf: str, out_path: str) -> None:
     spark.stop()
 
 
-def diff(parent_paths: list[str], change_path: str) -> int:
-    parents = []
-    for path in parent_paths:
+def diff(
+    parent_paths: list[str], change_path: str, only: list[str] | None = None
+) -> int:
+    def load(path: str) -> dict[str, str]:
+        # masked again: a dump written before a mask was added compares
         with open(path) as fh:
-            parents.append(json.load(fh))
-    with open(change_path) as fh:
-        change = json.load(fh)
-    names = set(change).union(*parents)
+            return {n: _mask(p) for n, p in json.load(fh).items()}
+
+    parents = [load(path) for path in parent_paths]
+    change = load(change_path)
+    names = set(only) if only else set(change).union(*parents)
     changed = sorted(
         n for n in names if all(p.get(n) != change.get(n) for p in parents)
     )
@@ -261,6 +282,9 @@ def main() -> None:
                     help="dump every registered query's optimized plan")
     ap.add_argument("--sf", help="corpus dir for --all")
     ap.add_argument("--out", help="JSON file --all writes")
+    ap.add_argument("--only", nargs="+", metavar="NAME",
+                    help="dump (--all) or compare (--diff) only these "
+                    "queries")
     ap.add_argument("--diff", nargs="+", metavar="DUMP",
                     help="parent dumps then the change's dump: list "
                     "queries whose plan matches no parent dump")
@@ -268,11 +292,11 @@ def main() -> None:
     if args.diff:
         if len(args.diff) < 2:
             ap.error("--diff needs at least one parent dump and a change dump")
-        sys.exit(diff(args.diff[:-1], args.diff[-1]))
+        sys.exit(diff(args.diff[:-1], args.diff[-1], args.only))
     if args.all:
         if not (args.sf and args.out):
             ap.error("--all needs --sf and --out")
-        dump_all(args.sf, args.out)
+        dump_all(args.sf, args.out, args.only)
         return
     headline()
 
